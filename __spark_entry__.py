@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from go_trafilatura_spark import textops
-from go_trafilatura_spark.kernel import KernelOptions, OUTPUT_SCHEMA, make_kernel
 from go_trafilatura_spark.pipeline import extract_pages
 from go_trafilatura_spark.textops import (
     LANG_STOPWORDS, MINHASH_PERMS, MINHASH_PRIME, SIMHASH_BITS,
@@ -91,24 +90,36 @@ def _ensure_fixtures() -> None:
     ensure_fixtures("correctness")
 
 
-def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize the north-rule input table from the driver-provided
-    documents table, entirely JVM-side (format_string + encode — no
-    Python)."""
+def _synth_pages(spark: SparkSession, sf_dir: str, exchange: bool) -> DataFrame:
+    """The one synthetic-page projection: every non-blank row of the
+    documents table becomes a (url, warc_ts, html, text, lang) page,
+    entirely JVM-side (format_string + encode — no Python). With
+    ``exchange`` the NARROW rows (doc_id, text) are salted_repartition-ed
+    first and the fat html column is built AFTER the exchange (see
+    q_extract_synth)."""
+    from go_trafilatura_spark.pipeline import salted_repartition
+
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    base = docs.where(F.length(F.trim("text")) > 0).select(
+        F.concat(F.lit("https://synth.local/doc/"), F.col("doc_id")).alias("url"),
+        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
+        "doc_id", "text", "lang")
+    if exchange:
+        base = salted_repartition(base)
     html = F.format_string(
         '<html><head><title>Doc %s</title></head><body>'
         '<article class="post-content"><h1>Doc %s</h1><p>%s</p></article>'
         "</body></html>",
         F.col("doc_id"), F.col("doc_id"), F.col("text"),
     )
-    return docs.where(F.length(F.trim("text")) > 0).select(
-        F.concat(F.lit("https://synth.local/doc/"), F.col("doc_id")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.encode(html, "utf-8").alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
+    return base.select(
+        "url", "warc_ts", F.encode(html, "utf-8").alias("html"), "text", "lang")
+
+
+def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Synthesize the north-rule input table from the driver-provided
+    documents table."""
+    return _synth_pages(spark, sf_dir, exchange=False)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -127,7 +138,8 @@ def _docs(spark, sf_dir):
     parquet file, so without this every per-doc query's map stage runs
     on the 1-2 scan splits regardless of core count; at real scale the
     size guard makes it a no-op (see textops.fanout_small_scan). The
-    on-disk size is passed in so the guard costs no plan compilation."""
+    on-disk size is passed in so the guard skips the optimizer-stats
+    probe."""
     path = os.path.join(sf_dir, "documents.parquet")
     return textops.fanout_small_scan(
         spark.read.parquet(path), input_bytes=textops.scan_bytes(path))
@@ -144,8 +156,6 @@ def q_extract_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end extraction correctness on driver data: content text and
     title of every synthesized page, byte-compared against a pure-SQL
     prediction."""
-    from go_trafilatura_spark.pipeline import salted_repartition
-
     # Round-7 shape (guide §2.3 "project before the exchange", §2):
     # repartition the NARROW rows (doc_id, text) first and synthesize
     # the fat html column AFTER the exchange, so the shuffle carries
@@ -155,21 +165,7 @@ def q_extract_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bench session) instead of the old constant 8 that left 3/4 of
     # a local[32] host idle. Output row set identical (verified 0 diff
     # rows at 50k docs plus the oracle hash).
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    base = docs.where(F.length(F.trim("text")) > 0).select(
-        F.concat(F.lit("https://synth.local/doc/"), F.col("doc_id")).alias("url"),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
-        F.col("doc_id"), F.col("text"), F.col("lang"))
-    base = salted_repartition(base)
-    html = F.format_string(
-        '<html><head><title>Doc %s</title></head><body>'
-        '<article class="post-content"><h1>Doc %s</h1><p>%s</p></article>'
-        "</body></html>",
-        F.col("doc_id"), F.col("doc_id"), F.col("text"),
-    )
-    pages = base.select(
-        "url", "warc_ts", F.encode(html, "utf-8").alias("html"),
-        "text", "lang")
+    pages = _synth_pages(spark, sf_dir, exchange=True)
     out = extract_pages(pages, options=_SYNTH_OPTS, repartition=False)
     return out.where(F.col("reject_reason").isNull()).select(
         "url", "content_text", "title"

@@ -117,29 +117,20 @@ def discover_urls(df, kind: str = "feed"):
     vectorized Arrow kernel; kind is 'feed' or 'sitemap'."""
     from pyspark.sql.types import StringType, StructField, StructType
 
+    from .kernel import map_rows
+
     schema = StructType([
         StructField("source_url", StringType()),
         StructField("page_url", StringType()),
     ])
 
-    def batches(it):
-        import pandas as pd
+    def urls(src, body):
+        if body is None:
+            return ()
+        found = parse_feed(bytes(body)) if kind == "feed" else parse_sitemap(bytes(body))[0]
+        return ((src, u) for u in found)
 
-        for pdf in it:
-            src_out, url_out = [], []
-            for src, body in zip(pdf["source_url"], pdf["body"]):
-                if body is None:
-                    continue
-                if kind == "feed":
-                    found = parse_feed(bytes(body))
-                else:
-                    found, _nested = parse_sitemap(bytes(body))
-                for u in found:
-                    src_out.append(src)
-                    url_out.append(u)
-            yield pd.DataFrame({"source_url": src_out, "page_url": url_out})
-
-    return df.select("source_url", "body").mapInPandas(batches, schema)
+    return map_rows(df, ["source_url", "body"], schema, urls)
 
 
 # -- robots.txt ---------------------------------------------------------------
@@ -250,22 +241,16 @@ def discover_sitemaps_from_robots(df):
     on the fetched sitemap bodies."""
     from pyspark.sql.types import StringType, StructField, StructType
 
+    from .kernel import map_rows
+
     schema = StructType([
         StructField("source_url", StringType()),
         StructField("sitemap_url", StringType()),
     ])
 
-    def batches(it):
-        import pandas as pd
+    def sitemaps(src, body):
+        if body is None:
+            return ()
+        return ((src, sm) for sm in parse_robots(bytes(body))["sitemaps"])
 
-        for pdf in it:
-            src_out, sm_out = [], []
-            for src, body in zip(pdf["source_url"], pdf["body"]):
-                if body is None:
-                    continue
-                for sm in parse_robots(bytes(body))["sitemaps"]:
-                    src_out.append(src)
-                    sm_out.append(sm)
-            yield pd.DataFrame({"source_url": src_out, "sitemap_url": sm_out})
-
-    return df.select("source_url", "body").mapInPandas(batches, schema)
+    return map_rows(df, ["source_url", "body"], schema, sitemaps)

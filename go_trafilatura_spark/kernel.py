@@ -1,12 +1,14 @@
 """The Arrow-vectorized Spark extraction kernel.
 
-One ``mapInPandas`` stage: batches of (url, warc_ts, html, text, lang)
-arrive as Arrow record batches; each row runs the pure extraction
-cascade (core.extract); results leave as Arrow batches with the output
-schema below. This is the Spark-side equivalent of the reference's whole
-per-document pipeline (SURVEY.md §3.4) — the only Python in the job, and
-it is batch-vectorized at the transport layer (Arrow), exactly as the
-north rule requires (no per-row Python UDFs at the DataFrame level).
+One ``mapInArrow`` stage (``make_arrow_kernel``): batches of (url,
+warc_ts, html, lang) arrive as Arrow record batches; each row runs the
+pure extraction cascade (core.extract); results leave as Arrow batches
+with the output schema below. Batch and streaming extraction both run
+this one kernel. This is the Spark-side equivalent of the reference's
+whole per-document pipeline (SURVEY.md §3.4) — the only Python in the
+job, and it is batch-vectorized at the transport layer (Arrow), exactly
+as the north rule requires (no per-row Python UDFs at the DataFrame
+level).
 
 Scale notes:
 - HTML rows are fat (KBs-100KBs); callers should tune
@@ -16,8 +18,6 @@ Scale notes:
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql.types import (
     ArrayType,
@@ -159,7 +159,7 @@ def _extract_row(url, warc_ts, html, lang, options) -> tuple:
 
 class KernelOptions:
     """Picklable kernel configuration broadcast to executors via the
-    mapInPandas closure (the reference's Options, SURVEY.md §1.4).
+    mapInArrow closure (the reference's Options, SURVEY.md §1.4).
 
     ``with_timing=True`` adds a ``kernel_ms`` double column (wall time of
     the Arrow batch each row was processed in) so skew is observable:
@@ -183,56 +183,6 @@ class KernelOptions:
         opts = Options.from_dict(self.opts_dict)
         opts.original_url = url
         return opts
-
-
-def make_kernel(kernel_options: KernelOptions | None = None):
-    """Build the mapInPandas function. Closure-captured options are
-    serialized once per task, not per row."""
-    ko = kernel_options or KernelOptions()
-
-    def extract_batches(batches: Iterator) -> Iterator:
-        import gc
-        import time
-
-        import pandas as pd
-
-        # Batch-scoped GC: the extraction trees are cyclic (Element
-        # parent↔children), so CPython's auto-GC runs full generational
-        # sweeps mid-parse — measured 7-13% of kernel CPU. Disabling
-        # auto-GC and collecting the young generation once per batch
-        # (all per-batch garbage is gen0 when no auto-collections ran)
-        # frees the same memory at a fraction of the cost; a periodic
-        # full collect bounds promoted garbage. The collects run inside
-        # the timed window so cpu_ms stays an honest attestation.
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            for batch_id, pdf in enumerate(batches):
-                t0 = time.monotonic()
-                c0 = time.process_time()
-                urls = pdf["url"].tolist()
-                htmls = pdf["html"].tolist()
-                langs = pdf["lang"].tolist() if "lang" in pdf else [None] * len(urls)
-                tss = pdf["warc_ts"].tolist() if "warc_ts" in pdf else [None] * len(urls)
-                # Columnar assembly: one list per output column (cheaper to
-                # build and convert to Arrow than a list of per-row dicts).
-                col_lists: list[list] = [[] for _ in OUTPUT_COLUMNS]
-                for u, t, h, lg in zip(urls, tss, htmls, langs):
-                    row = _extract_row(u, t, h, lg, ko)
-                    for lst, value in zip(col_lists, row):
-                        lst.append(value)
-                out = pd.DataFrame(dict(zip(OUTPUT_COLUMNS, col_lists)), columns=OUTPUT_COLUMNS)
-                gc.collect(0) if batch_id % 64 else gc.collect()
-                if ko.with_timing:
-                    out["kernel_ms"] = (time.monotonic() - t0) * 1000.0
-                    out["batch_id"] = batch_id
-                    out["cpu_ms"] = (time.process_time() - c0) * 1000.0
-                yield out
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-
-    return extract_batches
 
 
 TIMED_OUTPUT_SCHEMA = StructType(
@@ -263,11 +213,12 @@ def _arrow_output_types():
 
 
 def make_arrow_kernel(kernel_options: KernelOptions | None = None):
-    """mapInArrow kernel: consumes/produces pyarrow RecordBatches
-    directly, skipping the pandas DataFrame assembly on both sides
-    (~2× less transport overhead than the mapInPandas path; NOTES.md
-    queue #1). Pass-through columns (url, warc_ts, lang) reuse the
-    input Arrow arrays untouched — zero conversion."""
+    """Build the mapInArrow extraction kernel. It consumes and produces
+    pyarrow RecordBatches directly, with no pandas DataFrame assembly on
+    either side (about 2× less transport overhead than mapInPandas;
+    NOTES.md queue #1). Pass-through columns (url, warc_ts, lang) reuse
+    the input Arrow arrays untouched — zero conversion. Closure-captured
+    options are serialized once per task, not per row."""
     ko = kernel_options or KernelOptions()
 
     def extract_batches(batches):
@@ -277,10 +228,14 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
         import pyarrow as pa
 
         types = _arrow_output_types()
-        # Batch-scoped GC (same rationale and honesty note as
-        # make_kernel: Element trees are cyclic, auto-GC costs 7-13% of
-        # kernel CPU; the per-batch collects stay inside the timed
-        # window so cpu_ms remains an honest attestation).
+        # Batch-scoped GC: the extraction trees are cyclic (Element
+        # parent↔children), so CPython's auto-GC runs full generational
+        # sweeps mid-parse — measured 7-13% of kernel CPU. Disabling
+        # auto-GC and collecting the young generation once per batch
+        # (all per-batch garbage is gen0 when no auto-collections ran)
+        # frees the same memory at a fraction of the cost; a periodic
+        # full collect bounds promoted garbage. The collects run inside
+        # the timed window so cpu_ms stays an honest attestation.
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
@@ -330,3 +285,22 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
                 gc.enable()
 
     return extract_batches
+
+
+def map_rows(df, cols: list, schema: StructType, fn):
+    """The shell of every per-row payload stage (pdf, multimodal, warc,
+    discovery): ``df.select(*cols)`` runs through one mapInPandas stage
+    in which each input row calls ``fn(*row)``, which returns an
+    iterable of output tuples in ``schema`` field order — none to drop
+    the row, several to explode it. The shell catches nothing: a stage
+    that must survive a bad payload handles it inside ``fn``."""
+    names = schema.fieldNames()
+
+    def batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            rows = [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(batches, schema)

@@ -1,8 +1,9 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
 metadata, with decode / feature-extract / resize / frame-sample stages.
 
-The Spark-side plumbing (schemas, Arrow batching, mapInPandas
-signatures, partitioning) is real and tested. Three codec backends:
+The Spark-side plumbing (schemas, Arrow batching, the mapInPandas
+payload-stage shell ``kernel.map_rows``, partitioning) is real and
+tested. Three codec backends:
 
 - ``FakeDecodeBackend`` — deterministic sha256-derived pixels/samples;
   the no-dependency oracle twin (the driver queries' default, so the
@@ -21,15 +22,17 @@ stdlib PNG decoder.
 from __future__ import annotations
 
 import hashlib
+import math
 import struct
 import zlib
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, BinaryType, FloatType, IntegerType, StringType,
     StructField, StructType,
 )
+
+from .kernel import map_rows
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", StringType()),
@@ -330,35 +333,34 @@ def _avg_pool(plane: list[float], w: int, h: int, ow: int, oh: int) -> list[floa
     return out
 
 
+def _map_kind(df: DataFrame, kind: str, schema: StructType, fn) -> DataFrame:
+    """Per-row stage over the ``kind`` payloads of a media table: rows
+    of another kind or with a null payload are skipped, and
+    ``fn(media_id, payload_bytes)`` yields the output tuples."""
+
+    def rows(media_id, row_kind, payload):
+        return fn(media_id, bytes(payload)) if row_kind == kind and payload is not None else ()
+
+    return map_rows(df, ["media_id", "kind", "payload"], schema, rows)
+
+
 def image_features(df: DataFrame, backend: DecodeBackend | None = None) -> DataFrame:
     """Decode → luma stats + 64-bit perceptual hash (8×8 avg-pool,
     threshold at mean). mapInPandas: one Arrow batch of payloads at a
     time; binary stays off the driver."""
     backend = backend or FakeDecodeBackend()
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def features(media_id, payload):
+        try:
+            w, h, plane = backend.decode_image(payload)
+        except Exception:
+            return  # corrupt payload must never kill the batch
+        pooled = _avg_pool(plane, w, h, 8, 8)
+        mean = sum(pooled) / len(pooled)
+        bits = "".join("1" if p > mean else "0" for p in pooled)
+        yield media_id, w, h, float(mean), f"{int(bits, 2):016x}"
 
-        for pdf in it:
-            rows = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "image" or payload is None:
-                    continue
-                try:
-                    w, h, plane = backend.decode_image(bytes(payload))
-                except Exception:
-                    continue  # corrupt payload must never kill the batch
-                pooled = _avg_pool(plane, w, h, 8, 8)
-                mean = sum(pooled) / len(pooled)
-                bits = "".join("1" if p > mean else "0" for p in pooled)
-                rows.append({
-                    "media_id": media_id, "width": w, "height": h,
-                    "mean_luma": float(mean),
-                    "phash": f"{int(bits, 2):016x}",
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
-
-    return df.select("media_id", "kind", "payload").mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
+    return _map_kind(df, "image", IMAGE_FEATURES_SCHEMA, features)
 
 
 def resize_images(df: DataFrame, out_w: int, out_h: int,
@@ -366,25 +368,14 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
     """Decode → box resize → re-emit as embedding-like float plane."""
     backend = backend or FakeDecodeBackend()
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def resized(media_id, payload):
+        try:
+            w, h, plane = backend.decode_image(payload)
+        except Exception:
+            return  # corrupt payload must never kill the batch
+        yield media_id, [float(x) for x in _avg_pool(plane, w, h, out_w, out_h)]
 
-        for pdf in it:
-            rows = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "image" or payload is None:
-                    continue
-                try:
-                    w, h, plane = backend.decode_image(bytes(payload))
-                except Exception:
-                    continue  # corrupt payload must never kill the batch
-                rows.append({
-                    "media_id": media_id,
-                    "embedding": [float(x) for x in _avg_pool(plane, w, h, out_w, out_h)],
-                })
-            yield pd.DataFrame(rows, columns=["media_id", "embedding"])
-
-    return df.select("media_id", "kind", "payload").mapInPandas(batches, EMBED_SCHEMA)
+    return _map_kind(df, "image", EMBED_SCHEMA, resized)
 
 
 AUDIO_FEATURES_SCHEMA = StructType([
@@ -401,30 +392,16 @@ def audio_features(df: DataFrame, backend: DecodeBackend | None = None) -> DataF
     real Spark plumbing)."""
     backend = backend or FakeDecodeBackend()
 
-    def batches(it: Iterator) -> Iterator:
-        import math
+    def features(media_id, payload):
+        try:
+            rate, samples = backend.decode_audio(payload)
+        except Exception:
+            return  # corrupt payload must never kill the batch
+        rms = math.sqrt(sum(s * s for s in samples) / len(samples)) if samples else 0.0
+        peak = max((abs(s) for s in samples), default=0.0)
+        yield media_id, rate, len(samples), float(rms), float(peak)
 
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "audio" or payload is None:
-                    continue
-                try:
-                    rate, samples = backend.decode_audio(bytes(payload))
-                except Exception:
-                    continue  # corrupt payload must never kill the batch
-                rms = math.sqrt(sum(s * s for s in samples) / len(samples)) if samples else 0.0
-                peak = max((abs(s) for s in samples), default=0.0)
-                rows.append({
-                    "media_id": media_id, "sample_rate": rate,
-                    "n_samples": len(samples),
-                    "rms": float(rms), "peak": float(peak),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
-
-    return df.select("media_id", "kind", "payload").mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
+    return _map_kind(df, "audio", AUDIO_FEATURES_SCHEMA, features)
 
 
 EXACT_IMAGE_SCHEMA = StructType([
@@ -462,24 +439,13 @@ def image_features_exact(df: DataFrame) -> DataFrame:
     oracle agree bit-for-bit. Same mapInPandas plumbing as the float
     pipeline (binary never on the driver)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def features(media_id, payload):
+        plane = _exact_plane(payload, "img")
+        total = sum(plane)
+        bits = "".join("1" if b * 64 > total else "0" for b in plane)
+        yield media_id, 8, 8, total, f"{int(bits, 2):016x}"
 
-        for pdf in it:
-            rows = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "image" or payload is None:
-                    continue
-                plane = _exact_plane(bytes(payload), "img")
-                total = sum(plane)
-                bits = "".join("1" if b * 64 > total else "0" for b in plane)
-                rows.append({
-                    "media_id": media_id, "width": 8, "height": 8,
-                    "sum_luma": total, "phash": f"{int(bits, 2):016x}",
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in EXACT_IMAGE_SCHEMA.fields])
-
-    return df.select("media_id", "kind", "payload").mapInPandas(batches, EXACT_IMAGE_SCHEMA)
+    return _map_kind(df, "image", EXACT_IMAGE_SCHEMA, features)
 
 
 def video_frame_sums_exact(df: DataFrame, n_frames: int = 3) -> DataFrame:
@@ -487,23 +453,11 @@ def video_frame_sums_exact(df: DataFrame, n_frames: int = 3) -> DataFrame:
     32-byte synthetic luma block (one row per frame — the explode shape
     of real frame sampling, with oracle-reproducible values)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def frames(media_id, payload):
+        for idx in range(n_frames):
+            yield media_id, idx, sum(hashlib.sha256(f"vid{idx}:".encode() + payload).digest())
 
-        for pdf in it:
-            rows = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "video" or payload is None:
-                    continue
-                for idx in range(n_frames):
-                    block = hashlib.sha256(f"vid{idx}:".encode() + bytes(payload)).digest()
-                    rows.append({
-                        "media_id": media_id, "frame_idx": idx,
-                        "frame_sum": sum(block),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in EXACT_FRAME_SCHEMA.fields])
-
-    return df.select("media_id", "kind", "payload").mapInPandas(batches, EXACT_FRAME_SCHEMA)
+    return _map_kind(df, "video", EXACT_FRAME_SCHEMA, frames)
 
 
 def sample_video_frames(df: DataFrame, n_frames: int = 3,
@@ -511,24 +465,12 @@ def sample_video_frames(df: DataFrame, n_frames: int = 3,
     """Frame-sample videos → per-frame mean luma rows (explode shape)."""
     backend = backend or FakeDecodeBackend()
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def frames(media_id, payload):
+        try:
+            sampled = backend.sample_frames(payload, n_frames)
+        except Exception:
+            return  # corrupt payload must never kill the batch
+        for idx, frame in enumerate(sampled):
+            yield media_id, idx, float(sum(frame) / len(frame))
 
-        for pdf in it:
-            rows = []
-            for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "video" or payload is None:
-                    continue
-                try:
-                    frames = backend.sample_frames(bytes(payload), n_frames)
-                except Exception:
-                    continue  # corrupt payload must never kill the batch
-                for idx, frame in enumerate(frames):
-                    rows.append({
-                        "media_id": media_id,
-                        "frame_idx": idx,
-                        "frame_luma": float(sum(frame) / len(frame)),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields])
-
-    return df.select("media_id", "kind", "payload").mapInPandas(batches, FRAME_SAMPLE_SCHEMA)
+    return _map_kind(df, "video", FRAME_SAMPLE_SCHEMA, frames)

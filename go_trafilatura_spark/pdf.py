@@ -17,18 +17,19 @@ encryption and CID-keyed fonts are out of scope (rows with no
 extractable text return empty, never raise).
 
 Spark surface: ``extract_pdf_pages`` maps (url, pdf) → (url, pdf_text,
-n_text_ops) through one mapInPandas stage, same shape as the HTML
-kernel.
+n_text_ops) through one mapInPandas stage (the payload-stage shell
+``kernel.map_rows``), one output row per input row.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from .kernel import map_rows
 
 PDF_TEXT_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -206,30 +207,19 @@ def extract_pdf_text(pdf: bytes) -> tuple[str, int]:
 
 def extract_pdf_pages(df: DataFrame, url_col: str = "url",
                       pdf_col: str = "pdf") -> DataFrame:
-    """Spark stage: (url, pdf binary) → (url, pdf_text, n_text_ops)."""
+    """Spark stage: (url, pdf binary) → (url, pdf_text, n_text_ops).
+    Never drops a row: a null or undecodable payload yields ("", 0)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def text(url, payload):
+        if payload is None:
+            return [(url, "", 0)]
+        try:
+            return [(url, *extract_pdf_text(bytes(payload)))]
+        except Exception:
+            return [(url, "", 0)]
 
-        for pdf_batch in it:
-            urls, texts, counts = [], [], []
-            for url, payload in zip(pdf_batch["url"], pdf_batch["pdf"]):
-                urls.append(url)
-                if payload is None:
-                    texts.append("")
-                    counts.append(0)
-                    continue
-                try:
-                    text, n = extract_pdf_text(bytes(payload))
-                except Exception:
-                    text, n = "", 0
-                texts.append(text)
-                counts.append(n)
-            yield pd.DataFrame({"url": urls, "pdf_text": texts, "n_text_ops": counts})
-
-    return df.select(
-        df[url_col].alias("url"), df[pdf_col].alias("pdf")
-    ).mapInPandas(batches, PDF_TEXT_SCHEMA)
+    return map_rows(df, [df[url_col].alias("url"), df[pdf_col].alias("pdf")],
+                    PDF_TEXT_SCHEMA, text)
 
 
 # ---------------------------------------------------------------------------

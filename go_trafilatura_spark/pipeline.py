@@ -6,7 +6,7 @@ This is the Spark lifecycle from SURVEY.md §3.4:
     spark.read.parquet(pages)                 -- Catalyst scan, col pruning
       .where(optional lang/size prefilter)    -- predicate pushdown
       .repartition(N, salted url hash)        -- explicit skew-safe shuffle
-      .mapInPandas(extract_kernel, OUT)       -- Arrow batches → cascade
+      .mapInArrow(extract_kernel, OUT)        -- Arrow batches → cascade
       .write.parquet(...)                     -- idempotent per-shard commit
 
 Design for 100 TB / 1000 executors:
@@ -29,7 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .kernel import OUTPUT_SCHEMA, KernelOptions, make_kernel
+from .kernel import OUTPUT_SCHEMA, TIMED_OUTPUT_SCHEMA, KernelOptions, make_arrow_kernel
 
 SALT_BUCKETS = 64
 ARROW_BATCH_SIZE = 512
@@ -194,14 +194,7 @@ def extract_pages_timed(
 ) -> DataFrame:
     """extract_pages with a per-batch kernel_ms column for skew analysis
     via partition_time_stats."""
-    from .kernel import TIMED_OUTPUT_SCHEMA
-
-    from .kernel import make_arrow_kernel
-
-    cols = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    pruned = salted_repartition(df.select(*cols), num_partitions)
-    kernel = make_arrow_kernel(KernelOptions(options or {}, with_timing=True))
-    return pruned.mapInArrow(kernel, TIMED_OUTPUT_SCHEMA)
+    return _extract_pages(df, options, num_partitions, with_timing=True)
 
 
 def extract_pages(
@@ -218,16 +211,23 @@ def extract_pages(
     the parquet scan (the input `lang` column), mirroring the
     reference's language gate short-circuit (SURVEY.md §2.2).
     """
-    from .kernel import make_arrow_kernel
+    return _extract_pages(df, options, num_partitions, lang_filter=lang_filter,
+                          repartition=repartition)
 
+
+def _extract_pages(df: DataFrame, options: dict | None, num_partitions: int | None,
+                   lang_filter: str | None = None, repartition: bool = True,
+                   with_timing: bool = False) -> DataFrame:
+    """select → [lang filter] → [salted_repartition] → mapInArrow: the
+    one extraction plan behind extract_pages and extract_pages_timed."""
     cols = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
     pruned = df.select(*cols)
     if lang_filter:
         pruned = pruned.where(F.col("lang") == lang_filter)
     if repartition:
         pruned = salted_repartition(pruned, num_partitions)
-    kernel = make_arrow_kernel(KernelOptions(options or {}))
-    return pruned.mapInArrow(kernel, OUTPUT_SCHEMA)
+    kernel = make_arrow_kernel(KernelOptions(options or {}, with_timing=with_timing))
+    return pruned.mapInArrow(kernel, TIMED_OUTPUT_SCHEMA if with_timing else OUTPUT_SCHEMA)
 
 
 def extracted_ok(df: DataFrame) -> DataFrame:

@@ -1,11 +1,12 @@
 """Structured Streaming over incoming WARC/page shards.
 
 The reference has no streaming runtime (SURVEY.md §2.14) — its batch
-CLI polls sources. Here the same extraction kernel runs unchanged under
-Structured Streaming: new parquet files landing in a directory are one
-micro-batch each; checkpointing gives exactly-once file-sink semantics,
-which subsumes the north rule's resume-from-checkpoint requirement in
-streaming form (the batch path uses the bucket manifest in pipeline.py).
+CLI polls sources. Here the same extraction kernel (the mapInArrow
+``kernel.make_arrow_kernel``) runs unchanged under Structured Streaming:
+new parquet files landing in a directory are one micro-batch each;
+checkpointing gives exactly-once file-sink semantics, which subsumes the
+north rule's resume-from-checkpoint requirement in streaming form (the
+batch path uses the bucket manifest in pipeline.py).
 
 Scale notes: maxFilesPerTrigger bounds micro-batch size so executor
 memory stays flat; the kernel stage parallelism follows the source file
@@ -19,7 +20,7 @@ from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
-from .kernel import OUTPUT_SCHEMA, KernelOptions, make_kernel
+from .pipeline import extract_pages
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -42,11 +43,10 @@ def read_page_stream(
 
 
 def extract_stream(stream_df: DataFrame, options: dict | None = None) -> DataFrame:
-    """Apply the extraction kernel to a streaming DataFrame. mapInPandas
-    is stateless row-local work, so it is fully streaming-compatible."""
-    kernel = make_kernel(KernelOptions(options or {}))
-    cols = [c for c in ("url", "warc_ts", "html", "lang") if c in stream_df.columns]
-    return stream_df.select(*cols).mapInPandas(kernel, OUTPUT_SCHEMA)
+    """Apply the extraction kernel to a streaming DataFrame: the batch
+    extract_pages plan minus its repartition. mapInArrow is stateless
+    row-local work, so it is fully streaming-compatible."""
+    return extract_pages(stream_df, options, repartition=False)
 
 
 def start_extraction_stream(

@@ -103,20 +103,20 @@ def fanout_small_scan(df: DataFrame, key_col: str = "doc_id",
     unknown → assumed huge) and the input is returned UNCHANGED — no
     exchange is ever added to a 100 TB scan.
 
-    ``input_bytes`` (from ``scan_bytes``) short-circuits both plan
-    probes — the caller already knows the on-disk size, so the decision
-    costs no driver-side plan compilation at all."""
+    ``input_bytes`` (from ``scan_bytes``) replaces the optimizer-stats
+    probe — the caller already knows the size, so a large input is
+    returned without compiling the plan. Either size then goes through
+    the same threshold and partition-count test. Note the units differ:
+    ``_FANOUT_MAX_BYTES`` is compared against ON-DISK (compressed
+    parquet) bytes on the ``input_bytes`` path and against the
+    optimizer's in-memory estimate on the stats path."""
     spark = df.sparkSession
     if min_partitions is None:
         try:
             min_partitions = spark.sparkContext.defaultParallelism
         except Exception:
             return df
-    if input_bytes is not None:
-        if input_bytes > _FANOUT_MAX_BYTES:
-            return df
-        return df.repartition(min_partitions, F.col(key_col))
-    size = _estimated_plan_bytes(df)
+    size = input_bytes if input_bytes is not None else _estimated_plan_bytes(df)
     if size is None or size > _FANOUT_MAX_BYTES:
         return df
     try:

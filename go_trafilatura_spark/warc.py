@@ -3,12 +3,12 @@
 table is materialized from.
 
 Spark shape: ``spark.read.format("binaryFile")`` over a path glob →
-``mapInPandas`` batches, one task per file (WARC files are written at
-~1 GB exactly so that file-granular parallelism works; Common Crawl
-ships ~64k files per crawl, far above any executor count). Records are
-per-member gzip (the Common Crawl convention) and the reader walks
-member boundaries with ``zlib.decompressobj`` — each record
-decompresses independently, so a future split-by-offset source
+``mapInPandas`` batches (``kernel.map_rows``), one task per file (WARC
+files are written at ~1 GB exactly so that file-granular parallelism
+works; Common Crawl ships ~64k files per crawl, far above any executor
+count). Records are per-member gzip (the Common Crawl convention) and
+the reader walks member boundaries with ``zlib.decompressobj`` — each
+record decompresses independently, so a future split-by-offset source
 (WARC.gz offsets from the CDX index) reuses the same record parser.
 
 Out of scope here as everywhere in this repo: the network fetch. The
@@ -152,24 +152,15 @@ def read_warc_pages(spark, path: str):
     central. At 100 TB the downstream extraction repartitions on
     xxhash64(url) anyway (pipeline.extract_pages), which also evens out
     per-file skew."""
-    import pandas as pd
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
-    binary = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
+    from .kernel import map_rows
 
-    def batches(it):
-        for pdf in it:
-            out = {"url": [], "warc_ts": [], "html": []}
-            for content in pdf["content"]:
-                for url, ts, body in warc_record_rows(bytes(content)):
-                    out["url"].append(url)
-                    out["warc_ts"].append(ts)
-                    out["html"].append(body)
-            yield pd.DataFrame(out)
-
-    rows = binary.mapInPandas(
-        batches, "url string, warc_ts string, html binary")
+    rows = map_rows(
+        spark.read.format("binaryFile").load(path), ["content"],
+        StructType.fromDDL("url string, warc_ts string, html binary"),
+        lambda content: warc_record_rows(bytes(content)))
     return rows.select(
         "url",
         F.to_timestamp(F.col("warc_ts")).alias("warc_ts"),

@@ -219,6 +219,23 @@ def test_streaming_extraction(spark, smoke_dir):
         assert out.count() == 40
         assert out.where(F.col("content_text").isNotNull()).count() > 0
 
+        # Streaming and batch run the same kernel: the streamed rows equal
+        # extract_pages over the same shards, in both directions.
+        from go_trafilatura_spark.kernel import OUTPUT_COLUMNS
+
+        batch = extract_pages(read_pages(spark, in_dir)).select(*OUTPUT_COLUMNS)
+        streamed = out.select(*OUTPUT_COLUMNS)
+        assert streamed.exceptAll(batch).count() == 0
+        assert batch.exceptAll(streamed).count() == 0
+
+        # One extraction kernel: the stream plan runs mapInArrow, never
+        # the pandas transfer path.
+        from go_trafilatura_spark.streaming import extract_stream, read_page_stream
+
+        plan = extract_stream(read_page_stream(spark, in_dir))._jdf \
+            .queryExecution().analyzed().toString()
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+
         # Restart with same checkpoint: no duplicates (exactly-once sink)
         query2 = start_extraction_stream(
             spark, in_dir,
@@ -1604,3 +1621,104 @@ def test_track_elements_reentrancy_guard():
     # uninstall → reinstall is fine
     _etree.track_elements(lst)
     _etree.track_elements(None)
+
+
+def _payload_stage_rows(spark, stage, tmp_path):
+    """Run one per-row payload stage on a tiny frame holding a good,
+    a null and a corrupt payload per input kind; return its rows."""
+    from go_trafilatura_spark import discovery, multimodal as mm, pdf, warc
+
+    class StrictBackend(mm.FakeDecodeBackend):
+        """The fake codec, except that the payload b"corrupt" fails to
+        decode (the fake codec itself accepts any bytes)."""
+
+        def _plane(self, payload, salt):
+            if payload == b"corrupt":
+                raise ValueError("corrupt payload")
+            return super()._plane(payload, salt)
+
+    media = spark.createDataFrame(
+        [(kind + tag, kind, "application/octet-stream", payload, None, None, None)
+         for kind in ("image", "audio", "video")
+         for tag, payload in (("", kind.encode() * 8), ("_null", None),
+                              ("_bad", b"corrupt"))],
+        mm.MEDIA_SCHEMA)
+    bodies = spark.createDataFrame([
+        ("feed", b"<rss><channel><item><link>https://ex.com/a</link></item>"
+                 b"</channel></rss>"),
+        ("robots", b"User-agent: *\nSitemap: https://ex.com/sm.xml\n"),
+        ("null", None),
+        ("junk", b"\xff\x00junk"),
+    ], "source_url string, body binary")
+    if stage == "extract_pdf_pages":
+        pdfs = spark.createDataFrame(
+            [("good", pdf.build_pdf(["Hello world"])), ("null", None), ("junk", b"junk")],
+            "url string, pdf binary")
+        return [tuple(r) for r in pdf.extract_pdf_pages(pdfs).collect()]
+    if stage == "read_warc_pages":
+        (tmp_path / "a.warc.gz").write_bytes(warc.build_warc(
+            [("https://a/1", "2024-01-01T00:00:00Z", b"<p>1</p>"),
+             ("https://a/2", "2024-01-02T00:00:00Z", b"<p>2</p>")]))
+        (tmp_path / "b.warc").write_bytes(warc.build_warc(
+            [("https://b/1", "2024-01-03T00:00:00Z", b"<p>3</p>")],
+            per_record_gzip=False))
+        (tmp_path / "junk.bin").write_bytes(b"not a warc file")
+        return [(r["url"], bytes(r["html"]))
+                for r in warc.read_warc_pages(spark, str(tmp_path)).collect()]
+    if stage == "discover_urls":
+        return [tuple(r) for r in discovery.discover_urls(bodies, kind="feed").collect()]
+    if stage == "discover_sitemaps_from_robots":
+        return [tuple(r) for r in discovery.discover_sitemaps_from_robots(bodies).collect()]
+    backend = StrictBackend()
+    out = {
+        "image_features": lambda: mm.image_features(media, backend=backend),
+        "resize_images": lambda: mm.resize_images(media, 2, 2, backend=backend),
+        "audio_features": lambda: mm.audio_features(media, backend=backend),
+        "sample_video_frames": lambda: mm.sample_video_frames(media, 2, backend=backend),
+        "image_features_exact": lambda: mm.image_features_exact(media),
+        "video_frame_sums_exact": lambda: mm.video_frame_sums_exact(media, 2),
+    }[stage]()
+    return [r["media_id"] for r in out.collect()]
+
+
+@pytest.mark.parametrize("stage, expected", [
+    # multimodal: wrong-kind and null-payload rows are skipped; a payload
+    # the codec rejects drops its row, not the batch
+    ("image_features", ["image"]),
+    ("resize_images", ["image"]),
+    ("audio_features", ["audio"]),
+    ("sample_video_frames", ["video", "video"]),
+    # exact stages decode nothing, so only kind and null filter rows
+    ("image_features_exact", ["image", "image_bad"]),
+    ("video_frame_sums_exact", ["video", "video", "video_bad", "video_bad"]),
+    # pdf never drops a row: null or unreadable payloads give ("", 0)
+    ("extract_pdf_pages", [("good", "Hello world", 1), ("junk", "", 0), ("null", "", 0)]),
+    # warc explodes every record of every file; a non-WARC file adds none
+    ("read_warc_pages", [("https://a/1", b"<p>1</p>"), ("https://a/2", b"<p>2</p>"),
+                         ("https://b/1", b"<p>3</p>")]),
+    # discovery skips null bodies; unparseable bodies find nothing
+    ("discover_urls", [("feed", "https://ex.com/a")]),
+    ("discover_sitemaps_from_robots", [("robots", "https://ex.com/sm.xml")]),
+])
+def test_payload_stage_contract(spark, tmp_path, stage, expected):
+    """The null / corrupt / wrong-kind behaviour of each of the ten
+    per-row payload stages that share kernel.map_rows."""
+    assert sorted(_payload_stage_rows(spark, stage, tmp_path)) == sorted(expected)
+
+
+def test_fanout_small_scan_multi_file_input_adds_no_exchange(spark, tmp_path):
+    """An input under the size threshold that already scans as at least
+    defaultParallelism partitions is returned unchanged on the
+    input_bytes path too — no redundant Exchange."""
+    from go_trafilatura_spark import textops
+
+    n = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "docs")
+    spark.range(0, 400, numPartitions=2 * n).selectExpr(
+        "id AS doc_id", "concat('text ', id) AS text").write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert docs.rdd.getNumPartitions() >= n
+    size = textops.scan_bytes(path)
+    assert size is not None and size < (1 << 30)
+    out = textops.fanout_small_scan(docs, input_bytes=size)
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()

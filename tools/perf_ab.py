@@ -1,14 +1,16 @@
 """In-process perf harness for the extraction kernel (round-5 ledger).
 
 Measures CPU time (``time.process_time``) over the reference's 960
-comparison pages — the same corpus bench.py's realpage section times.
+comparison pages — the same corpus bench.py's realpage section times —
+or, when that corpus is absent, over the 800-page
+``fixtures/correctness/pages.parquet`` template corpus.
 Wall-clock on this shared host swings +-30% between minutes; process
 time is steadier but still moves +-8% across processes, so treat
 cross-process numbers as indicative and trust same-process A/B ratios
 (NOTES.md round-4/5 measurement discipline).
 
 Usage:
-    python tools/perf_ab.py            # full kernel, 3 reps, best
+    python tools/perf_ab.py            # full Arrow kernel, 3 reps, best
     python tools/perf_ab.py parse     # parse_html only
     python tools/perf_ab.py date      # date cascade only (pre-parsed)
 """
@@ -19,15 +21,24 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from go_trafilatura_spark.comparison import (  # noqa: E402
+    DATA_GO,
     load_comparison_entries,
     resolve_file,
 )
 
+FIXTURE_PAGES = os.path.join(ROOT, "fixtures", "correctness", "pages.parquet")
+
 
 def load_pages():
+    if not os.path.exists(DATA_GO):
+        import pyarrow.parquet as pq
+
+        table = pq.read_table(FIXTURE_PAGES, columns=["url", "html"])
+        return list(zip(table.column("url").to_pylist(), table.column("html").to_pylist()))
     pages = []
     for e in load_comparison_entries():
         p = resolve_file(e["file"])
@@ -85,25 +96,21 @@ def main() -> None:
                 extract_metadata(t, o)
 
     else:
-        import gc
+        import pyarrow as pa
 
-        from go_trafilatura_spark.kernel import KernelOptions, _extract_row
+        from go_trafilatura_spark.kernel import make_arrow_kernel
+        from go_trafilatura_spark.pipeline import ARROW_BATCH_SIZE
 
-        ko = KernelOptions()
+        # The shipped kernel itself (its batch loop and GC regime) over
+        # Arrow batches of the executor's size.
+        table = pa.table({"url": [u for u, _ in pages],
+                          "html": pa.array([h for _, h in pages], pa.binary())})
+        batches = table.to_batches(max_chunksize=ARROW_BATCH_SIZE)
+        kernel = make_arrow_kernel()
 
         def run():
-            # Mirror the kernel batch loop's GC regime (auto-GC off,
-            # periodic gen0 collect; rows release their element cycles
-            # explicitly) so this number reflects the shipped kernel.
-            gc.disable()
-            try:
-                for i, (url, html) in enumerate(pages):
-                    _extract_row(url, None, html, None, ko)
-                    if i % 200 == 199:
-                        gc.collect(0)
-                gc.collect(0)
-            finally:
-                gc.enable()
+            for _ in kernel(iter(batches)):
+                pass
 
     run()  # warm
     d = best_of(run)
