@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from go_trafilatura_spark import textops
-from go_trafilatura_spark.pipeline import extract_pages
+from go_trafilatura_spark.pipeline import HOST_REGEX, extract_pages
 from go_trafilatura_spark.textops import (
     LANG_STOPWORDS, MINHASH_PERMS, MINHASH_PRIME, SIMHASH_BITS,
     PII_EMAIL, PII_IPV4, PII_PHONE,
@@ -74,6 +74,10 @@ FROM (
   )
 )"""
 
+# DuckDB twin of the pipeline's host extraction: HOST_REGEX is
+# RE2-compatible, so the same literal drives both engines.
+_HOST_SQL = f"regexp_extract(url, '{HOST_REGEX}', 1)"
+
 FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "correctness")
 GOLDEN_PARQUET = os.path.join(FIXTURE_DIR, "golden.parquet")
 PAGES_PARQUET = os.path.join(FIXTURE_DIR, "pages.parquet")
@@ -88,6 +92,21 @@ def _ensure_fixtures() -> None:
     from go_trafilatura_spark.fixtures import ensure_fixtures
 
     ensure_fixtures("correctness")
+
+
+def _fixture_extracted(spark: SparkSession) -> DataFrame:
+    """The fixture corpus through the kernel, successfully extracted
+    rows only — the shared input of the fixture-corpus queries."""
+    _ensure_fixtures()
+    pages = spark.read.parquet(PAGES_PARQUET)
+    return extract_pages(pages, num_partitions=8).where(F.col("reject_reason").isNull())
+
+
+# The one synthetic-page template (doc_id, doc_id, text): Spark's
+# format_string and Python's % operator render it identically.
+_SYNTH_HTML = ('<html><head><title>Doc %s</title></head><body>'
+               '<article class="post-content"><h1>Doc %s</h1><p>%s</p></article>'
+               "</body></html>")
 
 
 def _synth_pages(spark: SparkSession, sf_dir: str, exchange: bool) -> DataFrame:
@@ -106,12 +125,7 @@ def _synth_pages(spark: SparkSession, sf_dir: str, exchange: bool) -> DataFrame:
         "doc_id", "text", "lang")
     if exchange:
         base = salted_repartition(base)
-    html = F.format_string(
-        '<html><head><title>Doc %s</title></head><body>'
-        '<article class="post-content"><h1>Doc %s</h1><p>%s</p></article>'
-        "</body></html>",
-        F.col("doc_id"), F.col("doc_id"), F.col("text"),
-    )
+    html = F.format_string(_SYNTH_HTML, F.col("doc_id"), F.col("doc_id"), F.col("text"))
     return base.select(
         "url", "warc_ts", F.encode(html, "utf-8").alias("html"), "text", "lang")
 
@@ -176,10 +190,7 @@ def q_extract_fixture_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-parity on the template fixture corpus (all operator families:
     boilerplate discard, link-density, lists, tables, code, comments,
     metadata). Oracle = the generator-predicted golden table."""
-    _ensure_fixtures()
-    pages = spark.read.parquet(PAGES_PARQUET)
-    out = extract_pages(pages, num_partitions=8)
-    return out.where(F.col("reject_reason").isNull()).select(
+    return _fixture_extracted(spark).select(
         "url", "content_text", "comments_text", "title", "author", "sitename", "date"
     )
 
@@ -453,9 +464,7 @@ def q_warc_extract(spark, sf_dir):
             .select("doc_id", "text").collect())
     records = []
     for r in rows:
-        html = (f'<html><head><title>Doc {r["doc_id"]}</title></head><body>'
-                f'<article class="post-content"><h1>Doc {r["doc_id"]}</h1>'
-                f'<p>{r["text"]}</p></article></body></html>').encode()
+        html = (_SYNTH_HTML % (r["doc_id"], r["doc_id"], r["text"])).encode()
         records.append((f'https://warc.local/{r["doc_id"]}',
                         "2024-01-01T00:00:00Z", html))
     tmp = tempfile.mkdtemp(prefix="gts_warc_q_")
@@ -491,10 +500,7 @@ def q_text_output(spark, sf_dir):
     """Text sink over the fixture corpus (content + comments + newline)."""
     from go_trafilatura_spark.sinks import text_output
 
-    _ensure_fixtures()
-    pages = spark.read.parquet(PAGES_PARQUET)
-    out = extract_pages(pages, num_partitions=8)
-    return text_output(out.where(F.col("reject_reason").isNull())).select(
+    return text_output(_fixture_extracted(spark)).select(
         "url", "text_output"
     )
 
@@ -504,10 +510,7 @@ def q_json_output(spark, sf_dir):
     string-concat reconstruction of the same payload from golden."""
     from go_trafilatura_spark.sinks import json_output
 
-    _ensure_fixtures()
-    pages = spark.read.parquet(PAGES_PARQUET)
-    out = extract_pages(pages, num_partitions=8)
-    return json_output(out.where(F.col("reject_reason").isNull())).select(
+    return json_output(_fixture_extracted(spark)).select(
         "url", "json_output"
     )
 
@@ -517,10 +520,7 @@ def q_readable_html(spark, sf_dir):
     reconstruction of the document string."""
     from go_trafilatura_spark.sinks import readable_html
 
-    _ensure_fixtures()
-    pages = spark.read.parquet(PAGES_PARQUET)
-    out = extract_pages(pages, num_partitions=8)
-    return readable_html(out.where(F.col("reject_reason").isNull())).select(
+    return readable_html(_fixture_extracted(spark)).select(
         "url", "readable_html"
     )
 
@@ -528,11 +528,8 @@ def q_readable_html(spark, sf_dir):
 def q_extract_spans(spark, sf_dir):
     """Span offsets per url (flattened): byte-exact vs the generator's
     predicted spans."""
-    _ensure_fixtures()
-    pages = spark.read.parquet(PAGES_PARQUET)
-    out = extract_pages(pages, num_partitions=8)
     return (
-        out.where(F.col("reject_reason").isNull())
+        _fixture_extracted(spark)
         .select("url", F.posexplode("content_spans").alias("span_idx", "span"))
         .select(
             "url",
@@ -577,12 +574,9 @@ def q_corpus_dedup(spark, sf_dir):
     keep the first url per fingerprint group."""
     from pyspark.sql import Window
 
-    _ensure_fixtures()
-    pages = spark.read.parquet(PAGES_PARQUET)
-    out = extract_pages(pages, num_partitions=8).where(F.col("reject_reason").isNull())
     w = Window.partitionBy("fingerprint").orderBy("url")
     return (
-        out.select("url", F.md5(F.col("content_text")).alias("fingerprint"))
+        _fixture_extracted(spark).select("url", F.md5(F.col("content_text")).alias("fingerprint"))
         .withColumn("dup_rank", F.row_number().over(w))
         .select(
             "url", "fingerprint",
@@ -1261,11 +1255,9 @@ FROM n GROUP BY url_norm""",
         "substring_dedup_filter": _sql_substring_dedup_filter(),
         "host_cap": (
             "SELECT host, url FROM ("
-            "  SELECT regexp_extract(url, "
-            "'^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)', 1) AS host, "
+            f"  SELECT {_HOST_SQL} AS host, "
             "         url, row_number() OVER ("
-            "           PARTITION BY regexp_extract(url, "
-            "'^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)', 1) "
+            f"           PARTITION BY {_HOST_SQL} "
             "           ORDER BY url) AS rn"
             f"  FROM read_parquet('{PAGES_PARQUET}')"
             ") WHERE rn <= 3"
@@ -1393,9 +1385,7 @@ FROM read_parquet('{golden}')""",
         "json_output": _sql_json_output(golden),
         "readable_html": _sql_readable_html(golden),
         "host_stats": (
-            # Same scheme-agnostic host regex as pipeline.HOST_REGEX.
-            "SELECT regexp_extract(url, "
-            "'^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)', 1) AS host, "
+            f"SELECT {_HOST_SQL} AS host, "
             "count(*) AS n_pages, sum(octet_length(html))::BIGINT AS total_bytes "
             f"FROM read_parquet('{PAGES_PARQUET}') GROUP BY host"
         ),

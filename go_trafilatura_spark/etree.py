@@ -186,10 +186,6 @@ def is_void(el: Element) -> bool:
     return el.tag in VOID_ELEMENTS
 
 
-def is_comment(el: Element) -> bool:
-    return el.tag == COMMENT
-
-
 # ---------------------------------------------------------------------------
 # Tree accessors (mirror go-shiori/dom + internal/etree helpers)
 # ---------------------------------------------------------------------------

@@ -365,13 +365,6 @@ def _gen_baseline_only(rng, url, lang):
                             html_parts=hp)
 
 
-def _gen_reject_short(rng, url, lang):
-    body = "<article><p>ok.</p></article>"
-    html = _wrap("<title>tiny</title>", body, lang)
-    return html, _mk_golden(url, "reject_short", "ok.", title="tiny", reject_reason=None,
-                            html_parts=["<p>ok.</p>"])
-
-
 def _gen_giant_doc(rng, url, lang):
     words = _WORDS_EN
     heading = _sentence(rng, words)[:-1]

@@ -98,23 +98,24 @@ def compute_spans(content_node, content_text: str) -> list[dict]:
     return spans
 
 
-def _extract_row(url, warc_ts, html, lang, options) -> tuple:
-    """Returns values in OUTPUT_COLUMNS order:
-    (url, warc_ts, lang, content_text, comments_text, content_html,
-     comments_html, title, author, meta_url, hostname, description,
-     sitename, date, categories, tags, license, language, image,
-     page_type, reject_reason, content_spans)."""
+def _extract_row(url, html, options) -> tuple:
+    """Returns the kernel-computed values in OUTPUT_COLUMNS order (the
+    pass-through url, warc_ts and lang are left out):
+    (content_text, comments_text, content_html, comments_html, title,
+     author, meta_url, hostname, description, sitename, date,
+     categories, tags, license, language, image, page_type,
+     reject_reason, content_spans)."""
     from . import etree
     from .core import ExtractError, extract
 
     def rejected(reason: str) -> tuple:
-        return (url, warc_ts, lang) + (None,) * 17 + (reason, None)
+        return (None,) * 17 + (reason, None)
 
     if html is None:
         return rejected("null_html")
     if isinstance(html, str):
         html = html.encode("utf-8", "replace")
-    if len(html) > options.max_html_bytes:
+    if len(html) > DEFAULT_MAX_HTML_BYTES:
         return rejected("oversized")
     # Cheap byte screen before parsing: must look like markup.
     head = html[:512].lstrip()
@@ -141,7 +142,6 @@ def _extract_row(url, warc_ts, html, lang, options) -> tuple:
 
         m = res.metadata
         return (
-            url, warc_ts, lang,
             res.content_text,
             res.comments_text,
             etree.tostring(res.content_node) if res.content_node is not None else "",
@@ -170,11 +170,8 @@ class KernelOptions:
     cpu_ms gives a throughput attestation that a loaded shared host
     cannot sink (bench.py emits it next to wall-clock)."""
 
-    def __init__(self, opts_dict: dict | None = None,
-                 max_html_bytes: int = DEFAULT_MAX_HTML_BYTES,
-                 with_timing: bool = False):
+    def __init__(self, opts_dict: dict | None = None, with_timing: bool = False):
         self.opts_dict = opts_dict or {}
-        self.max_html_bytes = max_html_bytes
         self.with_timing = with_timing
 
     def make_options(self, url: str):
@@ -250,8 +247,8 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
                 computed = [c for c in OUTPUT_COLUMNS if c not in ("url", "warc_ts", "lang")]
                 col_lists: dict[str, list] = {c: [] for c in computed}
                 for u, h in zip(urls, htmls):
-                    row = _extract_row(u, None, h, None, ko)
-                    for c, value in zip(OUTPUT_COLUMNS[3:], row[3:]):
+                    row = _extract_row(u, h, ko)
+                    for c, value in zip(computed, row):
                         col_lists[c].append(value)
 
                 arrays = []

@@ -30,7 +30,21 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-from .utils import _STOPWORDS  # the 12 core seed lists live in utils
+# The 12 core Latin/Cyrillic seed lists (frequent function words).
+_STOPWORDS = {
+    "en": "the and of to in is that it for was with as his on are this be at by have from or had not but what all were when there can will would she her him they my one do you said which their".split(),
+    "de": "der die und das ist nicht von mit den des dem ein eine einen im für auf als auch sich werden wurde bei aus nach wie zum haben wird sind oder einer einem über aber wenn noch nur schon mehr kann muss sehr durch gegen ohne unter zwischen ihre seinem ihren dieser diese dieses man wir ich es dass sie er zu".split(),
+    "fr": "le la les des une est dans pour que qui sur avec pas plus par mais comme tout nous vous ont cette aux être sont et du de il elle au ce se ne son sa ses leur bien sans peut fait deux après avant aussi même où donc entre".split(),
+    "es": "el la los las una es en que de por para con se su al lo como más pero sus fue este son entre cuando y un del ya o ha sin sobre también hasta hay donde quien desde nos durante todos uno les ni contra ese eso ante ellos e esto mí antes algunos qué unos yo otro otras otra él tanto esa estos mucho quienes nada muchos cual poco ella estar estas algunas algo nosotros".split(),
+    "it": "il la che di e per una sono con non del alla nel più anche come dei delle questo essere dalla gli lo un in da si al ma le se nella della i o ha mi ci è sua suo".split(),
+    "pt": "o a os as um uma é de em que para com não por mais como mas foi ele isso ou sua seu são do da no na se ao dos às pelo pela até isso ela entre depois sem mesmo aos seus quem nas me esse eles você essa num nem suas meu às minha numa pelos elas qual nós lhe deles essas esses pelas este dele".split(),
+    "nl": "de het een en van in is dat op te zijn voor met als aan er maar om ook bij naar dan nog wordt wel geen al naar uit door over ze zich hij".split(),
+    "ru": "и в не на что с он как это по но они из его за от так же для мы бы была было у а то все она к её их кто этот".split(),
+    "id": "yang dan di ini itu dengan untuk dari dalam tidak pada adalah akan ke juga saya kita mereka bisa ada atau oleh sudah telah harus bahwa karena jika seperti saat tersebut".split(),
+    "tr": "bir ve bu da ne için ile olarak daha çok ama gibi sonra kadar var yok ben sen biz onlar de mi en o ki".split(),
+    "pl": "i w nie na to z że się jest do jak po przez tak ale za od czy tym jego która które który być już był może".split(),
+    "sv": "och det att i en som på är av för med den till inte har de om ett han var men vi så kan man när år".split(),
+}
 
 # Additional Latin-script seed lists (frequent function words).
 _EXTRA_LATIN = {

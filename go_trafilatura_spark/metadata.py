@@ -1017,12 +1017,6 @@ _RX_DMY_NAME = stdlib_re.compile(
 )
 
 
-def _date_ord(d: str) -> int:
-    """Days-since-epoch-ish ordinal for yyyy-mm-dd strings (comparison
-    only; no calendar math needed for a +-31-day window test)."""
-    return int(d[:4]) * 372 + int(d[5:7]) * 31 + int(d[8:10])
-
-
 def _valid_date(y: int, m: int, d: int) -> str:
     if 1995 <= y <= 2040 and 1 <= m <= 12 and 1 <= d <= 31:
         return f"{y:04d}-{m:02d}-{d:02d}"

@@ -20,10 +20,6 @@ class Config:
     min_output_comment_size: int = 1
 
 
-def default_config() -> Config:
-    return Config()
-
-
 @dataclass
 class Options:
     config: Config = field(default_factory=Config)

@@ -88,18 +88,17 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> Data
 HOST_REGEX = "^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)"
 
 
-def salted_host_agg(pages: DataFrame,
-                    salt_buckets: int = SALT_BUCKETS) -> DataFrame:
+def salted_host_agg(pages: DataFrame) -> DataFrame:
     """Skew-safe per-host aggregation: the host key IS hot (Zipf hosts —
     one host can be 10% of a crawl), so aggregate in two stages:
     groupBy(host, salt) partial → groupBy(host) final. The salt is
     derived from the url (uniform within a host, deterministic on
-    retries), so a giant host spreads over ``salt_buckets`` reducers in
-    stage one and the final shuffle carries ≤ salt_buckets rows per
+    retries), so a giant host spreads over ``SALT_BUCKETS`` reducers in
+    stage one and the final shuffle carries ≤ SALT_BUCKETS rows per
     host. This is the real skew story behind the north rule's
     "repartitioning by url-hash salted against skewed hosts"."""
     host = F.regexp_extract("url", HOST_REGEX, 1).alias("host")
-    salt = F.pmod(F.xxhash64("url"), F.lit(salt_buckets)).cast("int").alias("salt")
+    salt = F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)).cast("int").alias("salt")
     partial = (
         pages.select(host, salt, F.length("html").cast("bigint").alias("html_len"))
         .groupBy("host", "salt")
@@ -115,7 +114,6 @@ def salted_host_agg(pages: DataFrame,
 
 
 def host_cap(pages: DataFrame, max_per_host: int = 3,
-             salt_buckets: int = SALT_BUCKETS,
              id_col: str | None = None) -> DataFrame:
     """Per-host document cap (the crawl-pipeline step limiting any one
     site's share of the corpus): keep the lexicographically-first
@@ -125,7 +123,7 @@ def host_cap(pages: DataFrame, max_per_host: int = 3,
     ``row_number() over (partition by host order by url)`` serializes a
     Zipf-hot host into one task; instead stage one takes the per-group
     top-N within each (host, url-salt) partition, and the per-host
-    stage-two combine sees ≤ salt_buckets·N rows regardless of host
+    stage-two combine sees ≤ SALT_BUCKETS·N rows regardless of host
     size. Exact: min-N of a union is the min-N of per-part min-Ns.
 
     Both stages are ``row_number`` windows, NOT collect_list+slice: a
@@ -148,7 +146,7 @@ def host_cap(pages: DataFrame, max_per_host: int = 3,
     from pyspark.sql import Window
 
     host = F.regexp_extract("url", HOST_REGEX, 1).alias("host")
-    salt = F.pmod(F.xxhash64("url"), F.lit(salt_buckets)).cast("int").alias("salt")
+    salt = F.pmod(F.xxhash64("url"), F.lit(SALT_BUCKETS)).cast("int").alias("salt")
     order = ["url", id_col] if id_col else ["url"]
     keep_cols = ["host", "url"] + ([id_col] if id_col else [])
     w1 = Window.partitionBy("host", "salt").orderBy(*order)
@@ -228,11 +226,6 @@ def _extract_pages(df: DataFrame, options: dict | None, num_partitions: int | No
         pruned = salted_repartition(pruned, num_partitions)
     kernel = make_arrow_kernel(KernelOptions(options or {}, with_timing=with_timing))
     return pruned.mapInArrow(kernel, TIMED_OUTPUT_SCHEMA if with_timing else OUTPUT_SCHEMA)
-
-
-def extracted_ok(df: DataFrame) -> DataFrame:
-    """Keep successfully extracted rows (reject_reason is NULL)."""
-    return df.where(F.col("reject_reason").isNull())
 
 
 # ---------------------------------------------------------------------------

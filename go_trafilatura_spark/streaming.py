@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
-from .pipeline import extract_pages
+from .pipeline import HOST_REGEX, extract_pages
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -116,7 +116,7 @@ def stateful_host_dedup_stream(
         yield pd.DataFrame(out, columns=["host", "url", "fingerprint", "seen_before"])
 
     hosts = stream_df.select(
-        F.regexp_extract("url", "https?://([^/]+)", 1).alias("host"),
+        F.regexp_extract("url", HOST_REGEX, 1).alias("host"),
         "url",
         F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fingerprint"),
     )
@@ -127,36 +127,6 @@ def stateful_host_dedup_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def start_quality_stream(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_path: str,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """Windowed per-language throughput/quality aggregation with a
-    watermark for late shards — demonstrates stateful streaming over the
-    extraction output. Returns (query, memory sink name)."""
-    stream = read_page_stream(spark, input_path)
-    agg = (
-        stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window), F.col("lang"))
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.avg(F.length("text")).alias("avg_text_len"),
-        )
-    )
-    name = "quality_stream"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-    return query, name
 
 
 def stateful_lsh_candidates_stream(

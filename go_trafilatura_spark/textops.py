@@ -87,9 +87,7 @@ def scan_bytes(path: str) -> int | None:
     return None
 
 
-def fanout_small_scan(df: DataFrame, key_col: str = "doc_id",
-                      min_partitions: int | None = None,
-                      input_bytes: int | None = None) -> DataFrame:
+def fanout_small_scan(df: DataFrame, input_bytes: int | None = None) -> DataFrame:
     """Scale-adaptive scan fan-out (optimization guide §2.4/§6): a small
     parquet input — one file, one row group — scans as 1-2 splits, so
     every projection / explode / map-side partial aggregation UPSTREAM
@@ -97,8 +95,8 @@ def fanout_small_scan(df: DataFrame, key_col: str = "doc_id",
     session has (measured: the whole per-doc query suite ran 2-way
     parallel on local[32]). When the optimizer's size estimate says the
     input is small (< 1 GB) AND the scan produced fewer partitions than
-    ``min_partitions`` (default: defaultParallelism), hash-repartition
-    on the uniform row key so the compute stage uses every core. At
+    defaultParallelism, hash-repartition on the uniform row key
+    (``doc_id``) so the compute stage uses every core. At
     real scale the estimate exceeds the threshold (or the stats are
     unknown → assumed huge) and the input is returned UNCHANGED — no
     exchange is ever added to a 100 TB scan.
@@ -110,12 +108,10 @@ def fanout_small_scan(df: DataFrame, key_col: str = "doc_id",
     ``_FANOUT_MAX_BYTES`` is compared against ON-DISK (compressed
     parquet) bytes on the ``input_bytes`` path and against the
     optimizer's in-memory estimate on the stats path."""
-    spark = df.sparkSession
-    if min_partitions is None:
-        try:
-            min_partitions = spark.sparkContext.defaultParallelism
-        except Exception:
-            return df
+    try:
+        min_partitions = df.sparkSession.sparkContext.defaultParallelism
+    except Exception:
+        return df
     size = input_bytes if input_bytes is not None else _estimated_plan_bytes(df)
     if size is None or size > _FANOUT_MAX_BYTES:
         return df
@@ -124,7 +120,7 @@ def fanout_small_scan(df: DataFrame, key_col: str = "doc_id",
             return df
     except Exception:
         return df
-    return df.repartition(min_partitions, F.col(key_col))
+    return df.repartition(min_partitions, F.col("doc_id"))
 
 
 def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -204,10 +200,9 @@ def exact_dedup_flags(df: DataFrame) -> DataFrame:
     shuffle on the fingerprint (uniform key)."""
     from pyspark.sql import Window
 
-    normalized = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
     return (
-        df.select("doc_id", F.md5(normalized).alias("fingerprint"))
+        fingerprints(df)
         .withColumn("dup_rank", F.row_number().over(w))
         .select(
             "doc_id",
@@ -268,8 +263,7 @@ def minhash_signatures(df: DataFrame, k_shingle: int = 3) -> DataFrame:
 
 
 def minhash_lsh_pairs(df: DataFrame, k_shingle: int = 3,
-                      max_band_df: int = 100,
-                      persist_bands: bool | None = None) -> DataFrame:
+                      max_band_df: int = 100) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding (2 bands × 2 rows):
     docs agreeing on a full band are candidates. Equi-join on band keys —
     no O(n²) comparison ever materializes.
@@ -285,8 +279,8 @@ def minhash_lsh_pairs(df: DataFrame, k_shingle: int = 3,
     much cheaper exact_dedup_flags / fingerprint pass already handles —
     LSH exists to find the *sparse* near-duplicate pairs.
 
-    The band frame is **persisted** before the fan-out
-    (``persist_bands``): the hot-key subquery and both self-join sides
+    The band frame is **persisted** before the fan-out when the input
+    is large (see below): the hot-key subquery and both self-join sides
     re-read the cached bands instead of re-running the signature
     aggregation — the shingle explode + groupBy (the most expensive
     stage of the whole dedup at 100 TB) executes exactly once. The
@@ -303,17 +297,17 @@ def minhash_lsh_pairs(df: DataFrame, k_shingle: int = 3,
     through ``dedup_clusters`` (which unpersists deterministically once
     the edge list is checkpointed), call
     ``_minhash_lsh_pairs_impl(...)`` and unpersist the returned handle
-    after materializing the pairs, or pass ``persist_bands=False`` and
-    accept the recompute.
+    after materializing the pairs.
 
-    ``persist_bands=None`` (default) decides from the optimizer's input
-    size estimate: the cache materialization is a stage barrier worth
+    Whether to persist is decided from the optimizer's input size
+    estimate: the cache materialization is a stage barrier worth
     ~3 s of constant overhead in local mode, which only pays for itself
     once the signature aggregation is expensive — measured crossover
     ~64 MB of input text (~25k web docs). Unknown statistics (Spark's
     Long.Max default) choose the cache: at 100 TB the recompute, not
     the barrier, is the catastrophe."""
-    pairs, _ = _minhash_lsh_pairs_impl(df, k_shingle, max_band_df, persist_bands)
+    pairs, _ = _minhash_lsh_pairs_impl(
+        df, k_shingle, max_band_df, _should_persist_bands(df))
     return pairs
 
 
@@ -321,23 +315,15 @@ _PERSIST_BANDS_MIN_BYTES = 64 * 1024 * 1024
 
 
 def _should_persist_bands(df: DataFrame) -> bool:
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j hands small BigIntegers back as Python ints; huge ones
-        # (Spark's 8 EiB "unknown" default) stay JavaObjects
-        size = int(raw.toString()) if hasattr(raw, "toString") else int(raw)
-    except Exception:
-        return True  # cannot estimate → the scale-safe side
-    return size > _PERSIST_BANDS_MIN_BYTES
+    size = _estimated_plan_bytes(df)  # None → cannot estimate → the scale-safe side
+    return size is None or size > _PERSIST_BANDS_MIN_BYTES
 
 
 def _minhash_lsh_pairs_impl(df: DataFrame, k_shingle: int, max_band_df: int,
-                            persist_bands: bool | None):
+                            persist_bands: bool):
     """Implementation returning (pairs, persisted_bands_handle_or_None)
     so callers that materialize downstream (dedup_clusters) can
     unpersist deterministically."""
-    if persist_bands is None:
-        persist_bands = _should_persist_bands(df)
     sigs = minhash_signatures(df, k_shingle)
     # Long format: one row per (doc, band) — the two bands are a
     # band_idx dimension instead of two lineage branches, so every
@@ -621,23 +607,13 @@ def ann_bruteforce_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 10) -> D
     )
 
 
-def _sign_bucket(vec, n_bits: int = 8):
-    """LSH bucket from the sign bits of the first n dims (an IVF-like
-    coarse quantizer that needs no training — the scale path: search only
-    the query's bucket, ~2^-n of the corpus)."""
-    bucket = F.lit(0)
-    for i in range(n_bits):
-        bucket = bucket + (
-            (F.element_at(vec, i + 1) > 0).cast("int") * F.lit(1 << i)
-        )
-    return bucket
-
-
 def ann_lsh_topk(emb: DataFrame, query_vec_id: int = 0, k: int = 5, n_bits: int = 8) -> DataFrame:
-    """Bucketed ANN: restrict the scan to the query's sign-bit bucket.
-    At 100 TB the bucket column is a partition key, so this becomes a
-    partition-pruned scan instead of a full pass."""
-    bucketed = emb.withColumn("bucket", _sign_bucket(F.col("embedding"), n_bits))
+    """Bucketed ANN: restrict the scan to the query's sign-bit bucket
+    over the first ``n_bits`` dims (an IVF-like coarse quantizer that
+    needs no training: search only the query's bucket, ~2^-n of the
+    corpus). At 100 TB the bucket column is a partition key, so this
+    becomes a partition-pruned scan instead of a full pass."""
+    bucketed = emb.withColumn("bucket", _band_bucket(F.col("embedding"), 0, n_bits))
     q = bucketed.where(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("qvec"), F.col("bucket").alias("qbucket")
     )
@@ -892,7 +868,7 @@ def gopher_quality_filter(df: DataFrame) -> DataFrame:
 # -- benchmark decontamination ----------------------------------------------
 
 def decontaminate(df: DataFrame, benchmark_df: DataFrame,
-                  n_gram: int = 13, broadcast: bool = True) -> DataFrame:
+                  n_gram: int = 13) -> DataFrame:
     """Training-data decontamination: per document, how many of its
     distinct token n-grams collide with any n-gram of a benchmark/eval
     set (the standard 13-gram overlap check used when scrubbing eval
@@ -917,11 +893,7 @@ def decontaminate(df: DataFrame, benchmark_df: DataFrame,
 
     bench = grams(benchmark_df, n_gram).select("h").distinct()
     corpus = grams(df, n_gram)
-    # broadcast=False: corpus-vs-corpus decontamination where the
-    # "benchmark" side is itself large — plain equi-join (one shuffle
-    # on the uniform gram hash) instead of a broadcast that won't fit.
-    bench_side = F.broadcast(bench) if broadcast else bench
-    hits = (corpus.join(bench_side, "h", "left_semi")
+    hits = (corpus.join(F.broadcast(bench), "h", "left_semi")
             .groupBy("doc_id").agg(F.count("*").alias("n_contaminated")))
     totals = corpus.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     return (totals.join(hits, "doc_id", "left")
@@ -957,7 +929,7 @@ def stratified_sample(df: DataFrame, strata_col: str = "lang",
 # -- CCNet-style line-level dedup ---------------------------------------------
 
 def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               min_docs: int = 2, broadcast: bool = True) -> DataFrame:
+               min_docs: int = 2) -> DataFrame:
     """CCNet-style boilerplate line removal: a line (newline-delimited
     paragraph of extracted text) that appears in >= ``min_docs``
     DISTINCT documents is corpus boilerplate (cookie banners, nav
@@ -976,9 +948,7 @@ def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     tiny relative to the corpus (it is the repeated boilerplate, not
     the unique prose), so it BROADCASTS and the removal pass is a
     broadcast left-anti join — the corpus body never shuffles again.
-    The rebuild groupBy(doc_id) keys uniformly. ``broadcast=False``
-    falls back to a shuffled anti-join for a pathological corpus whose
-    frequent-line set itself is huge."""
+    The rebuild groupBy(doc_id) keys uniformly."""
     lines = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
@@ -988,12 +958,11 @@ def line_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             .where(F.col("nd") >= min_docs)
             .select("h"))
     freq_marked = freq.withColumn("is_freq", F.lit(True))
-    freq_side = F.broadcast(freq_marked) if broadcast else freq_marked
     # One left join marks frequent lines; one groupBy computes totals,
     # kept counts, and the rebuilt text together (collect_list drops
     # the nulls the when() leaves on frequent lines) — no separate
     # anti-join / totals / final-join passes.
-    marked = lines.join(freq_side, "h", "left")
+    marked = lines.join(F.broadcast(freq_marked), "h", "left")
     kept_struct = F.when(F.col("is_freq").isNull(), F.struct("pos", "line"))
     return (marked.groupBy(id_col)
             .agg(
@@ -1116,8 +1085,7 @@ def url_dedup(df: DataFrame, url_col: str = "url",
 # -- unigram LM quality scoring -----------------------------------------------
 
 def unigram_logprob(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", smoothing: float = 0.5,
-                    broadcast: bool = True) -> DataFrame:
+                    id_col: str = "doc_id", smoothing: float = 0.5) -> DataFrame:
     """CCNet-style LM quality proxy with a corpus-trained unigram
     model: per document, the mean negative log2 probability of its
     tokens under the corpus unigram distribution (low = fluent/common
@@ -1130,8 +1098,7 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
     partition, not per occurrence; (2) scoring — per-document distinct
     tokens join the vocabulary (BROADCAST: distinct-token count grows
     ~O(corpus^0.5) by Heaps' law and is millions at 100 TB — still a
-    broadcastable dim; ``broadcast=False`` shuffles on the uniform
-    token hash instead), then one groupBy(doc_id) weighted mean.
+    broadcastable dim), then one groupBy(doc_id) weighted mean.
     Smoothing: absent tokens cannot occur (the vocab IS the corpus),
     so ``smoothing`` only regularizes counts (count + s) / (total +
     s·|V|). log2 rounded to 4 decimals for cross-engine determinism
@@ -1158,12 +1125,11 @@ def unigram_logprob(df: DataFrame, text_col: str = "text",
                         ).cast("bigint").alias("millibits"),
                     ))
     doc_toks = toks.groupBy(id_col, "tok").agg(F.count("*").alias("n_occ"))
-    vocab_side = F.broadcast(scored_vocab) if broadcast else scored_vocab
     # Exact integer mean (milli-bits scaled by 1000, integer division),
     # converted by one constant divisor — identical int in, identical
     # double out on every engine (a float-division round() here can
     # land on a half-tie and round differently across engines).
-    return (doc_toks.join(vocab_side, "tok")
+    return (doc_toks.join(F.broadcast(scored_vocab), "tok")
             .groupBy(id_col)
             .agg(
                 F.sum("n_occ").cast("bigint").alias("n_tokens"),

@@ -6,7 +6,7 @@ test (/root/reference/utils-extractor.go:136-149), image checks
 (/root/reference/utils-common.go:54-74), URL helpers
 (/root/reference/url.go:31-120), language classifier
 (/root/reference/utils-extractor.go:96-109 — whatlanggo; re-specified here
-as a deterministic stopword-frequency classifier).
+as the trigram detector in lang.py).
 """
 
 from __future__ import annotations
@@ -186,70 +186,6 @@ def validate_url(url: str, base=None) -> tuple[str, bool]:
     if ok:
         return new_url, True
     return url, False
-
-
-# ---------------------------------------------------------------------------
-# Deterministic language classifier
-# ---------------------------------------------------------------------------
-# The reference delegates to whatlanggo (trigram profiles). A full trigram
-# port is out of scope; this is a deterministic stopword-frequency
-# classifier over the same ISO 639-1 surface, adequate for gating and for
-# filling metadata.language on clearly monolingual text.
-
-_STOPWORDS = {
-    "en": "the and of to in is that it for was with as his on are this be at by have from or had not but what all were when there can will would she her him they my one do you said which their".split(),
-    "de": "der die und das ist nicht von mit den des dem ein eine einen im für auf als auch sich werden wurde bei aus nach wie zum haben wird sind oder einer einem über aber wenn noch nur schon mehr kann muss sehr durch gegen ohne unter zwischen ihre seinem ihren dieser diese dieses man wir ich es dass sie er zu".split(),
-    "fr": "le la les des une est dans pour que qui sur avec pas plus par mais comme tout nous vous ont cette aux être sont et du de il elle au ce se ne son sa ses leur bien sans peut fait deux après avant aussi même où donc entre".split(),
-    "es": "el la los las una es en que de por para con se su al lo como más pero sus fue este son entre cuando y un del ya o ha sin sobre también hasta hay donde quien desde nos durante todos uno les ni contra ese eso ante ellos e esto mí antes algunos qué unos yo otro otras otra él tanto esa estos mucho quienes nada muchos cual poco ella estar estas algunas algo nosotros".split(),
-    "it": "il la che di e per una sono con non del alla nel più anche come dei delle questo essere dalla gli lo un in da si al ma le se nella della i o ha mi ci è sua suo".split(),
-    "pt": "o a os as um uma é de em que para com não por mais como mas foi ele isso ou sua seu são do da no na se ao dos às pelo pela até isso ela entre depois sem mesmo aos seus quem nas me esse eles você essa num nem suas meu às minha numa pelos elas qual nós lhe deles essas esses pelas este dele".split(),
-    "nl": "de het een en van in is dat op te zijn voor met als aan er maar om ook bij naar dan nog wordt wel geen al naar uit door over ze zich hij".split(),
-    "ru": "и в не на что с он как это по но они из его за от так же для мы бы была было у а то все она к её их кто этот".split(),
-    "id": "yang dan di ini itu dengan untuk dari dalam tidak pada adalah akan ke juga saya kita mereka bisa ada atau oleh sudah telah harus bahwa karena jika seperti saat tersebut".split(),
-    "tr": "bir ve bu da ne için ile olarak daha çok ama gibi sonra kadar var yok ben sen biz onlar de mi en o ki".split(),
-    "pl": "i w nie na to z że się jest do jak po przez tak ale za od czy tym jego która które który być już był może".split(),
-    "sv": "och det att i en som på är av för med den till inte har de om ett han var men vi så kan man när år".split(),
-}
-# Character-level signals for short texts (stand-in for whatlanggo's
-# trigram statistics): language-distinctive letters/punctuation.
-_CHAR_SIGNALS = (
-    ("es", "ñ¿¡"),
-    ("de", "ß"),
-    ("fr", "œàêçè"),
-    ("pt", "ãõ"),
-    ("pl", "łżśćą"),
-    ("tr", "ğışİ"),
-    ("ru", "бгджзйлпфцчшщыэюя"),
-)
-
-_STOPWORD_SETS = {lang: frozenset(words) for lang, words in _STOPWORDS.items()}
-
-
-def detect_language(text: str) -> str:
-    """Return ISO 639-1 code of the dominant language, or "" if unknown."""
-    words = re.findall(r"[^\W\d_]+", text.lower())
-    if len(words) < 3:
-        return ""
-    from collections import Counter
-
-    counts = Counter(words)
-    scores = {}
-    for lang, sw in _STOPWORD_SETS.items():
-        hits = sum(counts[w] for w in sw if w in counts)
-        if hits:
-            scores[lang] = hits
-    # Distinctive-character fallback for short/ambiguous text
-    lowered = text.lower()
-    for lang, chars in _CHAR_SIGNALS:
-        bonus = sum(lowered.count(c) for c in chars)
-        if bonus:
-            scores[lang] = scores.get(lang, 0) + bonus
-    if not scores:
-        return ""
-    best = max(scores.items(), key=lambda kv: (kv[1], kv[0]))
-    if best[1] < max(2, len(words) // 50):
-        return ""
-    return best[0]
 
 
 def language_classifier(content_text: str, comments_text: str) -> str:

@@ -28,6 +28,9 @@ def main() -> int:
     parser.add_argument("--favor", choices=("precision", "recall"), default=None)
     parser.add_argument("--min-extracted-size", type=int, default=None)
     args = parser.parse_args()
+    if args.resume and args.lang:
+        # the bucket-manifest path has no pre-parse language filter
+        parser.error("--lang cannot be combined with --resume")
 
     from pyspark.sql import SparkSession, functions as F
 

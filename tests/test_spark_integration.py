@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from go_trafilatura_spark.fixtures import ensure_fixtures
 from go_trafilatura_spark.pipeline import (
+    HOST_REGEX,
     build_session,
     eval_metrics,
     extract_pages,
@@ -365,9 +366,9 @@ def test_stateful_dedup_stream(spark, smoke_dir):
         # The fixture corpus deliberately contains ~4% duplicate pages,
         # so batch 1 may already flag a few.
         n_unique = (
-            pages.selectExpr(
-                "regexp_extract(url, 'https?://([^/]+)', 1) AS host",
-                "md5(coalesce(text, '')) AS fp",
+            pages.select(
+                F.regexp_extract("url", HOST_REGEX, 1).alias("host"),
+                F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp"),
             )
             .distinct()
             .count()
@@ -387,6 +388,87 @@ def test_stateful_dedup_stream(spark, smoke_dir):
         assert sum(r["seen_before"] for r in rows) == 60 - n_unique
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_stateful_dedup_stream_host_parsing(spark):
+    """The stream dedup keys on the pipeline's host: an upper-case
+    scheme and a non-http scheme each get their own host (not a shared
+    ""), and a port variant of a seen host is the same host."""
+    import datetime
+
+    from go_trafilatura_spark.streaming import (
+        PAGES_SCHEMA, read_page_stream, stateful_host_dedup_stream,
+    )
+
+    ts = datetime.datetime(2024, 1, 1)
+    batches = [
+        ["https://a.example/x", "HTTP://b.example/y", "ftp://c.example/z"],
+        ["https://a.example:8443/w"],
+    ]
+    tmp = tempfile.mkdtemp(prefix="gts_state_host_")
+    try:
+        in_dir = os.path.join(tmp, "in")
+        os.makedirs(in_dir)
+
+        def _land(i, urls):
+            staged = os.path.join(tmp, f"b{i}")
+            rows = [(u, ts, b"<html></html>", "same text", "en") for u in urls]
+            spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.parquet(staged)
+            part = [f for f in os.listdir(staged) if f.endswith(".parquet")][0]
+            shutil.copy(os.path.join(staged, part), os.path.join(in_dir, f"batch{i}.parquet"))
+
+        _land(1, batches[0])
+        query = (
+            stateful_host_dedup_stream(read_page_stream(spark, in_dir, max_files_per_trigger=1))
+            .writeStream.format("memory").queryName("dedup_host_stream")
+            .outputMode("append")
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .start()
+        )
+
+        def _wait_rows(n, timeout_s=120):
+            deadline = time.time() + timeout_s
+            while time.time() < deadline:
+                if not query.isActive:
+                    raise AssertionError(f"query died: {query.exception()}")
+                got = spark.sql("select count(*) c from dedup_host_stream").collect()[0]["c"]
+                if got >= n:
+                    return
+                time.sleep(1)
+            raise AssertionError(f"timed out waiting for {n} rows")
+
+        _wait_rows(3)
+        _land(2, batches[1])
+        _wait_rows(4)
+        query.stop()
+        got = {r["url"]: (r["host"], r["seen_before"])
+               for r in spark.sql("select * from dedup_host_stream").collect()}
+        assert got == {
+            "https://a.example/x": ("a.example", 0),
+            "HTTP://b.example/y": ("b.example", 0),
+            "ftp://c.example/z": ("c.example", 0),
+            "https://a.example:8443/w": ("a.example", 1),
+        }
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_extract_job_rejects_resume_with_lang(monkeypatch):
+    """The resumable path has no language filter, so --resume --lang is
+    a usage error (exit 2) raised before any session starts."""
+    import importlib.util
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "extract_job", os.path.join(repo, "jobs", "extract_job.py"))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr("sys.argv", [
+        "extract_job.py", "--input", "/nonexistent/pages", "--output",
+        "/nonexistent/out", "--resume", "--lang", "en"])
+    with pytest.raises(SystemExit) as exc:
+        job.main()
+    assert exc.value.code == 2
 
 
 def test_multimodal_plumbing(spark):
@@ -681,7 +763,7 @@ def test_projection_ops_plan_exchange_free(spark, op):
 
 
 def test_lsh_bands_cached_single_shingle_pass(spark, tmp_path):
-    """minhash_lsh_pairs with persist_bands=True caches the band frame:
+    """The LSH band frame, when persisted, is cached once:
     the hot-key subquery and both self-join sides must read the cache
     (InMemoryTableScan), so the shingle explode + signature aggregation
     — the dominant cost at 100 TB — executes once, not once per
@@ -706,12 +788,12 @@ def test_lsh_bands_cached_single_shingle_pass(spark, tmp_path):
     # opt-out first: once persist() registers the bands plan in the
     # cache manager, ANY identical plan would be substituted with the
     # cache, so the no-persist control must be planned before it.
-    nocache = textops.minhash_lsh_pairs(df, persist_bands=False)
+    nocache, _ = textops._minhash_lsh_pairs_impl(df, 3, 100, False)
     noplan = nocache._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" not in noplan
     expected = sorted(map(tuple, nocache.collect()))
 
-    pairs = textops.minhash_lsh_pairs(df, persist_bands=True)
+    pairs, _ = textops._minhash_lsh_pairs_impl(df, 3, 100, True)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") >= 2, plan
     assert sorted(map(tuple, pairs.collect())) == expected
@@ -986,22 +1068,6 @@ def test_stratified_sample_matches_python_reference(spark):
     assert got == expect
 
 
-def test_decontaminate_no_broadcast_same_result(spark):
-    """broadcast=False (corpus-vs-corpus scale path) must produce the
-    identical result through the shuffle join."""
-    from go_trafilatura_spark import textops
-
-    rows = [(1, "the quick brown fox jumps over the lazy dog tonight ok"),
-            (2, "entirely different words in this particular document here")]
-    bench = [(9, "quick brown fox jumps over the lazy dog")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    bdf = spark.createDataFrame(bench, "doc_id long, text string")
-    a = sorted(map(tuple, textops.decontaminate(docs, bdf, n_gram=4).collect()))
-    b = sorted(map(tuple, textops.decontaminate(
-        docs, bdf, n_gram=4, broadcast=False).collect()))
-    assert a == b
-
-
 def test_warc_source_end_to_end(spark):
     """WARC file → read_warc_pages → extract_pages: the bytes→table
     edge for the standard crawl container format."""
@@ -1071,13 +1137,6 @@ def test_line_dedup_matches_python_reference(spark):
                          r["n_lines_removed"], r["text_deduped"])
            for r in textops.line_dedup(df, min_docs=2).collect()}
     assert got == expect
-
-    # broadcast=False (huge-frequent-set fallback) is result-identical
-    got2 = {r["doc_id"]: (r["n_lines"], r["n_lines_kept"],
-                          r["n_lines_removed"], r["text_deduped"])
-            for r in textops.line_dedup(df, min_docs=2,
-                                        broadcast=False).collect()}
-    assert got2 == expect
 
 
 def test_pii_scrub_matches_python_reference(spark):
@@ -1198,10 +1257,6 @@ def test_unigram_logprob_matches_python_reference(spark):
     got = {r["doc_id"]: (r["n_tokens"], r["mean_neg_log2p"])
            for r in textops.unigram_logprob(df).collect()}
     assert got == expect
-
-    got2 = {r["doc_id"]: (r["n_tokens"], r["mean_neg_log2p"])
-            for r in textops.unigram_logprob(df, broadcast=False).collect()}
-    assert got2 == expect
 
 
 def test_host_cap_matches_python_reference(spark):
