@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from go_trafilatura_spark import textops
+from go_trafilatura_spark.fixtures import SYNTH_HTML
 from go_trafilatura_spark.pipeline import HOST_REGEX, extract_pages
 from go_trafilatura_spark.textops import (
     LANG_STOPWORDS, MINHASH_PERMS, MINHASH_PRIME, SIMHASH_BITS,
@@ -102,13 +103,6 @@ def _fixture_extracted(spark: SparkSession) -> DataFrame:
     return extract_pages(pages, num_partitions=8).where(F.col("reject_reason").isNull())
 
 
-# The one synthetic-page template (doc_id, doc_id, text): Spark's
-# format_string and Python's % operator render it identically.
-_SYNTH_HTML = ('<html><head><title>Doc %s</title></head><body>'
-               '<article class="post-content"><h1>Doc %s</h1><p>%s</p></article>'
-               "</body></html>")
-
-
 def _synth_pages(spark: SparkSession, sf_dir: str, exchange: bool) -> DataFrame:
     """The one synthetic-page projection: every non-blank row of the
     documents table becomes a (url, warc_ts, html, text, lang) page,
@@ -125,7 +119,8 @@ def _synth_pages(spark: SparkSession, sf_dir: str, exchange: bool) -> DataFrame:
         "doc_id", "text", "lang")
     if exchange:
         base = salted_repartition(base)
-    html = F.format_string(_SYNTH_HTML, F.col("doc_id"), F.col("doc_id"), F.col("text"))
+    body = F.concat(F.lit("<p>"), F.col("text"), F.lit("</p>"))
+    html = F.format_string(SYNTH_HTML, F.col("doc_id"), F.col("doc_id"), body)
     return base.select(
         "url", "warc_ts", F.encode(html, "utf-8").alias("html"), "text", "lang")
 
@@ -464,7 +459,7 @@ def q_warc_extract(spark, sf_dir):
             .select("doc_id", "text").collect())
     records = []
     for r in rows:
-        html = (_SYNTH_HTML % (r["doc_id"], r["doc_id"], r["text"])).encode()
+        html = (SYNTH_HTML % (r["doc_id"], r["doc_id"], f"<p>{r['text']}</p>")).encode()
         records.append((f'https://warc.local/{r["doc_id"]}',
                         "2024-01-01T00:00:00Z", html))
     tmp = tempfile.mkdtemp(prefix="gts_warc_q_")

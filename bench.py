@@ -5,6 +5,7 @@ Prints ONE JSON line:
    "queries": {...per-query sec...}, "sf": <sf>,
    "docs": N, "docs_per_sec": ...,
    "scaling": {"local[8]": dps, "local[32]": dps, "efficiency": e}}
+A section that fails is recorded as "<section>_error": "<Class>: <msg>".
 
 The north rule's two-cluster-size criterion is evidenced by running the
 same extraction job at two parallelism levels on identical input and
@@ -28,11 +29,18 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+from go_trafilatura_spark.fixtures import SYNTH_HTML  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # Each source doc becomes a page with the text repeated N times as
 # paragraphs — gives rows realistic weight (~5-20 KB of HTML).
 PARA_REPEAT = 6
+# Kernel options of every bench extraction: no size gates, so the
+# synthetic pages all reach the full cascade.
+_OPTS = {"config": {"min_extracted_size": 0, "min_output_size": 0}}
 # Minimum page count for the timed run (rows are replicated up to this)
 TARGET_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "60000"))
 # 1-min load average below which the shared host counts as quiet (our
@@ -76,6 +84,17 @@ def _emit(partial: bool = False) -> None:
     print(json.dumps(_RESULT), flush=True)
 
 
+def _section(name: str, fn):
+    """Run one bench section; a section that raises is recorded as
+    ``<name>_error`` ("<Class>: <msg>") and returns None, so the run
+    still emits its JSON line."""
+    try:
+        return fn()
+    except Exception as exc:
+        _RESULT[f"{name}_error"] = f"{type(exc).__name__}: {exc}"
+        return None
+
+
 def _on_term(signum, frame):
     # an outer timeout killed us mid-section: attest what we measured
     _SKIPPED.append(f"killed_by_signal_{signum}")
@@ -107,27 +126,14 @@ def _canary_pages_per_cpu_sec() -> float | None:
     healthy window ≈ 1,100-1,300, storm ≈ 500-700; CANARY_MIN=950."""
     global _CANARY_PAGES
     try:
-        sys.path.insert(0, REPO)
-        from go_trafilatura_spark.core import extract
-        from go_trafilatura_spark.options import Options
-
         if _CANARY_PAGES is None:
             _CANARY_PAGES = _control_pages(1)[:300]
             # warm-up: regex compile + import costs stay out of trials
-            opts = Options.from_dict(
-                {"url": "https://synth.local/canary",
-                 "config": {"min_extracted_size": 0, "min_output_size": 0}})
-            for html in _CANARY_PAGES[:30]:
-                extract(html, opts)
+            _control_extract_chunk(_CANARY_PAGES[:30])
         rates = []
         for _ in range(3):
             t0 = time.process_time()
-            for html in _CANARY_PAGES:
-                opts = Options.from_dict(
-                    {"url": "https://synth.local/canary",
-                     "config": {"min_extracted_size": 0,
-                                "min_output_size": 0}})
-                extract(html, opts)
+            _control_extract_chunk(_CANARY_PAGES)
             cpu = time.process_time() - t0
             if cpu > 0:
                 rates.append(len(_CANARY_PAGES) / cpu)
@@ -214,7 +220,6 @@ def _host_topology() -> dict:
 
 def _worker(parallelism: int, target_docs: int | None = None) -> None:
     """Run the extraction job at the given parallelism; print JSON."""
-    sys.path.insert(0, REPO)
     from pyspark.sql import functions as F
 
     from go_trafilatura_spark.pipeline import build_session, extract_pages
@@ -243,12 +248,8 @@ def _worker(parallelism: int, target_docs: int | None = None) -> None:
     replicate = max(1, target_docs // max(n_src, 1))
     docs = docs.withColumn("rep", F.explode(F.expr(f"sequence(1, {replicate})")))
 
-    paras = "".join("<p>%3$s</p>" for _ in range(PARA_REPEAT))
-    html = F.expr(
-        "encode(format_string('<html><head><title>Doc %1$s</title></head><body>"
-        '<article class="post-content"><h1>Doc %2$s</h1>' + paras
-        + "</article></body></html>', doc_id, doc_id, text), 'utf-8')"
-    )
+    paras = F.repeat(F.concat(F.lit("<p>"), F.col("text"), F.lit("</p>")), PARA_REPEAT)
+    html = F.encode(F.format_string(SYNTH_HTML, "doc_id", "doc_id", paras), "utf-8")
     pages = docs.where(F.length(F.trim("text")) > 0).select(
         F.concat(
             F.lit("https://synth.local/doc/"), F.col("doc_id"),
@@ -265,11 +266,9 @@ def _worker(parallelism: int, target_docs: int | None = None) -> None:
     pages = salted_repartition(pages, max(parallelism * 2, 8)).persist()
     n = pages.count()  # materialize input so timing excludes source read
 
-    opts = {"config": {"min_extracted_size": 0, "min_output_size": 0}}
-
     # Warm-up: spin up + import-load every Python worker before timing.
     extract_pages(
-        pages.limit(parallelism * 8), opts, num_partitions=parallelism
+        pages.limit(parallelism * 8), _OPTS, num_partitions=parallelism
     ).count()
 
     # Three timed passes inside the warm JVM; keep the best (first
@@ -278,7 +277,7 @@ def _worker(parallelism: int, target_docs: int | None = None) -> None:
     best = None
     for _ in range(3):
         t0 = time.time()
-        out = extract_pages(pages, opts, repartition=False)
+        out = extract_pages(pages, _OPTS, repartition=False)
         extracted = out.where(F.col("reject_reason").isNull()).count()
         dt = time.time() - t0
         if best is None or dt < best[0]:
@@ -288,7 +287,7 @@ def _worker(parallelism: int, target_docs: int | None = None) -> None:
     # with the timed kernel summing per-batch worker process_time.
     # Scheduler preemption by a co-tenant does not accrue CPU time, so
     # this number survives a loaded window that sinks wall-clock.
-    cpu_sec = _kernel_cpu_sec(pages, opts, parallelism)
+    cpu_sec = _kernel_cpu_sec(pages, _OPTS, parallelism)
     print(json.dumps({"parallelism": parallelism, "docs": n,
                       "extracted": best[1], "sec": best[0],
                       "docs_per_sec": n / best[0],
@@ -331,26 +330,25 @@ def _control_pages(target_docs: int) -> list[bytes]:
         if not text or not text.strip():
             continue
         paras = f"<p>{text}</p>" * PARA_REPEAT
-        pages.append(
-            (f"<html><head><title>Doc {doc_id}</title></head><body>"
-             f'<article class="post-content"><h1>Doc {doc_id}</h1>{paras}'
-             f"</article></body></html>").encode("utf-8")
-        )
+        pages.append((SYNTH_HTML % (doc_id, doc_id, paras)).encode("utf-8"))
     replicate = max(1, target_docs // max(len(pages), 1))
     return pages * replicate
 
 
 def _control_extract_chunk(chunk: list[bytes]) -> int:
-    from go_trafilatura_spark.core import extract
+    """Extract every page in-process with the bench options; return how
+    many passed every gate (the worker's ``reject_reason IS NULL``)."""
+    from go_trafilatura_spark.core import ExtractError, extract
     from go_trafilatura_spark.options import Options
 
-    opts = Options.from_dict(
-        {"config": {"min_extracted_size": 0, "min_output_size": 0}}
-    )
+    opts = Options.from_dict(_OPTS)
     n = 0
     for html in chunk:
-        if extract(html, opts) is not None:
-            n += 1
+        try:
+            extract(html, opts)
+        except ExtractError:
+            continue
+        n += 1
     return n
 
 
@@ -360,7 +358,6 @@ def _control_worker(processes: int, target_docs: int) -> None:
     is the shared host's memory bandwidth, not a Spark penalty."""
     import multiprocessing as mp
 
-    sys.path.insert(0, REPO)
     pages = _control_pages(target_docs)
     chunks = [pages[i::processes * 4] for i in range(processes * 4)]
     with mp.get_context("spawn").Pool(processes) as pool:
@@ -378,44 +375,21 @@ def _control_worker(processes: int, target_docs: int) -> None:
                       "docs_per_sec": len(pages) / dt}))
 
 
-def _run_control(processes: int, target_docs: int) -> dict:
-    env = dict(os.environ)
+def _run_subprocess(mode: str, parallelism: int, target_docs: int) -> dict:
+    """Run this script in ``mode`` ("--worker" or "--control-worker") in
+    its own process, so runs share no JVM state; return the last JSON
+    line it printed."""
     out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--control-worker",
-         str(processes), str(target_docs)],
-        capture_output=True, text=True, env=env, cwd=REPO, timeout=1800,
-    )
-    for line in reversed(out.stdout.strip().splitlines()):
-        try:
-            return json.loads(line)
-        except json.JSONDecodeError:
-            continue
-    raise RuntimeError(f"control worker failed: {out.stderr[-2000:]}")
-
-
-def _run_worker_once(parallelism: int, target_docs: int) -> dict:
-    env = dict(os.environ)
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--worker",
+        [sys.executable, os.path.abspath(__file__), mode,
          str(parallelism), str(target_docs)],
-        capture_output=True, text=True, env=env, cwd=REPO, timeout=1800,
+        capture_output=True, text=True, cwd=REPO, timeout=1800,
     )
     for line in reversed(out.stdout.strip().splitlines()):
         try:
             return json.loads(line)
         except json.JSONDecodeError:
             continue
-    raise RuntimeError(f"worker failed: {out.stderr[-2000:]}")
-
-
-def _run_worker(parallelism: int, target_docs: int, repeats: int = 2) -> dict:
-    """Best-of-N subprocess runs to damp shared-host noise."""
-    best = None
-    for _ in range(repeats):
-        r = _run_worker_once(parallelism, target_docs)
-        if best is None or r["docs_per_sec"] > best["docs_per_sec"]:
-            best = r
-    return best
+    raise RuntimeError(f"{mode} {parallelism} failed: {out.stderr[-2000:]}")
 
 
 def _realpage_throughput() -> dict | None:
@@ -424,14 +398,11 @@ def _realpage_throughput() -> dict | None:
     comparison_dir = "/root/reference/test-files"
     if not os.path.isdir(comparison_dir):
         return None
-    sys.path.insert(0, REPO)
-    try:
-        from go_trafilatura_spark.comparison import (
-            build_dataframe, load_comparison_entries,
-        )
-        from go_trafilatura_spark.pipeline import build_session, extract_pages
-    except Exception:
-        return None
+    from go_trafilatura_spark.comparison import (
+        build_dataframe, load_comparison_entries,
+    )
+    from go_trafilatura_spark.pipeline import build_session, extract_pages
+
     spark = build_session(master=f"local[{CPUS}]", shuffle_partitions=CPUS)
     try:
         from go_trafilatura_spark.pipeline import salted_repartition
@@ -487,20 +458,17 @@ def _realpage_throughput() -> dict | None:
                 "kernel_cpu_sec": round(cpu_sec, 3),
                 "kernel_cpu_docs_per_core_sec": round(n / cpu_sec, 1),
                 "kernel_cpu_equiv_docs_per_sec": round(n / cpu_sec * CPUS, 1)}
-    except Exception:
-        return None
     finally:
         spark.stop()
 
 
-def _dedup_pipeline() -> dict | None:
+def _dedup_pipeline() -> dict:
     """End-to-end composed corpus pipeline wall time (VERDICT r4 #6):
     extract → line_dedup → substring-dedup filter (hashed production
     path, k=50) → gopher quality → host_cap → stratified sample, as ONE
     lineage at SF_DIR scale. Per-op timings can hide composition
     regressions (a lost broadcast, a re-executed common subtree); this
     stage makes the composed wall time a first-class BENCH metric."""
-    sys.path.insert(0, REPO)
     from pyspark.sql import functions as F
 
     from go_trafilatura_spark.pipeline import (
@@ -522,13 +490,9 @@ def _dedup_pipeline() -> dict | None:
         # 50-gram for the substring stage, and distinct full lines for
         # line_dedup) and keep only docs long enough to clear the
         # 50-token minimum with it.
-        html = F.expr(
-            "encode(format_string('<html><head><title>Doc %1$s</title></head>"
-            '<body><article class="post-content"><h1>Doc %2$s</h1>'
-            "<p>The rows that we have to scan and count of all be here: "
-            "%3$s</p></article></body></html>', doc_id, doc_id, text), "
-            "'utf-8')"
-        )
+        lead = F.concat(F.lit("<p>The rows that we have to scan and count of all be here: "),
+                        F.col("text"), F.lit("</p>"))
+        html = F.encode(F.format_string(SYNTH_HTML, "doc_id", "doc_id", lead), "utf-8")
         pages = docs.where(F.size(F.split(F.trim("text"), r"\s+")) >= 45).select(
             F.concat(F.lit("https://host"), (F.col("doc_id") % 500),
                      F.lit(".example/doc/"), F.col("doc_id")).alias("url"),
@@ -539,19 +503,18 @@ def _dedup_pipeline() -> dict | None:
         pages = salted_repartition(pages, CPUS).persist()
         n_in = pages.count()
 
-        opts = {"config": {"min_extracted_size": 0, "min_output_size": 0}}
         # Warm-up (uncounted): Python worker spin-up + whole-plan
         # codegen — the single-shot section read 54 s in a
         # canary-quiet window vs 15.4 s measured for the identical
         # composition in r5; most of the gap is first-execution cost,
         # which a real long-running job pays once per cluster, not
         # once per pipeline.
-        extract_pages(pages.limit(CPUS * 4), opts,
+        extract_pages(pages.limit(CPUS * 4), _OPTS,
                       num_partitions=CPUS).count()
 
         def run_once():
             t0 = time.time()
-            out = extract_pages(pages, opts, repartition=False)
+            out = extract_pages(pages, _OPTS, repartition=False)
             # ext feeds line_dedup AND the final strata join — persist
             # so the Python extraction kernel runs ONCE, not once per
             # branch (corpus_dedup_pipeline persists its own internal
@@ -589,7 +552,7 @@ def _dedup_pipeline() -> dict | None:
         # process_time over one extraction pass of the same input —
         # co-tenant preemption does not accrue, so a storm that sinks
         # the wall number leaves this one standing (VERDICT r5 #2).
-        cpu_sec = _kernel_cpu_sec(pages, opts, CPUS)
+        cpu_sec = _kernel_cpu_sec(pages, _OPTS, CPUS)
         return {"docs_in": n_in, "docs_out": n_out, "sec": round(dt, 3),
                 "docs_per_sec": round(n_in / dt, 1),
                 "trials_sec": pipe_trials,
@@ -597,19 +560,15 @@ def _dedup_pipeline() -> dict | None:
                 "extract_kernel_cpu_sec": round(cpu_sec, 3),
                 "extract_cpu_equiv_docs_per_sec":
                     round(n_in / cpu_sec * CPUS, 1)}
-    except Exception:
-        return None
     finally:
         spark.stop()
 
 
 def _time_queries() -> dict:
     """Time the headline corpus queries at SF_DIR on local[CPUS]."""
-    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
     from go_trafilatura_spark.pipeline import build_session
 
-    spark = build_session(master=f"local[{CPUS}]", shuffle_partitions=CPUS)
     timings = {}
     wanted = (
         "extract_synth", "token_counts", "fingerprints", "exact_dedup",
@@ -620,13 +579,11 @@ def _time_queries() -> dict:
     )
     qs = entrymod.queries()
 
+    spark = build_session(master=f"local[{CPUS}]", shuffle_partitions=CPUS)
+
     def run_once(name):
         t0 = time.time()
-        try:
-            qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        except Exception:
-            # noop writer unavailable → fall back to count
-            qs[name](spark, SF_DIR).count()
+        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
     # Best-of-2 per query: single-shot timings scatter 2-4× under
@@ -634,12 +591,14 @@ def _time_queries() -> dict:
     # (simhash read 1.87 s in r5, 2.44 s in run A, 7.24 s in run B's
     # QUIETER window — pure burst noise). The second pass also absorbs
     # first-execution codegen for each plan shape.
-    for name in wanted:
-        t = run_once(name)
-        if (time.time() - _T_START) + t <= DEADLINE_SEC:
-            t = min(t, run_once(name))
-        timings[name] = round(t, 3)
-    spark.stop()
+    try:
+        for name in wanted:
+            t = run_once(name)
+            if (time.time() - _T_START) + t <= DEADLINE_SEC:
+                t = min(t, run_once(name))
+            timings[name] = round(t, 3)
+    finally:
+        spark.stop()
     return timings
 
 
@@ -679,7 +638,7 @@ def main() -> None:
     # then the qualifying 2→8 pair, then the 4→16 diagnostic, queries +
     # composed pipeline, and the 8→32 saturation diagnostic + its
     # no-Spark control last.
-    realpage = _realpage_throughput()
+    realpage = _section("realpage", _realpage_throughput)
     if realpage:
         _RESULT["realpage"] = realpage
 
@@ -699,8 +658,8 @@ def main() -> None:
         trials_load1 = []
         for i in range(max_trials):
             trials_load1.append(round(os.getloadavg()[0], 2))
-            t_low = _run_worker_once(n_lo, docs)
-            t_high = _run_worker_once(n_hi, docs)
+            t_low = _run_subprocess("--worker", n_lo, docs)
+            t_high = _run_subprocess("--worker", n_hi, docs)
             eff = (t_high["docs_per_sec"] / t_low["docs_per_sec"]) / (n_hi / n_lo)
             trials.append(round(eff, 3))
             trials_cpu.append(round(
@@ -778,10 +737,12 @@ def main() -> None:
 
     if _deadline_ok("queries", est_sec=300):
         _wait_for_quiet(120, "queries")
-        _RESULT["queries"] = _time_queries()
+        queries = _section("queries", _time_queries)
+        if queries is not None:
+            _RESULT["queries"] = queries
     if _deadline_ok("dedup_pipeline", est_sec=240):
         _wait_for_quiet(180, "dedup_pipeline")
-        dedup_pipeline = _dedup_pipeline()
+        dedup_pipeline = _section("dedup_pipeline", _dedup_pipeline)
         if dedup_pipeline:
             _RESULT["dedup_pipeline"] = dedup_pipeline
             _RESULT["dedup_pipeline_sec"] = dedup_pipeline["sec"]
@@ -801,8 +762,8 @@ def main() -> None:
         # processes on the same kernel), machine-checkable instead
         # of narrated in BASELINE.md.
         _wait_for_quiet(120, "control")
-        c8 = _run_control(8, pair_lo_docs)
-        chi = _run_control(CPUS, pair_lo_docs)
+        c8 = _run_subprocess("--control-worker", 8, pair_lo_docs)
+        chi = _run_subprocess("--control-worker", CPUS, pair_lo_docs)
         control_eff = (chi["docs_per_sec"] / c8["docs_per_sec"]) / (CPUS / 8)
         scaling.update({
             "control_8_docs_per_sec": round(c8["docs_per_sec"], 1),

@@ -7,7 +7,7 @@ kernel; it never touches Spark itself.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from . import css, etree, selectors
 from .baseline import baseline
@@ -82,9 +82,10 @@ def extract_document(doc: Element, options: Options, owns_doc: bool = False,
         if metadata.date == "":
             raise ExtractError("missing_date")
 
-    # Backfill original URL from metadata
+    # Backfill original URL from metadata into a copy: the caller's
+    # Options may serve further pages (go-trafilatura passes it by value)
     if options.original_url is None and metadata.url != "":
-        options.original_url = metadata.url
+        options = replace(options, original_url=metadata.url)
 
     # User-specified prune selector
     if options.prune_selector:

@@ -37,6 +37,14 @@ _WORDS_DE = (
 
 _HOST_COUNT = 50
 
+# The one page shell of the synthetic documents-table pages (the
+# __spark_entry__ queries and bench.py), with slots (doc_id, doc_id,
+# body_html). Spark's format_string and Python's % operator render it
+# identically.
+SYNTH_HTML = ('<html><head><title>Doc %s</title></head><body>'
+              '<article class="post-content"><h1>Doc %s</h1>%s</article>'
+              "</body></html>")
+
 
 def _sentence(rng: random.Random, words: list[str]) -> str:
     n = rng.randint(8, 14)

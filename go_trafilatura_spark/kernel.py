@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .options import Options
+
 # Maximum html size we attempt to parse (bytes). Bigger payloads are
 # rejected with reject_reason=oversized — bounds straggler tasks at scale.
 DEFAULT_MAX_HTML_BYTES = 8 * 1024 * 1024
@@ -173,10 +175,9 @@ class KernelOptions:
     def __init__(self, opts_dict: dict | None = None, with_timing: bool = False):
         self.opts_dict = opts_dict or {}
         self.with_timing = with_timing
+        Options.from_dict(self.opts_dict)  # an unknown key fails before any task runs
 
     def make_options(self, url: str):
-        from .options import Options
-
         opts = Options.from_dict(self.opts_dict)
         opts.original_url = url
         return opts
@@ -187,26 +188,6 @@ TIMED_OUTPUT_SCHEMA = StructType(
     + [StructField("kernel_ms", DoubleType()), StructField("batch_id", IntegerType()),
        StructField("cpu_ms", DoubleType())]
 )
-
-
-def _arrow_output_types():
-    """pyarrow types for OUTPUT_COLUMNS (mapInArrow fast path)."""
-    import pyarrow as pa
-
-    span = pa.struct([
-        pa.field("start", pa.int32()),
-        pa.field("end", pa.int32()),
-        pa.field("kind", pa.string()),
-    ])
-    s = pa.string()
-    return {
-        "url": s, "lang": s, "content_text": s, "comments_text": s,
-        "content_html": s, "comments_html": s, "title": s, "author": s,
-        "meta_url": s, "hostname": s, "description": s, "sitename": s,
-        "date": s, "categories": pa.list_(s), "tags": pa.list_(s),
-        "license": s, "language": s, "image": s, "page_type": s,
-        "reject_reason": s, "content_spans": pa.list_(span),
-    }
 
 
 def make_arrow_kernel(kernel_options: KernelOptions | None = None):
@@ -223,8 +204,9 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
         import time
 
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        types = _arrow_output_types()
+        types = {f.name: f.type for f in to_arrow_schema(OUTPUT_SCHEMA)}
         # Batch-scoped GC: the extraction trees are cyclic (Element
         # parent↔children), so CPython's auto-GC runs full generational
         # sweeps mid-parse — measured 7-13% of kernel CPU. Disabling
@@ -258,10 +240,10 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
                         arr = batch.column(names.index("url"))
                     elif c == "warc_ts":
                         arr = batch.column(names.index("warc_ts")) if "warc_ts" in names \
-                            else pa.nulls(n, pa.timestamp("us", tz="UTC"))
+                            else pa.nulls(n, types["warc_ts"])
                     elif c == "lang":
                         arr = batch.column(names.index("lang")) if "lang" in names \
-                            else pa.nulls(n, pa.string())
+                            else pa.nulls(n, types["lang"])
                     else:
                         arr = pa.array(col_lists[c], type=types[c])
                     arrays.append(arr)

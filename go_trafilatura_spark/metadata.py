@@ -1261,15 +1261,14 @@ def _scan_all_dates(text: str) -> list[str]:
     return out
 
 
-def _date_tier_candidates(doc: Element, url: str, extensive: bool,
-                          index, url_first: bool):
+def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
     """Yield (tier, date) pairs in cascade priority order — each tier's
     FIRST valid candidate, lazily (fast mode stops at the first yield,
     so tier cost is only paid when every earlier tier came up empty).
-    Tier semantics are the round-3 cascade unchanged; ``url_first``
-    False moves the /YYYY/MM/DD/ URL tier after the published meta scan
-    (go-htmldate's meta-first parity order — see Options.date_url_first
-    for the measured default)."""
+    Tier semantics are the round-3 cascade unchanged, except that a full
+    /YYYY/MM/DD/ URL date outranks published meta tags (go-htmldate
+    checks meta first; measured: 92.5% tier reliability vs 89.2% on the
+    comparison corpus, and 4 of 6 contested pages favor the URL)."""
     reserve = ""
 
     url_date = ""
@@ -1278,7 +1277,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool,
         if m:
             url_date = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
 
-    if url_first and url_date:
+    if url_date:
         yield "url", url_date
 
     # published meta tags; modified keys feed the reserve
@@ -1292,9 +1291,6 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool,
                 yield "meta_pub", meta_pub
         elif not reserve and key in _DATE_META_MODIFIED:
             reserve = _parse_date_string(node.get("content"))
-
-    if not url_first and url_date:
-        yield "url", url_date
 
     # <time> and <abbr> elements (published markers first)
     time_nodes = (index.of_tag("time") if index is not None
@@ -1526,7 +1522,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool,
 
 
 def extract_date_fast(doc: Element, url: str, extensive: bool = False,
-                      index=None, url_first: bool = True) -> str:
+                      index=None) -> str:
     """htmldate-style publish-date cascade with original-date preference
     (go-htmldate runs with UseOriginalDate=true — metadata.go:98):
     url full date → published meta → time/abbr elements → JSON-LD →
@@ -1543,7 +1539,7 @@ def extract_date_fast(doc: Element, url: str, extensive: bool = False,
     support break by cascade order). Measured on the comparison corpus:
     +4 exact (643 → 647 of 733); broader voting/reordering rules all
     measured net-negative (NOTES.md round-4 log)."""
-    gen = _date_tier_candidates(doc, url, extensive, index, url_first)
+    gen = _date_tier_candidates(doc, url, extensive, index)
     if not extensive:
         for _tier, val in gen:
             return val
@@ -1637,8 +1633,7 @@ def extract_metadata(doc: Element, options) -> Metadata:
             or (options.date_mode == "default" and getattr(options, "enable_fallback", False))
         )
         metadata.date = extract_date_fast(
-            doc, metadata.url, extensive=extensive, index=idx(),
-            url_first=getattr(options, "date_url_first", True))
+            doc, metadata.url, extensive=extensive, index=idx())
 
     if metadata.sitename == "":
         metadata.sitename = extract_dom_sitename(doc)

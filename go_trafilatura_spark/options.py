@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 BALANCED = 0
 FAVOR_RECALL = 1
@@ -45,37 +45,22 @@ class Options:
     prune_selector: str = ""
     # date extraction: "fast" (meta/url/time subset) or "disabled"
     date_mode: str = "fast"
-    # True (measured default): a full /YYYY/MM/DD/ URL date outranks
-    # published meta tags (92.5% tier reliability vs 89.2% on the
-    # comparison corpus; 4-of-6 contested pages favor the URL). False
-    # restores go-htmldate's meta-first parity order.
-    date_url_first: bool = True
-
-    def to_dict(self) -> dict:
-        return {
-            "target_language": self.target_language,
-            "enable_fallback": self.enable_fallback,
-            "focus": self.focus,
-            "exclude_comments": self.exclude_comments,
-            "exclude_tables": self.exclude_tables,
-            "include_images": self.include_images,
-            "include_links": self.include_links,
-            "deduplicate": self.deduplicate,
-            "has_essential_metadata": self.has_essential_metadata,
-            "max_tree_size": self.max_tree_size,
-            "prune_selector": self.prune_selector,
-            "date_mode": self.date_mode,
-            "date_url_first": self.date_url_first,
-        }
 
     @classmethod
     def from_dict(cls, d: dict) -> "Options":
+        """Options from a plain dict of field values, ``config`` a dict of
+        Config fields; an unknown key raises ValueError naming it."""
         opts = cls()
+        known = {f.name for f in fields(cls)}
+        config_known = {f.name for f in fields(Config)}
         for k, v in (d or {}).items():
+            if k not in known:
+                raise ValueError(f"unknown option key: {k}")
             if k == "config" and isinstance(v, dict):
                 for ck, cv in v.items():
-                    if hasattr(opts.config, ck):
-                        setattr(opts.config, ck, cv)
-            elif hasattr(opts, k):
+                    if ck not in config_known:
+                        raise ValueError(f"unknown option key: config.{ck}")
+                    setattr(opts.config, ck, cv)
+            else:
                 setattr(opts, k, v)
         return opts

@@ -195,15 +195,13 @@ def test_timezone_skew_needs_majority():
 
 
 def test_date_url_first_flag():
-    """url_first=True (measured default): a /YYYY/MM/DD/ URL date
-    outranks published meta; False restores meta-first parity order."""
+    """A /YYYY/MM/DD/ URL date outranks published meta."""
     d = doc(
         '<html><head><meta property="article:published_time" '
         'content="2021-05-10"/></head><body><p>x</p></body></html>'
     )
     url = "https://ex.com/2021/05/12/some-post/"
     assert extract_date_fast(d, url) == "2021-05-12"
-    assert extract_date_fast(d, url, url_first=False) == "2021-05-10"
 
 
 # ---------------------------------------------------------------------------

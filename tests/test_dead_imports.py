@@ -1,5 +1,5 @@
 """No dead imports: every module-level import in the package, the driver
-entry, the jobs and the tools is used (or re-exported via ``__all__``).
+entry, the bench and the jobs is used (or re-exported via ``__all__``).
 No dead definitions: every module-level function and class of the
 package is referenced somewhere in the repository's Python files
 outside its own definition (or exported via ``__all__``)."""
@@ -13,9 +13,8 @@ from collections import Counter
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCES = sorted(
     glob.glob(os.path.join(ROOT, "go_trafilatura_spark", "*.py"))
-    + [os.path.join(ROOT, "__spark_entry__.py")]
+    + [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")]
     + glob.glob(os.path.join(ROOT, "jobs", "*.py"))
-    + glob.glob(os.path.join(ROOT, "tools", "*.py"))
 )
 
 

@@ -2,6 +2,7 @@
 
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -106,6 +107,24 @@ def test_cli_rejection_exit_code():
     )
     assert out.returncode == 1
     assert "rejected" in out.stderr
+
+
+def test_cli_directory_url_does_not_leak_between_pages(tmp_path, capsys):
+    """Directory mode reuses one Options for every file: a canonical url
+    backfilled from one page must not become the next page's url."""
+    from go_trafilatura_spark.cli import main
+
+    para = "<p>" + "This paragraph carries enough ordinary words to pass the gates. " * 8 + "</p>"
+    for name, head in (("a.html", '<link rel="canonical" href="https://a.example/post">'),
+                       ("b.html", "")):
+        (tmp_path / name).write_text(
+            f"<html><head><title>T</title>{head}</head><body><article>{para * 3}"
+            "</article></body></html>")
+    assert main([str(tmp_path), "-f", "json"]) == 0
+    chunks = re.split(r"==> \S+\n", capsys.readouterr().out)
+    payloads = [json.loads(chunk) for chunk in chunks if chunk]
+    assert [p["metadata"]["url"] for p in payloads] == ["https://a.example/post", ""]
+    assert payloads[1]["metadata"]["hostname"] == ""
 
 
 ROBOTS = b"""

@@ -309,3 +309,35 @@ def test_is_absolute_url():
     assert is_absolute_url("ftps://www.test.org/test")[0] is False
     assert is_absolute_url("http://t.g/test")[0] is True
     assert is_absolute_url("http://test.org/test")[0] is True
+
+
+def _page(head: str) -> bytes:
+    para = "<p>" + "This paragraph carries enough ordinary words to pass the gates. " * 8 + "</p>"
+    return (f"<html><head><title>T</title>{head}</head><body><article>{para * 3}"
+            "</article></body></html>").encode()
+
+
+def test_extract_does_not_mutate_caller_options():
+    """The metadata url backfill stays local to one page: a page without
+    a canonical link extracted after one with it gets no url."""
+    canonical = '<link rel="canonical" href="https://a.example/post">'
+    opts = Options()
+    first = extract(_page(canonical), opts)
+    second = extract(_page(""), opts)
+    assert first.metadata.url == "https://a.example/post"
+    assert opts.original_url is None
+    assert second.metadata.url == "" and second.metadata.hostname == ""
+    assert second.metadata.url == extract(_page(""), Options()).metadata.url
+
+
+def test_options_from_dict_rejects_unknown_keys():
+    from go_trafilatura_spark.kernel import KernelOptions
+
+    opts = Options.from_dict({"exclude_comments": True, "config": {"min_output_size": 0}})
+    assert opts.exclude_comments and opts.config.min_output_size == 0
+    with pytest.raises(ValueError, match="url"):
+        Options.from_dict({"url": "https://a.example/"})
+    with pytest.raises(ValueError, match="config.min_extract_size"):
+        Options.from_dict({"config": {"min_extract_size": 0}})
+    with pytest.raises(ValueError, match="exclude_coments"):
+        KernelOptions({"exclude_coments": True})
