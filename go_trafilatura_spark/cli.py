@@ -7,7 +7,6 @@ HTML files, emit txt / json / html.
 Flags follow the reference: -f/--format, -l/--language, -u/--url,
 --no-fallback, --no-comments, --no-tables, --images, --links,
 --deduplicate, --precision, --recall, --prune-selector.
-Directory inputs with --spark run through the distributed pipeline.
 """
 
 from __future__ import annotations
@@ -20,6 +19,7 @@ import sys
 from . import etree
 from .core import ExtractError, extract
 from .options import BALANCED, FAVOR_PRECISION, FAVOR_RECALL, Options
+from .utils import html_escape
 
 
 def build_options(args) -> Options:
@@ -70,7 +70,7 @@ def format_result(result, fmt: str) -> str:
         # helper.go:13-77 readable document
         m = result.metadata
         metas = "".join(
-            f'<meta name="{k}" content="{v}"/>'
+            f'<meta name="{k}" content="{html_escape(v)}"/>'
             for k, v in (
                 ("title", m.title), ("author", m.author), ("url", m.url),
                 ("hostname", m.hostname), ("description", m.description),

@@ -1470,10 +1470,8 @@ class _TreeBuilder(HTMLParser):
 # ~2-3× faster than HTMLParser's goahead loop on large pages; tree
 # equality with the HTMLParser path is asserted over the fixture corpus,
 # the reference's 960 comparison pages and property tests
-# (tests/test_fast_tokenizer.py). Set FAST_TOKENIZER=False to fall back.
+# (tests/test_fast_tokenizer.py).
 # ---------------------------------------------------------------------------
-
-FAST_TOKENIZER = True
 
 # html.parser's tolerant tag-name charset (tagfind_tolerant): anything
 # until whitespace, "/", ">" — names like "div!--" DO occur in the wild
@@ -1792,42 +1790,37 @@ def _fast_feed(text: str, builder: "_TreeBuilder") -> None:
         pos = resume
 
 
-def parse_html(data: bytes | str) -> Element:
-    """Parse an HTML document → #document root containing html>head+body.
-
-    Equivalent entry point to dom.Parse at /root/reference/core.go:73.
-    """
+def _parse(data: bytes | str, feed) -> Element:
     if isinstance(data, (bytes, bytearray)):
         text = _decode_html_bytes(bytes(data))
     else:
         text = data
     builder = _TreeBuilder()
     try:
-        if FAST_TOKENIZER:
-            _fast_feed(text, builder)
-        else:
-            builder.feed(text)
-            builder.close()
+        feed(text, builder)
     except Exception:
         # resilient parse: return what we have
         pass
     return builder.root
 
 
+def _stdlib_feed(text: str, builder: "_TreeBuilder") -> None:
+    builder.feed(text)
+    builder.close()
+
+
+def parse_html(data: bytes | str) -> Element:
+    """Parse an HTML document → #document root containing html>head+body.
+
+    Equivalent entry point to dom.Parse (go-trafilatura core.go:73).
+    """
+    return _parse(data, _fast_feed)
+
+
 def parse_html_stdlib(data: bytes | str) -> Element:
     """HTMLParser-tokenized parse (the reference path for the fast
     tokenizer's equality tests)."""
-    if isinstance(data, (bytes, bytearray)):
-        text = _decode_html_bytes(bytes(data))
-    else:
-        text = data
-    builder = _TreeBuilder()
-    try:
-        builder.feed(text)
-        builder.close()
-    except Exception:
-        pass
-    return builder.root
+    return _parse(data, _stdlib_feed)
 
 
 def _decode_html_bytes(raw: bytes) -> str:

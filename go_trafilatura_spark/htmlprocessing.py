@@ -216,11 +216,13 @@ def handle_text_node(
     return node
 
 
-def link_density_test(element: Element, options) -> tuple[list[Element], bool]:
-    """html-processing.go:246-308."""
+def link_density_test(element: Element, options) -> bool:
+    """html-processing.go:246-308, returning only whether the link
+    density is high (the reference's non-empty link list feeds nothing
+    but the unreachable backtrack in deleteByLinkDensity)."""
     links = etree.get_elements_by_tag(element, "a")
     if not links:
-        return [], False
+        return False
 
     text = trim(etree.text_content(element))
     text_length = len(text)
@@ -230,7 +232,7 @@ def link_density_test(element: Element, options) -> tuple[list[Element], bool]:
         link_text = trim(etree.text_content(links[0]))
         lt_len = len(link_text)
         if lt_len > threshold and lt_len > text_length * 0.9:
-            return [], True
+            return True
 
     if element.tag == "p":
         limit = 60 if etree.next_element_sibling(element) is None else 30
@@ -241,13 +243,13 @@ def link_density_test(element: Element, options) -> tuple[list[Element], bool]:
         link_length, n_short, non_empty = collect_link_info(links)
         n_non_empty = len(non_empty)
         if n_non_empty == 0:
-            return non_empty, True
+            return True
         if link_length > text_length * 0.8 or (
             n_non_empty > 1 and n_short / n_non_empty > 0.8
         ):
-            return non_empty, True
+            return True
 
-    return [], False
+    return False
 
 
 def link_density_test_tables(table: Element, options) -> bool:
@@ -340,16 +342,14 @@ def post_cleaning(doc: Element | None) -> None:
         element.attrib = new_attrs
 
 
-def _link_density_test_indexed(elem: Element, options, index) -> tuple[bool, bool]:
+def _link_density_test_indexed(elem: Element, options, index) -> bool:
     """link_density_test over a text_index — identical decisions (all
-    quantities are the same exact integers), no per-element walks.
-    Returns (has_non_empty_links, is_high) where the first mirrors the
-    truthiness of the original's non_empty return value."""
+    quantities are the same exact integers), no per-element walks."""
     tl, enter, lastd, anchors, apos = index
     lo = bisect_right(apos, enter[id(elem)])
     hi = bisect_right(apos, lastd[id(elem)])
     if lo == hi:
-        return False, False
+        return False
 
     text_length = tl[id(elem)]
 
@@ -357,7 +357,7 @@ def _link_density_test_indexed(elem: Element, options, index) -> tuple[bool, boo
         threshold = 10 if options.focus == FAVOR_PRECISION else 100
         lt_len = tl[id(anchors[lo])]
         if lt_len > threshold and lt_len > text_length * 0.9:
-            return False, True
+            return True
 
     if elem.tag == "p":
         limit = 60 if etree.next_element_sibling(elem) is None else 30
@@ -377,45 +377,32 @@ def _link_density_test_indexed(elem: Element, options, index) -> tuple[bool, boo
                 n_short += 1
             n_non_empty += 1
         if n_non_empty == 0:
-            return False, True
+            return True
         if link_length > text_length * 0.8 or (
             n_non_empty > 1 and n_short / n_non_empty > 0.8
         ):
-            return True, True
+            return True
 
-    return False, False
+    return False
 
 
-def delete_by_link_density(subtree: Element, options, backtracking: bool, *tags: str) -> None:
-    """html-processing.go:452-479. The tree is stable while candidates
-    are collected (removals happen at the end), so one text_index pass
-    serves every element's density test."""
-    to_delete: list[Element] = []
-    threshold, n_child_limit = (200, 1) if options.focus == FAVOR_PRECISION else (100, 3)
-
+def delete_by_link_density(subtree: Element, options, *tags: str) -> None:
+    """html-processing.go:452-479, without the reference's backtracking
+    branch: it runs only for a non-empty link list with a low density,
+    and the reference's density test returns a non-empty list only
+    together with a high density, so the branch is unreachable. The
+    tree is stable while candidates are collected (removals happen at
+    the end), so one text_index pass serves every element's density
+    test."""
     elems = etree.iter_all(subtree, *tags)
-    if not elems:
-        return
     # The one-pass index costs O(subtree); per-element walks cost
     # O(Σ element subtrees). Few candidates → walks win; many (nested
     # list/div farms, where the naive cost is quadratic) → index wins.
-    index = etree.text_index(subtree) if len(elems) > 25 else None
-    for elem in elems:
-        if index is not None:
-            non_empty, is_high = _link_density_test_indexed(elem, options, index)
-        else:
-            non_empty, is_high = link_density_test(elem, options)
-        if is_high:
-            to_delete.append(elem)
-        elif backtracking and non_empty:
-            # Unreachable by construction (non_empty is only ever truthy
-            # together with is_high) — kept to mirror the reference's
-            # deleteByLinkDensity, which has the same dead branch.
-            text = trim(etree.text_content(elem))
-            text_len = len(text)
-            if 0 < text_len < threshold and len(etree.children_of(elem)) >= n_child_limit:
-                to_delete.append(elem)
-
+    if len(elems) > 25:
+        index = etree.text_index(subtree)
+        to_delete = [e for e in elems if _link_density_test_indexed(e, options, index)]
+    else:
+        to_delete = [e for e in elems if link_density_test(e, options)]
     for elem in reversed(to_delete):
         etree.remove(elem)
 
@@ -487,9 +474,9 @@ def prune_unwanted_sections(subtree: Element, potential_tags: set, options) -> E
                 subtree, selectors.PRECISION_DISCARDED_CONTENT, in_place=True)
 
     for _ in range(2):
-        delete_by_link_density(subtree, options, True, "div")
-        delete_by_link_density(subtree, options, False, *LIST_TAGS)
-        delete_by_link_density(subtree, options, False, "p")
+        delete_by_link_density(subtree, options, "div")
+        delete_by_link_density(subtree, options, *LIST_TAGS)
+        delete_by_link_density(subtree, options, "p")
 
     if "table" in potential_tags or options.focus == FAVOR_PRECISION:
         tables = etree.iter_all(subtree, "table")
@@ -504,7 +491,7 @@ def prune_unwanted_sections(subtree: Element, potential_tags: set, options) -> E
                 etree.remove(child)
                 continue
             break
-        delete_by_link_density(subtree, options, False, *HEAD_TAGS)
-        delete_by_link_density(subtree, options, False, *QUOTE_TAGS)
+        delete_by_link_density(subtree, options, *HEAD_TAGS)
+        delete_by_link_density(subtree, options, *QUOTE_TAGS)
 
     return subtree

@@ -670,20 +670,19 @@ def examine_title_element(doc: Element) -> tuple[str, str, str]:
     return title, first, second
 
 
-def extract_dom_meta_selectors(doc: Element, limit: int, rules, index=None) -> str:
+def extract_dom_meta_selectors(doc: Element, limit: int, rules, index) -> str:
     """metadata.go:626-640."""
     for rule in rules:
-        cands = index.candidates(rule) if index is not None else None
-        for node in selectors.query_all(doc, rule, cands):
+        for node in selectors.query_all(doc, rule, index.candidates(rule)):
             text = trim(etree.iter_text(node, " "))
             if 2 < len(text) < limit:
                 return text
     return ""
 
 
-def extract_dom_title(doc: Element, index=None) -> str:
+def extract_dom_title(doc: Element, index) -> str:
     """metadata.go:445-487."""
-    h1_nodes = etree.get_elements_by_tag(doc, "h1")
+    h1_nodes = index.of_tag("h1")
     if len(h1_nodes) == 1:
         title = trim(etree.text_content(h1_nodes[0]))
         if title:
@@ -703,7 +702,7 @@ def extract_dom_title(doc: Element, index=None) -> str:
 
     if h1_nodes:
         return trim(etree.text_content(h1_nodes[0]))
-    h2_nodes = etree.get_elements_by_tag(doc, "h2")
+    h2_nodes = index.of_tag("h2")
     if h2_nodes:
         return trim(etree.text_content(h2_nodes[0]))
     return ""
@@ -718,7 +717,7 @@ def _is_under(node: Element, root: Element) -> bool:
     return False
 
 
-def extract_dom_author(doc: Element, index=None) -> str:
+def extract_dom_author(doc: Element, index) -> str:
     """metadata.go:490-500. Observationally identical to the reference's
     prune-a-full-clone shape, but prunes only the matched candidate's
     subtree: META_AUTHOR_DISCARD rules are per-element predicates, so
@@ -736,13 +735,12 @@ def extract_dom_author(doc: Element, index=None) -> str:
     discard_ids: set[int] = set()
 
     for rule in selectors.META_AUTHOR:
-        cands = index.candidates(rule) if index is not None else None
-        for node in selectors.query_iter(doc, rule, cands):
+        for node in selectors.query_iter(doc, rule, index.candidates(rule)):
             if discards is None:
                 discards = []
                 for drule in selectors.META_AUTHOR_DISCARD:
-                    dcands = index.candidates(drule) if index is not None else None
-                    discards.extend(selectors.query_all(doc, drule, dcands))
+                    discards.extend(
+                        selectors.query_all(doc, drule, index.candidates(drule)))
                 discard_ids = {id(d) for d in discards}
             skip = False
             anc = node
@@ -800,15 +798,11 @@ def extract_dom_sitename(doc: Element) -> str:
     return ""
 
 
-def extract_dom_categories(doc: Element, index=None) -> list[str]:
+def extract_dom_categories(doc: Element, index) -> list[str]:
     """metadata.go:555-589."""
     categories: list[str] = []
     for rule in selectors.META_CATEGORIES:
-        if index is not None:
-            matches = selectors.anchors_by_ancestor(index, rule)
-        else:
-            matches = selectors.query_all(doc, rule)
-        for node in matches:
+        for node in selectors.anchors_by_ancestor(index, rule):
             href = trim(node.get("href"))
             if href and RX_CATEGORY_HREF.search(href):
                 text = trim(etree.text_content(node))
@@ -827,15 +821,11 @@ def extract_dom_categories(doc: Element, index=None) -> list[str]:
     return uniquify_lists(*categories)
 
 
-def extract_dom_tags(doc: Element, index=None) -> list[str]:
+def extract_dom_tags(index) -> list[str]:
     """metadata.go:592-612."""
     tags: list[str] = []
     for rule in selectors.META_TAGS:
-        if index is not None:
-            matches = selectors.anchors_by_ancestor(index, rule)
-        else:
-            matches = selectors.query_all(doc, rule)
-        for node in matches:
+        for node in selectors.anchors_by_ancestor(index, rule):
             href = trim(node.get("href"))
             if href and RX_TAG_HREF.search(href):
                 text = trim(etree.text_content(node))
@@ -857,12 +847,6 @@ def clean_cat_tags(cat_tags: list[str]) -> list[str]:
     return cleaned
 
 
-_LICENSE_FOOTER_SELECTOR = css.parse_group(
-    'footer a[href], div[class*="footer"] a[href], div[id*="footer"] a[href]'
-)
-_LICENSE_REL_SELECTOR = css.parse_group('a[rel="license"][href]')
-
-
 def parse_license_element(node: Element, strict: bool) -> str:
     """metadata.go:664-684."""
     href = trim(node.get("href"))
@@ -880,16 +864,13 @@ def parse_license_element(node: Element, strict: bool) -> str:
     return ""
 
 
-def extract_license(doc: Element, index=None) -> str:
+def extract_license(index) -> str:
     """metadata.go:643-660. The 'footer a[href]' descendant query is
     inverted: footer containers are few, so collect them first and walk
     each <a href>'s ancestor chain against that id-set — identical
     match set and document order to the CSS query at ~10x less work on
     link-heavy pages."""
-    a_nodes = (
-        index.of_tag("a") if index is not None
-        else etree.get_elements_by_tag(doc, "a")
-    )
+    a_nodes = index.of_tag("a")
     for a in a_nodes:
         # rel=="license" needs the literal in the (entity-free) raw
         # attribute substring — skip the lazy parse otherwise
@@ -902,12 +883,7 @@ def extract_license(doc: Element, index=None) -> str:
                 return result
 
     footers = set()
-    footer_nodes = (
-        index.of_tag("footer") + index.of_tag("div") if index is not None
-        else etree.get_elements_by_tag(doc, "footer")
-        + etree.get_elements_by_tag(doc, "div")
-    )
-    for el in footer_nodes:
+    for el in index.of_tag("footer") + index.of_tag("div"):
         if el.tag != "footer":
             raw = el._rawattrs
             if raw is not None and "footer" not in raw and "&" not in raw:
@@ -1282,8 +1258,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
 
     # published meta tags; modified keys feed the reserve
     meta_pub = ""
-    for node in (index.of_tag("meta") if index is not None
-                 else etree.get_elements_by_tag(doc, "meta")):
+    for node in index.of_tag("meta"):
         key = (node.get("property") or node.get("name") or node.get("itemprop")).lower()
         if key in _DATE_META_PUBLISHED and not meta_pub:
             meta_pub = _parse_date_string(node.get("content"))
@@ -1293,8 +1268,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
             reserve = _parse_date_string(node.get("content"))
 
     # <time> and <abbr> elements (published markers first)
-    time_nodes = (index.of_tag("time") if index is not None
-                  else etree.get_elements_by_tag(doc, "time"))
+    time_nodes = index.of_tag("time")
     for node in time_nodes:
         itemprop = node.get("itemprop").lower()
         if itemprop in ("datepublished", "datecreated") or node.get("pubdate"):
@@ -1312,8 +1286,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
         if date:
             yield "time_bare", date
             break
-    for node in (index.of_tag("abbr") if index is not None
-                 else etree.get_elements_by_tag(doc, "abbr")):
+    for node in index.of_tag("abbr"):
         if _RX_DATE_CLASS.search(node.get("class")):
             date = _parse_date_string(node.get("title") or etree.text_content(node))
             if date:
@@ -1321,22 +1294,18 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
                 break
 
     # Microdata on arbitrary elements (htmldate's itemprop scan is not
-    # limited to <time>); modified stamps feed the reserve. With a
-    # TagIndex the date-classed CONTAINER scan (its tier slot is after
-    # jsonld/marker below) is FUSED into this same element pass — both
-    # tiers would otherwise walk every element; the tree is static, so
-    # computing the container candidate early and yielding it at its
-    # slot is observationally identical (index-less callers keep the
-    # two-loop form: their container scan walks body, not doc).
+    # limited to <time>); modified stamps feed the reserve. The
+    # date-classed CONTAINER scan (its tier slot is after jsonld/marker
+    # below) is fused into this same element pass — both tiers would
+    # otherwise walk every element; the tree is static, so computing the
+    # container candidate early and yielding it at its slot is
+    # observationally identical.
     body = etree.body_of(doc)
-    fused = index is not None
     container_hit = ""
-    container_done = not (fused and body is not None)
+    container_done = body is None
     scanned = 0
-    all_elements = (index.elements if index is not None
-                    else etree.iter_descendants(doc))
     micro = ""
-    for node in all_elements:
+    for node in index.elements:
         # No-parse prescreen: an element whose raw attribute substring
         # never mentions "itemprop" cannot carry the microdata key.
         raw = node._rawattrs
@@ -1416,43 +1385,10 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
                     yield "marker_pub", date
                     break
 
-    # Date-classed visible containers (htmldate DATE_EXPRESSIONS).
-    # Indexed path: result precomputed in the fused element pass above.
-    if fused:
-        if container_hit:
-            yield "container", container_hit
-    elif body is not None:
-        scanned = 0
-        for node in etree.iter_descendants(body):
-            # No-parse prescreen mirroring _RX_DATE_CLASS's literals
-            # (camel-splitting only inserts spaces, so any rule match
-            # implies one of these appears in the entity-free raw).
-            raw = node._rawattrs
-            if raw is not None and "&" not in raw:
-                lraw = node._lraw
-                if lraw is None:
-                    lraw = node._lraw = raw.lower()
-                if not ("date" in lraw or "time" in lraw or "post" in lraw
-                        or "entry" in lraw or "byline" in lraw
-                        or "publish" in lraw or "datum" in lraw
-                        or "submitted" in lraw or "created" in lraw):
-                    continue
-            attrib = node.attrib
-            if not attrib or node.tag in ("script", "style"):
-                continue
-            idclass = attrib.get("class", "") + " " + attrib.get("id", "")
-            if len(idclass) > 1 and _RX_DATE_CLASS.search(
-                    _RX_CAMEL_SPLIT.sub(" ", idclass)):
-                if _in_comment_area(node):
-                    continue
-                blob = trim(etree.iter_text(node, " "))[:512]
-                date = _parse_date_string(blob)
-                if date:
-                    yield "container", date
-                    break
-                scanned += 1
-                if scanned >= 200:
-                    break
+    # Date-classed visible containers (htmldate DATE_EXPRESSIONS),
+    # found by the fused element pass above.
+    if container_hit:
+        yield "container", container_hit
 
     # Modified-date reserve
     if reserve:
@@ -1474,8 +1410,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
 
     if extensive:
         # Description/title meta content
-        for node in (index.of_tag("meta") if index is not None
-                 else etree.get_elements_by_tag(doc, "meta")):
+        for node in index.of_tag("meta"):
             key = (node.get("property") or node.get("name")).lower()
             if key in ("description", "og:description", "og:title", "twitter:description"):
                 date = _parse_date_string(node.get("content"))
@@ -1539,6 +1474,8 @@ def extract_date_fast(doc: Element, url: str, extensive: bool = False,
     support break by cascade order). Measured on the comparison corpus:
     +4 exact (643 → 647 of 733); broader voting/reordering rules all
     measured net-negative (NOTES.md round-4 log)."""
+    if index is None:
+        index = selectors.TagIndex(doc)
     gen = _date_tier_candidates(doc, url, extensive, index)
     if not extensive:
         for _tier, val in gen:
@@ -1579,31 +1516,25 @@ def extract_date_fast(doc: Element, url: str, extensive: bool = False,
 # ---------------------------------------------------------------------------
 
 def extract_metadata(doc: Element, options) -> Metadata:
-    # One lazily-built doc-order tag index shared by every meta/DOM
-    # selector scan in the cascade (the tree is not mutated between
-    # them).
-    _index: list = []
+    # One doc-order tag index shared by every meta/DOM selector scan in
+    # the cascade (the tree is not mutated between them).
+    index = selectors.TagIndex(doc)
 
-    def idx():
-        if not _index:
-            _index.append(selectors.TagIndex(doc))
-        return _index[0]
-
-    metadata = examine_meta(doc, idx())
+    metadata = examine_meta(doc, index)
     metadata.author = remove_blacklisted_authors(metadata.author, options)
 
-    metadata = extract_json_ld(options, doc, metadata, idx())
+    metadata = extract_json_ld(options, doc, metadata, index)
     metadata.author = remove_blacklisted_authors(metadata.author, options)
 
     if metadata.title == "":
-        metadata.title = extract_dom_title(doc, idx())
+        metadata.title = extract_dom_title(doc, index)
 
     if metadata.author == "":
-        metadata.author = extract_dom_author(doc, idx())
+        metadata.author = extract_dom_author(doc, index)
         metadata.author = remove_blacklisted_authors(metadata.author, options)
 
     if metadata.url == "":
-        metadata.url = extract_dom_url(doc, idx())
+        metadata.url = extract_dom_url(doc, index)
 
     if metadata.url != "":
         valid_url, is_abs = validate_url(metadata.url, options.original_url)
@@ -1630,10 +1561,10 @@ def extract_metadata(doc: Element, options) -> Metadata:
         # extensive when fallback is enabled, fast otherwise.
         extensive = (
             options.date_mode == "extensive"
-            or (options.date_mode == "default" and getattr(options, "enable_fallback", False))
+            or (options.date_mode == "default" and options.enable_fallback)
         )
         metadata.date = extract_date_fast(
-            doc, metadata.url, extensive=extensive, index=idx())
+            doc, metadata.url, extensive=extensive, index=index)
 
     if metadata.sitename == "":
         metadata.sitename = extract_dom_sitename(doc)
@@ -1650,15 +1581,15 @@ def extract_metadata(doc: Element, options) -> Metadata:
             metadata.sitename = m.group(1)
 
     if not metadata.categories:
-        metadata.categories = extract_dom_categories(doc, idx())
+        metadata.categories = extract_dom_categories(doc, index)
     if metadata.categories:
         metadata.categories = clean_cat_tags(metadata.categories)
 
     if not metadata.tags:
-        metadata.tags = extract_dom_tags(doc, idx())
+        metadata.tags = extract_dom_tags(index)
     if metadata.tags:
         metadata.tags = clean_cat_tags(metadata.tags)
 
-    metadata.license = extract_license(doc, idx())
+    metadata.license = extract_license(index)
 
     return metadata

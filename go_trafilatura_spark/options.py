@@ -43,7 +43,10 @@ class Options:
     has_essential_metadata: bool = False
     max_tree_size: int = 0
     prune_selector: str = ""
-    # date extraction: "fast" (meta/url/time subset) or "disabled"
+    # date extraction: "fast" (first cascade tier hit), "extensive"
+    # (every tier, whole-document scans), "default" (extensive when
+    # enable_fallback is set, else fast) or "disabled"; any other value
+    # runs fast
     date_mode: str = "fast"
 
     @classmethod

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .kernel import OUTPUT_SCHEMA, TIMED_OUTPUT_SCHEMA, KernelOptions, make_arrow_kernel
@@ -245,14 +246,20 @@ class TableSink:
         raise NotImplementedError
 
     def read(self, spark: SparkSession) -> DataFrame:
+        """The table's rows; FileNotFoundError only when the table does
+        not exist, any other read error propagates."""
         raise NotImplementedError
 
-    def exists(self, spark: SparkSession) -> bool:
-        try:
-            self.read(spark)
-            return True
-        except Exception:
-            return False
+
+def _read_table(read, target: str, missing: str) -> DataFrame:
+    """``read(target)`` with the AnalysisException of error condition
+    ``missing`` raised as FileNotFoundError."""
+    try:
+        return read(target)
+    except AnalysisException as e:
+        if e.getCondition() == missing:
+            raise FileNotFoundError(target) from e
+        raise
 
 
 class ParquetSink(TableSink):
@@ -282,7 +289,7 @@ class ParquetSink(TableSink):
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return _read_table(spark.read.parquet, self.path, "PATH_NOT_FOUND")
 
 
 class IcebergSink(TableSink):
@@ -302,7 +309,7 @@ class IcebergSink(TableSink):
         df.writeTo(self.table).overwritePartitions()
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.table(self.table)
+        return _read_table(spark.read.table, self.table, "TABLE_OR_VIEW_NOT_FOUND")
 
 
 def write_extracted(df: DataFrame, path_or_sink, mode: str = "overwrite") -> None:
@@ -359,12 +366,12 @@ def extract_pages_resumable(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(num_partitions)).cast("int")
     )
 
-    done_buckets: set[int] = set()
     try:
         mdf = manifest_sink.read(spark)
+    except FileNotFoundError:  # no manifest yet
+        done_buckets: set[int] = set()
+    else:
         done_buckets = {r["bucket"] for r in mdf.select("bucket").distinct().collect()}
-    except Exception:
-        pass  # no manifest yet
 
     if len(done_buckets) >= num_partitions:
         return sink.read(spark)  # nothing left to do

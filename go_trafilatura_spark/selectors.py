@@ -883,13 +883,10 @@ meta_tags_rule_3.containers_screen = (
 meta_tags_rule_4.containers_screen = ("entry-meta", "topics", "tags-links")
 
 
-def anchors_by_ancestor(index: "TagIndex", rule) -> list[Element] | None:
-    """Evaluate an a[href]-under-container rule through its inverted
-    ``containers`` spec; None when the rule carries no spec."""
-    spec = getattr(rule, "containers", None)
-    if spec is None:
-        return None
-    tags, pred = spec
+def anchors_by_ancestor(index: "TagIndex", rule) -> list[Element]:
+    """Evaluate an a[href]-under-container rule (every META_CATEGORIES
+    and META_TAGS rule) through its inverted ``containers`` spec."""
+    tags, pred = rule.containers
     ids = set()
     pool = index.elements if tags is None else [
         el for t in tags for el in index.of_tag(t)

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .utils import HTML_ESCAPES
+
 _META_FIELDS = (
     "title", "author", "url", "hostname", "description",
     "sitename", "date", "categories", "tags", "license",
@@ -19,8 +21,7 @@ _META_FIELDS = (
 def _esc(col: Column) -> Column:
     """Go html-escape for attribute values (& ' < > ")."""
     out = F.coalesce(col, F.lit(""))
-    for raw, rep in (("&", "&amp;"), ("'", "&#39;"), ("<", "&lt;"),
-                     (">", "&gt;"), ('"', "&#34;")):
+    for raw, rep in HTML_ESCAPES:
         out = F.replace(out, F.lit(raw), F.lit(rep))
     return out
 

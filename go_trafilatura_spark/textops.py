@@ -48,10 +48,10 @@ def tokens_col(text_col: str = "text"):
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
-# Fan-out guard: only repartition inputs the optimizer estimates below
-# this many bytes (a scan that small cannot produce enough splits to
-# feed the session's cores; a scan above it already fans out and the
-# extra exchange would be pure cost).
+# Fan-out guard: only repartition inputs below this many on-disk bytes
+# (a scan that small cannot produce enough splits to feed the session's
+# cores; a scan above it already fans out and the extra exchange would
+# be pure cost).
 _FANOUT_MAX_BYTES = 1 << 30
 
 
@@ -67,10 +67,9 @@ def _estimated_plan_bytes(df: DataFrame) -> int | None:
 
 def scan_bytes(path: str) -> int | None:
     """Bytes of a parquet file or directory on a local filesystem —
-    lets fanout_small_scan decide WITHOUT compiling the plan twice
-    (the optimizer-stats + rdd probes cost ~80 ms of driver time per
-    query, which is visible at small scale). Returns None for
-    non-local paths (caller falls back to the stats probe)."""
+    lets fanout_small_scan decide WITHOUT compiling the plan (an
+    optimizer-stats probe costs ~80 ms of driver time per query, which
+    is visible at small scale). Returns None for non-local paths."""
     import os
 
     try:
@@ -87,33 +86,27 @@ def scan_bytes(path: str) -> int | None:
     return None
 
 
-def fanout_small_scan(df: DataFrame, input_bytes: int | None = None) -> DataFrame:
+def fanout_small_scan(df: DataFrame, input_bytes: int | None) -> DataFrame:
     """Scale-adaptive scan fan-out (optimization guide §2.4/§6): a small
     parquet input — one file, one row group — scans as 1-2 splits, so
     every projection / explode / map-side partial aggregation UPSTREAM
     of the first exchange runs on 1-2 cores no matter how many the
     session has (measured: the whole per-doc query suite ran 2-way
-    parallel on local[32]). When the optimizer's size estimate says the
-    input is small (< 1 GB) AND the scan produced fewer partitions than
-    defaultParallelism, hash-repartition on the uniform row key
-    (``doc_id``) so the compute stage uses every core. At
-    real scale the estimate exceeds the threshold (or the stats are
-    unknown → assumed huge) and the input is returned UNCHANGED — no
-    exchange is ever added to a 100 TB scan.
+    parallel on local[32]). When the input is small AND the scan
+    produced fewer partitions than defaultParallelism, hash-repartition
+    on the uniform row key (``doc_id``) so the compute stage uses every
+    core. At real scale the size exceeds the threshold and the input is
+    returned UNCHANGED — no exchange is ever added to a 100 TB scan.
 
-    ``input_bytes`` (from ``scan_bytes``) replaces the optimizer-stats
-    probe — the caller already knows the size, so a large input is
-    returned without compiling the plan. Either size then goes through
-    the same threshold and partition-count test. Note the units differ:
-    ``_FANOUT_MAX_BYTES`` is compared against ON-DISK (compressed
-    parquet) bytes on the ``input_bytes`` path and against the
-    optimizer's in-memory estimate on the stats path."""
+    ``input_bytes`` is the input's ON-DISK (compressed parquet) size,
+    from ``scan_bytes``; the 1 GiB ``_FANOUT_MAX_BYTES`` threshold is
+    compared against it. ``None`` (a non-local path, size unknown)
+    returns the scan unchanged."""
     try:
         min_partitions = df.sparkSession.sparkContext.defaultParallelism
     except Exception:
         return df
-    size = input_bytes if input_bytes is not None else _estimated_plan_bytes(df)
-    if size is None or size > _FANOUT_MAX_BYTES:
+    if input_bytes is None or input_bytes > _FANOUT_MAX_BYTES:
         return df
     try:
         if df.rdd.getNumPartitions() >= min_partitions:

@@ -30,6 +30,18 @@ def trim(s: str) -> str:
     return " ".join(s.split())
 
 
+# Go html.EscapeString's replacements, in the order they are applied.
+HTML_ESCAPES = (("&", "&amp;"), ("'", "&#39;"), ("<", "&lt;"), (">", "&gt;"),
+                ('"', "&#34;"))
+
+
+def html_escape(s: str) -> str:
+    """Go html.EscapeString (attribute-safe)."""
+    for raw, rep in HTML_ESCAPES:
+        s = s.replace(raw, rep)
+    return s
+
+
 def str_word_count(s: str) -> int:
     return len(s.split())
 

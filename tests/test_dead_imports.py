@@ -102,3 +102,102 @@ def dead_definitions() -> list[str]:
 def test_no_dead_module_level_definitions():
     dead = dead_definitions()
     assert dead == [], "module-level definitions nothing references:\n" + "\n".join(dead)
+
+
+PACKAGE = "go_trafilatura_spark"
+_RX_CONSTANT = re.compile(r"[A-Z][A-Z0-9_]*$")
+
+
+def _package_module_names(tree: ast.Module) -> set[str]:
+    """Names a file binds to the package or to one of its modules."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == PACKAGE:
+                    names.add(alias.asname or PACKAGE)
+        elif (isinstance(node, ast.ImportFrom) and node.level == 0
+              and (node.module or "").split(".")[0] == PACKAGE):
+            pkg_dir = os.path.join(ROOT, *node.module.split("."))
+            for alias in node.names:
+                if os.path.isfile(os.path.join(pkg_dir, alias.name + ".py")):
+                    names.add(alias.asname or alias.name)
+    return names
+
+
+def _root_name(node: ast.expr) -> str | None:
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return node.id if isinstance(node, ast.Name) else None
+
+
+def _assigned_attributes(node: ast.AST):
+    """(object, attribute name) pairs an assignment or a setattr call
+    (including ``monkeypatch.setattr``) writes; the object is None for
+    the dotted-string form ``setattr("pkg.mod.NAME", value)``."""
+    if isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+        stack = list(getattr(node, "targets", [getattr(node, "target", None)]))
+        while stack:
+            t = stack.pop()
+            if isinstance(t, (ast.Tuple, ast.List)):
+                stack.extend(t.elts)
+            elif isinstance(t, ast.Attribute):
+                yield t.value, t.attr
+    elif isinstance(node, ast.Call) and node.args:
+        func = node.func
+        name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+        if name != "setattr":
+            return
+        first = node.args[0]
+        if isinstance(first, ast.Constant) and isinstance(first.value, str):
+            yield None, first.value
+        elif (len(node.args) > 1 and isinstance(node.args[1], ast.Constant)
+              and isinstance(node.args[1].value, str)):
+            yield first, node.args[1].value
+
+
+def _module_switches(tree: ast.Module) -> list[tuple[int, str]]:
+    """(line, name) of each UPPER_CASE attribute of a package module the
+    file sets."""
+    modules = _package_module_names(tree)
+    found = []
+    for node in ast.walk(tree):
+        for obj, attr in _assigned_attributes(node):
+            if obj is None:
+                owner, _, attr = attr.rpartition(".")
+                hit = owner.split(".")[0] == PACKAGE
+            else:
+                hit = _root_name(obj) in modules
+            if hit and _RX_CONSTANT.match(attr):
+                found.append((node.lineno, attr))
+    return found
+
+
+def test_no_test_only_module_switches():
+    """No file under tests/ sets an UPPER_CASE attribute of a package
+    module: a module switch only tests flip is a second code path."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "tests", "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        found += [f"{os.path.relpath(path, ROOT)}:{line}: {name}"
+                  for line, name in _module_switches(tree)]
+    assert found == [], "tests assign package module constants:\n" + "\n".join(found)
+
+
+def test_module_switch_check_sees_every_form():
+    src = (
+        "import go_trafilatura_spark as gts\n"
+        "from go_trafilatura_spark import etree\n"
+        "from go_trafilatura_spark.metadata import extract_date_fast\n"
+        "etree.FAST = True\n"
+        "gts.etree.SLOW, x = 1, 2\n"
+        "monkeypatch.setattr(etree, 'LIMIT', 3)\n"
+        "monkeypatch.setattr('go_trafilatura_spark.kernel.BATCH', 4)\n"
+        "setattr(etree, 'OTHER', 5)\n"
+        "etree.lower_case = 6\n"
+        "extract_date_fast.NOT_A_MODULE = 7\n"
+        "monkeypatch.setattr('sys.argv', [])\n"
+    )
+    assert sorted(name for _, name in _module_switches(ast.parse(src))) == [
+        "BATCH", "FAST", "LIMIT", "OTHER", "SLOW"]

@@ -127,6 +127,22 @@ def test_cli_directory_url_does_not_leak_between_pages(tmp_path, capsys):
     assert payloads[1]["metadata"]["hostname"] == ""
 
 
+def test_cli_html_escapes_metadata_attributes(tmp_path, capsys):
+    """-f html writes metadata into content="..." with Go
+    html.EscapeString, as sinks.readable_html does."""
+    from go_trafilatura_spark.cli import main
+
+    para = "<p>" + "This paragraph carries enough ordinary words to pass the gates. " * 8 + "</p>"
+    page = tmp_path / "quote.html"
+    page.write_text(
+        "<html><head><title>Say &quot;hi&quot; &amp; &lt;bye&gt; 'now'</title></head>"
+        f"<body><article>{para * 3}</article></body></html>")
+    assert main([str(page), "-f", "html"]) == 0
+    out = capsys.readouterr().out
+    assert ('<meta name="title" content="Say &#34;hi&#34; &amp; &lt;bye&gt; &#39;now&#39;"/>'
+            in out)
+
+
 ROBOTS = b"""
 # example robots file
 User-agent: *

@@ -115,17 +115,14 @@ def test_real_corpus_equality():
     not os.path.isdir("/root/reference/test-files"), reason="reference corpus absent"
 )
 def test_known_divergent_page_same_extraction():
-    import go_trafilatura_spark as gts
     from go_trafilatura_spark.comparison import resolve_file
+    from go_trafilatura_spark.core import extract, extract_document
+    from go_trafilatura_spark.options import Options
 
     data = open(resolve_file("emotion.de.selfcare.html"), "rb").read()
-    etree.FAST_TOKENIZER = True
-    fast_text = gts.extract(data, gts.Options(exclude_comments=True)).content_text
-    try:
-        etree.FAST_TOKENIZER = False
-        slow_text = gts.extract(data, gts.Options(exclude_comments=True)).content_text
-    finally:
-        etree.FAST_TOKENIZER = True
+    fast_text = extract(data, Options(exclude_comments=True)).content_text
+    slow_text = extract_document(
+        etree.parse_html_stdlib(data), Options(exclude_comments=True)).content_text
     assert fast_text == slow_text
 
 

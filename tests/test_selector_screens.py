@@ -123,3 +123,49 @@ def test_screen_spans_match_expected():
     assert len(selectors.query_all(
         doc, selectors.overall_discarded_rule_2,
         index.candidates(selectors.overall_discarded_rule_2))) >= 1
+
+
+# (tag, attribute, value) of a container each META_CATEGORIES /
+# META_TAGS rule accepts; every rule matches at least one of them.
+META_CONTAINERS = [
+    ("div", "class", "post-meta"), ("div", "id", "postpath-1"),
+    ("p", "class", "postinfo"), ("p", "id", "filedunder"),
+    ("footer", "class", "entry-footer"), ("li", "class", "post-category"),
+    ("span", "class", "the-cat-links"), ("header", "class", "entry-header"),
+    ("div", "class", "row"), ("div", "class", "tags"),
+    ("p", "class", "entry-tags-list"), ("div", "class", "jp-relatedposts"),
+    ("section", "class", "hot-topics"), ("ul", "class", "tags-links"),
+]
+
+
+def _meta_anchor_page() -> str:
+    parts = []
+    for i, (tag, attr, value) in enumerate(META_CONTAINERS):
+        ent = "&#%d;%s" % (ord(value[0]), value[1:])
+        parts += [
+            # matching container; <a> without href never matches
+            f'<{tag} {attr}="{value}"><a href="/{i}/a">a</a><a>no href</a></{tag}>',
+            # non-matching container of the same tag
+            f'<{tag} {attr}="unrelated"><a href="/{i}/b">b</a></{tag}>',
+            # nested matching containers: the anchor is listed once
+            f'<{tag} {attr}="{value}"><div class="tags">'
+            f'<{tag} {attr}="{value}"><a href="/{i}/c">c</a></{tag}></div></{tag}>',
+            # entity-encoded value decodes to a match (bypasses the screen)
+            f'<{tag} {attr}="{ent}"><a href="/{i}/d">d</a></{tag}>',
+            # upper-case names match, an upper-case value does not
+            f'<{tag.upper()} {attr.upper()}="{value}"><A HREF="/{i}/e">e</A></{tag.upper()}>',
+            f'<{tag} {attr}="{value.upper()}"><a href="/{i}/f">f</a></{tag}>',
+        ]
+    return "<html><body>%s<a href='/top'>top</a></body></html>" % "".join(parts)
+
+
+def test_anchors_by_ancestor_equals_naive_rule():
+    """The inverted container scan the metadata stage runs returns the
+    match list of the rule's own ancestor predicate, in document order."""
+    doc = etree.parse_html(_meta_anchor_page())
+    index = selectors.TagIndex(doc)
+    for rule in selectors.META_CATEGORIES + selectors.META_TAGS:
+        got = selectors.anchors_by_ancestor(index, rule)
+        assert got == selectors.query_all(doc, rule), rule.__name__
+        assert got, rule.__name__
+        assert all("href" in a.attrib for a in got), rule.__name__

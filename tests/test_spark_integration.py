@@ -116,6 +116,28 @@ def test_resume_manifest(spark, smoke_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_resume_corrupt_manifest_raises(spark, smoke_dir):
+    """An unreadable manifest is an error, not "no bucket done": the
+    re-run raises and appends nothing to the output."""
+    import glob
+
+    tmp = tempfile.mkdtemp(prefix="gts_resume_")
+    try:
+        pages, out_path = os.path.join(smoke_dir, "pages.parquet"), os.path.join(tmp, "out")
+        n1 = extract_pages_resumable(spark, pages, out_path, num_partitions=4).count()
+        parts = glob.glob(os.path.join(out_path + "_manifest", "*.parquet"))
+        assert parts
+        for part in parts:
+            with open(part, "wb") as f:
+                f.write(b"not a parquet file")
+        with pytest.raises(Exception) as exc:
+            extract_pages_resumable(spark, pages, out_path, num_partitions=4)
+        assert not isinstance(exc.value, FileNotFoundError)
+        assert spark.read.parquet(out_path).count() == n1
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_resume_sink_backend_swap(spark, smoke_dir):
     """extract_pages_resumable talks only to the TableSink interface:
     a recording in-memory backend receives the same bucketed appends
