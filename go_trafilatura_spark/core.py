@@ -45,26 +45,37 @@ class ExtractResult:
 
 def extract(html_input: bytes | str, options: Options | None = None) -> ExtractResult:
     """Extract — parse + run the document cascade (core.go:71-79)."""
-    doc = etree.parse_html(html_input)
-    return extract_document(
-        doc, options or Options(), owns_doc=True,
-        reparse=lambda: etree.parse_html(html_input),
-    )
+    return _extract(lambda: etree.parse_html(html_input), options or Options())
 
 
-def extract_document(doc: Element, options: Options, owns_doc: bool = False,
-                     reparse=None) -> ExtractResult:
-    """ExtractDocument (core.go:82-219). ``owns_doc=True`` lets the
-    cascade mutate the input tree instead of cloning it first (the
-    reference always clones, core.go:133 — identical results, fewer
-    allocations when the caller discards the tree).
+def extract_document(doc: Element, options: Options) -> ExtractResult:
+    """ExtractDocument (core.go:82-219) on a clone of ``doc``; the
+    caller's tree is left unchanged."""
+    return _extract(lambda: etree.clone(doc, True), options)
 
-    ``reparse`` (a zero-arg callable returning a fresh parse of the
-    same input) replaces the eager pristine-tree clone the baseline
-    rescue would otherwise need: the rescue fires only on pages whose
-    extraction falls short of min_extracted_size, so re-parsing those
-    few beats deep-cloning every page (the reference's docBackup2,
-    core.go:135 — identical bytes either way)."""
+
+def _prune_selected(doc: Element, options: Options) -> Element:
+    """Remove the nodes matching the user's prune selector from ``doc``
+    (an unparsable selector prunes nothing)."""
+    if options.prune_selector:
+        try:
+            sels = css.parse_group(options.prune_selector)
+        except ValueError:
+            sels = None
+        if sels:
+            # One rule matching the whole selector group (cascadia group match)
+            group_rule = [lambda n, _ss=sels: any(s.matches(n) for s in _ss)]
+            prune_unwanted_nodes(doc, group_rule)
+    return doc
+
+
+def _extract(fresh, options: Options) -> ExtractResult:
+    """The document cascade. ``fresh`` is a zero-arg callable returning
+    a new tree of the input on every call, which the cascade owns: the
+    working tree and, only when the baseline rescue fires, the rescue
+    tree (the reference's docBackup2, core.go:135). Re-building that
+    tree for the few pages that need it beats cloning every page."""
+    doc = fresh()
     cache = LRUCache(options.config.cache_size)
 
     # Language gate (non-strict)
@@ -87,55 +98,32 @@ def extract_document(doc: Element, options: Options, owns_doc: bool = False,
     if options.original_url is None and metadata.url != "":
         options = replace(options, original_url=metadata.url)
 
-    # User-specified prune selector
-    if options.prune_selector:
-        try:
-            sels = css.parse_group(options.prune_selector)
-        except ValueError:
-            sels = None
-        if sels:
-            # One rule matching the whole selector group (cascadia group match)
-            group_rule = [lambda n, _ss=sels: any(s.matches(n) for s in _ss)]
-            doc = prune_unwanted_nodes(doc, group_rule)
+    _prune_selected(doc, options)
 
-    # Clone working copies. The reference always makes three clones
-    # (core.go:133-135); we skip the ones that cannot be consumed under
-    # the current options — pure allocation savings, no semantic change.
-    if not owns_doc:
-        doc = etree.clone(doc, True)
+    # The fallback's backup clone (core.go:134) is taken only when the
+    # fallback runs
     doc_backup1 = etree.clone(doc, True) if options.enable_fallback else None
-    needs_baseline = (
-        options.config.min_extracted_size > 0 and options.focus != FAVOR_PRECISION
-    )
-    doc_backup2 = (
-        None if not needs_baseline
-        else reparse if reparse is not None
-        else etree.clone(doc, True)
-    )
 
     # Clean and convert
     doc_cleaning(doc, options)
     convert_tags(doc, options)
 
+    if options.exclude_comments and options.focus == FAVOR_PRECISION:
+        prune_unwanted_nodes(doc, selectors.REMOVED_COMMENTS)
+    # One TagIndex serves both comment and content rule cascades:
+    # extract_comments never mutates doc (prune works on a clone).
+    index = selectors.TagIndex(doc)
+
     # Comments
     tmp_comments = ""
     len_comments = 0
     comments_body: Element | None = None
-    shared_index = None
     if not options.exclude_comments:
-        # One TagIndex serves both comment and content rule cascades:
-        # extract_comments never mutates doc (prune works on a clone).
-        shared_index = selectors.TagIndex(doc)
-        comments_body, tmp_comments = extract_comments(
-            doc, cache, options, index=shared_index)
+        comments_body, tmp_comments = extract_comments(doc, cache, options, index)
         len_comments = len(tmp_comments)
-    elif options.focus == FAVOR_PRECISION:
-        # `doc` is our private working copy at this point — prune in place
-        doc = prune_unwanted_nodes(doc, selectors.REMOVED_COMMENTS, in_place=True)
 
     # Content
-    post_body, tmp_body_text = extract_content(doc, cache, options,
-                                               index=shared_index)
+    post_body, tmp_body_text = extract_content(doc, cache, options, index)
 
     # Fallback comparison (external.go:50-101)
     if options.enable_fallback:
@@ -145,12 +133,10 @@ def extract_document(doc: Element, options: Options, owns_doc: bool = False,
             doc_backup1, post_body, tmp_body_text, options
         )
 
-    # Baseline rescue
+    # Baseline rescue, on a fresh tree pruned like the working one
     len_text = len(tmp_body_text)
     if len_text < options.config.min_extracted_size and options.focus != FAVOR_PRECISION:
-        if callable(doc_backup2):
-            doc_backup2 = doc_backup2()  # deferred re-parse (see docstring)
-        post_body, tmp_body_text = baseline(doc_backup2)
+        post_body, tmp_body_text = baseline(_prune_selected(fresh(), options))
 
     # Tree size sanity check
     if options.max_tree_size > 0:

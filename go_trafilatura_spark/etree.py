@@ -1796,17 +1796,18 @@ def _parse(data: bytes | str, feed) -> Element:
     else:
         text = data
     builder = _TreeBuilder()
-    try:
-        feed(text, builder)
-    except Exception:
-        # resilient parse: return what we have
-        pass
+    feed(text, builder)
     return builder.root
 
 
 def _stdlib_feed(text: str, builder: "_TreeBuilder") -> None:
-    builder.feed(text)
-    builder.close()
+    try:
+        builder.feed(text)
+        builder.close()
+    except AssertionError:
+        # _markupbase rejects a malformed declaration: keep the tree
+        # built so far (_fast_feed stops at the same point)
+        pass
 
 
 def parse_html(data: bytes | str) -> Element:

@@ -44,8 +44,7 @@ def compare_external_extraction(
     # identical candidates either way, one full-tree copy saved).
     if options.focus == FAVOR_PRECISION:
         cleaned_doc = prune_unwanted_nodes(
-            etree.clone(original_doc, True),
-            selectors.OVERALL_DISCARDED_CONTENT, in_place=True)
+            etree.clone(original_doc, True), selectors.OVERALL_DISCARDED_CONTENT)
     else:
         cleaned_doc = original_doc
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import datetime
 import json
+import os
 import random
 
 # Word pool: common English words incl. classifier stopwords.
@@ -445,7 +446,6 @@ def generate_pages(n: int, seed: int = 42) -> list[Page]:
 def write_fixtures(out_dir: str, n: int, seed: int = 42) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import os
 
     os.makedirs(out_dir, exist_ok=True)
     pages = generate_pages(n, seed)
@@ -533,7 +533,9 @@ def write_fixtures(out_dir: str, n: int, seed: int = 42) -> None:
     )
 
 
-FIXTURE_ROOT = "/root/repo/fixtures"
+# <checkout>/fixtures, where __spark_entry__.FIXTURE_DIR reads them
+FIXTURE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 SCALES = {"smoke": 120, "correctness": 800, "bench": 4000}
 # Bump when the golden schema/prediction changes so stale parquet on disk
 # is regenerated (fixture content itself is deterministic, seed=42).
@@ -542,8 +544,6 @@ FIXTURE_VERSION = "3"
 
 def ensure_fixtures(scale: str = "correctness") -> str:
     """Generate (once per FIXTURE_VERSION) and return the fixture dir."""
-    import os
-
     out_dir = os.path.join(FIXTURE_ROOT, scale)
     marker = os.path.join(out_dir, "pages.parquet")
     vfile = os.path.join(out_dir, "VERSION")

@@ -110,68 +110,28 @@ def prune_html(doc: Element, options) -> None:
                 etree.remove(el, keep_tail)
 
 
-def prune_unwanted_nodes(tree: Element, rules, with_backup: bool = False,
-                         in_place: bool = False) -> Element:
-    """html-processing.go:141-188 — clone, remove matching nodes (keeping
-    their tail text attached to the previous node), optionally revert if
-    more than 6/7 of the text disappeared.
-
-    ``in_place=True`` skips the defensive input clone for call sites
-    that rebind the result and never touch the input again (the chained
-    prunes in prune_unwanted_sections, the precision pre-prunes) — pure
-    allocation savings, observationally identical."""
-    original = tree
-    backup = None
-    old_len = 0
-    if with_backup:
-        # The un-pruned input IS the backup; a second clone is taken
-        # only when mutating in place (revert re-clones the original in
-        # the rare >6/7-loss case instead of paying a clone every call).
-        old_len = etree.text_len(tree)
-        if in_place:
-            backup = etree.clone(tree, True)
-    if not in_place:
-        tree = etree.clone(tree, True)
-
-    # One doc-order walk snapshot serves every rule in the list; a
-    # match inside a subtree an earlier rule removed is skipped via the
-    # attachment check below (identical results to the per-rule
-    # re-scan: removals change structure, never the attributes the
-    # rules read).
-    index = selectors.TagIndex(tree) if len(rules) > 1 else None
+def prune_unwanted_nodes(tree: Element, rules) -> Element:
+    """html-processing.go:141-188 — remove the nodes matching each rule
+    from ``tree`` itself (keeping their tail text attached to the
+    previous node) and return ``tree``. A caller that must keep its
+    tree passes ``etree.clone(tree, True)``; the reference's optional
+    revert on a >6/7 text loss lives in prune_unwanted_sections, its
+    only user."""
     for rule in rules:
-        cands = index.candidates(rule) if index is not None else None
-        sub_elements = selectors.query_all(tree, rule, cands)
-        for sub in reversed(sub_elements):
+        for sub in reversed(selectors.query_all(tree, rule)):
             if sub.parent is None:
                 continue
-            if index is not None:
-                anc = sub
-                while anc.parent is not None:
-                    anc = anc.parent
-                if anc is not tree:
-                    continue  # detached by an earlier rule's removal
             tail = sub.tail
             if tail:
+                # The previous sibling, else the parent: the reference
+                # calls SetTail on the parent too, which writes after
+                # the *parent* element. Mirror that.
                 prev = etree.prev_element_sibling(sub)
                 if prev is None:
                     prev = sub.parent
-                if prev is not None:
-                    if prev is sub.parent:
-                        # previous node is the parent: append to its text?
-                        # The reference calls SetTail on the parent — which
-                        # writes after the *parent* element. Mirror that.
-                        prev_tail = prev.tail
-                        etree.set_tail(prev, prev_tail + " " + tail if prev_tail else tail)
-                    else:
-                        prev_tail = prev.tail
-                        etree.set_tail(prev, prev_tail + " " + tail if prev_tail else tail)
+                prev_tail = prev.tail
+                etree.set_tail(prev, prev_tail + " " + tail if prev_tail else tail)
             etree.remove(sub)
-
-    if with_backup:
-        new_len = etree.text_len(tree)
-        if new_len <= old_len // 7:
-            return backup if in_place else etree.clone(original, True)
     return tree
 
 
@@ -459,19 +419,21 @@ def prune_unwanted_sections(subtree: Element, potential_tags: set, options) -> E
     link-density deletion passes."""
     from .settings import SET_HEAD_TAGS, HEAD_TAGS
 
-    # First prune clones (the caller's subtree is still attached to the
-    # document, which later rules re-query); the chained prunes below
-    # own their input and mutate in place.
-    subtree = prune_unwanted_nodes(subtree, selectors.OVERALL_DISCARDED_CONTENT, True)
+    # Prune a clone: the caller's subtree is still attached to the
+    # document, which later rules re-query. Keep an unpruned clone
+    # instead when pruning removed more than 6/7 of the text.
+    old_len = etree.text_len(subtree)
+    pruned = prune_unwanted_nodes(etree.clone(subtree, True),
+                                  selectors.OVERALL_DISCARDED_CONTENT)
+    subtree = pruned if etree.text_len(pruned) > old_len // 7 else etree.clone(subtree, True)
 
     if not options.include_images:
-        subtree = prune_unwanted_nodes(subtree, selectors.DISCARDED_IMAGE, in_place=True)
+        prune_unwanted_nodes(subtree, selectors.DISCARDED_IMAGE)
 
     if options.focus != FAVOR_RECALL:
-        subtree = prune_unwanted_nodes(subtree, selectors.DISCARDED_TEASER, in_place=True)
+        prune_unwanted_nodes(subtree, selectors.DISCARDED_TEASER)
         if options.focus == FAVOR_PRECISION:
-            subtree = prune_unwanted_nodes(
-                subtree, selectors.PRECISION_DISCARDED_CONTENT, in_place=True)
+            prune_unwanted_nodes(subtree, selectors.PRECISION_DISCARDED_CONTENT)
 
     for _ in range(2):
         delete_by_link_density(subtree, options, "div")

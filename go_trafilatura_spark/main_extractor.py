@@ -475,8 +475,9 @@ def recover_wild_text(doc: Element, result_body: Element, potential_tags: set, c
 
 
 def extract_content(doc: Element, cache, options,
-                    index=None) -> tuple[Element, str]:
-    """main-extractor.go:666-788 — the main content driver.
+                    index: selectors.TagIndex) -> tuple[Element, str]:
+    """main-extractor.go:666-788 — the main content driver. ``index`` is
+    the caller's TagIndex of ``doc``.
 
     The reference snapshots backupDoc upfront; here the rule loop is
     provably non-mutating on ``doc`` (prune_unwanted_sections clones the
@@ -496,10 +497,7 @@ def extract_content(doc: Element, cache, options,
 
     # One doc-order walk serves all five content rules (the matched
     # subtree is cloned before any mutation, so doc stays unchanged
-    # across iterations); reused from extract_comments when the caller
-    # passes it (extract_comments is non-mutating).
-    if index is None:
-        index = selectors.TagIndex(doc)
+    # across iterations).
     for rule in selectors.CONTENT:
         subtree = selectors.query(doc, rule, index.candidates(rule))
         if subtree is None:
@@ -573,22 +571,21 @@ def process_comments_node(elem: Element, potential_tags: set, cache, options) ->
 
 
 def extract_comments(doc: Element, cache, options,
-                     index=None) -> tuple[Element | None, str]:
-    """main-extractor.go:808-852. ``index`` lets the caller share one
-    TagIndex across comments+content (this function never mutates
+                     index: selectors.TagIndex) -> tuple[Element | None, str]:
+    """main-extractor.go:808-852. ``index`` is the caller's TagIndex of
+    ``doc``, shared with extract_content (this function never mutates
     ``doc``: prune works on a clone)."""
     comments_body = etree.new_element("body")
     potential_tags = set(TAG_CATALOG)
 
     # One doc-order walk serves all four comment rules
-    if index is None:
-        index = selectors.TagIndex(doc)
     for rule in selectors.COMMENTS:
         subtree = selectors.query(doc, rule, index.candidates(rule))
         if subtree is None:
             continue
 
-        subtree = prune_unwanted_nodes(subtree, selectors.DISCARDED_COMMENTS)
+        subtree = prune_unwanted_nodes(etree.clone(subtree, True),
+                                       selectors.DISCARDED_COMMENTS)
         etree.strip_tags(subtree, "a", "span")
 
         processed_elems = []

@@ -753,7 +753,8 @@ def extract_dom_author(doc: Element, index) -> str:
                 continue
             sub = node
             if discards and any(_is_under(d, node) for d in discards):
-                sub = prune_unwanted_nodes(node, selectors.META_AUTHOR_DISCARD)
+                sub = prune_unwanted_nodes(etree.clone(node, True),
+                                           selectors.META_AUTHOR_DISCARD)
             text = trim(etree.iter_text(sub, " "))
             if 2 < len(text) < 120:
                 return normalize_authors("", text)

@@ -312,20 +312,10 @@ class IcebergSink(TableSink):
         return _read_table(spark.read.table, self.table, "TABLE_OR_VIEW_NOT_FOUND")
 
 
-def write_extracted(df: DataFrame, path_or_sink, mode: str = "overwrite") -> None:
-    """Sink extracted rows partitioned by a url-hash bucket for
-    downstream pruning; accepts a path (parquet backend) or any
-    TableSink."""
-    out = df.withColumn(
-        "host_bucket", F.pmod(F.xxhash64("url"), F.lit(256)).cast("int")
-    )
-    if isinstance(path_or_sink, TableSink):
-        if mode == "overwrite":
-            path_or_sink.overwrite_partitions(out)
-        else:
-            path_or_sink.append(out)
-        return
-    out.write.mode(mode).parquet(path_or_sink)
+def write_extracted(df: DataFrame, path: str) -> None:
+    """Write extracted rows to ``path`` as parquet, replacing any
+    previous output (extract_job's non-resume write)."""
+    df.write.mode("overwrite").parquet(path)
 
 
 # ---------------------------------------------------------------------------

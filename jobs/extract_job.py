@@ -35,12 +35,13 @@ def main() -> int:
     from pyspark.sql import SparkSession, functions as F
 
     from go_trafilatura_spark.pipeline import (
-        extract_pages, extract_pages_resumable, read_pages,
+        ARROW_BATCH_SIZE, extract_pages, extract_pages_resumable, read_pages,
+        write_extracted,
     )
 
     spark = SparkSession.builder.appName("gts-extract").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
 
     options: dict = {}
     if args.favor == "precision":
@@ -69,7 +70,7 @@ def main() -> int:
             F.count(F.lit(1)).alias("rows"),
             F.sum(F.col("reject_reason").isNotNull().cast("long")).alias("rejected"),
         )
-        observed.write.mode("overwrite").parquet(args.output)
+        write_extracted(observed, args.output)
         n = obs.get["rows"]
         rejected = obs.get["rejected"]
 

@@ -143,6 +143,21 @@ def test_cli_html_escapes_metadata_attributes(tmp_path, capsys):
             in out)
 
 
+def test_cli_prune_selector_applies_to_baseline_rescue(tmp_path, capsys):
+    """The CLI runs core.extract: when the baseline rescue fires, it
+    must run on the page the prune selector pruned."""
+    from go_trafilatura_spark.cli import main
+
+    pruned = " ".join(["Pruned" + "x" * 63] * 4)
+    page = tmp_path / "junk.html"
+    page.write_text(f'<html><body><div class="junk"><p>{pruned}</p></div>'
+                    "<p>Tiny.</p></body></html>")
+    assert main(["--prune-selector", "div.junk", str(page)]) == 0
+    out = capsys.readouterr().out
+    assert "Pruned" not in out
+    assert "Tiny." in out
+
+
 ROBOTS = b"""
 # example robots file
 User-agent: *

@@ -126,6 +126,18 @@ def test_known_divergent_page_same_extraction():
     assert fast_text == slow_text
 
 
+def test_fast_feed_error_propagates(monkeypatch):
+    """Only the stdlib feed's AssertionError on a malformed declaration
+    is absorbed; any other tokenizer exception is a bug and must not
+    become a silently truncated tree."""
+    def broken(text, builder):
+        raise ValueError("tokenizer bug")
+
+    monkeypatch.setattr(etree, "_fast_feed", broken)
+    with pytest.raises(ValueError, match="tokenizer bug"):
+        etree.parse_html("<html><body><p>text</p></body></html>")
+
+
 def test_property_random():
     import random
 

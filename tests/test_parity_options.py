@@ -278,6 +278,39 @@ def test_prune_selector():
     assert result.content_text == "42"
 
 
+# A paragraph long enough that the baseline rescue would keep it, in a
+# block the prune selector removes; what is left is below the default
+# min_extracted_size, so the rescue fires.
+PRUNED_TEXT = " ".join(["Pruned" + "x" * 63] * 4)
+PRUNE_LEAK_PAGE = (f'<html><body><div class="junk"><p>{PRUNED_TEXT}</p></div>'
+                   "<p>Tiny.</p></body></html>")
+
+
+def test_prune_selector_applies_to_baseline_rescue():
+    """The default config makes the baseline rescue fire; it must run
+    on the pruned page (core.go applies the selector before cloning
+    the rescue tree)."""
+    result = extract(PRUNE_LEAK_PAGE, Options(prune_selector="div.junk"))
+    assert "Pruned" not in result.content_text
+    assert result.content_text == "Tiny."
+    # Without the selector the rescue keeps the paragraph
+    assert "Pruned" in extract(PRUNE_LEAK_PAGE, Options()).content_text
+
+
+def test_extract_document_leaves_caller_tree_unchanged():
+    from go_trafilatura_spark import extract_document
+
+    page = _create_doc_html(
+        '<div class="junk"><p>drop me</p></div>' + "<p>" + "Kept words here. " * 30 + "</p>"
+        '<div class="comments"><p>A comment.</p></div>')
+    doc = etree.parse_html(page)
+    before = etree.tostring(doc)
+    for focus in (FAVOR_PRECISION, BALANCED):
+        result = extract_document(doc, Options(prune_selector="div.junk", focus=focus))
+        assert "drop me" not in result.content_text
+        assert etree.tostring(doc) == before
+
+
 # --- Mixed content / entities / perf (trafilatura_test.go:1501-1518) ---------
 
 def test_mixed_content():

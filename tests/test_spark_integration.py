@@ -304,6 +304,43 @@ def test_spark_submit_pyfiles(smoke_dir):
         shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
 
 
+def test_fixture_root_follows_checkout(tmp_path):
+    """ensure_fixtures writes under <checkout>/fixtures, where
+    __spark_entry__.FIXTURE_DIR reads, wherever the checkout lives."""
+    import subprocess
+    import sys
+
+    import go_trafilatura_spark
+
+    pkg = os.path.dirname(os.path.abspath(go_trafilatura_spark.__file__))
+    shutil.copytree(pkg, tmp_path / "go_trafilatura_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "from go_trafilatura_spark.fixtures import FIXTURE_ROOT; print(FIXTURE_ROOT)"],
+        capture_output=True, text=True, timeout=60, cwd=tmp_path)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == str(tmp_path / "fixtures")
+
+
+def test_write_extracted_writes_output_columns(spark, smoke_dir):
+    """write_extracted is extract_job's write: the extracted rows as
+    they are, no extra column."""
+    from go_trafilatura_spark.kernel import OUTPUT_COLUMNS
+    from go_trafilatura_spark.pipeline import write_extracted
+
+    tmp = tempfile.mkdtemp(prefix="gts_write_")
+    try:
+        out = os.path.join(tmp, "out")
+        pages = read_pages(spark, os.path.join(smoke_dir, "pages.parquet")).limit(4)
+        write_extracted(extract_pages(pages, {}, num_partitions=2), out)
+        written = spark.read.parquet(out)
+        assert written.columns == list(OUTPUT_COLUMNS)
+        assert written.count() == 4
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 @pytest.mark.skipif(
     not os.path.isdir("/root/reference/test-files/comparison"),
     reason="reference comparison corpus not available",
