@@ -171,6 +171,46 @@ class Element:
         return f"<Element {self.tag} attrib={self.attrib} text={self.text!r}>"
 
 
+# -- raw-attribute prescreens ---------------------------------------------
+# A screen skips the attribute parse (and the predicate it guards) when a
+# literal the predicate needs is absent from the element's unparsed
+# attribute text. It is sound only as a necessary condition of the
+# predicate on the PARSED attributes: parsing lowercases names and keeps
+# values, so a lowercase literal in a parsed name or value is a literal
+# substring of the lowercased raw text — unless an entity could decode
+# into it ('&' in raw), where the screen must pass.
+
+def attr_source(el: Element) -> str | None:
+    """The element's lowercased unparsed attribute text (cached), or
+    None when a screen can prove nothing: the attributes are already
+    parsed, or the text contains '&'."""
+    raw = el._rawattrs
+    if raw is None or "&" in raw:
+        return None
+    lraw = el._lraw
+    if lraw is None:
+        lraw = el._lraw = raw.lower()
+    return lraw
+
+
+def attrs_may_contain(el: Element, literals) -> bool:
+    """False only when none of the LOWERCASE ``literals`` can occur in
+    any parsed attribute name or value of ``el``."""
+    lraw = attr_source(el)
+    if lraw is None:
+        return True
+    # explicit loop: a genexpr per element costs more than the checks
+    for p in literals:
+        if p in lraw:
+            return True
+    return False
+
+
+def has_attrs(el: Element) -> bool:
+    """Whether ``el`` carries any attribute, without parsing them."""
+    return bool(el._attrib or el._rawattrs)
+
+
 def new_element(tag: str) -> Element:
     return Element(tag)
 

@@ -120,10 +120,8 @@ def _extract_row(url, html, options) -> tuple:
     if len(html) > DEFAULT_MAX_HTML_BYTES:
         return rejected("oversized")
     # Cheap byte screen before parsing: must look like markup.
-    head = html[:512].lstrip()
-    if not head[:1] == b"<" and b"<html" not in head.lower() and b"<!doctype" not in head.lower():
-        if b"<" not in head:
-            return rejected("not_html")
+    if b"<" not in html[:512]:
+        return rejected("not_html")
 
     opts = options.make_options(url)
     # Register every Element created for this row and break all their

@@ -873,10 +873,7 @@ def extract_license(index) -> str:
     link-heavy pages."""
     a_nodes = index.of_tag("a")
     for a in a_nodes:
-        # rel=="license" needs the literal in the (entity-free) raw
-        # attribute substring — skip the lazy parse otherwise
-        raw = a._rawattrs
-        if raw is not None and "license" not in raw and "&" not in raw:
+        if not etree.attrs_may_contain(a, ("license",)):
             continue
         if a.get("rel") == "license" and "href" in a.attrib:
             result = parse_license_element(a, False)
@@ -885,19 +882,14 @@ def extract_license(index) -> str:
 
     footers = set()
     for el in index.of_tag("footer") + index.of_tag("div"):
-        if el.tag != "footer":
-            raw = el._rawattrs
-            if raw is not None and "footer" not in raw and "&" not in raw:
-                continue
+        if el.tag != "footer" and not etree.attrs_may_contain(el, ("footer",)):
+            continue
         if el.tag == "footer" or "footer" in el.get("class") or "footer" in el.get("id"):
             footers.add(id(el))
     if not footers:
         return ""
     for a in a_nodes:
-        raw = a._rawattrs
-        if raw is not None and "href" not in raw.lower():
-            continue  # attr names lowercase at parse; raw may not be
-        if "href" not in a.attrib:
+        if not etree.attrs_may_contain(a, ("href",)) or "href" not in a.attrib:
             continue
         anc = a.parent
         while anc is not None:
@@ -1192,6 +1184,9 @@ _RX_DATE_CLASS = stdlib_re.compile(
     r"(?i)(?<![a-z0-9])(date|datum|time|timestamp|post-?meta|byline|published|"
     r"posted-?on|entry-?meta|dateline|submitted|created)(?![a-z0-9])"
 )
+# Literals one of which every _RX_DATE_CLASS match contains (raw screen).
+_DATE_CLASS_LITERALS = ("date", "time", "post", "entry", "byline", "publish",
+                        "datum", "submitted", "created")
 
 
 def _scan_all_dates(text: str) -> list[str]:
@@ -1307,10 +1302,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
     scanned = 0
     micro = ""
     for node in index.elements:
-        # No-parse prescreen: an element whose raw attribute substring
-        # never mentions "itemprop" cannot carry the microdata key.
-        raw = node._rawattrs
-        if raw is None or "itemprop" in raw:
+        if etree.attrs_may_contain(node, ("itemprop",)):
             itemprop = node.attrib.get("itemprop") if node.attrib else None
             if itemprop:
                 key = itemprop.lower()
@@ -1325,16 +1317,8 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
         if container_done:
             continue
         # -- fused date-classed container branch (tier yields below) --
-        raw = node._rawattrs
-        if raw is not None and "&" not in raw:
-            lraw = node._lraw
-            if lraw is None:
-                lraw = node._lraw = raw.lower()
-            if not ("date" in lraw or "time" in lraw or "post" in lraw
-                    or "entry" in lraw or "byline" in lraw
-                    or "publish" in lraw or "datum" in lraw
-                    or "submitted" in lraw or "created" in lraw):
-                continue
+        if not etree.attrs_may_contain(node, _DATE_CLASS_LITERALS):
+            continue
         attrib = node.attrib
         if not attrib or node.tag in ("script", "style"):
             continue

@@ -474,8 +474,8 @@ def corpus_dedup_pipeline(
       dedup_job leaves it unpersisted so 100 TB is never cached).
 
     ``url_col=None`` skips the host-cap stage (inputs without a url);
-    ``url_col == "doc_id"`` caps directly on the id (the bench's
-    synthetic corpus, where the doc_id IS the url).
+    ``url_col="doc_id"`` caps on the id itself (the bench's synthetic
+    corpus, where the doc_id IS the url).
 
     Returns ``(final, handles)``: materialize ``final`` (count/write),
     then unpersist each handle.
@@ -514,12 +514,6 @@ def corpus_dedup_pipeline(
 
     if url_col is None:
         capped_kept = kept
-    elif url_col == "doc_id":
-        capped = host_cap(
-            kept.select(F.col("doc_id").alias("url")),
-            max_per_host=max_per_host,
-        ).select(F.col("url").alias("doc_id"))
-        capped_kept = kept.join(capped, "doc_id", "left_semi")
     else:
         # Document-granularity cap (ADVICE r6): rank (url, doc_id) so
         # several documents sharing one url each count toward the cap

@@ -95,22 +95,16 @@ def inner_text(node: Element) -> str:
 
 
 def _match_string(el: Element) -> str:
-    # Raw-substring prescreen: when the unparsed attribute text cannot
-    # contain a class or id attribute, skip the attr-dict
-    # materialization entirely (most elements' attrs are never read
-    # otherwise). Conservative — any substring hit falls through to
-    # the exact path.
-    raw = el._rawattrs
-    if raw is not None and "class" not in raw and "id" not in raw:
+    # Raw prescreen: no class or id attribute, no attr-dict parse (most
+    # elements' attrs are never read otherwise).
+    if not etree.attrs_may_contain(el, ("class", "id")):
         return " "
     return el.get("class") + " " + el.get("id")
 
 
 def _is_probably_visible(el: Element) -> bool:
-    raw = el._rawattrs
-    if raw is not None and "style" not in raw and "hidden" not in raw:
-        # raw text cannot contain a style/hidden/aria-hidden attribute
-        # (attribute NAMES are literal in raw) — visible, no parse
+    if not etree.attrs_may_contain(el, ("style", "hidden")):
+        # no style/hidden/aria-hidden attribute — visible, no parse
         return True
     attrib = el.attrib
     if not attrib:
@@ -326,11 +320,9 @@ class _Grab:
     def _check_byline(self, el: Element, match_string: str) -> bool:
         if self.byline_found:
             return False
-        raw = el._rawattrs
-        if raw is not None and "rel" not in raw and "itemprop" not in raw:
-            # raw text cannot contain a rel/itemprop attribute — only
-            # the class/id byline regex can hit (conservative prescreen,
-            # avoids materializing the attr dict)
+        if not etree.attrs_may_contain(el, ("rel", "itemprop")):
+            # no rel/itemprop attribute — only the class/id byline
+            # regex can hit, no attr-dict parse
             hit = RX_BYLINE.search(match_string)
         else:
             hit = (el.get("rel") == "author"

@@ -9,7 +9,8 @@ discards, comments-discard.go, comments-removed.go, meta-*.go).
 
 from __future__ import annotations
 
-from .etree import Element, _collect_tags, get_elements_by_tag
+from .etree import (Element, _collect_tags, attr_source, attrs_may_contain,
+                    get_elements_by_tag, has_attrs)
 
 
 def _rule_candidates(root: Element, rule) -> list[Element]:
@@ -27,8 +28,7 @@ def _rule_candidates(root: Element, rule) -> list[Element]:
         out = []
         _collect_tags(root, tags, out)
     if getattr(rule, "needs_attrs", False):
-        # no-parse attr presence check (Element lazy attribs)
-        return [el for el in out if el._attrib or el._rawattrs]
+        return [el for el in out if has_attrs(el)]
     return out
 
 
@@ -48,15 +48,12 @@ def _screened(elements: list, rule) -> list:
     lowercased raw (C memmem) — NOT a regex alternation, whose
     backtracking costs more than the parse it avoids.
 
-    Exactness: for entity-free raw, every parsed value is a literal
-    substring of raw (names are lowercased at parse, values untouched;
-    lowercasing both sides makes the screen a case-insensitive
-    over-approximation — it over-passes, never under). Bypasses that
-    force a full evaluation: raw already parsed, raw contains '&'
-    (entities could decode into a screened literal), the element's tag
-    is in ``screen_exempt`` (tag-only disjunct), or — for rules with
-    id+class / id+style CONCATENATION semantics (``screen_concat``) —
-    both attrs present, where a match could span the value boundary."""
+    Exactness: ``etree.attr_source`` (the screen over-passes, never
+    under). Further bypasses that force a full evaluation: the
+    element's tag is in ``screen_exempt`` (tag-only disjunct), or — for
+    rules with id+class / id+style CONCATENATION semantics
+    (``screen_concat``) — both attrs present, where a match could span
+    the value boundary."""
     screen = getattr(rule, "raw_screen", None)
     if screen is None:
         return elements
@@ -66,13 +63,10 @@ def _screened(elements: list, rule) -> list:
     out = []
     append = out.append
     for el in elements:
-        raw = el._rawattrs
-        if raw is None or "&" in raw:
+        lraw = attr_source(el)
+        if lraw is None:
             append(el)
             continue
-        lraw = el._lraw
-        if lraw is None:
-            lraw = el._lraw = raw.lower()
         for p in screen:
             if p in lraw:
                 append(el)
@@ -145,7 +139,7 @@ class TagIndex:
             else:
                 out = [els[i] for i in sorted(i for l in lists for i in l)]
         if getattr(rule, "needs_attrs", False):
-            return [el for el in out if el._attrib or el._rawattrs]
+            return [el for el in out if has_attrs(el)]
         return out
 
     def of_tag(self, tag: str) -> list[Element]:
@@ -893,21 +887,9 @@ def anchors_by_ancestor(index: "TagIndex", rule) -> list[Element]:
     ]
     cscreen = getattr(rule, "containers_screen", None)
     for el in pool:
-        if not (el._attrib or el._rawattrs):
+        if not has_attrs(el) or (
+                cscreen is not None and not attrs_may_contain(el, cscreen)):
             continue
-        if cscreen is not None:
-            raw = el._rawattrs
-            if raw is not None and "&" not in raw:
-                lraw = el._lraw
-                if lraw is None:
-                    lraw = el._lraw = raw.lower()
-                # explicit loop: a genexpr per element costs more than
-                # the substring checks themselves
-                for p in cscreen:
-                    if p in lraw:
-                        break
-                else:
-                    continue
         if pred(el):
             ids.add(id(el))
     if not ids:

@@ -24,7 +24,7 @@ keys, which AQE can plan as a sort-merge join with skew splitting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 # Mersenne prime 2^31-1; LCG-style permutation constants (public-domain
 # numerical recipes constants).
@@ -420,8 +420,15 @@ def dedup_clusters(df: DataFrame, k_shingle: int = 3, max_iter: int = 15,
             .groupBy("dst")
             .agg(F.min("cluster_id").alias("nmin"))
         )
-        new_labels = (
+        # The convergence count rides on the eager checkpoint below
+        # (one job per iteration): a label changes iff a neighbour
+        # carries a smaller one. Reliable mode survives executor loss
+        # (see docstring).
+        obs = Observation()
+        labels = (
             labels.join(neighbor_min, labels["doc_id"] == neighbor_min["dst"], "left")
+            .observe(obs, F.count(F.when(F.col("nmin") < F.col("cluster_id"), 1))
+                     .alias("changed"))
             .select(
                 "doc_id",
                 F.least(
@@ -429,24 +436,11 @@ def dedup_clusters(df: DataFrame, k_shingle: int = 3, max_iter: int = 15,
                 ).alias("cluster_id"),
             )
         )
-        # Materialize BEFORE the convergence probe: checkpointing both
-        # truncates lineage and materializes the iteration's result, so
-        # the probe's count() and the next iteration's join read the
-        # same frame instead of re-executing the propagation join twice
-        # per loop. Reliable mode survives executor loss (see docstring).
         if checkpoint == "reliable":
-            new_labels = new_labels.checkpoint()
+            labels = labels.checkpoint()
         else:
-            new_labels = new_labels.localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+            labels = labels.localCheckpoint()
+        if obs.get["changed"] == 0:
             break
 
     return labels.select(

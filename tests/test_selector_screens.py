@@ -2,9 +2,17 @@
 carrying a raw_screen, the screened evaluation must produce EXACTLY the
 match set of the unscreened evaluation — over the reference's real
 pages and over adversarial synthetic cases (entity-encoded values,
-id+class boundary spans, uppercase names, whitespace around '=')."""
+id+class boundary spans, uppercase names, whitespace around '=').
 
+Every prescreen reads the lazy-attribute format through etree's
+attr_source / attrs_may_contain / has_attrs, so upper-case attribute
+names extract the same on the fast tree (lazy attributes) as on the
+stdlib tree (parsed attributes)."""
+
+import ast
+import glob
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -169,3 +177,133 @@ def test_anchors_by_ancestor_equals_naive_rule():
         assert got == selectors.query_all(doc, rule), rule.__name__
         assert got, rule.__name__
         assert all("href" in a.attrib for a in got), rule.__name__
+
+
+# -- one owner for the lazy-attribute format -------------------------------
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_LAZY_SLOTS = frozenset(("_rawattrs", "_lraw", "_attrib"))
+
+
+def test_lazy_attribute_slots_only_in_etree():
+    """No package module other than etree touches the lazy-attribute
+    slots, as an attribute or by name: every screen goes through the
+    etree primitives."""
+    found = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "go_trafilatura_spark", "*.py"))):
+        if os.path.basename(path) == "etree.py":
+            continue
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            name = (node.attr if isinstance(node, ast.Attribute)
+                    else node.value if isinstance(node, ast.Constant) else None)
+            if name in _LAZY_SLOTS:
+                found.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}: {name}")
+    assert found == [], "lazy-attribute slots read outside etree:\n" + "\n".join(found)
+
+
+def test_attr_source_primitives():
+    doc = etree.parse_html('<html><body><div CLASS="Foo Bar">a</div>'
+                           '<p class="a&amp;b">b</p><span>c</span></body></html>')
+    (div,), (p,), (span,) = (etree.iter_all(doc, t) for t in ("div", "p", "span"))
+    assert "class=\"foo bar\"" in etree.attr_source(div)
+    assert etree.attr_source(div) is etree.attr_source(div)  # cached
+    assert etree.attrs_may_contain(div, ("zzz", "foo"))
+    assert not etree.attrs_may_contain(div, ("zzz", "id"))
+    # an entity could decode into any literal: the screen proves nothing
+    assert etree.attr_source(p) is None
+    assert etree.attrs_may_contain(p, ("zzz",))
+    assert etree.has_attrs(div) and etree.has_attrs(p) and not etree.has_attrs(span)
+    assert div.get("class") == "Foo Bar"
+    # parsed attributes: the screen proves nothing, presence still known
+    assert etree.attr_source(div) is None
+    assert etree.attrs_may_contain(div, ("zzz",)) and etree.has_attrs(div)
+
+
+@pytest.mark.parametrize("parse", [etree.parse_html, etree.parse_html_stdlib])
+def test_upper_case_itemprop_date(parse):
+    from go_trafilatura_spark.metadata import extract_date_fast
+
+    doc = parse('<html><body><span ITEMPROP="datePublished" content="2021-03-04">'
+                "</span><p>Some text.</p></body></html>")
+    assert extract_date_fast(doc, "") == "2021-03-04"
+
+
+def _first(html: str, tag: str):
+    return etree.iter_all(etree.parse_html(f"<html><body>{html}</body></html>"), tag)[0]
+
+
+def test_readability_screens_see_upper_case_names():
+    from go_trafilatura_spark import readability
+
+    assert readability._match_string(_first('<div CLASS="comment" ID="x">t</div>', "div")) \
+        == "comment x"
+    assert readability._match_string(_first('<div data-x="1">t</div>', "div")) == " "
+    for html in ('<div STYLE="display:none">t</div>', "<div HIDDEN>t</div>",
+                 '<div ARIA-HIDDEN="true">t</div>'):
+        assert not readability._is_probably_visible(_first(html, "div")), html
+    assert readability._is_probably_visible(_first('<div Title="x">t</div>', "div"))
+    for html in ('<span REL="author">Jane Doe</span>',
+                 '<span ITEMPROP="author">Jane Doe</span>'):
+        grab = readability._Grab(True, True, True)
+        assert grab._check_byline(_first(html, "span"), " "), html
+    grab = readability._Grab(True, True, True)
+    assert not grab._check_byline(_first('<span TITLE="author">Jane Doe</span>', "span"), " ")
+
+
+_START_TAG = re.compile(r"<[a-zA-Z][^>]*>")
+_ATTR_NAME = re.compile(r"(\s)([a-zA-Z_:][-a-zA-Z0-9_:.]*)(?=\s*=)")
+
+
+def _upper_attr_names(html: str) -> str:
+    return _START_TAG.sub(lambda m: _ATTR_NAME.sub(
+        lambda n: n.group(1) + n.group(2).upper(), m.group()), html)
+
+
+def _digest_pages(n: int) -> list[str]:
+    """Heavy pages: fixture bodies in <section> blocks between a nav
+    menu and a footer."""
+    from go_trafilatura_spark.fixtures import generate_pages
+
+    bodies = [re.search(r"<body>(.*)</body>", p.html.decode("utf-8"), re.S).group(1)
+              for p in generate_pages(3 * n, seed=11)
+              if p.golden["family"] != "giant_doc"]
+    nav = ('<nav class="main-menu"><ul>'
+           + "".join(f'<li><a href="/section/{i}">Section {i}</a></li>' for i in range(12))
+           + "</ul></nav>")
+    footer = ('<footer class="site-footer"><p>Copyright 2024 Example Media.</p>'
+              '<div class="footer-links"><a href="/legal">Legal</a></div></footer>')
+    pages = []
+    for i in range(n):
+        sections = "".join(f'<section class="block-{j}">{bodies[(3 * i + j) % len(bodies)]}'
+                           "</section>" for j in range(3))
+        pages.append('<!DOCTYPE html><html lang="en"><head><meta charset="utf-8">'
+                     f"<title>Digest {i}</title></head><body>{nav}"
+                     f'<div class="page">{sections}</div>{footer}</body></html>')
+    return pages
+
+
+def _extracted(doc, opts):
+    from go_trafilatura_spark.core import ExtractError, extract_document
+
+    try:
+        res = extract_document(doc, opts)
+    except ExtractError as e:
+        return e.reason
+    node = res.content_node
+    return (res.content_text, res.comments_text,
+            None if node is None else etree.tostring(node), res.metadata)
+
+
+def test_upper_case_attribute_names_cascade_parity():
+    """The whole cascade extracts the same from the fast tree (lazy
+    attributes, screened) as from the stdlib tree (parsed attributes)
+    when every attribute name is upper-case."""
+    from go_trafilatura_spark.options import Options
+
+    opts = Options.from_dict({"enable_fallback": True})
+    for i, html in enumerate(map(_upper_attr_names, _digest_pages(20))):
+        assert 'CLASS="' in html
+        assert _extracted(etree.parse_html(html), opts) \
+            == _extracted(etree.parse_html_stdlib(html), opts), i

@@ -1652,6 +1652,22 @@ def test_corpus_dedup_pipeline_null_and_shared_urls(spark):
     assert got == {"doc00", "doc01", "doc05"}
 
 
+def test_corpus_dedup_pipeline_caps_on_doc_id_urls(spark):
+    """url_col="doc_id" (bench.py's synthetic corpus, where the doc id
+    IS the url) keeps max_per_host documents per host."""
+    from go_trafilatura_spark.pipeline import corpus_dedup_pipeline
+
+    ext = spark.createDataFrame(
+        [(u, t, l) for _, t, l, u in _curation_docs()],
+        "doc_id string, text string, lang string")
+    final, handles = corpus_dedup_pipeline(
+        ext, url_col="doc_id", k_substring=50, max_per_host=2, sample_fraction=1.0)
+    got = sorted(r["doc_id"] for r in final.collect())
+    for h in handles:
+        h.unpersist()
+    assert got == [f"https://h{i % 3}.example/d{i:02d}" for i in (0, 3, 1, 4, 2, 5)]
+
+
 def test_corpus_dedup_pipeline_no_url(spark):
     """url_col=None skips the host cap: every gate-passing doc survives
     into the sample."""
@@ -1715,6 +1731,22 @@ def test_dedup_job_stage_all(smoke_dir):
         assert stats["rows"] == 6  # host cap 2 × 3 hosts, sample keeps all
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_kernel_not_html_byte_screen():
+    """The kernel rejects a row as not_html before parsing exactly when
+    its first 512 bytes hold no '<'."""
+    from go_trafilatura_spark.kernel import KernelOptions, _extract_row
+
+    def reason(html: bytes):
+        return _extract_row("https://x.example/a", html, KernelOptions())[17]
+
+    pad = b"x" * 511
+    assert reason(b"") == "not_html"
+    assert reason(pad + b"x<p>late</p>") == "not_html"  # '<' at byte 512
+    for html in (b"\xef\xbb\xbf<p>bom</p>", b" \n\t<p>space</p>",
+                 pad + b"<p>edge</p>", b"<!DOCTYPE HTML><p>upper</p>"):
+        assert reason(html) != "not_html", html[:12]
 
 
 def test_track_elements_reentrancy_guard():
