@@ -15,9 +15,23 @@ Scale notes:
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` down (256-1024).
 - A byte-cap pre-screen rejects pathological rows before parsing
   (cheap "filter before you parse" — see SURVEY.md §4).
+- PySpark reuses one Python worker process for many tasks, and before
+  each task it repeats two fixed costs: ``importlib.invalidate_caches()``
+  re-reads the directory of every zip archive on ``sys.path``
+  (pyspark.zip, py4j and the spark-core jar: 16 importers, about 200 ms
+  of CPU per task), and after each task the daemon runs a full ``gc.collect()``
+  over every long-lived object. Every Python stage goes through one of
+  the two shells below (``extract_stage`` and ``map_rows``); both call
+  ``start_task``, which makes the next invalidation a no-op, and the
+  kernel freezes the heap once per worker after its first batch, so
+  both costs are paid once per worker instead of once per task.
 """
 
 from __future__ import annotations
+
+import gc
+import sys
+import zipimport
 
 from pyspark.sql.types import (
     ArrayType,
@@ -188,6 +202,38 @@ TIMED_OUTPUT_SCHEMA = StructType(
 )
 
 
+def start_task() -> None:
+    """Task-start hook of both Python shells. Drops every ``zipimporter``
+    from ``sys.path_importer_cache``, so the ``invalidate_caches()`` that
+    PySpark runs before the next task has no archive directory to re-read
+    (CPython 3.13 makes that re-read lazy; 3.11 and 3.12 do it eagerly).
+    The next import that needs a zip finder rebuilds it from
+    ``sys.path_hooks``, so imports from new or known archives still work."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
+# Kernel batches collected in this process. It lives at module level
+# because it must outlive the task: a reused PySpark worker runs many.
+_process_batches = 0
+
+
+def _collect_batch_garbage() -> None:
+    """The kernel's collection after each batch: the young generation,
+    the full heap once per 64 batches of this process, and
+    ``gc.freeze()`` after the first full one. A process that runs the
+    kernel in-process (a driver-side profile) is frozen the same way."""
+    global _process_batches
+    if _process_batches % 64:
+        gc.collect(0)
+    else:
+        gc.collect()
+        if _process_batches == 0:
+            gc.freeze()
+    _process_batches += 1
+
+
 def make_arrow_kernel(kernel_options: KernelOptions | None = None):
     """Build the mapInArrow extraction kernel. It consumes and produces
     pyarrow RecordBatches directly, with no pandas DataFrame assembly on
@@ -198,21 +244,27 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
     ko = kernel_options or KernelOptions()
 
     def extract_batches(batches):
-        import gc
         import time
 
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        start_task()
         types = {f.name: f.type for f in to_arrow_schema(OUTPUT_SCHEMA)}
         # Batch-scoped GC: the extraction trees are cyclic (Element
         # parent↔children), so CPython's auto-GC runs full generational
         # sweeps mid-parse — measured 7-13% of kernel CPU. Disabling
         # auto-GC and collecting the young generation once per batch
         # (all per-batch garbage is gen0 when no auto-collections ran)
-        # frees the same memory at a fraction of the cost; a periodic
-        # full collect bounds promoted garbage. The collects run inside
-        # the timed window so cpu_ms stays an honest attestation.
+        # frees the same memory at a fraction of the cost; a full
+        # collect once per 64 batches of the worker process (not of the
+        # task: at one batch per task that was every batch) bounds
+        # promoted garbage. The heap that survives the worker's first
+        # batch (interpreter, pyspark, pyarrow, the cascade's tables)
+        # lives as long as the worker, so it is frozen once: later full
+        # collects, this one and the daemon's after every task, skip it.
+        # The collects run inside the timed window so cpu_ms stays an
+        # honest attestation.
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
@@ -246,7 +298,7 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
                         arr = pa.array(col_lists[c], type=types[c])
                     arrays.append(arr)
                     fields.append(pa.field(c, arr.type))
-                gc.collect(0) if batch_id % 64 else gc.collect()
+                _collect_batch_garbage()
                 if ko.with_timing:
                     ms = (time.monotonic() - t0) * 1000.0
                     cpu = (time.process_time() - c0) * 1000.0
@@ -264,6 +316,14 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
     return extract_batches
 
 
+def extract_stage(df, kernel_options: KernelOptions):
+    """``df`` (url, html and optional warc_ts, lang) through the one
+    mapInArrow extraction stage: OUTPUT_SCHEMA rows, plus the timing
+    columns when ``kernel_options.with_timing``."""
+    schema = TIMED_OUTPUT_SCHEMA if kernel_options.with_timing else OUTPUT_SCHEMA
+    return df.mapInArrow(make_arrow_kernel(kernel_options), schema)
+
+
 def map_rows(df, cols: list, schema: StructType, fn):
     """The shell of every per-row payload stage (pdf, multimodal, warc,
     discovery): ``df.select(*cols)`` runs through one mapInPandas stage
@@ -276,6 +336,7 @@ def map_rows(df, cols: list, schema: StructType, fn):
     def batches(it):
         import pandas as pd
 
+        start_task()
         for pdf in it:
             rows = [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
             yield pd.DataFrame(rows, columns=names)

@@ -30,7 +30,7 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .kernel import OUTPUT_SCHEMA, TIMED_OUTPUT_SCHEMA, KernelOptions, make_arrow_kernel
+from .kernel import KernelOptions, extract_stage
 
 SALT_BUCKETS = 64
 ARROW_BATCH_SIZE = 512
@@ -225,8 +225,7 @@ def _extract_pages(df: DataFrame, options: dict | None, num_partitions: int | No
         pruned = pruned.where(F.col("lang") == lang_filter)
     if repartition:
         pruned = salted_repartition(pruned, num_partitions)
-    kernel = make_arrow_kernel(KernelOptions(options or {}, with_timing=with_timing))
-    return pruned.mapInArrow(kernel, TIMED_OUTPUT_SCHEMA if with_timing else OUTPUT_SCHEMA)
+    return extract_stage(pruned, KernelOptions(options or {}, with_timing=with_timing))
 
 
 # ---------------------------------------------------------------------------
