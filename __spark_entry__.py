@@ -446,7 +446,7 @@ def q_warc_extract(spark, sf_dir):
     """WARC-source correctness: the first 200 documents are serialized
     as per-record-gzip WARC shards with the writer twin (bounded
     driver-side fixture construction — 200 rows by design), read back
-    through read_warc_pages (binaryFile + mapInPandas) and extracted;
+    through read_warc_pages (binaryFile + mapInArrow) and extracted;
     the oracle predicts the result straight from the documents table,
     so the hash row attests the whole bytes→table→extraction edge."""
     import tempfile
@@ -583,7 +583,7 @@ def q_corpus_dedup(spark, sf_dir):
 def q_pdf_extract(spark, sf_dir):
     """PDF text extraction (north rule 'PDF/layout parse'): fixture PDFs
     (mixed Flate/plain, Tj/TJ encodings, escape sequences) through the
-    mapInPandas PDF stage; oracle = generator-predicted text."""
+    mapInArrow PDF stage; oracle = generator-predicted text."""
     from go_trafilatura_spark.pdf import extract_pdf_pages
 
     _ensure_fixtures()
@@ -612,7 +612,7 @@ def _media(spark, sf_dir):
 
 
 def q_multimodal_image(spark, sf_dir):
-    """Integer-exact image features through the multimodal mapInPandas
+    """Integer-exact image features through the multimodal mapInArrow
     plumbing (stub decode; oracle reproduces the sha256 plane in SQL)."""
     from go_trafilatura_spark.multimodal import image_features_exact
 

@@ -115,6 +115,8 @@ def parse_sitemap(payload: bytes | str) -> tuple[list[str], list[str]]:
 def discover_urls(df, kind: str = "feed"):
     """(source_url, body binary) → exploded (source_url, page_url) via a
     vectorized Arrow kernel; kind is 'feed' or 'sitemap'."""
+    if kind not in ("feed", "sitemap"):
+        raise ValueError(f"discover_urls: kind must be 'feed' or 'sitemap', not {kind!r}")
     from pyspark.sql.types import StringType, StructField, StructType
 
     from .kernel import map_rows
@@ -127,7 +129,7 @@ def discover_urls(df, kind: str = "feed"):
     def urls(src, body):
         if body is None:
             return ()
-        found = parse_feed(bytes(body)) if kind == "feed" else parse_sitemap(bytes(body))[0]
+        found = parse_feed(body) if kind == "feed" else parse_sitemap(body)[0]
         return ((src, u) for u in found)
 
     return map_rows(df, ["source_url", "body"], schema, urls)
@@ -251,6 +253,6 @@ def discover_sitemaps_from_robots(df):
     def sitemaps(src, body):
         if body is None:
             return ()
-        return ((src, sm) for sm in parse_robots(bytes(body))["sitemaps"])
+        return ((src, sm) for sm in parse_robots(body)["sitemaps"])
 
     return map_rows(df, ["source_url", "body"], schema, sitemaps)

@@ -1,4 +1,5 @@
-"""The Arrow-vectorized Spark extraction kernel.
+"""The Arrow-vectorized Spark extraction kernel, and the ``mapInArrow``
+shell of the per-row payload stages (``map_rows``).
 
 One ``mapInArrow`` stage (``make_arrow_kernel``): batches of (url,
 warc_ts, html, lang) arrive as Arrow record batches; each row runs the
@@ -21,10 +22,11 @@ Scale notes:
   (pyspark.zip, py4j and the spark-core jar: 16 importers, about 200 ms
   of CPU per task), and after each task the daemon runs a full ``gc.collect()``
   over every long-lived object. Every Python stage goes through one of
-  the two shells below (``extract_stage`` and ``map_rows``); both call
-  ``start_task``, which makes the next invalidation a no-op, and the
-  kernel freezes the heap once per worker after its first batch, so
-  both costs are paid once per worker instead of once per task.
+  the two ``mapInArrow`` shells below (``extract_stage`` and
+  ``map_rows``); both call ``start_task``, which makes the next
+  invalidation a no-op, and the kernel freezes the heap once per worker
+  after its first batch, so both costs are paid once per worker instead
+  of once per task.
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ import gc
 import sys
 import zipimport
 
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -237,17 +240,16 @@ def _collect_batch_garbage() -> None:
 def make_arrow_kernel(kernel_options: KernelOptions | None = None):
     """Build the mapInArrow extraction kernel. It consumes and produces
     pyarrow RecordBatches directly, with no pandas DataFrame assembly on
-    either side (about 2× less transport overhead than mapInPandas;
-    NOTES.md queue #1). Pass-through columns (url, warc_ts, lang) reuse
-    the input Arrow arrays untouched — zero conversion. Closure-captured
-    options are serialized once per task, not per row."""
+    either side (NOTES.md queue #1). Pass-through columns (url, warc_ts,
+    lang) reuse the input Arrow arrays untouched — zero conversion.
+    Closure-captured options are serialized once per task, not per row."""
     ko = kernel_options or KernelOptions()
+    out_names = (TIMED_OUTPUT_SCHEMA if ko.with_timing else OUTPUT_SCHEMA).fieldNames()
 
     def extract_batches(batches):
         import time
 
         import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         start_task()
         types = {f.name: f.type for f in to_arrow_schema(OUTPUT_SCHEMA)}
@@ -284,7 +286,6 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
                         col_lists[c].append(value)
 
                 arrays = []
-                fields = []
                 for c in OUTPUT_COLUMNS:
                     if c == "url":
                         arr = batch.column(names.index("url"))
@@ -297,18 +298,14 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
                     else:
                         arr = pa.array(col_lists[c], type=types[c])
                     arrays.append(arr)
-                    fields.append(pa.field(c, arr.type))
                 _collect_batch_garbage()
                 if ko.with_timing:
                     ms = (time.monotonic() - t0) * 1000.0
                     cpu = (time.process_time() - c0) * 1000.0
-                    arrays.append(pa.array([ms] * n, pa.float64()))
-                    fields.append(pa.field("kernel_ms", pa.float64()))
-                    arrays.append(pa.array([batch_id] * n, pa.int32()))
-                    fields.append(pa.field("batch_id", pa.int32()))
-                    arrays.append(pa.array([cpu] * n, pa.float64()))
-                    fields.append(pa.field("cpu_ms", pa.float64()))
-                yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+                    arrays += [pa.array([ms] * n, pa.float64()),
+                               pa.array([batch_id] * n, pa.int32()),
+                               pa.array([cpu] * n, pa.float64())]
+                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
         finally:
             if gc_was_enabled:
                 gc.enable()
@@ -326,19 +323,24 @@ def extract_stage(df, kernel_options: KernelOptions):
 
 def map_rows(df, cols: list, schema: StructType, fn):
     """The shell of every per-row payload stage (pdf, multimodal, warc,
-    discovery): ``df.select(*cols)`` runs through one mapInPandas stage
-    in which each input row calls ``fn(*row)``, which returns an
-    iterable of output tuples in ``schema`` field order — none to drop
-    the row, several to explode it. The shell catches nothing: a stage
+    discovery): ``df.select(*cols)`` runs through one mapInArrow stage in
+    which each row's ``to_pylist`` values (binary as ``bytes``) call
+    ``fn(*row)``. It returns an iterable of output tuples in ``schema``
+    field order — none to drop the row, several to explode it. Columns are
+    typed by ``to_arrow_schema`` as in the kernel, so a value that does
+    not fit (an int32 overflow) raises. The shell catches nothing: a stage
     that must survive a bad payload handles it inside ``fn``."""
-    names = schema.fieldNames()
+    arrow_schema = to_arrow_schema(schema)
 
     def batches(it):
-        import pandas as pd
+        import pyarrow as pa
 
         start_task()
-        for pdf in it:
-            rows = [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
-            yield pd.DataFrame(rows, columns=names)
+        for batch in it:
+            rows = [out for row in zip(*(c.to_pylist() for c in batch.columns))
+                    for out in fn(*row)]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow_schema)],
+                schema=arrow_schema)
 
-    return df.select(*cols).mapInPandas(batches, schema)
+    return df.select(*cols).mapInArrow(batches, schema)

@@ -1,7 +1,7 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
 metadata, with decode / feature-extract / resize / frame-sample stages.
 
-The Spark-side plumbing (schemas, Arrow batching, the mapInPandas
+The Spark-side plumbing (schemas, Arrow batching, the mapInArrow
 payload-stage shell ``kernel.map_rows``, partitioning) is real and
 tested. Three codec backends:
 
@@ -339,14 +339,14 @@ def _map_kind(df: DataFrame, kind: str, schema: StructType, fn) -> DataFrame:
     ``fn(media_id, payload_bytes)`` yields the output tuples."""
 
     def rows(media_id, row_kind, payload):
-        return fn(media_id, bytes(payload)) if row_kind == kind and payload is not None else ()
+        return fn(media_id, payload) if row_kind == kind and payload is not None else ()
 
     return map_rows(df, ["media_id", "kind", "payload"], schema, rows)
 
 
 def image_features(df: DataFrame, backend: DecodeBackend | None = None) -> DataFrame:
     """Decode → luma stats + 64-bit perceptual hash (8×8 avg-pool,
-    threshold at mean). mapInPandas: one Arrow batch of payloads at a
+    threshold at mean). mapInArrow: one Arrow batch of payloads at a
     time; binary stays off the driver."""
     backend = backend or FakeDecodeBackend()
 
@@ -436,7 +436,7 @@ def image_features_exact(df: DataFrame) -> DataFrame:
     plane → sum_luma and a 64-bit perceptual hash with the integer
     threshold rule bit_i = (b_i * 64 > Σb) — equivalent to
     (b_i/255 > mean) but free of float ties, so Spark and the DuckDB
-    oracle agree bit-for-bit. Same mapInPandas plumbing as the float
+    oracle agree bit-for-bit. Same mapInArrow plumbing as the float
     pipeline (binary never on the driver)."""
 
     def features(media_id, payload):

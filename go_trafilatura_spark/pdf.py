@@ -17,7 +17,7 @@ encryption and CID-keyed fonts are out of scope (rows with no
 extractable text return empty, never raise).
 
 Spark surface: ``extract_pdf_pages`` maps (url, pdf) → (url, pdf_text,
-n_text_ops) through one mapInPandas stage (the payload-stage shell
+n_text_ops) through one mapInArrow stage (the payload-stage shell
 ``kernel.map_rows``), one output row per input row.
 """
 
@@ -214,7 +214,7 @@ def extract_pdf_pages(df: DataFrame, url_col: str = "url",
         if payload is None:
             return [(url, "", 0)]
         try:
-            return [(url, *extract_pdf_text(bytes(payload)))]
+            return [(url, *extract_pdf_text(payload))]
         except Exception:
             return [(url, "", 0)]
 

@@ -11,13 +11,19 @@ batch path uses the bucket manifest in pipeline.py).
 Scale notes: maxFilesPerTrigger bounds micro-batch size so executor
 memory stays flat; the kernel stage parallelism follows the source file
 partitioning (no shuffle needed in-stream — extraction is row-local).
+
+The stateful operators stay on ``applyInPandasWithState`` (the package's
+only pandas): they expire state by processing-time timeout, and in Spark
+4.1 ``transformWithState`` supports state TTL only on the session-wide
+``RocksDBStateStoreProvider``; its PySpark client also needs protobuf.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    BinaryType, StringType, StructField, StructType, TimestampType,
+    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
+    TimestampType,
 )
 
 from .pipeline import HOST_REGEX, extract_pages
@@ -84,9 +90,6 @@ def stateful_host_dedup_stream(
     per host partition.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
 
     out_schema = StructType([
         StructField("host", StringType()),
@@ -148,9 +151,6 @@ def stateful_lsh_candidates_stream(
     analogue of the batch op's hot-band cap: a degenerate bucket emits
     one row per member, never |group|²)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        IntegerType, LongType, StructField, StructType,
-    )
 
     from .textops import MINHASH_PERMS, MINHASH_PRIME, _shingles_sql
 

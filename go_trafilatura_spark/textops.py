@@ -102,16 +102,10 @@ def fanout_small_scan(df: DataFrame, input_bytes: int | None) -> DataFrame:
     from ``scan_bytes``; the 1 GiB ``_FANOUT_MAX_BYTES`` threshold is
     compared against it. ``None`` (a non-local path, size unknown)
     returns the scan unchanged."""
-    try:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        return df
     if input_bytes is None or input_bytes > _FANOUT_MAX_BYTES:
         return df
-    try:
-        if df.rdd.getNumPartitions() >= min_partitions:
-            return df
-    except Exception:
+    min_partitions = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= min_partitions:
         return df
     return df.repartition(min_partitions, F.col("doc_id"))
 

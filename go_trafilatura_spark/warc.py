@@ -3,7 +3,7 @@
 table is materialized from.
 
 Spark shape: ``spark.read.format("binaryFile")`` over a path glob →
-``mapInPandas`` batches (``kernel.map_rows``), one task per file (WARC
+``mapInArrow`` batches (``kernel.map_rows``), one task per file (WARC
 files are written at ~1 GB exactly so that file-granular parallelism
 works; Common Crawl ships ~64k files per crawl, far above any executor
 count). Records are per-member gzip (the Common Crawl convention) and
@@ -148,7 +148,7 @@ def read_warc_pages(spark, path: str):
 
     One input file per task via binaryFile (WARC files are sized for
     exactly this parallelism); record parsing streams inside the task
-    through mapInPandas, so no file's records ever collect anywhere
+    through mapInArrow, so no file's records ever collect anywhere
     central. At 100 TB the downstream extraction repartitions on
     xxhash64(url) anyway (pipeline.extract_pages), which also evens out
     per-file skew."""
@@ -160,7 +160,7 @@ def read_warc_pages(spark, path: str):
     rows = map_rows(
         spark.read.format("binaryFile").load(path), ["content"],
         StructType.fromDDL("url string, warc_ts string, html binary"),
-        lambda content: warc_record_rows(bytes(content)))
+        warc_record_rows)
     return rows.select(
         "url",
         F.to_timestamp(F.col("warc_ts")).alias("warc_ts"),

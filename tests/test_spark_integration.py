@@ -579,7 +579,7 @@ def test_multimodal_plumbing(spark):
 def test_multimodal_real_png_decode(spark):
     """image_features over REAL PNG payloads with the stdlib codec
     (VERDICT r3 #5: the decode step is no longer stub-only — same
-    mapInPandas plumbing, real pixels)."""
+    mapInArrow plumbing, real pixels)."""
     from go_trafilatura_spark.multimodal import (
         MEDIA_SCHEMA, PngDecodeBackend, encode_png, image_features,
         resize_images,
@@ -1868,3 +1868,73 @@ def test_fanout_small_scan_multi_file_input_adds_no_exchange(spark, tmp_path):
     assert size is not None and size < (1 << 30)
     out = textops.fanout_small_scan(docs, input_bytes=size)
     assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_fanout_small_scan_raises_when_partition_probe_fails():
+    """A failing partition probe is an error, not a silent "no fan-out"."""
+    from types import SimpleNamespace
+
+    from go_trafilatura_spark import textops
+
+    def probe_fails():
+        raise RuntimeError("partition probe failed")
+
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4)),
+        rdd=SimpleNamespace(getNumPartitions=probe_fails))
+    with pytest.raises(RuntimeError, match="partition probe failed"):
+        textops.fanout_small_scan(df, input_bytes=1024)
+
+
+def test_discover_urls_rejects_unknown_kind(spark):
+    from go_trafilatura_spark.discovery import discover_urls
+
+    bodies = spark.createDataFrame([("s", b"<rss/>")], "source_url string, body binary")
+    with pytest.raises(ValueError, match="'feeds'"):
+        discover_urls(bodies, kind="feeds")
+
+
+EDGE_SCHEMA = "id string, s string, b binary, i int, n bigint, x float, d double, v array<float>"
+
+
+def test_map_rows_typed_output(spark):
+    """The typing contract of kernel.map_rows: inputs reach ``fn`` as
+    their Python values (binary as bytes, null as None); output columns
+    take the schema's types exactly, nulls included; a row may yield
+    none or several tuples; a whole batch may yield nothing."""
+    from pyspark.sql.types import StructType
+
+    from go_trafilatura_spark.kernel import map_rows
+
+    schema = StructType.fromDDL(EDGE_SCHEMA)
+    frame = spark.createDataFrame([
+        ("full", "a\x00é", b"\x00\xff", 7),
+        ("null", None, None, None),
+        ("drop", "x", b"x", 1),
+        ("twice", "t", b"", 0),
+    ], "id string, s string, b binary, i int")
+
+    def rows(id_, s, b, i):
+        assert b is None or type(b) is bytes
+        if id_ == "full":
+            yield id_, s, b, i, 2**40, 0.5, 0.1, [1.5, None]
+        elif id_ == "null":
+            yield id_, s, b, i, None, None, None, None
+        elif id_ == "twice":
+            yield from ((id_, s, b, k, k, float(k), float(k), []) for k in (2**31 - 1, -2**31))
+
+    out = sorted(tuple(r) for r in map_rows(frame, ["id", "s", "b", "i"], schema, rows).collect())
+    assert out == [
+        ("full", "a\x00é", bytearray(b"\x00\xff"), 7, 2**40, 0.5, 0.1, [1.5, None]),
+        ("null", None, None, None, None, None, None, None),
+        ("twice", "t", bytearray(b""), -2**31, -2**31, float(-2**31), float(-2**31), []),
+        ("twice", "t", bytearray(b""), 2**31 - 1, 2**31 - 1, float(2**31), float(2**31 - 1), []),
+    ]
+    dropped = map_rows(frame.where("id = 'drop'"), ["id", "s", "b", "i"], schema, rows)
+    assert dropped.collect() == []
+
+    def overflow(id_):
+        yield id_, None, None, 2**31, None, None, None, None
+
+    with pytest.raises(Exception, match="2147483648"):
+        map_rows(frame, ["id"], schema, overflow).collect()

@@ -2,7 +2,8 @@
 zip finders that PySpark's per-task ``importlib.invalidate_caches()``
 would re-read, and the kernel freezes the worker heap after its first
 batch. Imports must keep working, and every Python stage must run
-through a shell that calls the hook."""
+through a shell that calls the hook: the two mapInArrow shells of
+kernel.py, and no pandas in product code outside streaming."""
 
 import ast
 import importlib
@@ -24,7 +25,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PYTHON_STAGES = {"mapInArrow", "mapInPandas", "applyInPandas", "applyInArrow",
                  "applyInPandasWithState", "mapPartitions", "foreachPartition",
                  "udf", "pandas_udf"}
-# Streaming's stateful operators keep their own per-group state shell.
+# Streaming's stateful operators keep their own per-group state shell:
+# they expire state by processing-time timeout, and transformWithState
+# supports state TTL only on RocksDBStateStoreProvider, a session-wide
+# setting (go_trafilatura_spark/streaming.py, NOTES.md).
 EXEMPT = {("go_trafilatura_spark/streaming.py", "applyInPandasWithState")}
 
 
@@ -49,19 +53,47 @@ def _python_stage_calls(path: str) -> list[tuple[str, int, str]]:
             and node.func.attr in PYTHON_STAGES]
 
 
+def _product_files() -> list[str]:
+    paths = [os.path.join(ROOT, "__spark_entry__.py"), os.path.join(ROOT, "bench.py")]
+    for package in ("go_trafilatura_spark", "jobs"):
+        for root, _, files in os.walk(os.path.join(ROOT, package)):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    return paths
+
+
 def test_python_stages_only_in_kernel_shells():
-    """mapInArrow and mapInPandas are called only in kernel.py, so every
-    Python stage runs through a shell that calls start_task."""
+    """Python stages are called only in kernel.py, both on mapInArrow,
+    so every Python stage runs through a shell that calls start_task."""
     calls = []
     for root, dirs, files in os.walk(ROOT):
         dirs[:] = [d for d in dirs if d not in ("dist", "tests") and not d.startswith(".")]
         calls += [c for f in files if f.endswith(".py")
                   for c in _python_stage_calls(os.path.join(root, f))]
     kernel = sorted(name for rel, _, name in calls if rel == "go_trafilatura_spark/kernel.py")
-    assert kernel == ["mapInArrow", "mapInPandas"]
+    assert kernel == ["mapInArrow", "mapInArrow"]
     stray = [f"{rel}:{line}: {name}" for rel, line, name in calls
              if rel != "go_trafilatura_spark/kernel.py" and (rel, name) not in EXEMPT]
     assert stray == [], "Python stages outside the kernel shells:\n" + "\n".join(stray)
+
+
+def test_no_pandas_outside_streaming():
+    """Product code neither imports pandas nor uses ``pd.``; streaming's
+    applyInPandasWithState operators are the one exemption."""
+    found = []
+    for path in _product_files():
+        rel = os.path.relpath(path, ROOT)
+        if rel == "go_trafilatura_spark/streaming.py":
+            continue
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            modules = ([a.name for a in node.names] if isinstance(node, ast.Import)
+                       else [node.module or ""] if isinstance(node, ast.ImportFrom) else [])
+            if any(m.split(".")[0] == "pandas" for m in modules) or (
+                    isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+                    and node.value.id == "pd"):
+                found.append(f"{rel}:{node.lineno}")
+    assert found == [], "pandas in product code:\n" + "\n".join(found)
 
 
 def test_start_task_drops_zip_finders_and_imports_still_work(tmp_path, monkeypatch):
