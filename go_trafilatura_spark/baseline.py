@@ -24,9 +24,7 @@ _JSONLD_SELECTOR = css.parse_group('script[type="application/ld+json"]')
 def basic_cleaning(doc: Element) -> Element:
     """baseline.go:22-28."""
     for el in reversed(css.query_all(doc, _BASIC_CLEANING_SELECTOR)):
-        if el.parent is not None:
-            el.parent.children.remove(el)
-            el.parent = None
+        etree.remove(el)
     return doc
 
 

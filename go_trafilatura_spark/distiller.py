@@ -109,12 +109,6 @@ def _contains_block(el: Element) -> bool:
     return False
 
 
-def _clone_inline(el: Element) -> Element:
-    cl = etree.clone(el, True)
-    cl.tail = ""
-    return cl
-
-
 def _anchor_words(el: Element) -> int:
     n = 0
     for a in etree.get_elements_by_tag(el, "a"):
@@ -196,7 +190,7 @@ class _Builder:
             self.n_anchor += w
 
     def _add_inline(self, el: Element) -> None:
-        self.parts.append(_clone_inline(el))
+        self.parts.append(etree.clone(el, True))
         t = etree.text_content(el)
         w = _count_words(t)
         self.n_words += w
@@ -220,17 +214,8 @@ class _Builder:
         else:
             out_tag = "p"
         el = Element(out_tag)
-        last = None
         for p in parts:
-            if isinstance(p, str):
-                if last is None:
-                    el.text += p
-                else:
-                    last.tail += p
-            else:
-                p.parent = el
-                el.children.append(p)
-                last = p
+            etree.append_part(el, p)
         text = trim(etree.iter_text(el, " "))
         if not text:
             return
@@ -715,6 +700,5 @@ def distill(doc: Element) -> Element | None:
     out = etree.new_element("div")
     for tb in kept:
         for el in tb.out_elements:
-            el.parent = out
-            out.children.append(el)
+            etree.append_part(out, el)
     return out

@@ -648,6 +648,45 @@ def replace_content(dst: Element, src: Element) -> None:
         child.parent = dst
 
 
+def append_text(el: Element, text: str) -> None:
+    """Add ``text`` at the end of el's content: the last child's tail,
+    or el's own text when it has no children."""
+    kids = el.children
+    if kids:
+        kids[-1].tail += text
+    else:
+        el.text += text
+
+
+def detach_content(el: Element) -> list:
+    """Take el's content apart into its DOM child nodes, in document
+    order: non-empty text strings, and the children, detached, each
+    child's tail moved into the text part after it. el is left empty;
+    ``append_part`` of every part puts the content back unchanged."""
+    parts: list = []
+    if el.text:
+        parts.append(el.text)
+        el.text = ""
+    for child in el.children:
+        child.parent = None
+        parts.append(child)
+        if child.tail:
+            parts.append(child.tail)
+            child.tail = ""
+    el.children = []
+    return parts
+
+
+def append_part(el: Element, part) -> None:
+    """Append one ``detach_content`` part (a text string or a tail-less
+    detached element) at the end of el's content."""
+    if type(part) is str:
+        append_text(el, part)
+    else:
+        part.parent = el
+        el.children.append(part)
+
+
 def _merge_text_before(el: Element, text: str) -> None:
     """Attach ``text`` at el's current position (used when a node is
     removed but its text must stay put, DOM-style)."""
@@ -1014,13 +1053,6 @@ class _TreeBuilder(HTMLParser):
             return self.stack[-1]
         return self.body if self.in_body else self.head
 
-    def _append_text(self, data: str, target: Element | None = None) -> None:
-        el = target if target is not None else self._current()
-        if el.children:
-            el.children[-1].tail += data
-        else:
-            el.text += data
-
     def _pop_to(self, i: int) -> None:
         """Pop stack[i:]; leaving a table cell/caption clears the active
         formatting list to its marker (spec 'close the cell')."""
@@ -1212,7 +1244,7 @@ class _TreeBuilder(HTMLParser):
                     else:
                         parent.text += data
                     return
-        self._append_text(data, parent)
+        append_text(parent, data)
 
     _AUTOCLOSE_MAP = {
         "tr": (("tr",), ("table",)),
@@ -1474,15 +1506,16 @@ class _TreeBuilder(HTMLParser):
             # Foster-parent non-whitespace text out of table structure;
             # whitespace between rows/sections stays put.
             if data.strip() == "":
-                self._append_text(data)
+                append_text(cur, data)
             else:
                 self._foster_text(data)
             return
         if self.in_body and self.afe:
             self._reconstruct()
-            self._append_text(data)
+            append_text(self._current(), data)
             return
-        # common path: append to the current node without re-resolving it
+        # common path: append_text(cur, data), inlined because it runs
+        # once per text node of every parse
         if cur.children:
             cur.children[-1].tail += data
         else:

@@ -76,14 +76,11 @@ def _candidates(cleaned_doc: Element, options):
         for candidate in options.fallback_candidates:
             if candidate is not None:
                 yield candidate
-    if getattr(options, "fallback_readability", None) is not None:
+    if options.fallback_readability is not None:
         yield options.fallback_readability
     else:
-        yield readability_parse(
-            cleaned_doc,
-            exclude_tables=bool(options is not None and options.exclude_tables),
-        )
-    if getattr(options, "fallback_distiller", None) is not None:
+        yield readability_parse(cleaned_doc, exclude_tables=options.exclude_tables)
+    if options.fallback_distiller is not None:
         yield options.fallback_distiller
         return
     # Built-in distiller slot (external.go:141-158) — consulted only
@@ -138,9 +135,8 @@ def sanitize_tree(tree: Element, options) -> None:
     doc_cleaning(tree, options)
 
     for el in reversed(etree.get_elements_by_tag(tree, "*")):
-        if el.tag in TAGS_TO_SANITIZE and el.parent is not None:
-            el.parent.children.remove(el)
-            el.parent = None
+        if el.tag in TAGS_TO_SANITIZE:
+            etree.remove(el)
 
     if not options.include_links:
         etree.strip_tags(tree, "a")

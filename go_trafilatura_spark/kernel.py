@@ -94,14 +94,13 @@ def compute_spans(content_node, content_text: str) -> list[dict]:
     content_text (north-rule requirement). Spans are located by
     sequential search of each child's flattened text."""
     from . import etree
+    from .utils import trim
 
     if content_node is None or not content_text:
         return []
     spans = []
     pos = 0
     for child in etree.children_of(content_node):
-        from .utils import trim
-
         child_text = trim(etree.iter_text(child, " "))
         if not child_text:
             continue

@@ -48,26 +48,19 @@ def handle_titles(element: Element, cache, options) -> Element | None:
         title.text = ""
         # DOM ChildNodes: [text?, child, tail, child, tail ...]
         if element.text:
-            _append_raw_text(title, element.text)
+            etree.append_text(title, element.text)
         for child in list(element.children):
             cloned = etree.clone(child, True)  # clone drops the tail
             processed = handle_text_node(cloned, cache, False, False, options)
             etree.append_child(title, processed if processed is not None else cloned)
             if child.tail:
-                _append_raw_text(title, child.tail)
+                etree.append_text(title, child.tail)
             if child.tag != etree.COMMENT:
                 child.tag = "done"
 
     if title is not None and text_chars_test(etree.iter_text(title, "")):
         return title
     return None
-
-
-def _append_raw_text(el: Element, s: str) -> None:
-    if el.children:
-        el.children[-1].tail += s
-    else:
-        el.text += s
 
 
 def handle_formatting(element: Element, cache, options) -> Element | None:

@@ -338,10 +338,12 @@ def extract_pages_resumable(
 
     Work is bucketed by xxhash64(url) % num_partitions; each completed
     bucket commits its output under bucket=<id>/ plus a manifest row
-    (bucket id, row count). A re-run reads the manifest and processes
-    only missing buckets — per-partition lineage + checkpointed resume
-    per the north rule. The commit goes through a TableSink (parquet
-    emulation locally, IcebergSink on a cluster); the task-commit /
+    (bucket id, row count, input path, bucket count). A re-run reads the
+    manifest and processes only missing buckets — per-partition lineage
+    + checkpointed resume per the north rule — and raises ValueError
+    when the manifest names another input path or bucket count. The
+    commit goes through a TableSink (parquet emulation locally,
+    IcebergSink on a cluster); the task-commit /
     snapshot protocol of the backend makes partial retries invisible,
     bucket-level manifests make whole-job restarts cheap.
     """
@@ -360,7 +362,18 @@ def extract_pages_resumable(
     except FileNotFoundError:  # no manifest yet
         done_buckets: set[int] = set()
     else:
-        done_buckets = {r["bucket"] for r in mdf.select("bucket").distinct().collect()}
+        # A manifest written for another input or bucket count would
+        # skip the wrong buckets (or re-append done rows under a new
+        # modulus): resuming from it is an error.
+        rows = mdf.select("bucket", "input_path", "num_partitions").distinct().collect()
+        runs = {(r["input_path"], r["num_partitions"]) for r in rows}
+        if runs != {(input_path, num_partitions)}:
+            recorded = ", ".join(f"input_path={p!r} num_partitions={n}"
+                                 for p, n in sorted(runs, key=repr))
+            raise ValueError(
+                f"resume manifest records {recorded}; this run requests "
+                f"input_path={input_path!r} num_partitions={num_partitions}")
+        done_buckets = {r["bucket"] for r in rows}
 
     if len(done_buckets) >= num_partitions:
         return sink.read(spark)  # nothing left to do
@@ -388,12 +401,9 @@ def extract_pages_resumable(
     sink.append(result)
 
     observed = obs.get
-    rows = [(b, int(observed[f"b{b}"] or 0)) for b in todo_buckets]
-    manifest_sink.append(
-        spark.createDataFrame(rows, "bucket INT, row_count BIGINT").withColumn(
-            "input_path", F.lit(input_path)
-        )
-    )
+    manifest_sink.append(spark.createDataFrame(
+        [(b, int(observed[f"b{b}"] or 0), input_path, num_partitions) for b in todo_buckets],
+        "bucket INT, row_count BIGINT, input_path STRING, num_partitions INT"))
 
     return sink.read(spark)
 

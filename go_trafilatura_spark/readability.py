@@ -171,14 +171,10 @@ def _is_phrasing(el: Element) -> bool:
     if el.tag in PHRASING_ELEMS:
         return True
     if el.tag in ("a", "del", "ins"):
+        # child text nodes are always phrasing: only the element
+        # children decide
         return all(_is_phrasing(c) or c.tag == etree.COMMENT
-                   for c in el.children) and not _has_stray_text(el)
-    return False
-
-
-def _has_stray_text(el: Element) -> bool:
-    # a/del/ins qualify as phrasing when every CHILD is phrasing; child
-    # text nodes are always phrasing, so text never disqualifies.
+                   for c in el.children)
     return False
 
 
@@ -227,32 +223,17 @@ def _first_element_child(el: Element):
     return None
 
 
-def _next_element_sibling(el: Element):
-    parent = el.parent
-    if parent is None:
-        return None
-    kids = parent.children
-    try:
-        i = kids.index(el)
-    except ValueError:
-        return None
-    for c in kids[i + 1:]:
-        if c.tag != etree.COMMENT:
-            return c
-    return None
-
-
 def _get_next_node(el: Element, ignore_self_and_kids: bool = False):
     if not ignore_self_and_kids:
         child = _first_element_child(el)
         if child is not None:
             return child
-    sib = _next_element_sibling(el)
+    sib = etree.next_element_sibling(el)
     if sib is not None:
         return sib
     node = el.parent
     while node is not None:
-        sib = _next_element_sibling(node)
+        sib = etree.next_element_sibling(node)
         if sib is not None:
             return sib
         node = node.parent
@@ -567,86 +548,40 @@ def _wrap_phrasing_runs(node: Element) -> None:
     """readability.js grabArticle div handling: wrap each run of phrasing
     content (text + inline elements) into a synthetic <p>; trailing
     whitespace/brs are trimmed off the paragraph end."""
-    items: list = []
-    if node.text:
-        items.append(("#text", node.text))
-    for child in node.children:
-        items.append(("el", child))
-        if child.tail:
-            items.append(("#text", child.tail))
-            child.tail = ""
-    node.text = ""
-    node.children = []
-
     p: Element | None = None
-    prev: Element | None = None
-
-    def emit_direct(kind, val):
-        nonlocal p, prev
-        if kind == "#text":
-            if node.children:
-                node.children[-1].tail += val
-            else:
-                node.text += val
-        else:
-            val.parent = node
-            node.children.append(val)
 
     def close_p():
-        nonlocal p, prev
+        nonlocal p
         if p is None:
             return
         # trim trailing whitespace text / brs off the paragraph
-        while True:
-            if p.children:
-                last = p.children[-1]
-                if last.tag == "br" and not (last.tail and last.tail.strip()):
-                    tail = last.tail or ""
-                    p.children.pop()
-                    last.parent = None
-                    if p.children:
-                        p.children[-1].tail += tail
-                    else:
-                        p.text += tail
-                    continue
-                if last.tail and not last.tail.strip():
-                    last.tail = ""
-                    continue
+        kids = p.children
+        while kids:
+            last = kids[-1]
+            if last.tag == "br" and not last.tail.strip():
+                etree.remove(last, keep_tail=True)
+            elif last.tail and not last.tail.strip():
+                last.tail = ""
+            else:
                 break
-            if p.text and not p.text.strip():
-                p.text = ""
-            break
+        if not kids and not p.text.strip():
+            p.text = ""
         p = None
-        prev = None
 
-    for kind, val in items:
-        is_phrasing = (kind == "#text" or val.tag == etree.COMMENT
-                       or _is_phrasing(val))
-        if not is_phrasing:
+    for part in etree.detach_content(node):
+        is_text = type(part) is str
+        if not (is_text or part.tag == etree.COMMENT or _is_phrasing(part)):
             close_p()
-            emit_direct(kind, val)
+            etree.append_part(node, part)
+            continue
+        # whitespace-only text / stray brs don't open a paragraph
+        if p is None and (not part.strip() if is_text
+                          else part.tag in ("br", etree.COMMENT)):
+            etree.append_part(node, part)
             continue
         if p is None:
-            # whitespace-only text / stray brs don't open a paragraph
-            if kind == "#text" and not val.strip():
-                emit_direct(kind, val)
-                continue
-            if kind == "el" and val.tag in ("br", etree.COMMENT):
-                emit_direct(kind, val)
-                continue
-            p = Element("p")
-            p.parent = node
-            node.children.append(p)
-            prev = None
-        if kind == "#text":
-            if prev is None:
-                p.text += val
-            else:
-                prev.tail += val
-        else:
-            val.parent = p
-            p.children.append(val)
-            prev = val
+            p = etree.sub_element(node, "p")
+        etree.append_part(p, part)
     close_p()
 
 
@@ -903,87 +838,53 @@ def _replace_double_brs(root: Element) -> None:
         brs = [c for c in node.children if c.tag == "br"]
         if len(brs) < 2:
             continue
-        items: list = []
-        if node.text:
-            items.append(("#text", node.text))
-        for child in node.children:
-            items.append(("el", child))
-            if child.tail:
-                items.append(("#text", child.tail))
-                child.tail = ""
+        parts = etree.detach_content(node)
 
         segments: list[list] = [[]]
         i = 0
-        while i < len(items):
-            kind, val = items[i]
-            if kind == "el" and val.tag == "br":
+        while i < len(parts):
+            if type(parts[i]) is not str and parts[i].tag == "br":
+                # a run of brs, whitespace-only text between them
                 j = i
                 n_br = 0
-                while j < len(items):
-                    k2, v2 = items[j]
-                    if k2 == "el" and v2.tag == "br":
+                while j < len(parts):
+                    part = parts[j]
+                    if type(part) is str:
+                        if part.strip():
+                            break
+                    elif part.tag == "br":
                         n_br += 1
-                        j += 1
-                    elif k2 == "#text" and not v2.strip():
-                        j += 1
                     else:
                         break
+                    j += 1
                 if n_br >= 2:
                     segments.append([])
                     i = j
                     continue
-            segments[-1].append(items[i])
+            segments[-1].append(parts[i])
             i += 1
 
         if len(segments) < 2:
-            # restore the original stream
-            node.children = []
-            node.text = ""
-            prev = None
-            for kind, val in items:
-                if kind == "#text":
-                    if prev is None:
-                        node.text += val
-                    else:
-                        prev.tail += val
-                else:
-                    val.parent = node
-                    node.children.append(val)
-                    prev = val
+            # restore the original content
+            for part in parts:
+                etree.append_part(node, part)
             continue
 
-        node.text = ""
-        node.children = []
         for seg in segments:
-            has_content = any(
-                (k == "#text" and v.strip()) or (k == "el" and v.tag != "br")
-                for k, v in seg
-            )
-            if not has_content:
+            # a segment of whitespace and brs only is dropped
+            if not any(part.strip() if type(part) is str else part.tag != "br"
+                       for part in seg):
                 continue
             p = None
-            prev = None
-            for kind, val in seg:
-                if kind == "el" and not (_is_phrasing(val) or val.tag == etree.COMMENT):
-                    val.parent = node
-                    node.children.append(val)
+            for part in seg:
+                if type(part) is not str and not (
+                        _is_phrasing(part) or part.tag == etree.COMMENT):
+                    etree.append_part(node, part)
                     p = None
-                    prev = None
                     continue
                 if p is None:
-                    p = Element("p")
-                    p.parent = node
-                    node.children.append(p)
-                    prev = None
-                if kind == "#text":
-                    if prev is None:
-                        p.text += val
-                    else:
-                        prev.tail += val
-                else:
-                    val.parent = p
-                    p.children.append(val)
-                    prev = val
+                    p = etree.sub_element(node, "p")
+                etree.append_part(p, part)
 
 
 # --- entry point ----------------------------------------------------------------

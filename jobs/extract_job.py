@@ -55,8 +55,10 @@ def main() -> int:
         out = extract_pages_resumable(
             spark, args.input, args.output, options, args.partitions
         )
-        n = out.count()
-        rejected = out.where(F.col("reject_reason").isNotNull()).count()
+        n, rejected = out.agg(
+            F.count(F.lit(1)),
+            F.sum(F.col("reject_reason").isNotNull().cast("long")),
+        ).first()
     else:
         pages = read_pages(spark, args.input)
         extracted = extract_pages(

@@ -92,3 +92,26 @@ def test_parser_roundtrip_stable(fragment):
     doc3 = etree.parse_html(ser2)
     ser3 = etree.tostring(doc3.children[0])
     assert ser2 == ser3
+
+
+@settings(max_examples=60, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(html_fragment())
+def test_detach_content_roundtrip(fragment):
+    """Taking any element's content apart with ``detach_content`` and
+    appending every part back with ``append_part`` serializes the
+    document identically; the parts are the DOM child nodes (no empty or
+    adjacent text parts, children detached without tails)."""
+    doc = etree.parse_html(f"<html><body>{fragment}</body></html>")
+    before = etree.tostring(doc)
+    for el in etree.iter_all(doc):
+        parts = etree.detach_content(el)
+        assert el.text == "" and el.children == []
+        for prev, part in zip([None] + parts, parts):
+            if type(part) is str:
+                assert part and type(prev) is not str
+            else:
+                assert part.parent is None and part.tail == ""
+        for part in parts:
+            etree.append_part(el, part)
+        assert etree.tostring(doc) == before

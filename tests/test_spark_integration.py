@@ -116,6 +116,33 @@ def test_resume_manifest(spark, smoke_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_resume_rejects_manifest_of_another_run(spark, smoke_dir):
+    """The manifest records the input path and the bucket count: a
+    re-run with another input or another --partitions raises, naming
+    both values, and appends nothing."""
+    tmp = tempfile.mkdtemp(prefix="gts_resume_")
+    try:
+        pages, out_path = os.path.join(smoke_dir, "pages.parquet"), os.path.join(tmp, "out")
+        other = os.path.join(tmp, "other_pages")
+        read_pages(spark, pages).limit(10).write.parquet(other)
+        n1 = extract_pages_resumable(spark, pages, out_path, num_partitions=4).count()
+        manifest = spark.read.parquet(out_path + "_manifest")
+        assert {(r["input_path"], r["num_partitions"]) for r in manifest.collect()} == {
+            (pages, 4)}
+        recorded = f"records input_path={pages!r} num_partitions=4; "
+        with pytest.raises(ValueError) as exc:
+            extract_pages_resumable(spark, pages, out_path, num_partitions=8)
+        assert str(exc.value).endswith(
+            recorded + f"this run requests input_path={pages!r} num_partitions=8")
+        with pytest.raises(ValueError) as exc:
+            extract_pages_resumable(spark, other, out_path, num_partitions=4)
+        assert str(exc.value).endswith(
+            recorded + f"this run requests input_path={other!r} num_partitions=4")
+        assert spark.read.parquet(out_path).count() == n1
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_resume_corrupt_manifest_raises(spark, smoke_dir):
     """An unreadable manifest is an error, not "no bucket done": the
     re-run raises and appends nothing to the output."""
@@ -273,7 +300,9 @@ def test_streaming_extraction(spark, smoke_dir):
 
 def test_spark_submit_pyfiles(smoke_dir):
     """End-to-end deployment path: build the --py-files zip and run the
-    extraction job through spark-submit (the north rule's launch mode)."""
+    extraction job through spark-submit (the north rule's launch mode),
+    once plainly and twice with --resume (the second run finds every
+    bucket done and reports the committed table)."""
     import json
     import subprocess
     import sys
@@ -281,9 +310,10 @@ def test_spark_submit_pyfiles(smoke_dir):
     from go_trafilatura_spark.package_zip import build_zip
 
     zip_path = build_zip()
-    out_dir = tempfile.mkdtemp(prefix="gts_submit_") + "/out"
+    tmp = tempfile.mkdtemp(prefix="gts_submit_")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
+
+    def submit(out_dir, *extra):
         proc = subprocess.run(
             [
                 "spark-submit", "--master", "local[2]",
@@ -291,17 +321,22 @@ def test_spark_submit_pyfiles(smoke_dir):
                 os.path.join(repo, "jobs", "extract_job.py"),
                 "--input", os.path.join(smoke_dir, "pages.parquet"),
                 "--output", out_dir,
-                "--partitions", "4",
+                "--partitions", "4", *extra,
             ],
             capture_output=True, text=True, timeout=300, cwd=repo,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
         line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-        stats = json.loads(line)
-        assert stats["rows"] == 120
-        assert stats["rejected"] == 0
+        return json.loads(line)
+
+    try:
+        for out_dir, extra in ((os.path.join(tmp, "out"), ()),
+                               (os.path.join(tmp, "resumed"), ("--resume",)),
+                               (os.path.join(tmp, "resumed"), ("--resume",))):
+            stats = submit(out_dir, *extra)
+            assert (stats["rows"], stats["rejected"]) == (120, 0), (extra, stats)
     finally:
-        shutil.rmtree(os.path.dirname(out_dir), ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_fixture_root_follows_checkout(tmp_path):
