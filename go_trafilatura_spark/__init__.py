@@ -10,7 +10,7 @@ Layout:
   etree/css/selectors/settings/utils  — document model + rule lists
   htmlprocessing/main_extractor/baseline/metadata/external/core — cascade
   kernel    — Arrow-vectorized Spark kernel (mapInArrow)
-  pipeline  — DataFrame pipeline: scan → salted repartition → kernel → sink
+  pipeline  — DataFrame pipeline: scan → content-keyed exchange → kernel → sink
   textops   — corpus-level training-data ops (dedup, lang-ID, quality, ANN)
   fixtures  — deterministic synthetic page/golden generator
 """

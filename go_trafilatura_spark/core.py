@@ -3,6 +3,12 @@
 Transcribed semantics from /root/reference/core.go:71-219. This is the
 pure per-document function executed for each row inside the Spark
 kernel; it never touches Spark itself.
+
+The cascade runs in two parts. ``_extract`` computes everything the
+page decides without reading the url the page was fetched from; the
+pure ``bind_url`` then derives the url-dependent metadata and applies
+the gates that read it. Both entry points run both, so there is one
+path; the kernel reuses one url-free result for every copy of a page.
 """
 
 from __future__ import annotations
@@ -20,7 +26,7 @@ from .htmlprocessing import (
 )
 from .lru import LRUCache
 from .main_extractor import extract_comments, extract_content
-from .metadata import Metadata, extract_metadata
+from .metadata import Metadata, UrlTail, bind_metadata, extract_metadata, page_url
 from .options import FAVOR_PRECISION, Options
 from .settings import FORMAT_TAG_CATALOG
 from .utils import check_html_language, duplicate_test, language_classifier
@@ -41,17 +47,44 @@ class ExtractResult:
     content_text: str
     comments_text: str
     metadata: Metadata
+    # The inputs of the url-dependent metadata (``bind_url``)
+    tail: UrlTail
+    # A reject of the content phase, raised by ``bind_url`` after the
+    # url gates it ranks below
+    error: ExtractError | None = None
 
 
 def extract(html_input: bytes | str, options: Options | None = None) -> ExtractResult:
-    """Extract — parse + run the document cascade (core.go:71-79)."""
-    return _extract(lambda: etree.parse_html(html_input), options or Options())
+    """Extract — parse + run the document cascade (core.go:71-79) for
+    a page fetched from ``options.original_url``."""
+    options = options or Options()
+    return bind_url(_extract(lambda: etree.parse_html(html_input), options),
+                    options.original_url, options)
 
 
 def extract_document(doc: Element, options: Options) -> ExtractResult:
     """ExtractDocument (core.go:82-219) on a clone of ``doc``; the
     caller's tree is left unchanged."""
-    return _extract(lambda: etree.clone(doc, True), options)
+    return bind_url(_extract(lambda: etree.clone(doc, True), options),
+                    options.original_url, options)
+
+
+def bind_url(result: ExtractResult, url: str | None, options: Options) -> ExtractResult:
+    """The url tail of the cascade: ``result`` (from ``_extract``) with
+    its url-dependent metadata derived for a page fetched from ``url``,
+    then the gates that read it. Gates raise in the reference's order:
+    missing_title (raised by ``_extract``), missing_url, missing_date,
+    then the content phase's reject. Pure, so one result binds to any
+    number of urls."""
+    metadata = bind_metadata(result.metadata, result.tail, url, options)
+    if options.has_essential_metadata:
+        if metadata.url == "":
+            raise ExtractError("missing_url")
+        if metadata.date == "":
+            raise ExtractError("missing_date")
+    if result.error is not None:
+        raise result.error
+    return replace(result, metadata=metadata)
 
 
 def _prune_selected(doc: Element, options: Options) -> Element:
@@ -70,34 +103,59 @@ def _prune_selected(doc: Element, options: Options) -> Element:
 
 
 def _extract(fresh, options: Options) -> ExtractResult:
-    """The document cascade. ``fresh`` is a zero-arg callable returning
-    a new tree of the input on every call, which the cascade owns: the
-    working tree and, only when the baseline rescue fires, the rescue
-    tree (the reference's docBackup2, core.go:135). Re-building that
-    tree for the few pages that need it beats cloning every page."""
+    """The url-free document cascade. ``fresh`` is a zero-arg callable
+    returning a new tree of the input on every call, which the cascade
+    owns: the working tree and, only when the baseline rescue fires, the
+    rescue tree (the reference's docBackup2, core.go:135). Re-building
+    that tree for the few pages that need it beats cloning every page.
+
+    Nothing here reads ``options.original_url`` except link
+    absolutization under ``include_links``. A gate of the content phase
+    returns its reject in ``error`` instead of raising it: ``bind_url``
+    ranks the url gates above it."""
     doc = fresh()
-    cache = LRUCache(options.config.cache_size)
 
     # Language gate (non-strict)
     if options.target_language and not check_html_language(doc, options, False):
         raise ExtractError("language_mismatch", options.target_language)
 
     # Metadata (on the uncleaned tree)
-    metadata = extract_metadata(doc, options)
+    metadata, tail = extract_metadata(doc, options)
 
-    if options.has_essential_metadata:
-        if metadata.title == "":
-            raise ExtractError("missing_title")
-        if metadata.url == "":
-            raise ExtractError("missing_url")
-        if metadata.date == "":
-            raise ExtractError("missing_date")
+    if options.has_essential_metadata and metadata.title == "":
+        raise ExtractError("missing_title")
 
-    # Backfill original URL from metadata into a copy: the caller's
-    # Options may serve further pages (go-trafilatura passes it by value)
-    if options.original_url is None and metadata.url != "":
-        options = replace(options, original_url=metadata.url)
+    # Backfill the original URL from the page's own into a copy: the
+    # caller's Options may serve further pages (go-trafilatura passes it
+    # by value)
+    if options.original_url is None:
+        own = page_url(tail.url, None)
+        if own != "":
+            options = replace(options, original_url=own)
 
+    try:
+        post_body, comments_body, tmp_body_text, tmp_comments, lang = _extract_content(
+            doc, fresh, options)
+    except ExtractError as e:
+        return ExtractResult(None, None, "", "", metadata, tail, e)
+
+    if lang != "":
+        metadata.language = lang
+
+    return ExtractResult(
+        content_node=post_body,
+        comments_node=comments_body,
+        content_text=tmp_body_text,
+        comments_text=tmp_comments,
+        metadata=metadata,
+        tail=tail,
+    )
+
+
+def _extract_content(doc: Element, fresh, options: Options) -> tuple:
+    """The content phase of ``_extract`` on the metadata-extracted
+    ``doc``: (content, comments, content text, comments text, language)."""
+    cache = LRUCache(options.config.cache_size)
     _prune_selected(doc, options)
 
     # The fallback's backup clone (core.go:134) is taken only when the
@@ -167,17 +225,8 @@ def _extract(fresh, options: Options) -> ExtractResult:
     if options.target_language and lang != options.target_language:
         raise ExtractError("wrong_language", f"want {options.target_language} got {lang}")
 
-    if lang != "":
-        metadata.language = lang
-
     # Post cleaning
     post_cleaning(post_body)
     post_cleaning(comments_body)
 
-    return ExtractResult(
-        content_node=post_body,
-        comments_node=comments_body,
-        content_text=tmp_body_text,
-        comments_text=tmp_comments,
-        metadata=metadata,
-    )
+    return post_body, comments_body, tmp_body_text, tmp_comments, lang

@@ -11,6 +11,19 @@ job, and it is batch-vectorized at the transport layer (Arrow), exactly
 as the north rule requires (no per-row Python UDFs at the DataFrame
 level).
 
+Work sharing: a crawl re-publishes the same page bytes under many
+urls, and ``pipeline.extract_pages`` hands the kernel every copy of a
+page in one task, next to the others (an exchange on the html hash,
+sorted within the partition). The cascade reads nothing of the row url
+(``core.bind_url`` derives the url columns last), so the kernel keeps a
+one-entry memo per task: the previous row's html bytes and its url-free
+output. A row whose bytes equal them (``bytes ==``, never a hash alone)
+skips the cascade and runs only ``bind_url`` for its own url. Under
+``include_links`` the url joins the key, as content_html holds hrefs
+resolved against it; under ``has_essential_metadata`` a reject is not
+kept, as the url gates rank above the content gates. The memo holds one
+page, so its memory is constant and it needs no setting.
+
 Scale notes:
 - HTML rows are fat (KBs-100KBs); callers should tune
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` down (256-1024).
@@ -34,6 +47,7 @@ from __future__ import annotations
 import gc
 import sys
 import zipimport
+from dataclasses import replace
 
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
@@ -116,18 +130,51 @@ def compute_spans(content_node, content_text: str) -> list[dict]:
     return spans
 
 
-def _extract_row(url, html, options) -> tuple:
+class _PageMemo:
+    """The kernel's one-entry page memo: the key of the last page run
+    through the cascade (its html bytes, plus its url under
+    ``include_links``) and its url-free output — a reject reason, or the
+    result without its trees plus its serialized content columns."""
+
+    __slots__ = ("key", "reject", "result", "columns")
+
+    def __init__(self):
+        self.key = None
+
+    def store(self, key, reject=None, result=None, columns=None) -> None:
+        self.key, self.reject, self.result, self.columns = key, reject, result, columns
+
+
+def _row(m, columns: tuple) -> tuple:
+    content_text, comments_text, content_html, comments_html, spans = columns
+    return (
+        content_text, comments_text, content_html, comments_html,
+        m.title, m.author, m.url, m.hostname, m.description, m.sitename,
+        m.date, m.categories, m.tags, m.license, m.language, m.image,
+        m.page_type,
+        None,
+        spans,
+    )
+
+
+def _extract_row(url, html, options, memo: _PageMemo | None = None) -> tuple:
     """Returns the kernel-computed values in OUTPUT_COLUMNS order (the
     pass-through url, warc_ts and lang are left out):
     (content_text, comments_text, content_html, comments_html, title,
      author, meta_url, hostname, description, sitename, date,
      categories, tags, license, language, image, page_type,
-     reject_reason, content_spans)."""
+     reject_reason, content_spans).
+
+    A page whose key equals the ``memo``'s skips the cascade: only
+    ``core.bind_url`` runs, for this row's url."""
     from . import etree
-    from .core import ExtractError, extract
+    from .core import ExtractError, bind_url, extract
 
     def rejected(reason: str) -> tuple:
         return (None,) * 17 + (reason, None)
+
+    def reason_of(e: Exception) -> str:
+        return e.reason if isinstance(e, ExtractError) else "parse_error"
 
     if html is None:
         return rejected("null_html")
@@ -140,6 +187,20 @@ def _extract_row(url, html, options) -> tuple:
         return rejected("not_html")
 
     opts = options.make_options(url)
+    # Under include_links content_html holds hrefs resolved against the
+    # url, so the url is part of the key.
+    key = (html, url) if opts.include_links else html
+    if memo is None:
+        memo = _PageMemo()
+    if memo.key == key:
+        if memo.reject is not None:
+            return rejected(memo.reject)
+        try:
+            res = bind_url(memo.result, url, opts)
+        except Exception as e:
+            return rejected(reason_of(e))
+        return _row(res.metadata, memo.columns)
+
     # Register every Element created for this row and break all their
     # parent/children cycles on the way out: Element trees are cyclic,
     # so without this they wait for the cycle collector — a measured
@@ -151,23 +212,23 @@ def _extract_row(url, html, options) -> tuple:
     try:
         try:
             res = extract(html, opts)
-        except ExtractError as e:
-            return rejected(e.reason)
-        except Exception:
-            return rejected("parse_error")
+        except Exception as e:
+            reason = reason_of(e)
+            # Only has_essential_metadata makes a reject depend on the url
+            if not opts.has_essential_metadata:
+                memo.store(key, reject=reason)
+            return rejected(reason)
 
-        m = res.metadata
-        return (
+        columns = (
             res.content_text,
             res.comments_text,
             etree.tostring(res.content_node) if res.content_node is not None else "",
             etree.tostring(res.comments_node) if res.comments_node is not None else "",
-            m.title, m.author, m.url, m.hostname, m.description, m.sitename,
-            m.date, m.categories, m.tags, m.license, m.language, m.image,
-            m.page_type,
-            None,
             compute_spans(res.content_node, res.content_text),
         )
+        memo.store(key, result=replace(res, content_node=None, comments_node=None),
+                   columns=columns)
+        return _row(res.metadata, columns)
     finally:
         etree.track_elements(None)
         etree.release_elements(elements)
@@ -268,6 +329,9 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
         # honest attestation.
         gc_was_enabled = gc.isenabled()
         gc.disable()
+        # One memo per task, kept across its batches: the exchange puts
+        # every copy of a page next to each other in one task.
+        memo = _PageMemo()
         try:
             for batch_id, batch in enumerate(batches):
                 t0 = time.monotonic()
@@ -280,7 +344,7 @@ def make_arrow_kernel(kernel_options: KernelOptions | None = None):
                 computed = [c for c in OUTPUT_COLUMNS if c not in ("url", "warc_ts", "lang")]
                 col_lists: dict[str, list] = {c: [] for c in computed}
                 for u, h in zip(urls, htmls):
-                    row = _extract_row(u, h, ko)
+                    row = _extract_row(u, h, ko, memo)
                     for c, value in zip(computed, row):
                         col_lists[c].append(value)
 

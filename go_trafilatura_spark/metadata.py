@@ -12,9 +12,10 @@ of scope (SURVEY.md §7.4).
 from __future__ import annotations
 
 import html as html_mod
+import itertools
 import json
 import re as stdlib_re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import regex
 
@@ -129,6 +130,17 @@ class Metadata:
     language: str = ""
     image: str = ""
     page_type: str = ""
+
+
+@dataclass(frozen=True)
+class UrlTail:
+    """What a page says about the metadata fields that depend on its
+    url (url, hostname, image, date, sitename); ``bind_metadata`` derives
+    them from it and the url the page was fetched from."""
+    url: str = ""  # the page's own url (canonical link, og:url, ...), unvalidated
+    image: str = ""  # the page's image url, unresolved
+    sitename: str = ""  # the page's own sitename, normalized; "" when it names none
+    dates: tuple = ()  # ``page_dates``: the page's (tier, date) candidates
 
 
 # UAX#29 word-break classes of the ASCII/quote joiners x/text honors:
@@ -1233,24 +1245,14 @@ def _scan_all_dates(text: str) -> list[str]:
     return out
 
 
-def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
-    """Yield (tier, date) pairs in cascade priority order — each tier's
-    FIRST valid candidate, lazily (fast mode stops at the first yield,
-    so tier cost is only paid when every earlier tier came up empty).
-    Tier semantics are the round-3 cascade unchanged, except that a full
-    /YYYY/MM/DD/ URL date outranks published meta tags (go-htmldate
-    checks meta first; measured: 92.5% tier reliability vs 89.2% on the
-    comparison corpus, and 4 of 6 contested pages favor the URL)."""
+def _date_tier_candidates(doc: Element, extensive: bool, index):
+    """Yield the page's (tier, date) pairs in cascade priority order —
+    each tier's FIRST valid candidate, lazily (fast mode stops at the
+    first yield, so tier cost is only paid when every earlier tier came
+    up empty). The url's two tiers are not here: ``_bind_date`` merges
+    them in at their slots. Tier semantics are the round-3 cascade
+    unchanged."""
     reserve = ""
-
-    url_date = ""
-    if url:
-        m = _RX_URL_DATE.search(url)
-        if m:
-            url_date = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
-
-    if url_date:
-        yield "url", url_date
 
     # published meta tags; modified keys feed the reserve
     meta_pub = ""
@@ -1413,20 +1415,7 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
             date = _parse_date_string(m.group(1))
             if date:
                 yield "embedded_json", date
-        # Late URL patterns: dash-separated dates in the path (yyyy-mm-dd
-        # first, dd-mm-yyyy as fallback — the fallback also applies when
-        # the first form matched but failed date validation)
-        if url:
-            date = ""
-            m = stdlib_re.search(r"/(\d{4})-(\d{2})-(\d{2})(?:[/.]|$)", url)
-            if m:
-                date = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
-            if not date:
-                m = stdlib_re.search(r"/(\d{2})-(\d{2})-(\d{4})(?:[/.]|$)", url)
-                if m:
-                    date = _valid_date(int(m.group(3)), int(m.group(2)), int(m.group(1)))
-            if date:
-                yield "url_dash", date
+        # (the url's dash-separated path date has its slot here)
         # Whole-document frequency pick over the SERIALIZED html,
         # earliest on ties (original-date preference).
         found = _scan_all_dates(whole)
@@ -1441,32 +1430,70 @@ def _date_tier_candidates(doc: Element, url: str, extensive: bool, index):
                 d for d, n in counts.items() if n == top_n)[0]
 
 
-def extract_date_fast(doc: Element, url: str, extensive: bool = False,
-                      index=None) -> str:
+def _url_dates(url: str, extensive: bool) -> tuple[str, str]:
+    """The url's two date tiers: a full /YYYY/MM/DD/ path date, which
+    outranks every page tier (go-htmldate checks meta first; measured:
+    92.5% tier reliability vs 89.2% on the comparison corpus, and 4 of 6
+    contested pages favor the URL), and, in extensive mode only, a
+    dash-separated path date just before the frequency scan (yyyy-mm-dd
+    first, dd-mm-yyyy as fallback — the fallback also applies when the
+    first form matched but failed date validation)."""
+    full = dash = ""
+    if not url:
+        return full, dash
+    m = _RX_URL_DATE.search(url)
+    if m:
+        full = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
+    if extensive:
+        m = stdlib_re.search(r"/(\d{4})-(\d{2})-(\d{2})(?:[/.]|$)", url)
+        if m:
+            dash = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
+        if not dash:
+            m = stdlib_re.search(r"/(\d{2})-(\d{2})-(\d{4})(?:[/.]|$)", url)
+            if m:
+                dash = _valid_date(int(m.group(3)), int(m.group(2)), int(m.group(1)))
+    return full, dash
+
+
+def page_dates(doc: Element, extensive: bool, index=None) -> tuple:
+    """The page's date candidates for ``_bind_date``: every (tier, date)
+    pair in extensive mode, only the first in fast mode."""
+    if index is None:
+        index = selectors.TagIndex(doc)
+    gen = _date_tier_candidates(doc, extensive, index)
+    if extensive:
+        return tuple(gen)
+    return tuple(itertools.islice(gen, 1))
+
+
+def _bind_date(dates: tuple, url: str, extensive: bool) -> str:
     """htmldate-style publish-date cascade with original-date preference
     (go-htmldate runs with UseOriginalDate=true — metadata.go:98):
     url full date → published meta → time/abbr elements → JSON-LD →
     date-classed containers → modified-date reserve → (extensive only)
     full-document scan choosing the most frequent, earliest candidate.
+    ``dates`` are the page's tiers (``page_dates``); the url's tiers
+    are merged in at their slots.
 
-    Fast mode returns the first tier hit (lazy — later tiers never
-    run). Extensive mode drains every tier and applies ONE per-page
-    arbitration on top of cascade order: when the cascade winner and an
-    alternative candidate differ by EXACTLY one calendar day (the
-    timezone-skew signature: a meta datetime stamped in another zone
-    renders a different day than the visible date) and at least two
-    more tiers agree on the alternative, the majority day wins (ties in
-    support break by cascade order). Measured on the comparison corpus:
-    +4 exact (643 → 647 of 733); broader voting/reordering rules all
-    measured net-negative (NOTES.md round-4 log)."""
-    if index is None:
-        index = selectors.TagIndex(doc)
-    gen = _date_tier_candidates(doc, url, extensive, index)
+    Fast mode returns the first tier hit. Extensive mode takes every
+    tier and applies ONE per-page arbitration on top of cascade order:
+    when the cascade winner and an alternative candidate differ by
+    EXACTLY one calendar day (the timezone-skew signature: a meta
+    datetime stamped in another zone renders a different day than the
+    visible date) and at least two more tiers agree on the alternative,
+    the majority day wins (ties in support break by cascade order).
+    Measured on the comparison corpus: +4 exact (643 → 647 of 733);
+    broader voting/reordering rules all measured net-negative (NOTES.md
+    round-4 log)."""
+    full, dash = _url_dates(url, extensive)
     if not extensive:
-        for _tier, val in gen:
-            return val
-        return ""
-    cands = [(t, v) for t, v in gen]
+        return full or (dates[0][1] if dates else "")
+    cands = list(dates)
+    if dash:
+        freq = len(cands) - (1 if cands and cands[-1][0] == "freq_scan" else 0)
+        cands.insert(freq, ("url_dash", dash))
+    if full:
+        cands.insert(0, ("url", full))
     if not cands:
         return ""
     first = cands[0][1]
@@ -1496,11 +1523,30 @@ def extract_date_fast(doc: Element, url: str, extensive: bool = False,
     return best if best is not None else first
 
 
+def extract_date_fast(doc: Element, url: str, extensive: bool = False,
+                      index=None) -> str:
+    """The publish date of ``doc`` served under ``url`` (``_bind_date``)."""
+    return _bind_date(page_dates(doc, extensive, index), url, extensive)
+
+
 # ---------------------------------------------------------------------------
 # Orchestrator (metadata.go:121-265)
 # ---------------------------------------------------------------------------
 
-def extract_metadata(doc: Element, options) -> Metadata:
+def _date_mode(options) -> bool | None:
+    """None when date extraction is disabled, else whether it runs
+    extensive. Default mode follows the reference (metadata.go:195-200):
+    extensive when fallback is enabled, fast otherwise."""
+    if options.date_mode == "disabled":
+        return None
+    return options.date_mode == "extensive" or (
+        options.date_mode == "default" and options.enable_fallback)
+
+
+def extract_metadata(doc: Element, options) -> tuple[Metadata, UrlTail]:
+    """The page's metadata, computed without its url: the url-dependent
+    fields are left empty and their inputs returned as the ``UrlTail``
+    that ``bind_metadata`` completes them from."""
     # One doc-order tag index shared by every meta/DOM selector scan in
     # the cascade (the tree is not mutated between them).
     index = selectors.TagIndex(doc)
@@ -1521,35 +1567,8 @@ def extract_metadata(doc: Element, options) -> Metadata:
     if metadata.url == "":
         metadata.url = extract_dom_url(doc, index)
 
-    if metadata.url != "":
-        valid_url, is_abs = validate_url(metadata.url, options.original_url)
-        if valid_url != "" and is_abs:
-            metadata.url = valid_url
-        else:
-            metadata.url = ""
-
-    if metadata.url == "" and options.original_url:
-        metadata.url = options.original_url
-
-    if metadata.url != "":
-        metadata.hostname = get_domain_url(metadata.url)
-
-    if metadata.image != "":
-        valid_url, is_abs = validate_url(metadata.image, options.original_url)
-        if valid_url != "" and is_abs:
-            metadata.image = valid_url
-        else:
-            metadata.image = ""
-
-    if options.date_mode != "disabled":
-        # Default mode follows the reference (metadata.go:195-200):
-        # extensive when fallback is enabled, fast otherwise.
-        extensive = (
-            options.date_mode == "extensive"
-            or (options.date_mode == "default" and options.enable_fallback)
-        )
-        metadata.date = extract_date_fast(
-            doc, metadata.url, extensive=extensive, index=index)
+    extensive = _date_mode(options)
+    dates = () if extensive is None else page_dates(doc, extensive, index)
 
     if metadata.sitename == "":
         metadata.sitename = extract_dom_sitename(doc)
@@ -1560,10 +1579,6 @@ def extract_metadata(doc: Element, options) -> Metadata:
         first = metadata.sitename[:1]
         if "." not in metadata.sitename and first and not first.isupper():
             metadata.sitename = title_case(metadata.sitename)
-    elif metadata.url:
-        m = RX_SITENAME_FINDER.search(metadata.url)
-        if m:
-            metadata.sitename = m.group(1)
 
     if not metadata.categories:
         metadata.categories = extract_dom_categories(doc, index)
@@ -1577,4 +1592,38 @@ def extract_metadata(doc: Element, options) -> Metadata:
 
     metadata.license = extract_license(index)
 
-    return metadata
+    tail = UrlTail(metadata.url, metadata.image, metadata.sitename, dates)
+    metadata.url = metadata.image = metadata.sitename = ""
+    return metadata, tail
+
+
+def page_url(own: str, url: str | None) -> str:
+    """The page's url: its own url resolved against ``url`` when that
+    gives an absolute url, else ``url`` itself ("" when unknown)."""
+    if own != "":
+        valid_url, is_abs = validate_url(own, url)
+        if valid_url != "" and is_abs:
+            return valid_url
+    return url or ""
+
+
+def bind_metadata(metadata: Metadata, tail: UrlTail, url: str | None, options) -> Metadata:
+    """``metadata`` with its url-dependent fields derived from ``tail``
+    for a page fetched from ``url`` (None or "" when unknown). It reads
+    nothing else of the page, so one url-free ``extract_metadata``
+    result binds to any number of urls."""
+    bound = page_url(tail.url, url)
+    image = ""
+    if tail.image != "":
+        valid_url, is_abs = validate_url(tail.image, url)
+        if valid_url != "" and is_abs:
+            image = valid_url
+    extensive = _date_mode(options)
+    date = "" if extensive is None else _bind_date(tail.dates, bound, extensive)
+    sitename = tail.sitename
+    if sitename == "" and bound:
+        m = RX_SITENAME_FINDER.search(bound)
+        if m:
+            sitename = m.group(1)
+    return replace(metadata, url=bound, hostname=get_domain_url(bound) if bound else "",
+                   image=image, date=date, sitename=sitename)

@@ -1,11 +1,12 @@
-"""DataFrame pipeline: scan → skew-safe salted repartition → Arrow
-kernel → sink, plus the resumable per-partition lineage manifest.
+"""DataFrame pipeline: scan → content-keyed exchange → Arrow kernel →
+sink, plus the resumable per-partition lineage manifest.
 
 This is the Spark lifecycle from SURVEY.md §3.4:
 
     spark.read.parquet(pages)                 -- Catalyst scan, col pruning
       .where(optional lang/size prefilter)    -- predicate pushdown
-      .repartition(N, salted url hash)        -- explicit skew-safe shuffle
+      .repartition(N, xxhash64(html))         -- one exchange, keyed on content
+      .sortWithinPartitions(xxhash64(html))   -- copies of a page adjacent
       .mapInArrow(extract_kernel, OUT)        -- Arrow batches → cascade
       .write.parquet(...)                     -- idempotent per-shard commit
 
@@ -13,14 +14,20 @@ Design for 100 TB / 1000 executors:
 - Column pruning: we select exactly (url, warc_ts, html, lang) before the
   kernel; Catalyst pushes the projection into the parquet scan so `text`
   (the widest column after html) is never read.
-- Skew: Common-Crawl rows cluster by host; a pure url hash is fine for
-  CPU-uniform work, but giant-host skew at read time is defeated with
-  xxhash64(url) ⊕ a per-row salt over SALT_BUCKETS. AQE coalesces small
-  partitions after the exchange.
+- Work sharing: a crawl re-publishes the same bytes under many urls. The
+  exchange hashes the html, so every copy of a page lands in one task,
+  and the sort in the same stage puts the copies next to each other; the
+  kernel runs the cascade once per run of equal pages and binds each
+  copy's url with a cheap pure tail (kernel.py). A hot page costs one
+  cascade run plus one tail per copy in its task. Null and oversized
+  html, which the kernel rejects unparsed, keep the url hash.
+  ``salted_repartition`` (url hash) stays for callers that partition
+  rows before their html exists or pre-partition their input.
 - Arrow batches are capped (maxRecordsPerBatch) because rows are fat.
-- Resume: each task writes a manifest row (partition id, input split
-  hash, row count). A re-run anti-joins the manifest to skip completed
-  shards; the parquet commit protocol keeps retries idempotent.
+- Resume: each url-hash bucket commits with a manifest row (bucket id,
+  row count, reject count, input path, bucket count). A re-run skips
+  the buckets the manifest names; the parquet commit protocol keeps
+  retries idempotent.
 """
 
 from __future__ import annotations
@@ -30,7 +37,7 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .kernel import KernelOptions, extract_stage
+from .kernel import DEFAULT_MAX_HTML_BYTES, KernelOptions, extract_stage
 
 SALT_BUCKETS = 64
 ARROW_BATCH_SIZE = 512
@@ -217,14 +224,24 @@ def extract_pages(
 def _extract_pages(df: DataFrame, options: dict | None, num_partitions: int | None,
                    lang_filter: str | None = None, repartition: bool = True,
                    with_timing: bool = False) -> DataFrame:
-    """select → [lang filter] → [salted_repartition] → mapInArrow: the
-    one extraction plan behind extract_pages and extract_pages_timed."""
+    """select → [lang filter] → [exchange on the html hash, sorted
+    within each partition] → mapInArrow: the one extraction plan behind
+    extract_pages and extract_pages_timed. ``repartition=False`` keeps
+    the input's partitions and order (streaming cannot sort)."""
     cols = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
     pruned = df.select(*cols)
     if lang_filter:
         pruned = pruned.where(F.col("lang") == lang_filter)
     if repartition:
-        pruned = salted_repartition(pruned, num_partitions)
+        # Every copy of a page lands in one task, next to the others, so
+        # the kernel's page memo runs the cascade once per distinct page.
+        # Rows the kernel rejects unparsed keep the url hash: xxhash64
+        # skips nulls, so every null html would share one key, and the
+        # copies of an oversized page would share one Arrow batch.
+        unparsed = F.col("html").isNull() | (F.octet_length("html") > DEFAULT_MAX_HTML_BYTES)
+        key = F.when(unparsed, F.xxhash64("url")).otherwise(F.xxhash64("html"))
+        n = num_partitions or pruned.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        pruned = pruned.repartition(int(n), key).sortWithinPartitions(key)
     return extract_stage(pruned, KernelOptions(options or {}, with_timing=with_timing))
 
 
@@ -338,10 +355,12 @@ def extract_pages_resumable(
 
     Work is bucketed by xxhash64(url) % num_partitions; each completed
     bucket commits its output under bucket=<id>/ plus a manifest row
-    (bucket id, row count, input path, bucket count). A re-run reads the
+    (bucket id, row count, reject count, input path, bucket count),
+    counted on the write pass. A re-run reads the
     manifest and processes only missing buckets — per-partition lineage
     + checkpointed resume per the north rule — and raises ValueError
-    when the manifest names another input path or bucket count. The
+    when the manifest names another input path or bucket count, or has
+    no reject count. The
     commit goes through a TableSink (parquet emulation locally,
     IcebergSink on a cluster); the task-commit /
     snapshot protocol of the backend makes partial retries invisible,
@@ -358,7 +377,7 @@ def extract_pages_resumable(
     )
 
     try:
-        mdf = manifest_sink.read(spark)
+        mdf = _read_manifest(spark, manifest_sink)
     except FileNotFoundError:  # no manifest yet
         done_buckets: set[int] = set()
     else:
@@ -393,19 +412,46 @@ def extract_pages_resumable(
 
     todo_buckets = sorted(set(range(num_partitions)) - done_buckets)
     obs = Observation("bucket_counts")
+    rejected = F.col("reject_reason").isNotNull()
     count_exprs = [
-        F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(f"b{b}")
+        expr
         for b in todo_buckets
+        for expr in (
+            F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(f"b{b}"),
+            F.sum(F.when((F.col("bucket") == b) & rejected, 1).otherwise(0)).alias(f"r{b}"),
+        )
     ]
     result = result.observe(obs, *count_exprs)
     sink.append(result)
 
     observed = obs.get
     manifest_sink.append(spark.createDataFrame(
-        [(b, int(observed[f"b{b}"] or 0), input_path, num_partitions) for b in todo_buckets],
-        "bucket INT, row_count BIGINT, input_path STRING, num_partitions INT"))
+        [(b, int(observed[f"b{b}"] or 0), int(observed[f"r{b}"] or 0), input_path,
+          num_partitions) for b in todo_buckets],
+        "bucket INT, row_count BIGINT, reject_count BIGINT, input_path STRING, "
+        "num_partitions INT"))
 
     return sink.read(spark)
+
+
+def _read_manifest(spark: SparkSession, manifest_sink: TableSink) -> DataFrame:
+    """The resume manifest's rows; ValueError when it predates the
+    reject_count column (re-run the job into a new output)."""
+    mdf = manifest_sink.read(spark)
+    if "reject_count" not in mdf.columns:
+        raise ValueError("resume manifest has no reject_count column; it was "
+                         "written by an older version: extract into a new output")
+    return mdf
+
+
+def resume_counts(spark: SparkSession, output_path: str,
+                  manifest_sink: TableSink | None = None) -> tuple[int, int]:
+    """(rows, rejected) of a resumable extraction's whole output, summed
+    from its manifest, so the output table is never scanned."""
+    manifest_sink = manifest_sink or ParquetSink(manifest_path(output_path), partition_by=())
+    rows, rejected = _read_manifest(spark, manifest_sink).agg(
+        F.sum("row_count"), F.sum("reject_count")).first()
+    return int(rows or 0), int(rejected or 0)
 
 
 # ---------------------------------------------------------------------------

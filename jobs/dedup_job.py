@@ -73,6 +73,12 @@ def main() -> int:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", str(args.partitions))
 
+    # Each action runs under a description naming its job step, so the
+    # event log's stages map to the steps (reading the input's schema,
+    # the clusters stage's eager checkpoints and the fan-out probes run
+    # while the stage is built).
+    describe = spark.sparkContext.setJobDescription
+    describe(f"dedup_job --stage {args.stage}: read the input and build the stage")
     docs = spark.read.parquet(args.input)
 
     if args.stage == "exact":
@@ -118,12 +124,14 @@ def main() -> int:
 
     obs = Observation("dedup_metrics")
     observed = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+    describe(f"dedup_job --stage {args.stage}: run the stage and write its output")
     observed.write.mode("overwrite").parquet(args.output)
     metrics = {"stage": args.stage, "rows": int(obs.get["rows"]),
                "output": args.output}
     if args.stage == "all":
         for h in handles:
             h.unpersist()
+        describe("dedup_job --stage all: count the input documents")
         metrics["docs_in"] = docs.count()
         metrics["docs_out"] = metrics["rows"]
     print(json.dumps(metrics))

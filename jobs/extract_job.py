@@ -7,8 +7,10 @@
 
 The job reads the north-rule pages table, runs the Arrow extraction
 kernel, and writes parquet. With --resume it uses the bucket-manifest
-protocol (skip completed url-hash buckets on re-run). Observation
-metrics (row/reject counts) print as one JSON line on completion.
+protocol (skip completed url-hash buckets on re-run). Row and reject
+counts print as one JSON line on completion: from an Observation on the
+write pass, or with --resume from the manifest, which counts every
+bucket written so far; neither reads the output back.
 """
 
 from __future__ import annotations
@@ -36,12 +38,15 @@ def main() -> int:
 
     from go_trafilatura_spark.pipeline import (
         ARROW_BATCH_SIZE, extract_pages, extract_pages_resumable, read_pages,
-        write_extracted,
+        resume_counts, write_extracted,
     )
 
     spark = SparkSession.builder.appName("gts-extract").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
+    # Each action runs under a description naming its job step, so the
+    # event log's stages map to the steps below.
+    describe = spark.sparkContext.setJobDescription
 
     options: dict = {}
     if args.favor == "precision":
@@ -52,14 +57,14 @@ def main() -> int:
         options["config"] = {"min_extracted_size": args.min_extracted_size}
 
     if args.resume:
-        out = extract_pages_resumable(
+        describe("extract_job --resume: read the manifest, extract and append the missing buckets")
+        extract_pages_resumable(
             spark, args.input, args.output, options, args.partitions
         )
-        n, rejected = out.agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("reject_reason").isNotNull().cast("long")),
-        ).first()
+        describe("extract_job --resume: sum the manifest's row and reject counts")
+        n, rejected = resume_counts(spark, args.output)
     else:
+        describe("extract_job: read, extract and write the pages")
         pages = read_pages(spark, args.input)
         extracted = extract_pages(
             pages, options, num_partitions=args.partitions, lang_filter=args.lang

@@ -9,7 +9,7 @@ import os
 import pytest
 
 from go_trafilatura_spark import etree
-from go_trafilatura_spark.metadata import extract_metadata
+from go_trafilatura_spark.metadata import bind_metadata, extract_metadata
 from go_trafilatura_spark.options import Options
 
 MOCK_DIR = "/root/reference/test-files/mock"
@@ -22,7 +22,8 @@ pytestmark = pytest.mark.skipif(
 def meta_for(fname: str, url: str):
     with open(os.path.join(MOCK_DIR, fname), "rb") as f:
         doc = etree.parse_html(f.read())
-    return extract_metadata(doc, Options(original_url=url))
+    opts = Options(original_url=url)
+    return bind_metadata(*extract_metadata(doc, opts), url, opts)
 
 
 def test_blog_python_org():

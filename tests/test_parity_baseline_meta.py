@@ -7,6 +7,7 @@ cases of /root/reference/metadata_test.go.
 from go_trafilatura_spark import etree
 from go_trafilatura_spark.baseline import baseline
 from go_trafilatura_spark.metadata import (
+    bind_metadata,
     extract_metadata,
     normalize_authors,
     title_case,
@@ -20,7 +21,8 @@ def doc_from_str(s: str):
 
 
 def meta(html: str, url: str | None = None):
-    return extract_metadata(doc_from_str(html), Options(original_url=url))
+    opts = Options(original_url=url)
+    return bind_metadata(*extract_metadata(doc_from_str(html), opts), url, opts)
 
 
 # --- Test_Baseline (baseline_test.go:32-165) --------------------------------

@@ -9,7 +9,7 @@ import os
 import pytest
 
 from go_trafilatura_spark import etree
-from go_trafilatura_spark.metadata import extract_metadata
+from go_trafilatura_spark.metadata import bind_metadata, extract_metadata
 from go_trafilatura_spark.options import Options
 
 SIMPLE_DIR = "/root/reference/test-files/simple"
@@ -22,7 +22,7 @@ pytestmark = pytest.mark.skipif(
 def meta_from_file(name: str):
     with open(os.path.join(SIMPLE_DIR, name), "rb") as f:
         doc = etree.parse_html(f.read())
-    return extract_metadata(doc, Options())
+    return bind_metadata(*extract_metadata(doc, Options()), None, Options())
 
 
 # (file, {field: expected}) — metadata-json_test.go:12-176

@@ -7,12 +7,14 @@ Transcribed from /root/reference/metadata_test.go:313-573.
 import pytest
 
 from go_trafilatura_spark import etree
-from go_trafilatura_spark.metadata import extract_dom_url, extract_metadata
+from go_trafilatura_spark.metadata import bind_metadata, extract_dom_url, extract_metadata
 from go_trafilatura_spark.options import Options
 
 
 def meta(raw_html: str, opts: Options | None = None):
-    return extract_metadata(etree.parse_html(raw_html), opts or Options())
+    opts = opts or Options()
+    return bind_metadata(*extract_metadata(etree.parse_html(raw_html), opts),
+                         opts.original_url, opts)
 
 
 URL_CASES = [
@@ -226,4 +228,4 @@ def test_metadata_title_from_file():
     with open(path, "rb") as f:
         doc = etree.parse_html(f.read())
     from go_trafilatura_spark.metadata import extract_metadata
-    assert extract_metadata(doc, Options()).title == "Semantic satiation"
+    assert extract_metadata(doc, Options())[0].title == "Semantic satiation"

@@ -6,13 +6,18 @@ Transcribed from /root/reference/metadata_test.go:35-313.
 import pytest
 
 from go_trafilatura_spark import etree
-from go_trafilatura_spark.metadata import extract_metadata, remove_blacklisted_authors
+from go_trafilatura_spark.metadata import (
+    bind_metadata,
+    extract_metadata,
+    remove_blacklisted_authors,
+)
 from go_trafilatura_spark.options import Options
 
 
 def meta(raw_html: str, opts: Options | None = None):
     doc = etree.parse_html(raw_html)
-    return extract_metadata(doc, opts or Options())
+    opts = opts or Options()
+    return bind_metadata(*extract_metadata(doc, opts), opts.original_url, opts)
 
 
 def test_metadata_main():

@@ -94,6 +94,57 @@ def test_partition_time_stats(spark, smoke_dir):
     assert "content_text" in timed.columns
 
 
+def _plan_lines(df) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def test_extract_plan_exchange_keyed_on_content(spark, smoke_dir):
+    """extract_pages shuffles once, on the html hash, and sorts on it in
+    the kernel's stage, so every copy of a page reaches the kernel next
+    to the others; repartition=False (streaming, pre-partitioned input)
+    has neither the exchange nor the sort."""
+    pages = read_pages(spark, os.path.join(smoke_dir, "pages.parquet"))
+    lines = _plan_lines(extract_pages(pages, num_partitions=4))
+    exchanges = [i for i, l in enumerate(lines) if "Exchange" in l]
+    assert len(exchanges) == 1, lines
+    x = exchanges[0]
+    assert "xxhash64(html" in lines[x] and "xxhash64(url" in lines[x], lines[x]
+    assert "Sort [" in lines[x - 1] and "xxhash64(html" in lines[x - 1], lines
+    assert "MapInArrow" in lines[x - 2], lines
+    flat = _plan_lines(extract_pages(pages, repartition=False))
+    assert not [l for l in flat if "Exchange" in l or "Sort [" in l], flat
+
+
+def test_extract_copies_share_a_task_and_unparsed_rows_spread(spark, smoke_dir):
+    """Copies of a page under other urls land in one partition; rows
+    the kernel rejects unparsed (null or oversized html) are spread by
+    their url, not piled into one."""
+    from go_trafilatura_spark.kernel import DEFAULT_MAX_HTML_BYTES
+
+    pages = read_pages(spark, os.path.join(smoke_dir, "pages.parquet")).limit(8)
+    copies = pages.select(F.concat("url", F.lit("-copy")).alias("url"), "warc_ts", "html",
+                          "text", "lang")
+    nulls = spark.range(40).select(
+        F.format_string("https://null%d.example/p", "id").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"), F.lit(None).cast("binary").alias("html"),
+        F.lit(None).cast("string").alias("text"), F.lit("en").alias("lang"))
+    big = b"<html>" + b"x" * DEFAULT_MAX_HTML_BYTES
+    oversized = spark.range(4).select(
+        F.format_string("https://big%d.example/p", "id").alias("url"),
+        F.lit(None).cast("timestamp").alias("warc_ts"), F.lit(big).alias("html"),
+        F.lit(None).cast("string").alias("text"), F.lit("en").alias("lang"))
+    out = extract_pages(pages.unionByName(copies).unionByName(nulls).unionByName(oversized),
+                        num_partitions=4)
+    rows = out.select("url", "reject_reason", "content_text",
+                      F.spark_partition_id().alias("pid")).collect()
+    by_url = {r["url"]: r for r in rows}
+    for url in [r["url"] for r in pages.select("url").collect()]:
+        assert by_url[url]["pid"] == by_url[url + "-copy"]["pid"]
+        assert by_url[url]["content_text"] == by_url[url + "-copy"]["content_text"]
+    for reason in ("null_html", "oversized"):
+        assert len({r["pid"] for r in rows if r["reject_reason"] == reason}) > 1, reason
+
+
 def test_resume_manifest(spark, smoke_dir):
     tmp = tempfile.mkdtemp(prefix="gts_resume_")
     try:
@@ -165,12 +216,34 @@ def test_resume_corrupt_manifest_raises(spark, smoke_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_resume_manifest_without_reject_count_raises(spark, smoke_dir):
+    """A manifest from before the reject count was kept cannot give the
+    job's counts: resuming from it raises, naming the column, and
+    appends nothing."""
+    from go_trafilatura_spark.pipeline import manifest_path, resume_counts
+
+    tmp = tempfile.mkdtemp(prefix="gts_resume_")
+    try:
+        pages, out_path = os.path.join(smoke_dir, "pages.parquet"), os.path.join(tmp, "out")
+        spark.createDataFrame(
+            [(0, 5, pages, 4)],
+            "bucket INT, row_count BIGINT, input_path STRING, num_partitions INT",
+        ).write.parquet(manifest_path(out_path))
+        with pytest.raises(ValueError, match="reject_count"):
+            extract_pages_resumable(spark, pages, out_path, num_partitions=4)
+        with pytest.raises(ValueError, match="reject_count"):
+            resume_counts(spark, out_path)
+        assert not os.path.exists(out_path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_resume_sink_backend_swap(spark, smoke_dir):
     """extract_pages_resumable talks only to the TableSink interface:
     a recording in-memory backend receives the same bucketed appends
     the parquet emulation does, and resume skips completed buckets
     based purely on the manifest the sink returns."""
-    from go_trafilatura_spark.pipeline import TableSink, extract_pages_resumable
+    from go_trafilatura_spark.pipeline import TableSink, extract_pages_resumable, resume_counts
 
     class MemorySink(TableSink):
         def __init__(self):
@@ -208,6 +281,10 @@ def test_resume_sink_backend_swap(spark, smoke_dir):
 
     committed = Counter(r["bucket"] for r in out.frames[0])
     assert {r["bucket"]: r["row_count"] for r in manifest.frames[0]} == dict(committed)
+    rejected = Counter(r["bucket"] for r in out.frames[0] if r["reject_reason"] is not None)
+    assert {r["bucket"]: r["reject_count"] for r in manifest.frames[0]} == {
+        b: rejected.get(b, 0) for b in committed}
+    assert resume_counts(spark, "/nonexistent/unused", manifest) == (n1, sum(rejected.values()))
 
     # resume: all buckets done -> no new work, sink untouched
     df2 = extract_pages_resumable(
@@ -301,8 +378,9 @@ def test_streaming_extraction(spark, smoke_dir):
 def test_spark_submit_pyfiles(smoke_dir):
     """End-to-end deployment path: build the --py-files zip and run the
     extraction job through spark-submit (the north rule's launch mode),
-    once plainly and twice with --resume (the second run finds every
-    bucket done and reports the committed table)."""
+    once plainly and twice with --resume. Both resumed runs report the
+    whole table from the manifest: the second finds every bucket done
+    and counts the rows the first committed."""
     import json
     import subprocess
     import sys

@@ -56,7 +56,7 @@ def test_sitename_capitalization_path():
     # metadata.go:227-235: "@" prefix stripped; names with a dot keep
     # their casing; lowercase dot-less sitenames get title-cased.
     from go_trafilatura_spark import etree
-    from go_trafilatura_spark.metadata import extract_metadata
+    from go_trafilatura_spark.metadata import bind_metadata, extract_metadata
     from go_trafilatura_spark.options import Options
 
     html = (
@@ -64,5 +64,5 @@ def test_sitename_capitalization_path():
         '<meta property="og:site_name" content="@der blog"/></head>'
         "<body><p>x</p></body></html>"
     )
-    m = extract_metadata(etree.parse_html(html), Options())
+    m = bind_metadata(*extract_metadata(etree.parse_html(html), Options()), None, Options())
     assert m.sitename == "Der Blog"
