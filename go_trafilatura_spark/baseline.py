@@ -10,7 +10,7 @@ from __future__ import annotations
 import html as html_mod
 import json
 
-from . import css, etree
+from . import css, etree, selectors
 from .etree import Element
 from .utils import trim
 
@@ -23,7 +23,7 @@ _JSONLD_SELECTOR = css.parse_group('script[type="application/ld+json"]')
 
 def basic_cleaning(doc: Element) -> Element:
     """baseline.go:22-28."""
-    for el in reversed(css.query_all(doc, _BASIC_CLEANING_SELECTOR)):
+    for el in reversed(selectors.query_all(doc, _BASIC_CLEANING_SELECTOR)):
         etree.remove(el)
     return doc
 
@@ -60,7 +60,7 @@ def baseline(doc: Element | None) -> tuple[Element, str]:
     tmp_text = ""
 
     # 1. JSON-LD articleBody
-    for script in css.query_all(doc, _JSONLD_SELECTOR):
+    for script in selectors.query_all(doc, _JSONLD_SELECTOR):
         json_text = etree.text_content(script).strip()
         json_text = html_mod.unescape(json_text)
         if not json_text:
@@ -84,7 +84,7 @@ def baseline(doc: Element | None) -> tuple[Element, str]:
     # 2. Basic cleaning, then <article> text
     doc = basic_cleaning(doc)
 
-    article = css.query(doc, "article")
+    article = selectors.query(doc, css.parse_group("article"))
     if article is not None:
         article_text = trim(etree.text_content(article))
         if len(article_text) > 100:

@@ -92,13 +92,10 @@ def _prune_selected(doc: Element, options: Options) -> Element:
     (an unparsable selector prunes nothing)."""
     if options.prune_selector:
         try:
-            sels = css.parse_group(options.prune_selector)
+            rule = css.parse_group(options.prune_selector)
         except ValueError:
-            sels = None
-        if sels:
-            # One rule matching the whole selector group (cascadia group match)
-            group_rule = [lambda n, _ss=sels: any(s.matches(n) for s in _ss)]
-            prune_unwanted_nodes(doc, group_rule)
+            return doc
+        prune_unwanted_nodes(doc, [rule])
     return doc
 
 

@@ -1,4 +1,6 @@
-"""Minimal CSS selector engine over the etree model.
+"""Minimal CSS selector parser over the etree model: ``parse_group``
+turns a selector group into a rule that ``selectors.query``,
+``query_all`` and ``query_iter`` run.
 
 Supports the selector subset the extraction cascade needs (the reference
 uses cascadia for the same subset, e.g. /root/reference/baseline.go:13-20,
@@ -17,9 +19,10 @@ for ``[class*=...]`` (same as real CSS).
 
 from __future__ import annotations
 
+import functools
 import re
 
-from .etree import Element, get_elements_by_tag
+from .etree import Element
 
 _TOKEN = re.compile(
     r"""
@@ -75,20 +78,17 @@ class CompoundSelector:
     The last/ancestor split is precomputed — matches() runs millions of
     times per batch and a per-call slice allocation dominates it."""
 
-    __slots__ = ("parts", "_last", "_ancestors")
+    __slots__ = ("_last", "_ancestors")
 
     def __init__(self, parts: list[SimpleSelector]):
-        self.parts = parts
-        self._last = parts[-1] if parts else None
+        self._last = parts[-1]
         self._ancestors = parts[:-1]
 
     def matches(self, el: Element) -> bool:
-        if self._last is None or not self._last.matches(el):
+        if not self._last.matches(el):
             return False
         remaining = self._ancestors
         idx = len(remaining) - 1
-        if idx < 0:
-            return True
         node = el.parent
         while idx >= 0 and node is not None:
             if remaining[idx].matches(node):
@@ -150,70 +150,28 @@ def _split_outside_brackets(s: str, sep_ws: bool) -> list[str]:
     return parts
 
 
-import functools
-
-
 @functools.lru_cache(maxsize=256)
-def _parse_group_cached(selector: str) -> tuple:
-    return tuple(_parse_group_uncached(selector))
-
-
-def parse_group(selector: str) -> list[CompoundSelector]:
-    return list(_parse_group_cached(selector))
-
-
-def _parse_group_uncached(selector: str) -> list[CompoundSelector]:
-    group: list[CompoundSelector] = []
+def parse_group(selector: str):
+    """A selector group as a ``selectors`` rule: a predicate matching an
+    element that any of the group's compound selectors matches (cascadia
+    group match). Its ``tags`` is the set of final tags when every
+    compound names one and None otherwise, so the candidate scan of
+    ``selectors.query*`` surfaces only those tags. An unparsable
+    selector raises ValueError."""
+    sels = []
     for part in _split_outside_brackets(selector, sep_ws=False):
         part = part.strip()
-        if not part:
-            continue
-        simples = [_parse_simple(tok) for tok in _split_outside_brackets(part, sep_ws=True)]
-        group.append(CompoundSelector(simples))
-    return group
+        if part:
+            sels.append(CompoundSelector(
+                [_parse_simple(tok) for tok in _split_outside_brackets(part, sep_ws=True)]))
+    matchers = tuple(s.matches for s in sels)
 
+    def rule(el: Element) -> bool:
+        for matches in matchers:
+            if matches(el):
+                return True
+        return False
 
-def _candidates(root: Element, sels: list[CompoundSelector],
-                index=None) -> list[Element]:
-    """Traversal pre-filter: when every selector in the group targets
-    the same final tag, walk only those elements (doc order preserved)
-    instead of the whole tree — most metadata selectors are shaped
-    'meta[...]' and this cuts the scan by ~100×. An ``index``
-    (selectors.TagIndex built on this root) replaces the walk with a
-    prebuilt doc-order lookup."""
-    tags = {s._last.tag if s._last is not None else None for s in sels}
-    if len(tags) == 1:
-        tag = tags.pop()
-        if tag is not None and tag != "*":
-            if index is not None:
-                return index.of_tag(tag)
-            return get_elements_by_tag(root, tag)
-    if index is not None:
-        return index.elements
-    return get_elements_by_tag(root, "*")
-
-
-def query_all(root: Element, selector: str | list[CompoundSelector],
-              index=None) -> list[Element]:
-    """dom.QuerySelectorAll — all matching descendants in doc order.
-    ``index`` must have been built on ``root`` itself (not a subtree)."""
-    sels = parse_group(selector) if isinstance(selector, str) else selector
-    out = []
-    for el in _candidates(root, sels, index):
-        for sel in sels:
-            if sel.matches(el):
-                out.append(el)
-                break
-    return out
-
-
-def query(root: Element, selector: str | list[CompoundSelector],
-          index=None) -> Element | None:
-    """dom.QuerySelector — first matching descendant in doc order.
-    ``index`` must have been built on ``root`` itself (not a subtree)."""
-    sels = parse_group(selector) if isinstance(selector, str) else selector
-    for el in _candidates(root, sels, index):
-        for sel in sels:
-            if sel.matches(el):
-                return el
-    return None
+    final = {s._last.tag for s in sels}
+    rule.tags = None if None in final or "*" in final else frozenset(final)
+    return rule

@@ -13,7 +13,7 @@ from __future__ import annotations
 import re
 import xml.etree.ElementTree as xml_etree
 
-from . import css, etree
+from . import css, etree, selectors
 from .utils import create_absolute_url, is_absolute_url
 
 FEED_CONTENT_TYPES = frozenset((
@@ -69,7 +69,7 @@ def parse_feed(payload: bytes | str) -> list[str]:
 def find_feed_url_in_html(payload: bytes | str, base_url: str | None) -> str:
     """<link>/<a rel=alternate type=feed> discovery (feed.go:350-375)."""
     doc = etree.parse_html(payload)
-    for node in css.query_all(doc, "link, a"):
+    for node in selectors.query_all(doc, css.parse_group("link, a")):
         if node.get("rel") != "alternate":
             continue
         href = node.get("href")

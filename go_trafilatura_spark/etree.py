@@ -245,18 +245,12 @@ def iter_all(root: Element, *tags: str) -> list[Element]:
     """etree.Iter — self + descendants in document order, optionally
     filtered by tag (self included only when it matches / no tags given).
     Reference: internal/etree/element.go:31-77."""
-    out: list[Element] = []
-    tagset = frozenset(tags)
-    if not tagset:
-        stack = [root]
-        while stack:
-            node = stack.pop()
-            if node.tag != COMMENT:
-                out.append(node)
-            stack.extend(reversed(node.children))
+    if not tags:
+        out = [] if root.tag == COMMENT else [root]
+        _walk_all(root, out)
         return out
-    if root.tag in tagset:
-        out.append(root)
+    tagset = frozenset(tags)
+    out = [root] if root.tag in tagset else []
     _collect_tags(root, tagset, out)
     return out
 
@@ -284,12 +278,10 @@ def collect_by_tags(root: Element, tags) -> dict:
     GetElementsByTagName calls."""
     tagset = frozenset(tags)
     out: dict[str, list[Element]] = {t: [] for t in tagset}
-    stack = list(reversed(root.children))
-    while stack:
-        node = stack.pop()
-        if node.tag in tagset:
-            out[node.tag].append(node)
-        stack.extend(reversed(node.children))
+    found: list[Element] = []
+    _collect_tags(root, tagset, found)
+    for node in found:
+        out[node.tag].append(node)
     return out
 
 
@@ -336,10 +328,12 @@ def has_nonspace_text(el: Element) -> bool:
 def iter_descendants(root: Element, *tags: str) -> list[Element]:
     """etree.IterDescendants — like iter_all but excludes self.
     Reference: internal/etree/element.go:80-92."""
-    lst = iter_all(root, *tags)
-    if lst and lst[0] is root:
-        return lst[1:]
-    return lst
+    out: list[Element] = []
+    if tags:
+        _collect_tags(root, frozenset(tags), out)
+    else:
+        _walk_all(root, out)
+    return out
 
 
 def _walk_all(el: Element, out: list) -> None:

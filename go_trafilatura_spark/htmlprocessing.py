@@ -47,7 +47,7 @@ def doc_cleaning(doc: Element, options) -> None:
         cleaning_list.update(("table", "td", "th", "tr"))
     else:
         # A figure that holds a table is a table wrapper → make it a div
-        for figure in css.query_all(doc, "figure"):
+        for figure in selectors.query_all(doc, css.parse_group("figure")):
             if etree.get_elements_by_tag(figure, "table"):
                 figure.tag = "div"
 
@@ -381,7 +381,7 @@ def convert_tags(tree: Element, options) -> None:
             if options.exclude_tables
             else _PROTECTED_LINK_SELECTOR_TABLES
         )
-        important = css.query_all(tree, sel)
+        important = selectors.query_all(tree, sel)
         for el in important:
             el.tag = "protected-a"
         etree.strip_tags(tree, "a")
@@ -390,7 +390,7 @@ def convert_tags(tree: Element, options) -> None:
     else:
         from .utils import create_absolute_url
 
-        for el in css.query_all(tree, "a"):
+        for el in selectors.query_all(tree, css.parse_group("a")):
             href = trim(el.get("href"))
             target = trim(el.get("target"))
             el.attrib = {}
@@ -405,7 +405,7 @@ def convert_tags(tree: Element, options) -> None:
             kids = etree.children_of(elem)
             if len(kids) == 1 and kids[0].tag == "span":
                 code_flag = True
-        hljs_elems = css.query_all(elem, _HLJS_SELECTOR)
+        hljs_elems = selectors.query_all(elem, _HLJS_SELECTOR)
         if hljs_elems:
             code_flag = True
             for h in hljs_elems:

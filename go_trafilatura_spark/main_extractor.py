@@ -177,7 +177,7 @@ def is_code_block_element(element: Element) -> bool:
     parent = element.parent
     if parent is not None and "highlight" in parent.get("class"):
         return True
-    code = css.query(element, "code")
+    code = selectors.query(element, css.parse_group("code"))
     if code is not None and len(etree.children_of(element)) == 1:
         return True
     return False
@@ -286,7 +286,7 @@ def handle_paragraphs(element: Element, potential_tags: set, cache, options) -> 
             etree.strip_element(child)
 
     # Clean trailing line breaks (a br/hr with no tail text carries nothing)
-    line_breaks = css.query_all(element, "br,hr")
+    line_breaks = selectors.query_all(element, css.parse_group("br,hr"))
     for br in reversed(line_breaks):
         if br.tail == "":
             etree.remove(br)
@@ -436,7 +436,8 @@ def handle_text_elem(element: Element, potential_tags: set, cache, options) -> E
 
 
 _WILD_SELECTOR_BASE = "blockquote, pre, q, code, p, table, " + 'div[class*="w3-code"]'
-_WILD_SELECTOR_RECALL = (
+_WILD_RULE_BASE = css.parse_group(_WILD_SELECTOR_BASE)
+_WILD_RULE_RECALL = css.parse_group(
     _WILD_SELECTOR_BASE + ", div, " + ", ".join(LB_TAGS[:2]) + ", " + ", ".join(LIST_TAGS)
 )
 
@@ -447,9 +448,9 @@ def recover_wild_text(doc: Element, result_body: Element, potential_tags: set, c
         potential_tags = set(potential_tags)
         potential_tags.add("div")
         potential_tags.update(LB_TAGS)
-        selector_str = _WILD_SELECTOR_RECALL
+        rule = _WILD_RULE_RECALL
     else:
-        selector_str = _WILD_SELECTOR_BASE
+        rule = _WILD_RULE_BASE
 
     search_doc = prune_unwanted_sections(doc, potential_tags, options)
 
@@ -459,7 +460,7 @@ def recover_wild_text(doc: Element, result_body: Element, potential_tags: set, c
         etree.strip_tags(search_doc, "span")
 
     processed_elems = []
-    for element in css.query_all(search_doc, selector_str):
+    for element in selectors.query_all(search_doc, rule):
         processed = handle_text_elem(element, potential_tags, cache, options)
         if processed is not None:
             processed_elems.append(processed)
@@ -492,7 +493,7 @@ def extract_content(doc: Element, cache, options,
     # subtree is cloned before any mutation, so doc stays unchanged
     # across iterations).
     for rule in selectors.CONTENT:
-        subtree = selectors.query(doc, rule, index.candidates(rule))
+        subtree = selectors.query(index, rule)
         if subtree is None:
             continue
 
@@ -573,7 +574,7 @@ def extract_comments(doc: Element, cache, options,
 
     # One doc-order walk serves all four comment rules
     for rule in selectors.COMMENTS:
-        subtree = selectors.query(doc, rule, index.candidates(rule))
+        subtree = selectors.query(index, rule)
         if subtree is None:
             continue
 

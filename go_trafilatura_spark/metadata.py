@@ -106,11 +106,11 @@ META_NAME_IMAGE = frozenset((
     "twitter:image", "twitter:image:src",
 ))
 
-_URL_SELECTORS = (
+_URL_SELECTORS = tuple(map(css.parse_group, (
     'head link[rel="canonical"]',
     "head base",
     'head link[rel="alternate"][hreflang="x-default"]',
-)
+)))
 
 
 @dataclass
@@ -272,12 +272,14 @@ def remove_blacklisted_authors(current: str, options) -> str:
 
 _OG_SELECTOR = css.parse_group('meta[property^="og:"]')
 _HEAD_META_CONTENT = css.parse_group("head meta[content]")
+_SECTION_META = css.parse_group(
+    'head meta[property="article:section"], head meta[name*="subject"]')
 
 
-def extract_open_graph_meta(doc: Element, index=None) -> Metadata:
+def extract_open_graph_meta(index: selectors.TagIndex) -> Metadata:
     """metadata.go:368-409."""
     metadata = Metadata()
-    for node in css.query_all(doc, _OG_SELECTOR, index):
+    for node in selectors.query_all(index, _OG_SELECTOR):
         prop = trim(node.get("property"))
         content = trim(html_mod.unescape(node.get("content")))
         if content == "":
@@ -302,9 +304,9 @@ def extract_open_graph_meta(doc: Element, index=None) -> Metadata:
     return metadata
 
 
-def examine_meta(doc: Element, index=None) -> Metadata:
+def examine_meta(index: selectors.TagIndex) -> Metadata:
     """metadata.go:268-365."""
-    metadata = extract_open_graph_meta(doc, index)
+    metadata = extract_open_graph_meta(index)
     if (
         metadata.title and metadata.author and metadata.url
         and metadata.description and metadata.sitename and metadata.image
@@ -313,7 +315,7 @@ def examine_meta(doc: Element, index=None) -> Metadata:
         return metadata
 
     tmp_sitename = ""
-    for node in css.query_all(doc, _HEAD_META_CONTENT, index):
+    for node in selectors.query_all(index, _HEAD_META_CONTENT):
         content = node.get("content")
         content = RX_HTML_STRIP_TAG.sub("", content)
         content = html_mod.unescape(content)
@@ -498,7 +500,7 @@ _JSONLD_SELECTORS = css.parse_group(
 )
 
 
-def decode_json_ld(doc: Element, index=None) -> tuple[list, list, list]:
+def decode_json_ld(index: selectors.TagIndex) -> tuple[list, list, list]:
     """metadata-json.go:151-300."""
     persons: list[SchemaData] = []
     organizations: list[SchemaData] = []
@@ -545,7 +547,7 @@ def decode_json_ld(doc: Element, index=None) -> tuple[list, list, list]:
                     if isinstance(item, dict):
                         find_important(item, schema_data)
 
-    for script in css.query_all(doc, _JSONLD_SELECTORS, index):
+    for script in selectors.query_all(index, _JSONLD_SELECTORS):
         json_text = etree.text_content(script).strip()
         json_text = html_mod.unescape(json_text)
         if not json_text:
@@ -579,10 +581,10 @@ def decode_json_ld(doc: Element, index=None) -> tuple[list, list, list]:
     return persons, organizations, articles
 
 
-def extract_json_ld(options, doc: Element, original: Metadata, index=None) -> Metadata:
+def extract_json_ld(options, original: Metadata, index: selectors.TagIndex) -> Metadata:
     """metadata-json.go:23-149."""
     metadata = Metadata()
-    persons, organizations, articles = decode_json_ld(doc, index)
+    persons, organizations, articles = decode_json_ld(index)
 
     for article in articles:
         if metadata.author == "":
@@ -682,10 +684,10 @@ def examine_title_element(doc: Element) -> tuple[str, str, str]:
     return title, first, second
 
 
-def extract_dom_meta_selectors(doc: Element, limit: int, rules, index) -> str:
+def extract_dom_meta_selectors(limit: int, rules, index: selectors.TagIndex) -> str:
     """metadata.go:626-640."""
     for rule in rules:
-        for node in selectors.query_all(doc, rule, index.candidates(rule)):
+        for node in selectors.query_all(index, rule):
             text = trim(etree.iter_text(node, " "))
             if 2 < len(text) < limit:
                 return text
@@ -700,7 +702,7 @@ def extract_dom_title(doc: Element, index) -> str:
         if title:
             return title
 
-    title = extract_dom_meta_selectors(doc, 200, selectors.META_TITLE, index)
+    title = extract_dom_meta_selectors(200, selectors.META_TITLE, index)
     if title:
         return title
 
@@ -729,7 +731,7 @@ def _is_under(node: Element, root: Element) -> bool:
     return False
 
 
-def extract_dom_author(doc: Element, index) -> str:
+def extract_dom_author(index: selectors.TagIndex) -> str:
     """metadata.go:490-500. Observationally identical to the reference's
     prune-a-full-clone shape, but prunes only the matched candidate's
     subtree: META_AUTHOR_DISCARD rules are per-element predicates, so
@@ -747,12 +749,11 @@ def extract_dom_author(doc: Element, index) -> str:
     discard_ids: set[int] = set()
 
     for rule in selectors.META_AUTHOR:
-        for node in selectors.query_iter(doc, rule, index.candidates(rule)):
+        for node in selectors.query_iter(index, rule):
             if discards is None:
                 discards = []
                 for drule in selectors.META_AUTHOR_DISCARD:
-                    discards.extend(
-                        selectors.query_all(doc, drule, index.candidates(drule)))
+                    discards.extend(selectors.query_all(index, drule))
                 discard_ids = {id(d) for d in discards}
             skip = False
             anc = node
@@ -773,11 +774,11 @@ def extract_dom_author(doc: Element, index) -> str:
     return ""
 
 
-def extract_dom_url(doc: Element, index=None) -> str:
+def extract_dom_url(index: selectors.TagIndex) -> str:
     """metadata.go:503-540."""
     url = ""
-    for selector in _URL_SELECTORS:
-        element = css.query(doc, selector, index)
+    for rule in _URL_SELECTORS:
+        element = selectors.query(index, rule)
         if element is None:
             continue
         href = trim(element.get("href"))
@@ -786,7 +787,7 @@ def extract_dom_url(doc: Element, index=None) -> str:
             break
 
     if url.startswith("/"):
-        for node in css.query_all(doc, _HEAD_META_CONTENT, index):
+        for node in selectors.query_all(index, _HEAD_META_CONTENT):
             name = trim(node.get("name"))
             prop = trim(node.get("property"))
             attr_type = str_or(name, prop)
@@ -811,7 +812,7 @@ def extract_dom_sitename(doc: Element) -> str:
     return ""
 
 
-def extract_dom_categories(doc: Element, index) -> list[str]:
+def extract_dom_categories(index: selectors.TagIndex) -> list[str]:
     """metadata.go:555-589."""
     categories: list[str] = []
     for rule in selectors.META_CATEGORIES:
@@ -825,8 +826,7 @@ def extract_dom_categories(doc: Element, index) -> list[str]:
             break
 
     if not categories:
-        merged = 'head meta[property="article:section"], head meta[name*="subject"]'
-        for node in css.query_all(doc, merged, index):
+        for node in selectors.query_all(index, _SECTION_META):
             content = trim(node.get("content"))
             if content:
                 categories.append(content)
@@ -1341,7 +1341,7 @@ def _date_tier_candidates(doc: Element, extensive: bool, index):
 
     # JSON-LD datePublished / dateCreated (dateModified as reserve)
     jsonld = ""
-    for script in css.query_all(doc, _JSONLD_SELECTORS, index):
+    for script in selectors.query_all(index, _JSONLD_SELECTORS):
         text = etree.text_content(script)
         m = stdlib_re.search(
             r'"(?:datePublished|dateCreated)"\s*:\s*"([^"]+)"', text
@@ -1455,11 +1455,10 @@ def _url_dates(url: str, extensive: bool) -> tuple[str, str]:
     return full, dash
 
 
-def page_dates(doc: Element, extensive: bool, index=None) -> tuple:
+def page_dates(doc: Element, extensive: bool, index: selectors.TagIndex) -> tuple:
     """The page's date candidates for ``_bind_date``: every (tier, date)
-    pair in extensive mode, only the first in fast mode."""
-    if index is None:
-        index = selectors.TagIndex(doc)
+    pair in extensive mode, only the first in fast mode. ``index`` is a
+    TagIndex of ``doc``."""
     gen = _date_tier_candidates(doc, extensive, index)
     if extensive:
         return tuple(gen)
@@ -1523,10 +1522,9 @@ def _bind_date(dates: tuple, url: str, extensive: bool) -> str:
     return best if best is not None else first
 
 
-def extract_date_fast(doc: Element, url: str, extensive: bool = False,
-                      index=None) -> str:
+def extract_date_fast(doc: Element, url: str, extensive: bool = False) -> str:
     """The publish date of ``doc`` served under ``url`` (``_bind_date``)."""
-    return _bind_date(page_dates(doc, extensive, index), url, extensive)
+    return _bind_date(page_dates(doc, extensive, selectors.TagIndex(doc)), url, extensive)
 
 
 # ---------------------------------------------------------------------------
@@ -1551,21 +1549,21 @@ def extract_metadata(doc: Element, options) -> tuple[Metadata, UrlTail]:
     # the cascade (the tree is not mutated between them).
     index = selectors.TagIndex(doc)
 
-    metadata = examine_meta(doc, index)
+    metadata = examine_meta(index)
     metadata.author = remove_blacklisted_authors(metadata.author, options)
 
-    metadata = extract_json_ld(options, doc, metadata, index)
+    metadata = extract_json_ld(options, metadata, index)
     metadata.author = remove_blacklisted_authors(metadata.author, options)
 
     if metadata.title == "":
         metadata.title = extract_dom_title(doc, index)
 
     if metadata.author == "":
-        metadata.author = extract_dom_author(doc, index)
+        metadata.author = extract_dom_author(index)
         metadata.author = remove_blacklisted_authors(metadata.author, options)
 
     if metadata.url == "":
-        metadata.url = extract_dom_url(doc, index)
+        metadata.url = extract_dom_url(index)
 
     extensive = _date_mode(options)
     dates = () if extensive is None else page_dates(doc, extensive, index)
@@ -1581,7 +1579,7 @@ def extract_metadata(doc: Element, options) -> tuple[Metadata, UrlTail]:
             metadata.sitename = title_case(metadata.sitename)
 
     if not metadata.categories:
-        metadata.categories = extract_dom_categories(doc, index)
+        metadata.categories = extract_dom_categories(index)
     if metadata.categories:
         metadata.categories = clean_cat_tags(metadata.categories)
 

@@ -830,61 +830,74 @@ def prep_article(article: Element, grab: _Grab) -> None:
 
 # --- replaceBrs (prepDocument) -------------------------------------------------
 
+def _is_br(part) -> bool:
+    return type(part) is not str and part.tag == "br"
+
+
+def _is_gap(part) -> bool:
+    """What go-readability's nextNode steps over: whitespace text, and
+    comments (its prepDocument removes them)."""
+    if type(part) is str:
+        return not part.strip()
+    return part.tag == etree.COMMENT
+
+
+def _next_br(parts: list, i: int) -> int:
+    """The index of the br that follows parts[i] across gaps, or -1."""
+    i += 1
+    while i < len(parts) and _is_gap(parts[i]):
+        i += 1
+    return i if i < len(parts) and _is_br(parts[i]) else -1
+
+
 def _replace_double_brs(root: Element) -> None:
-    """readability.js _replaceBrs: runs of ≥2 <br> split the enclosing
-    element's inline content into <p> paragraphs (phrasing content only;
-    block elements stay direct children)."""
-    for node in etree.iter_all(root):
-        brs = [c for c in node.children if c.tag == "br"]
-        if len(brs) < 2:
+    """go-readability replaceBrs (readability.js _replaceBrs): a chain of
+    two or more sibling <br>, with only gaps between them, is replaced
+    by one <p>. The gaps and the phrasing siblings after the chain move
+    into it, up to the next chain or the first non-phrasing node; the
+    <p> then drops its trailing whitespace and brs, and a <p> parent
+    becomes a <div>. A chain involves one parent's children only, so
+    each parent is rebuilt once, in the document order of its brs."""
+    seen: set[int] = set()
+    for br in etree.get_elements_by_tag(root, "br"):
+        node = br.parent
+        if node is None or id(node) in seen:  # None: a dropped chain br
+            continue
+        seen.add(id(node))
+        if sum(c.tag == "br" for c in node.children) < 2:
             continue
         parts = etree.detach_content(node)
-
-        segments: list[list] = [[]]
+        out: list = []
         i = 0
         while i < len(parts):
-            if type(parts[i]) is not str and parts[i].tag == "br":
-                # a run of brs, whitespace-only text between them
-                j = i
-                n_br = 0
-                while j < len(parts):
-                    part = parts[j]
-                    if type(part) is str:
-                        if part.strip():
-                            break
-                    elif part.tag == "br":
-                        n_br += 1
-                    else:
-                        break
-                    j += 1
-                if n_br >= 2:
-                    segments.append([])
-                    i = j
-                    continue
-            segments[-1].append(parts[i])
-            i += 1
-
-        if len(segments) < 2:
-            # restore the original content
-            for part in parts:
-                etree.append_part(node, part)
-            continue
-
-        for seg in segments:
-            # a segment of whitespace and brs only is dropped
-            if not any(part.strip() if type(part) is str else part.tag != "br"
-                       for part in seg):
+            j = _next_br(parts, i) if _is_br(parts[i]) else -1
+            if j < 0:
+                out.append(parts[i])
+                i += 1
                 continue
-            p = None
-            for part in seg:
-                if type(part) is not str and not (
-                        _is_phrasing(part) or part.tag == etree.COMMENT):
-                    etree.append_part(node, part)
-                    p = None
-                    continue
-                if p is None:
-                    p = etree.sub_element(node, "p")
+            para: list = []
+            while j >= 0:
+                para += parts[i + 1:j]
+                i, j = j, _next_br(parts, j)
+            i += 1
+            while i < len(parts):
+                part = parts[i]
+                if _is_br(part) and _next_br(parts, i) >= 0 or not (
+                        type(part) is str or _is_phrasing(part)
+                        or part.tag == etree.COMMENT):
+                    break
+                para.append(part)
+                i += 1
+            while para and (_is_gap(para[-1]) or _is_br(para[-1])):
+                para.pop()
+            p = etree.new_element("p")
+            for part in para:
                 etree.append_part(p, part)
+            out.append(p)
+            if node.tag == "p":
+                node.tag = "div"
+        for part in out:
+            etree.append_part(node, part)
 
 
 # --- entry point ----------------------------------------------------------------

@@ -1,32 +1,62 @@
 """Priority-ordered selector rule lists (first match wins).
 
-Each rule is a predicate Element -> bool; Query/QueryAll iterate all
-elements in document order. Transcribed semantics from
-/root/reference/internal/selector/*.go (content.go:29-234,
+Each rule is a predicate Element -> bool; query/query_all/query_iter
+run a rule, or a CSS group parsed by ``css.parse_group``, over the
+descendants of a tree or a TagIndex in document order. Transcribed
+semantics from the reference's internal/selector/*.go (content.go:29-234,
 content-discard-overall.go:29-227, comments.go, teaser/image/precision
 discards, comments-discard.go, comments-removed.go, meta-*.go).
 """
 
 from __future__ import annotations
 
+from itertools import chain
+
 from .etree import (Element, _collect_tags, attr_source, attrs_may_contain,
                     get_elements_by_tag, has_attrs)
 
 
-def _rule_candidates(root: Element, rule) -> list[Element]:
-    """Tag-filtered candidate scan: rules declare the tags they can
-    match (``rule.tags``), so the traversal only surfaces those —
-    one doc-order walk with an inline tag check instead of a predicate
-    call per element (the predicate's own tag guard made ~95% of calls
-    trivially-false; this removes the calls entirely). Rules that can
-    only match an element carrying at least one attribute declare
-    ``needs_attrs`` and skip bare elements too."""
+class TagIndex:
+    """One doc-order traversal shared by every query against an
+    UNCHANGED tree: pass it as the ``scope`` of query/query_all/
+    query_iter instead of the tree's root."""
+
+    __slots__ = ("elements", "_by_tag")
+
+    def __init__(self, root: Element):
+        self.elements: list[Element] = get_elements_by_tag(root, "*")
+        by: dict[str, list[int]] = {}
+        for i, el in enumerate(self.elements):
+            by.setdefault(el.tag, []).append(i)
+        self._by_tag = by
+
+    def of_tag(self, tag: str) -> list[Element]:
+        els = self.elements
+        return [els[i] for i in self._by_tag.get(tag, ())]
+
+
+def _candidates(scope, rule) -> list[Element]:
+    """The descendants ``rule`` can match, in document order. ``scope``
+    is an Element, which is walked, or a TagIndex of an unchanged tree,
+    which is looked up. Rules declare the tags they can match
+    (``rule.tags``), so only those surface — the predicate's own tag
+    guard made ~95% of calls trivially false; this removes the calls.
+    Rules that can only match an element carrying at least one
+    attribute declare ``needs_attrs`` and skip bare elements too."""
     tags = getattr(rule, "tags", None)
-    if tags is None:
-        out = get_elements_by_tag(root, "*")
+    if isinstance(scope, TagIndex):
+        if tags is None:
+            out = scope.elements
+        else:
+            by, els = scope._by_tag, scope.elements
+            lists = [by[t] for t in tags if t in by]
+            pos = lists[0] if len(lists) == 1 else sorted(chain.from_iterable(lists))
+            out = [els[i] for i in pos]
+    elif tags is None:
+        out = get_elements_by_tag(scope, "*")
     else:
         out = []
-        _collect_tags(root, tags, out)
+        _collect_tags(scope, tags, out)
     if getattr(rule, "needs_attrs", False):
         return [el for el in out if has_attrs(el)]
     return out
@@ -82,69 +112,25 @@ def _screened(elements: list, rule) -> list:
     return out
 
 
-def query(root: Element, rule, elements: list | None = None) -> Element | None:
-    """First matching descendant in document order
-    (internal/selector/selector.go:31-38)."""
-    if elements is None:
-        elements = _rule_candidates(root, rule)
-    for el in _screened(elements, rule):
-        if rule(el):
-            return el
-    return None
-
-
-def query_all(root: Element, rule, elements: list | None = None) -> list[Element]:
-    """``elements`` lets callers trying several rules against an
-    UNCHANGED tree hoist the full traversal out of the rule loop."""
-    if elements is None:
-        elements = _rule_candidates(root, rule)
-    return [el for el in _screened(elements, rule) if rule(el)]
-
-
-def query_iter(root: Element, rule, elements: list | None = None):
-    """Lazy query_all: yields matches in document order so callers that
-    stop at the first usable hit skip rule evaluation on the rest."""
-    if elements is None:
-        elements = _rule_candidates(root, rule)
-    for el in _screened(elements, rule):
+def query_iter(scope, rule):
+    """The descendants of ``scope`` (an Element or a TagIndex, see
+    _candidates) that ``rule`` matches, lazily in document order, so
+    callers that stop at the first usable hit skip rule evaluation on
+    the rest."""
+    for el in _screened(_candidates(scope, rule), rule):
         if rule(el):
             yield el
 
 
-class TagIndex:
-    """One doc-order traversal shared by every rule application against
-    an UNCHANGED tree. ``candidates(rule)`` returns the doc-ordered
-    descendants a rule can match, via its declared ``tags``."""
+def query_all(scope, rule) -> list[Element]:
+    """Every match of query_iter, as a list."""
+    return [el for el in _screened(_candidates(scope, rule), rule) if rule(el)]
 
-    __slots__ = ("elements", "_by_tag")
 
-    def __init__(self, root: Element):
-        self.elements: list[Element] = get_elements_by_tag(root, "*")
-        by: dict[str, list[int]] = {}
-        for i, el in enumerate(self.elements):
-            by.setdefault(el.tag, []).append(i)
-        self._by_tag = by
-
-    def candidates(self, rule) -> list[Element]:
-        tags = getattr(rule, "tags", None)
-        if tags is None:
-            out = self.elements
-        else:
-            lists = [l for t in tags if (l := self._by_tag.get(t))]
-            if not lists:
-                return []
-            els = self.elements
-            if len(lists) == 1:
-                out = [els[i] for i in lists[0]]
-            else:
-                out = [els[i] for i in sorted(i for l in lists for i in l)]
-        if getattr(rule, "needs_attrs", False):
-            return [el for el in out if has_attrs(el)]
-        return out
-
-    def of_tag(self, tag: str) -> list[Element]:
-        els = self.elements
-        return [els[i] for i in self._by_tag.get(tag, ())]
+def query(scope, rule) -> Element | None:
+    """The first match of query_iter, or None
+    (internal/selector/selector.go:31-38)."""
+    return next(query_iter(scope, rule), None)
 
 
 def _idc(el: Element):
@@ -697,7 +683,7 @@ REMOVED_COMMENTS = [removed_comments_rule]
 
 # ---------------------------------------------------------------------------
 # Tag declarations: each rule's opening tag guard, hoisted so the
-# traversal can pre-filter (see _rule_candidates / TagIndex). A rule with
+# traversal can pre-filter (see _candidates). A rule with
 # no tag guard carries no declaration and scans every element.
 # ---------------------------------------------------------------------------
 

@@ -55,14 +55,13 @@ def tokens_col(text_col: str = "text"):
 _FANOUT_MAX_BYTES = 1 << 30
 
 
-def _estimated_plan_bytes(df: DataFrame) -> int | None:
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        # py4j hands small BigIntegers back as Python ints; huge ones
-        # (Spark's 8 EiB "unknown" default) stay JavaObjects
-        return int(raw.toString()) if hasattr(raw, "toString") else int(raw)
-    except Exception:
-        return None
+def _estimated_plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``'s plan; a failing probe
+    raises."""
+    raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    # py4j hands small BigIntegers back as Python ints; huge ones
+    # (Spark's 8 EiB "unknown" default) stay JavaObjects
+    return int(raw.toString()) if hasattr(raw, "toString") else int(raw)
 
 
 def scan_bytes(path: str) -> int | None:
@@ -302,8 +301,8 @@ _PERSIST_BANDS_MIN_BYTES = 64 * 1024 * 1024
 
 
 def _should_persist_bands(df: DataFrame) -> bool:
-    size = _estimated_plan_bytes(df)  # None → cannot estimate → the scale-safe side
-    return size is None or size > _PERSIST_BANDS_MIN_BYTES
+    # Spark's "unknown" estimate (8 EiB) lands on the scale-safe side
+    return _estimated_plan_bytes(df) > _PERSIST_BANDS_MIN_BYTES
 
 
 def _minhash_lsh_pairs_impl(df: DataFrame, k_shingle: int, max_band_df: int,

@@ -216,7 +216,7 @@ _RX_HTML_LANG = re.compile(r"(?i)[a-z]{2}")
 def check_html_language(doc: Element, options, strict: bool) -> bool:
     """utils-extractor.go:44-93 — meta content-language / og:locale, then
     (strict) <html lang>."""
-    from . import css
+    from . import css, selectors
 
     html_node = doc if doc.tag == "html" else None
     if html_node is None:
@@ -229,7 +229,7 @@ def check_html_language(doc: Element, options, strict: bool) -> bool:
         'meta[http-equiv="content-language"][content]',
         'meta[property="og:locale"][content]',
     ):
-        meta_nodes = css.query_all(doc, selector)
+        meta_nodes = selectors.query_all(doc, css.parse_group(selector))
         if not meta_nodes:
             continue
         for meta in meta_nodes:

@@ -5,7 +5,7 @@ import os
 import pytest
 
 from go_trafilatura_spark import Config, ExtractError, Options, extract
-from go_trafilatura_spark import css, etree
+from go_trafilatura_spark import css, etree, selectors
 from go_trafilatura_spark.external import sanitize_tree
 
 SIMPLE_DIR = "/root/reference/test-files/simple"
@@ -39,13 +39,13 @@ def test_sanitize_removes_unwanted():
 def test_sanitize_strips_fancy_tags():
     doc = doc_from_str('<html><body><p>Text here <fancy>Test text</fancy><a href="">with a link</a>.</p><img src="test.jpg"/></body></html>')
     sanitize_tree(doc, default_opts())
-    body = css.query(doc, "body")
+    body = selectors.query(doc, css.parse_group("body"))
     assert len(etree.children_of(body)) == 1
 
     opts = Options(include_links=True, include_images=True)
     doc = doc_from_str('<html><body><p>Text here <fancy>Test text</fancy><a href="">with a link</a>.</p><img src="test.jpg"/></body></html>')
     sanitize_tree(doc, opts)
-    body = css.query(doc, "body")
+    body = selectors.query(doc, css.parse_group("body"))
     assert len(etree.children_of(body)) == 2
     assert etree.get_elements_by_tag(body, "a")
     assert etree.get_elements_by_tag(body, "img")

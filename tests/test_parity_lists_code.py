@@ -9,7 +9,7 @@ from go_trafilatura_spark import etree
 from go_trafilatura_spark.lru import LRUCache
 from go_trafilatura_spark.main_extractor import handle_lists
 from go_trafilatura_spark.utils import check_html_language, duplicate_test, trim
-from go_trafilatura_spark import css
+from go_trafilatura_spark import css, selectors
 
 
 def zero_config() -> Config:
@@ -250,7 +250,7 @@ def test_list_item_with_tail_and_nested_list():
         etree.from_string("<ul><li><ul><li>text</li></ul></li>tail</ul>"),
         None, default_opts(),
     )
-    inner = css.query(processed, "li ul")
+    inner = selectors.query(processed, css.parse_group("li ul"))
     assert inner.tail == "tail"
 
 

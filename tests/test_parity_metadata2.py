@@ -6,7 +6,7 @@ Transcribed from /root/reference/metadata_test.go:313-573.
 
 import pytest
 
-from go_trafilatura_spark import etree
+from go_trafilatura_spark import etree, selectors
 from go_trafilatura_spark.metadata import bind_metadata, extract_dom_url, extract_metadata
 from go_trafilatura_spark.options import Options
 
@@ -36,7 +36,7 @@ def test_metadata_partial_url():
         '<html><head><link rel="canonical" href="/article/medical-record"/>'
         '<meta name="twitter:url" content="https://example.org"/></head><body></body></html>'
     )
-    assert extract_dom_url(etree.parse_html(raw)) == "https://example.org/article/medical-record"
+    assert extract_dom_url(selectors.TagIndex(etree.parse_html(raw))) == "https://example.org/article/medical-record"
 
 
 def test_metadata_descriptions():

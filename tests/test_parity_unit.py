@@ -17,7 +17,7 @@ from go_trafilatura_spark.main_extractor import (
 )
 from go_trafilatura_spark.settings import TAG_CATALOG
 from go_trafilatura_spark.utils import text_filter, trim
-from go_trafilatura_spark import css
+from go_trafilatura_spark import css, selectors
 
 
 def zero_opts() -> Options:
@@ -47,7 +47,7 @@ def doc_from_str(s: str):
 
 
 def first(doc, selector):
-    return css.query(doc, selector)
+    return selectors.query(doc, css.parse_group(selector))
 
 
 # --- Test_Trim (trafilatura_test.go:67-81) ---------------------------------

@@ -49,10 +49,9 @@ def _real_docs():
 def _assert_parity(doc):
     index = selectors.TagIndex(doc)
     for rule in ALL_RULES:
-        cands = index.candidates(rule)
-        unscreened = [el for el in cands if rule(el)]
-        screened = selectors.query_all(doc, rule, list(cands))
-        assert screened == unscreened, rule.__name__
+        unscreened = [el for el in selectors._candidates(index, rule) if rule(el)]
+        assert selectors.query_all(index, rule) == unscreened, rule.__name__
+        assert selectors.query_all(doc, rule) == unscreened, rule.__name__
     for rule in CONTAINER_RULES:
         got = selectors.anchors_by_ancestor(index, rule)
         saved = rule.containers_screen
@@ -122,15 +121,9 @@ def test_screen_spans_match_expected():
         '<p id="hidde" style="n">x</p>'              # hidden span
         '</body></html>')
     index = selectors.TagIndex(doc)
-    assert len(selectors.query_all(
-        doc, selectors.comments_rule_1,
-        index.candidates(selectors.comments_rule_1))) == 1
-    assert len(selectors.query_all(
-        doc, selectors.overall_discarded_rule_1,
-        index.candidates(selectors.overall_discarded_rule_1))) >= 1
-    assert len(selectors.query_all(
-        doc, selectors.overall_discarded_rule_2,
-        index.candidates(selectors.overall_discarded_rule_2))) >= 1
+    assert len(selectors.query_all(index, selectors.comments_rule_1)) == 1
+    assert len(selectors.query_all(index, selectors.overall_discarded_rule_1)) >= 1
+    assert len(selectors.query_all(index, selectors.overall_discarded_rule_2)) >= 1
 
 
 # (tag, attribute, value) of a container each META_CATEGORIES /

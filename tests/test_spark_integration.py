@@ -1999,6 +1999,21 @@ def test_fanout_small_scan_raises_when_partition_probe_fails():
         textops.fanout_small_scan(df, input_bytes=1024)
 
 
+def test_persist_bands_raises_when_stats_probe_fails():
+    """A failing optimizer-stats probe is an error, not a silent choice
+    to persist the LSH band frame."""
+    from types import SimpleNamespace
+
+    from go_trafilatura_spark import textops
+
+    def probe_fails():
+        raise RuntimeError("stats probe failed")
+
+    df = SimpleNamespace(_jdf=SimpleNamespace(queryExecution=probe_fails))
+    with pytest.raises(RuntimeError, match="stats probe failed"):
+        textops._should_persist_bands(df)
+
+
 def test_discover_urls_rejects_unknown_kind(spark):
     from go_trafilatura_spark.discovery import discover_urls
 

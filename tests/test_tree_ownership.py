@@ -7,7 +7,10 @@ apart and putting it back go through ``etree.append_text``,
 
 The one named exemption is ``readability._replace_node``, the port of
 readability.js's replaceNode, which moves an attached node into another
-node's place."""
+node's place.
+
+The same goes for finding elements: one query path in ``selectors.py``
+and the descendant walks in ``etree.py`` (see the second half)."""
 
 import ast
 import glob
@@ -112,3 +115,102 @@ def test_tree_mutation_check_sees_every_form():
     )
     assert [line for line, func, _ in tree_mutations(ast.parse(src))] == list(range(2, 11))
     assert {func for _, func, _ in tree_mutations(ast.parse(src))} == {"f"}
+
+
+# -- one element-query path ------------------------------------------------
+#
+# Elements are found by ``selectors.query``/``query_all``/``query_iter``:
+# their one candidate scan (``selectors._candidates``) turns a rule's
+# declared tags into a tag-filtered walk or a TagIndex lookup. css.py
+# only parses selector groups into rules, and the doc-order descendant
+# walks live in etree.py.
+
+_SCANS = frozenset(("candidates", "_candidates", "_rule_candidates"))
+
+
+def candidate_scans(tree: ast.Module) -> list[int]:
+    """Lines that call or import a selector candidate scan:
+    ``x.candidates(...)``, ``selectors._candidates(...)``,
+    ``_rule_candidates(...)``, ``from .selectors import _candidates``."""
+    lines = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            if ((isinstance(f, ast.Attribute) and f.attr in _SCANS)
+                    or (isinstance(f, ast.Name) and f.id == "_rule_candidates")):
+                lines.append(node.lineno)
+        elif (isinstance(node, ast.ImportFrom) and (node.module or "").endswith("selectors")
+              and any(a.name in _SCANS for a in node.names)):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def query_functions(tree: ast.Module) -> list[str]:
+    return [n.name for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and n.name.startswith("query")]
+
+
+def _is_minus_one(node) -> bool:
+    if isinstance(node, ast.UnaryOp) and isinstance(node.op, ast.USub):
+        node = node.operand
+        return isinstance(node, ast.Constant) and node.value == 1
+    return isinstance(node, ast.Constant) and node.value == -1
+
+
+def reversed_children(tree: ast.Module) -> list[int]:
+    """Lines that reverse an element's children, the start of a
+    hand-written doc-order stack walk: ``x.children[::-1]`` or
+    ``reversed(x.children)``."""
+    lines = []
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Subscript) and _is_children(node.value)
+                and isinstance(node.slice, ast.Slice)
+                and node.slice.lower is None and node.slice.upper is None
+                and _is_minus_one(node.slice.step)):
+            lines.append(node.lineno)
+        elif (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+              and node.func.id == "reversed" and node.args
+              and _is_children(node.args[0])):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def _parsed_sources():
+    for path in SOURCES:
+        with open(path, encoding="utf-8") as f:
+            yield os.path.relpath(path, ROOT), ast.parse(f.read(), path)
+
+
+def test_one_element_query_path():
+    pkg = "go_trafilatura_spark"
+    found = []
+    for rel, tree in _parsed_sources():
+        if rel != os.path.join(pkg, "selectors.py"):
+            found += [f"{rel}:{line}: candidate scan" for line in candidate_scans(tree)]
+        if rel != os.path.join(pkg, "etree.py"):
+            found += [f"{rel}:{line}: reversed children walk" for line in reversed_children(tree)]
+        if rel == os.path.join(pkg, "css.py"):
+            found += [f"{rel}: defines {name}" for name in query_functions(tree)]
+    assert found == [], "element queries outside their owners:\n" + "\n".join(found)
+
+
+def test_query_path_checks_see_every_form():
+    src = (
+        "from .selectors import _candidates\n"
+        "def query_all(root, sel):\n"
+        "    a = index.candidates(rule)\n"
+        "    b = selectors._candidates(root, rule)\n"
+        "    c = _rule_candidates(root, rule)\n"
+        "    stack = el.children[::-1]\n"
+        "    stack.extend(reversed(node.children))\n"
+        "    d = el.children[:-1]\n"
+        "    e = reversed(kids)\n"
+        "    f = _candidates(cleaned_doc, options)\n"
+        "def _query(root):\n"
+        "    pass\n"
+    )
+    tree = ast.parse(src)
+    assert candidate_scans(tree) == [1, 3, 4, 5]
+    assert reversed_children(tree) == [6, 7]
+    assert query_functions(tree) == ["query_all"]
