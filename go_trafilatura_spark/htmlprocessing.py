@@ -87,16 +87,7 @@ def remove_html_comment_nodes(doc: Element) -> None:
     """html-processing.go:100-121. In the text/tail model the comment's
     tail must be merged back into the surrounding text flow (equivalent
     to the DOM where adjacent text nodes simply remain)."""
-    stack = [doc]
-    comments: list[Element] = []
-    while stack:
-        node = stack.pop()
-        for child in node.children:
-            if child.tag == etree.COMMENT:
-                comments.append(child)
-            else:
-                stack.append(child)
-    for c in comments:
+    for c in etree.iter_descendants(doc, etree.COMMENT):
         etree.remove(c, keep_tail=True)
 
 

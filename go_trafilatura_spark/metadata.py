@@ -581,7 +581,7 @@ def decode_json_ld(index: selectors.TagIndex) -> tuple[list, list, list]:
     return persons, organizations, articles
 
 
-def extract_json_ld(options, original: Metadata, index: selectors.TagIndex) -> Metadata:
+def extract_json_ld(original: Metadata, index: selectors.TagIndex) -> Metadata:
     """metadata-json.go:23-149."""
     metadata = Metadata()
     persons, organizations, articles = decode_json_ld(index)
@@ -1123,9 +1123,11 @@ def _parse_date_string(s: str) -> str:
         s = _digit_neighborhoods(s)
     else:
         s = trim(s)
-    # Every supported pattern needs digits; the expensive month-name
-    # alternations additionally need a plausible year nearby.
-    if not s or not any(ch.isdigit() for ch in s):
+    # Every supported pattern needs a \d match, so one C-level \d search
+    # is an exact screen (str.isdigit also accepts ² or ①, which no
+    # pattern matches); the expensive month-name alternations
+    # additionally need a plausible year nearby.
+    if not s or _RX_DIGIT_RUN.search(s) is None:
         return ""
     # Every 4-digit-year pattern (1900-2099) necessarily contains the
     # substring "19" or "20" — two C-level scans gate five finditer
@@ -1552,7 +1554,7 @@ def extract_metadata(doc: Element, options) -> tuple[Metadata, UrlTail]:
     metadata = examine_meta(index)
     metadata.author = remove_blacklisted_authors(metadata.author, options)
 
-    metadata = extract_json_ld(options, metadata, index)
+    metadata = extract_json_ld(metadata, index)
     metadata.author = remove_blacklisted_authors(metadata.author, options)
 
     if metadata.title == "":

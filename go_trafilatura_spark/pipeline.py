@@ -41,6 +41,15 @@ from .kernel import DEFAULT_MAX_HTML_BYTES, KernelOptions, extract_stage
 
 SALT_BUCKETS = 64
 ARROW_BATCH_SIZE = 512
+# Spark keeps generated classes in one LRU cache per JVM, sized once
+# from spark.sql.codegen.cache.maxEntries (default 100) by the first
+# session that compiles. One curation pass needs about 120 classes, so
+# at the default every repeated pass misses in order and recompiles
+# about 90 of them. 1000 holds the largest session measured (a full
+# queries() run, 420 classes; bench.py's query and pipeline sections,
+# 315) with headroom (NOTES.md, "Compile the curation pass once per
+# session").
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def build_session(
@@ -50,7 +59,8 @@ def build_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Session tuned for the extraction workload (AQE on, Arrow on,
-    small Arrow batches for fat HTML rows)."""
+    small Arrow batches for fat HTML rows, a generated-class cache that
+    holds a whole curation pass)."""
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -63,6 +73,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -39,6 +39,48 @@ def test_parse_cjk():
     assert _parse_date_string("2019年6月24日") == "2019-06-24"
 
 
+# Strings mixing ASCII, Arabic-Indic, superscript and circled digits.
+# str.isdigit accepts all four; \d (Unicode decimal) only the first two.
+_MIXED_DIGITS = {
+    "Published 2021-03-04": "2021-03-04",
+    "Published ²⁰²¹-⁰³-⁰⁴": "",
+    "①②③ ④⑤": "",
+    "²³ items, ① first": "",
+    "x² + y² = z²": "",
+    "٢٠٢١-٠٣-٠٤": "",
+    "نشر ٤ مارس ٢٠٢١": "",
+    "٣.٢.٢٠١٩": "",
+    "Posted 3.2.2019 ² ①": "2019-02-03",
+    "Updated 14/01/2020 ① ٢": "2020-01-14",
+    "January 20, 2020 ⁽²⁾": "2020-01-20",
+    "٢٠ January 2020": "2020-01-20",
+    "20 January ٢٠٢٠": "",
+    "2019年6月24日 ①": "2019-06-24",
+    "no digits here": "",
+}
+
+
+def test_digit_gate_is_exact_on_mixed_digits():
+    """_parse_date_string screens with a \\d search. str.isdigit, the
+    screen it replaced, accepts a superset; where the two disagree no
+    date pattern can match, so the output is "" under either screen."""
+    from go_trafilatura_spark import metadata
+
+    patterns = [v for k, v in vars(metadata).items()
+                if k.startswith("_RX_") and k.endswith(("_DATE", "_NAME"))]
+    assert len(patterns) >= 9
+    disagree = 0
+    for s, want in _MIXED_DIGITS.items():
+        old = any(ch.isdigit() for ch in s)
+        new = metadata._RX_DIGIT_RUN.search(s) is not None
+        assert old or not new, s
+        if old and not new:
+            disagree += 1
+            assert all(rx.search(s) is None for rx in patterns), s
+        assert _parse_date_string(s) == want, s
+    assert disagree == 4
+
+
 def test_url_full_date_wins():
     d = doc('<html><head><meta property="article:published_time" content="2022-03-04"/></head><body></body></html>')
     got = extract_date_fast(d, "https://x.example/2014/05/18/post/")

@@ -98,9 +98,9 @@ def test_truncated_pdf_no_endstream():
 def test_spark_stage(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql import SparkSession
 
     from go_trafilatura_spark.pdf import extract_pdf_pages
+    from go_trafilatura_spark.pipeline import build_session
 
     pdfs = [build_pdf([f"Document number {i} body text."], compress=i % 2 == 1)
             for i in range(6)]
@@ -110,10 +110,13 @@ def test_spark_stage(tmp_path):
         "pdf": pa.array(pdfs, pa.binary()),
     }), path)
 
-    spark = (SparkSession.builder.master("local[2]")
-             .config("spark.sql.shuffle.partitions", "2")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    out = extract_pdf_pages(spark.read.parquet(path)).orderBy("url").collect()
+    # build_session, so the JVM-wide settings it owns (the generated-class
+    # cache size) hold for every later session of the test process
+    spark = build_session(app_name="pdf-tests", master="local[2]", shuffle_partitions=2)
+    try:
+        out = extract_pdf_pages(spark.read.parquet(path)).orderBy("url").collect()
+    finally:
+        spark.stop()
     assert len(out) == 6
     for i, row in enumerate(out):
         assert row.pdf_text == f"Document number {i} body text."

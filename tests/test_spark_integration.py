@@ -1796,6 +1796,36 @@ def test_corpus_dedup_pipeline_no_url(spark):
         h.unpersist()
 
 
+def test_second_curation_pass_compiles_nothing(spark):
+    """build_session sizes Spark's generated-class cache to hold a whole
+    curation pass, so a long-lived session compiles the pass once: a
+    second run finds every class of the first in the cache. At Spark's
+    default size (100) the pass's classes evict each other in order and
+    the second run recompiles dozens of them."""
+    from go_trafilatura_spark.pipeline import CODEGEN_CACHE_ENTRIES, corpus_dedup_pipeline
+
+    assert (spark.conf.get("spark.sql.codegen.cache.maxEntries")
+            == str(CODEGEN_CACHE_ENTRIES))
+    compiles = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def run():
+        ext = spark.createDataFrame(
+            _curation_docs(), "doc_id string, text string, lang string, url string")
+        final, handles = corpus_dedup_pipeline(
+            ext, url_col="url", k_substring=50, max_per_host=2,
+            sample_fraction=1.0, strata_col="lang")
+        got = sorted(r["doc_id"] for r in final.collect())
+        for h in handles:
+            h.unpersist()
+        return got
+
+    first = run()
+    before = compiles.getCount()
+    assert run() == first
+    assert compiles.getCount() == before
+
+
 def test_dedup_job_stage_all(smoke_dir):
     """spark-submit smoke for the composed pipeline job: the SAME
     composition bench.py attests, end-to-end through the --py-files

@@ -176,6 +176,41 @@ def reversed_children(tree: ast.Module) -> list[int]:
     return sorted(lines)
 
 
+def _is_children_of(node, aliases) -> bool:
+    return _is_children(node) or (isinstance(node, ast.Name) and node.id in aliases)
+
+
+def forward_children_pushes(tree: ast.Module) -> list[int]:
+    """Lines inside a ``while`` loop that push an element's children onto
+    a work list in order, the other start of a hand-written stack walk:
+    ``stack.extend(x.children)``, ``stack += x.children`` or
+    ``for c in x.children: stack.append(c)``, also through a name bound
+    to ``x.children`` in the loop."""
+    lines = set()
+    for loop in ast.walk(tree):
+        if not isinstance(loop, ast.While):
+            continue
+        aliases = {t.id for n in ast.walk(loop) if isinstance(n, ast.Assign)
+                   and _is_children(n.value) for t in n.targets if isinstance(t, ast.Name)}
+        for node in ast.walk(loop):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "extend" and node.args
+                    and _is_children_of(node.args[0], aliases)):
+                lines.add(node.lineno)
+            elif (isinstance(node, ast.AugAssign) and isinstance(node.op, ast.Add)
+                  and _is_children_of(node.value, aliases)):
+                lines.add(node.lineno)
+            elif (isinstance(node, ast.For) and isinstance(node.target, ast.Name)
+                  and _is_children_of(node.iter, aliases)):
+                var = node.target.id
+                lines.update(
+                    n.lineno for n in ast.walk(node)
+                    if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "append" and len(n.args) == 1
+                    and isinstance(n.args[0], ast.Name) and n.args[0].id == var)
+    return sorted(lines)
+
+
 def _parsed_sources():
     for path in SOURCES:
         with open(path, encoding="utf-8") as f:
@@ -190,6 +225,8 @@ def test_one_element_query_path():
             found += [f"{rel}:{line}: candidate scan" for line in candidate_scans(tree)]
         if rel != os.path.join(pkg, "etree.py"):
             found += [f"{rel}:{line}: reversed children walk" for line in reversed_children(tree)]
+            found += [f"{rel}:{line}: forward children walk"
+                      for line in forward_children_pushes(tree)]
         if rel == os.path.join(pkg, "css.py"):
             found += [f"{rel}: defines {name}" for name in query_functions(tree)]
     assert found == [], "element queries outside their owners:\n" + "\n".join(found)
@@ -214,3 +251,29 @@ def test_query_path_checks_see_every_form():
     assert candidate_scans(tree) == [1, 3, 4, 5]
     assert reversed_children(tree) == [6, 7]
     assert query_functions(tree) == ["query_all"]
+
+
+def test_forward_walk_check_sees_every_form():
+    src = (
+        "def comments(doc):\n"
+        "    stack, out = [doc], []\n"
+        "    while stack:\n"
+        "        node = stack.pop()\n"
+        "        for child in node.children:\n"
+        "            if child.tag == COMMENT:\n"
+        "                out.append(child)\n"
+        "            else:\n"
+        "                stack.append(child)\n"
+        "        stack.extend(node.children)\n"
+        "        kids = node.children\n"
+        "        stack += kids\n"
+        "def fine(el, out):\n"
+        "    for child in el.children:\n"
+        "        out.append(child)\n"
+        "    while out:\n"
+        "        last = out.pop()\n"
+        "        out.extend(last.parts)\n"
+        "        for child in last.children:\n"
+        "            out.append(child.tail)\n"
+    )
+    assert forward_children_pushes(ast.parse(src)) == [7, 9, 10, 12]
