@@ -165,9 +165,9 @@ def _extract_content(doc: Element, fresh, options: Options) -> tuple:
 
     if options.exclude_comments and options.focus == FAVOR_PRECISION:
         prune_unwanted_nodes(doc, selectors.REMOVED_COMMENTS)
-    # One TagIndex serves both comment and content rule cascades:
+    # One TreeIndex serves both comment and content rule cascades:
     # extract_comments never mutates doc (prune works on a clone).
-    index = selectors.TagIndex(doc)
+    index = etree.TreeIndex(doc)
 
     # Comments
     tmp_comments = ""

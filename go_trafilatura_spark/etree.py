@@ -19,8 +19,10 @@ raw-text script/style, comment nodes and entity decoding.
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
 from html import unescape as _unescape
 from html.parser import HTMLParser
+from itertools import chain
 
 COMMENT = "#comment"
 DOCUMENT = "#document"
@@ -325,17 +327,6 @@ def has_nonspace_text(el: Element) -> bool:
     return False
 
 
-def iter_descendants(root: Element, *tags: str) -> list[Element]:
-    """etree.IterDescendants — like iter_all but excludes self.
-    Reference: internal/etree/element.go:80-92."""
-    out: list[Element] = []
-    if tags:
-        _collect_tags(root, frozenset(tags), out)
-    else:
-        _walk_all(root, out)
-    return out
-
-
 def _walk_all(el: Element, out: list) -> None:
     append = out.append
     stack = el.children[::-1]
@@ -349,13 +340,16 @@ def _walk_all(el: Element, out: list) -> None:
             stack.extend(kids[::-1])
 
 
-def get_elements_by_tag(root: Element, tag: str) -> list[Element]:
-    """dom.GetElementsByTagName — descendants only (root excluded)."""
+def get_elements_by_tag(root: Element, *tags: str) -> list[Element]:
+    """dom.GetElementsByTagName and etree.IterDescendants: the
+    descendants of ``root`` (root excluded) whose tag is in ``tags``, in
+    document order; ``"*"`` or no tags means every non-comment element.
+    Reference: internal/etree/element.go:80-92."""
     out: list[Element] = []
-    if tag == "*":
+    if not tags or "*" in tags:
         _walk_all(root, out)
-        return out
-    _collect_tags(root, frozenset((tag,)), out)
+    else:
+        _collect_tags(root, frozenset(tags), out)
     return out
 
 
@@ -418,88 +412,117 @@ def text_len(el: Element) -> int:
     return n
 
 
-def text_index(root: Element) -> tuple:
-    """One pass over the subtree producing (tl, enter, last, anchors,
-    apos):
+class TreeIndex:
+    """The facts about an UNCHANGED tree that repeated queries share.
 
-    - ``tl[id(node)]`` = ``len(trim(text_content(node)))`` for every
-      node, computed bottom-up with the word-merge algebra (exact
-      integers — trim(s) == " ".join(s.split()), whose length composes
-      under concatenation when tracking (chars_in_words, word_count,
-      first, last) with first/last ∈ {0 empty, 1 ws, 2 non-ws});
-    - ``enter``/``last`` = pre-order Euler intervals: descendants of a
-      node occupy (enter[node], last[node]];
-    - ``anchors``/``apos`` = doc-ordered <a> descendants of root and
-      their pre-order positions, so the anchors under any node are one
-      bisect range.
+    Built eagerly: ``elements``, the descendants of ``root`` (root
+    excluded, comments skipped) in document order, and each tag's
+    positions in it — so a tag lookup is a list read instead of a walk.
+    Built lazily, by one bottom-up pass on the first ``text_len`` or
+    ``anchors`` call: every element's pre-order interval and its
+    trimmed text length. Any write to the tree makes the index stale;
+    nothing checks that, so build it after the last mutation."""
 
-    Link-density style passes call this once per stable tree window
-    instead of walking each candidate's subtree (candidates nest, so
-    per-candidate walks re-read the page once per ancestry level)."""
-    order = [root]
-    for node in order:
-        order.extend(node.children)
-    sums: dict[int, tuple] = {}
-    tl: dict[int, int] = {}
-    for node in reversed(order):
-        key = id(node)
-        if node.tag == COMMENT:
-            sums[key] = (0, 0, 0, 0)
-            tl[key] = 0
-            continue
-        nch = nw = first = last = 0
-        t = node.text
-        if t:
-            w = t.split()
-            nch = sum(map(len, w))
-            nw = len(w)
-            first = 2 if not t[0].isspace() else 1
-            last = 2 if not t[-1].isspace() else 1
-        for c in node.children:
-            pch, pn, pf, pl = sums[id(c)]
-            if pf:
-                if last == 2 and pf == 2:
-                    nw -= 1
-                nch += pch
-                nw += pn
-                if not first:
-                    first = pf
-                if pl:
-                    last = pl
-            t = c.tail
+    __slots__ = ("root", "elements", "_by_tag", "_pos", "_last", "_tl")
+
+    def __init__(self, root: Element):
+        self.root = root
+        self.elements: list[Element] = get_elements_by_tag(root)
+        by: dict[str, list[int]] = {}
+        for i, el in enumerate(self.elements):
+            by.setdefault(el.tag, []).append(i)
+        self._by_tag = by
+        self._tl = None
+
+    def candidates(self, tags=None) -> list[Element]:
+        """``get_elements_by_tag(root, *tags)``: the descendants whose
+        tag is in ``tags`` (every one when None), in document order."""
+        if tags is None:
+            return self.elements
+        by, els = self._by_tag, self.elements
+        lists = [by[t] for t in tags if t in by]
+        pos = lists[0] if len(lists) == 1 else sorted(chain.from_iterable(lists))
+        return [els[i] for i in pos]
+
+    def of_tag(self, tag: str) -> list[Element]:
+        """``get_elements_by_tag(root, tag)``, ``"*"`` included."""
+        if tag == "*":
+            return self.elements
+        els = self.elements
+        return [els[i] for i in self._by_tag.get(tag, ())]
+
+    def text_len(self, el: Element) -> int:
+        """``len(trim(text_content(el)))`` for ``root`` or a descendant."""
+        if self._tl is None:
+            self._text_pass()
+        return self._tl[id(el)]
+
+    def anchors(self, el: Element) -> list[Element]:
+        """``get_elements_by_tag(el, "a")`` for ``root`` or a descendant:
+        one bisect range of the ``a`` positions."""
+        if self._tl is None:
+            self._text_pass()
+        apos = self._by_tag.get("a", ())
+        lo = bisect_right(apos, self._pos[id(el)])
+        hi = bisect_right(apos, self._last[id(el)], lo)
+        els = self.elements
+        return [els[i] for i in apos[lo:hi]]
+
+    def _text_pass(self) -> None:
+        """Pre-order intervals (the descendants of the element at
+        position p are the positions in (p, last]; root is at -1) and
+        trimmed text lengths, bottom-up in one pass. trim(s) is
+        " ".join(s.split()), whose length composes under concatenation
+        when each subtree carries (chars in words, word count, first,
+        last), first/last being 0 for no text, 1 for whitespace and 2
+        for any other character: two pieces whose touching characters
+        are both non-whitespace merge into one word."""
+        root = self.root
+        pos = {id(el): i for i, el in enumerate(self.elements)}
+        pos[id(root)] = -1
+        sums: dict[int, tuple] = {}
+        tl: dict[int, int] = {}
+        lastd: dict[int, int] = {}
+        for node in chain(reversed(self.elements), (root,)):
+            key = id(node)
+            nch = nw = first = last = 0
+            t = node.text
             if t:
                 w = t.split()
-                pf = 2 if not t[0].isspace() else 1
-                if last == 2 and pf == 2:
-                    nw -= 1
-                nch += sum(map(len, w))
-                nw += len(w)
-                if not first:
-                    first = pf
+                nch = sum(map(len, w))
+                nw = len(w)
+                first = 2 if not t[0].isspace() else 1
                 last = 2 if not t[-1].isspace() else 1
-        sums[key] = (nch, nw, first, last)
-        tl[key] = nch + (nw - 1 if nw > 1 else 0)
-
-    enter: dict[int, int] = {}
-    lastd: dict[int, int] = {}
-    anchors: list[Element] = []
-    apos: list[int] = []
-    idx = 0
-    dfs = [root]
-    while dfs:
-        node = dfs.pop()
-        enter[id(node)] = idx
-        if node.tag == "a":
-            anchors.append(node)
-            apos.append(idx)
-        idx += 1
-        kids = node.children
-        if kids:
-            dfs.extend(kids[::-1])
-    for node in reversed(order):
-        kids = node.children
-        lastd[id(node)] = lastd[id(kids[-1])] if kids else enter[id(node)]
-    return tl, enter, lastd, anchors, apos
+            end = pos[key]
+            for c in node.children:
+                if c.tag != COMMENT:
+                    ck = id(c)
+                    end = lastd[ck]
+                    pch, pn, pf, pl = sums[ck]
+                    if pf:
+                        if last == 2 and pf == 2:
+                            nw -= 1
+                        nch += pch
+                        nw += pn
+                        if not first:
+                            first = pf
+                        if pl:
+                            last = pl
+                t = c.tail
+                if t:
+                    w = t.split()
+                    pf = 2 if not t[0].isspace() else 1
+                    if last == 2 and pf == 2:
+                        nw -= 1
+                    nch += sum(map(len, w))
+                    nw += len(w)
+                    if not first:
+                        first = pf
+                    last = 2 if not t[-1].isspace() else 1
+            sums[key] = (nch, nw, first, last)
+            tl[key] = nch + (nw - 1 if nw > 1 else 0)
+            lastd[key] = end
+        self._pos, self._last, self._tl = pos, lastd, tl
 
 
 def _collect_text(el: Element, parts: list[str]) -> None:

@@ -8,8 +8,6 @@ kernel; nothing here touches the DataFrame layer.
 
 from __future__ import annotations
 
-from bisect import bisect_right
-
 from . import css, etree, selectors
 from .etree import Element
 from .options import FAVOR_PRECISION, FAVOR_RECALL
@@ -87,7 +85,7 @@ def remove_html_comment_nodes(doc: Element) -> None:
     """html-processing.go:100-121. In the text/tail model the comment's
     tail must be merged back into the surrounding text flow (equivalent
     to the DOM where adjacent text nodes simply remain)."""
-    for c in etree.iter_descendants(doc, etree.COMMENT):
+    for c in etree.get_elements_by_tag(doc, etree.COMMENT):
         etree.remove(c, keep_tail=True)
 
 
@@ -167,21 +165,31 @@ def handle_text_node(
     return node
 
 
-def link_density_test(element: Element, options) -> bool:
+def _trimmed_len(el: Element) -> int:
+    return len(trim(etree.text_content(el)))
+
+
+def link_density_test(element: Element, options, index=None) -> bool:
     """html-processing.go:246-308, returning only whether the link
     density is high (the reference's non-empty link list feeds nothing
-    but the unreachable backtrack in deleteByLinkDensity)."""
-    links = etree.get_elements_by_tag(element, "a")
+    but the unreachable backtrack in deleteByLinkDensity). The element's
+    links and the trimmed text lengths come from walks, or from
+    ``index``, an ``etree.TreeIndex`` of an unchanged tree holding
+    ``element``: the same exact integers either way."""
+    if index is None:
+        links = etree.get_elements_by_tag(element, "a")
+        text_len = _trimmed_len
+    else:
+        links = index.anchors(element)
+        text_len = index.text_len
     if not links:
         return False
 
-    text = trim(etree.text_content(element))
-    text_length = len(text)
+    text_length = text_len(element)
 
     if len(links) == 1:
         threshold = 10 if options.focus == FAVOR_PRECISION else 100
-        link_text = trim(etree.text_content(links[0]))
-        lt_len = len(link_text)
+        lt_len = text_len(links[0])
         if lt_len > threshold and lt_len > text_length * 0.9:
             return True
 
@@ -191,8 +199,7 @@ def link_density_test(element: Element, options) -> bool:
         limit = 300 if etree.next_element_sibling(element) is None else 100
 
     if text_length < limit:
-        link_length, n_short, non_empty = collect_link_info(links)
-        n_non_empty = len(non_empty)
+        link_length, n_short, n_non_empty = collect_link_info(links, text_len)
         if n_non_empty == 0:
             return True
         if link_length > text_length * 0.8 or (
@@ -208,33 +215,32 @@ def link_density_test_tables(table: Element, options) -> bool:
     links = etree.get_elements_by_tag(table, "a")
     if not links:
         return False
-    text = trim(etree.text_content(table))
-    text_length = len(text)
+    text_length = _trimmed_len(table)
     if text_length < 200:
         return False
-    link_length, _, non_empty = collect_link_info(links)
-    if not non_empty:
+    link_length, _, n_non_empty = collect_link_info(links, _trimmed_len)
+    if not n_non_empty:
         return True
     if text_length < 1000:
         return link_length > text_length * 0.8
     return link_length > text_length * 0.5
 
 
-def collect_link_info(links: list[Element]) -> tuple[int, int, list[Element]]:
-    """html-processing.go:343-360."""
+def collect_link_info(links: list[Element], text_len) -> tuple[int, int, int]:
+    """html-processing.go:343-360: the summed ``text_len`` of ``links``,
+    how many of them are short (under 10) and how many are non-empty."""
     link_length = 0
     n_short = 0
-    non_empty: list[Element] = []
+    n_non_empty = 0
     for link in links:
-        text = trim(etree.text_content(link))
-        tl = len(text)
+        tl = text_len(link)
         if tl == 0:
             continue
         link_length += tl
         if tl < 10:
             n_short += 1
-        non_empty.append(link)
-    return link_length, n_short, non_empty
+        n_non_empty += 1
+    return link_length, n_short, n_non_empty
 
 
 def process_node(element: Element, cache, options) -> Element | None:
@@ -293,67 +299,19 @@ def post_cleaning(doc: Element | None) -> None:
         element.attrib = new_attrs
 
 
-def _link_density_test_indexed(elem: Element, options, index) -> bool:
-    """link_density_test over a text_index — identical decisions (all
-    quantities are the same exact integers), no per-element walks."""
-    tl, enter, lastd, anchors, apos = index
-    lo = bisect_right(apos, enter[id(elem)])
-    hi = bisect_right(apos, lastd[id(elem)])
-    if lo == hi:
-        return False
-
-    text_length = tl[id(elem)]
-
-    if hi - lo == 1:
-        threshold = 10 if options.focus == FAVOR_PRECISION else 100
-        lt_len = tl[id(anchors[lo])]
-        if lt_len > threshold and lt_len > text_length * 0.9:
-            return True
-
-    if elem.tag == "p":
-        limit = 60 if etree.next_element_sibling(elem) is None else 30
-    else:
-        limit = 300 if etree.next_element_sibling(elem) is None else 100
-
-    if text_length < limit:
-        link_length = 0
-        n_short = 0
-        n_non_empty = 0
-        for i in range(lo, hi):
-            alen = tl[id(anchors[i])]
-            if alen == 0:
-                continue
-            link_length += alen
-            if alen < 10:
-                n_short += 1
-            n_non_empty += 1
-        if n_non_empty == 0:
-            return True
-        if link_length > text_length * 0.8 or (
-            n_non_empty > 1 and n_short / n_non_empty > 0.8
-        ):
-            return True
-
-    return False
-
-
 def delete_by_link_density(subtree: Element, options, *tags: str) -> None:
     """html-processing.go:452-479, without the reference's backtracking
     branch: it runs only for a non-empty link list with a low density,
     and the reference's density test returns a non-empty list only
     together with a high density, so the branch is unreachable. The
     tree is stable while candidates are collected (removals happen at
-    the end), so one text_index pass serves every element's density
-    test."""
+    the end), so one TreeIndex can serve every element's density test."""
     elems = etree.iter_all(subtree, *tags)
-    # The one-pass index costs O(subtree); per-element walks cost
-    # O(Σ element subtrees). Few candidates → walks win; many (nested
-    # list/div farms, where the naive cost is quadratic) → index wins.
-    if len(elems) > 25:
-        index = etree.text_index(subtree)
-        to_delete = [e for e in elems if _link_density_test_indexed(e, options, index)]
-    else:
-        to_delete = [e for e in elems if link_density_test(e, options)]
+    # The index costs O(subtree); per-element walks cost O(Σ element
+    # subtrees). Few candidates → walks win; many (nested list/div
+    # farms, where the naive cost is quadratic) → the index wins.
+    index = etree.TreeIndex(subtree) if len(elems) > 25 else None
+    to_delete = [e for e in elems if link_density_test(e, options, index)]
     for elem in reversed(to_delete):
         etree.remove(elem)
 

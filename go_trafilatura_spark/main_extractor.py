@@ -103,7 +103,7 @@ def add_sub_element(new_child: Element, sub_element: Element, processed: Element
 def process_nested_element(child: Element, new_child: Element, cache, options) -> None:
     """main-extractor.go:101-117."""
     etree.set_text(new_child, child.text)
-    for sub in etree.iter_descendants(child):
+    for sub in etree.get_elements_by_tag(child):
         if sub.tag in SET_LIST_TAGS:
             processed = handle_lists(sub, cache, options)
             if processed is not None:
@@ -135,7 +135,7 @@ def handle_lists(element: Element, cache, options) -> Element | None:
         li = etree.sub_element(processed_element, "li")
         etree.set_text(li, element.text.strip())
 
-    for child in etree.iter_descendants(element, *SET_ITEM_TAGS):
+    for child in etree.get_elements_by_tag(element, *SET_ITEM_TAGS):
         new_child = etree.new_element(child.tag)
 
         if not etree.children_of(child):
@@ -315,7 +315,7 @@ def handle_table(table_element: Element, potential_tags: set, cache, options) ->
 
     etree.strip_tags(table_element, "thead", "tbody", "tfoot")
 
-    for sub_element in etree.iter_descendants(table_element):
+    for sub_element in etree.get_elements_by_tag(table_element):
         sub_tag = sub_element.tag
         if sub_tag == "tr":
             if etree.children_of(new_row):
@@ -334,7 +334,7 @@ def handle_table(table_element: Element, potential_tags: set, cache, options) ->
                 etree.set_tail(new_child, sub_element.tail)
                 sub_element.tag = "done"
 
-                for child in etree.iter_descendants(sub_element):
+                for child in etree.get_elements_by_tag(sub_element):
                     child_tag = child.tag
                     processed_sub = None
                     if child_tag in SET_CELL_TAGS or child_tag in SET_HI_TAGS:
@@ -469,9 +469,9 @@ def recover_wild_text(doc: Element, result_body: Element, potential_tags: set, c
 
 
 def extract_content(doc: Element, cache, options,
-                    index: selectors.TagIndex) -> tuple[Element, str]:
+                    index: etree.TreeIndex) -> tuple[Element, str]:
     """main-extractor.go:666-788 — the main content driver. ``index`` is
-    the caller's TagIndex of ``doc``.
+    the caller's TreeIndex of ``doc``.
 
     The reference snapshots backupDoc upfront; here the rule loop is
     provably non-mutating on ``doc`` (prune_unwanted_sections clones the
@@ -565,8 +565,8 @@ def process_comments_node(elem: Element, potential_tags: set, cache, options) ->
 
 
 def extract_comments(doc: Element, cache, options,
-                     index: selectors.TagIndex) -> tuple[Element | None, str]:
-    """main-extractor.go:808-852. ``index`` is the caller's TagIndex of
+                     index: etree.TreeIndex) -> tuple[Element | None, str]:
+    """main-extractor.go:808-852. ``index`` is the caller's TreeIndex of
     ``doc``, shared with extract_content (this function never mutates
     ``doc``: prune works on a clone)."""
     comments_body = etree.new_element("body")

@@ -276,7 +276,7 @@ _SECTION_META = css.parse_group(
     'head meta[property="article:section"], head meta[name*="subject"]')
 
 
-def extract_open_graph_meta(index: selectors.TagIndex) -> Metadata:
+def extract_open_graph_meta(index: etree.TreeIndex) -> Metadata:
     """metadata.go:368-409."""
     metadata = Metadata()
     for node in selectors.query_all(index, _OG_SELECTOR):
@@ -304,7 +304,7 @@ def extract_open_graph_meta(index: selectors.TagIndex) -> Metadata:
     return metadata
 
 
-def examine_meta(index: selectors.TagIndex) -> Metadata:
+def examine_meta(index: etree.TreeIndex) -> Metadata:
     """metadata.go:268-365."""
     metadata = extract_open_graph_meta(index)
     if (
@@ -500,7 +500,7 @@ _JSONLD_SELECTORS = css.parse_group(
 )
 
 
-def decode_json_ld(index: selectors.TagIndex) -> tuple[list, list, list]:
+def decode_json_ld(index: etree.TreeIndex) -> tuple[list, list, list]:
     """metadata-json.go:151-300."""
     persons: list[SchemaData] = []
     organizations: list[SchemaData] = []
@@ -581,7 +581,7 @@ def decode_json_ld(index: selectors.TagIndex) -> tuple[list, list, list]:
     return persons, organizations, articles
 
 
-def extract_json_ld(original: Metadata, index: selectors.TagIndex) -> Metadata:
+def extract_json_ld(original: Metadata, index: etree.TreeIndex) -> Metadata:
     """metadata-json.go:23-149."""
     metadata = Metadata()
     persons, organizations, articles = decode_json_ld(index)
@@ -684,7 +684,7 @@ def examine_title_element(doc: Element) -> tuple[str, str, str]:
     return title, first, second
 
 
-def extract_dom_meta_selectors(limit: int, rules, index: selectors.TagIndex) -> str:
+def extract_dom_meta_selectors(limit: int, rules, index: etree.TreeIndex) -> str:
     """metadata.go:626-640."""
     for rule in rules:
         for node in selectors.query_all(index, rule):
@@ -731,7 +731,7 @@ def _is_under(node: Element, root: Element) -> bool:
     return False
 
 
-def extract_dom_author(index: selectors.TagIndex) -> str:
+def extract_dom_author(index: etree.TreeIndex) -> str:
     """metadata.go:490-500. Observationally identical to the reference's
     prune-a-full-clone shape, but prunes only the matched candidate's
     subtree: META_AUTHOR_DISCARD rules are per-element predicates, so
@@ -774,7 +774,7 @@ def extract_dom_author(index: selectors.TagIndex) -> str:
     return ""
 
 
-def extract_dom_url(index: selectors.TagIndex) -> str:
+def extract_dom_url(index: etree.TreeIndex) -> str:
     """metadata.go:503-540."""
     url = ""
     for rule in _URL_SELECTORS:
@@ -812,7 +812,7 @@ def extract_dom_sitename(doc: Element) -> str:
     return ""
 
 
-def extract_dom_categories(index: selectors.TagIndex) -> list[str]:
+def extract_dom_categories(index: etree.TreeIndex) -> list[str]:
     """metadata.go:555-589."""
     categories: list[str] = []
     for rule in selectors.META_CATEGORIES:
@@ -1305,7 +1305,7 @@ def _date_tier_candidates(doc: Element, extensive: bool, index):
     container_done = body is None
     scanned = 0
     micro = ""
-    for node in index.elements:
+    for node in index.of_tag("*"):
         if etree.attrs_may_contain(node, ("itemprop",)):
             itemprop = node.attrib.get("itemprop") if node.attrib else None
             if itemprop:
@@ -1457,10 +1457,10 @@ def _url_dates(url: str, extensive: bool) -> tuple[str, str]:
     return full, dash
 
 
-def page_dates(doc: Element, extensive: bool, index: selectors.TagIndex) -> tuple:
+def page_dates(doc: Element, extensive: bool, index: etree.TreeIndex) -> tuple:
     """The page's date candidates for ``_bind_date``: every (tier, date)
     pair in extensive mode, only the first in fast mode. ``index`` is a
-    TagIndex of ``doc``."""
+    TreeIndex of ``doc``."""
     gen = _date_tier_candidates(doc, extensive, index)
     if extensive:
         return tuple(gen)
@@ -1526,7 +1526,7 @@ def _bind_date(dates: tuple, url: str, extensive: bool) -> str:
 
 def extract_date_fast(doc: Element, url: str, extensive: bool = False) -> str:
     """The publish date of ``doc`` served under ``url`` (``_bind_date``)."""
-    return _bind_date(page_dates(doc, extensive, selectors.TagIndex(doc)), url, extensive)
+    return _bind_date(page_dates(doc, extensive, etree.TreeIndex(doc)), url, extensive)
 
 
 # ---------------------------------------------------------------------------
@@ -1549,7 +1549,7 @@ def extract_metadata(doc: Element, options) -> tuple[Metadata, UrlTail]:
     that ``bind_metadata`` completes them from."""
     # One doc-order tag index shared by every meta/DOM selector scan in
     # the cascade (the tree is not mutated between them).
-    index = selectors.TagIndex(doc)
+    index = etree.TreeIndex(doc)
 
     metadata = examine_meta(index)
     metadata.author = remove_blacklisted_authors(metadata.author, options)

@@ -45,25 +45,54 @@ class Options:
     prune_selector: str = ""
     # date extraction: "fast" (first cascade tier hit), "extensive"
     # (every tier, whole-document scans), "default" (extensive when
-    # enable_fallback is set, else fast) or "disabled"; any other value
-    # runs fast
+    # enable_fallback is set, else fast) or "disabled"
     date_mode: str = "fast"
 
     @classmethod
     def from_dict(cls, d: dict) -> "Options":
         """Options from a plain dict of field values, ``config`` a dict of
-        Config fields; an unknown key raises ValueError naming it."""
+        Config fields. An unknown key, or a value its field cannot take,
+        raises ValueError naming the key."""
         opts = cls()
-        known = {f.name for f in fields(cls)}
-        config_known = {f.name for f in fields(Config)}
+        known = {f.name: f.type for f in fields(cls)}
+        config_known = {f.name: f.type for f in fields(Config)}
         for k, v in (d or {}).items():
             if k not in known:
                 raise ValueError(f"unknown option key: {k}")
-            if k == "config" and isinstance(v, dict):
+            if k == "config":
+                if not isinstance(v, dict):
+                    raise ValueError(f"invalid value for option config: {v!r}")
                 for ck, cv in v.items():
                     if ck not in config_known:
                         raise ValueError(f"unknown option key: config.{ck}")
+                    _check_value(f"config.{ck}", config_known[ck], cv)
                     setattr(opts.config, ck, cv)
             else:
+                _check_value(k, known[k], v)
                 setattr(opts, k, v)
         return opts
+
+
+_CHOICES = {
+    "focus": (BALANCED, FAVOR_RECALL, FAVOR_PRECISION),
+    "date_mode": ("fast", "extensive", "default", "disabled"),
+}
+
+
+def _check_value(key: str, kind: str, value) -> None:
+    """Raise ValueError naming ``key`` unless ``value`` is one of its
+    choices, a bool for a bool field, a non-negative int for an int
+    field or a string for a string field; other fields take any value."""
+    choices = _CHOICES.get(key)
+    if choices is not None:
+        ok = type(value) is type(choices[0]) and value in choices
+    elif kind == "bool":
+        ok = type(value) is bool
+    elif kind == "int":
+        ok = type(value) is int and value >= 0
+    elif kind == "str":
+        ok = type(value) is str
+    else:
+        return
+    if not ok:
+        raise ValueError(f"invalid value for option {key}: {value!r}")

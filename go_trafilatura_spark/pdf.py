@@ -59,9 +59,9 @@ def _decode_literal(raw: bytes) -> bytes:
         if nxt in _ESCAPES:
             out += _ESCAPES[nxt]
             i += 2
-        elif nxt.isdigit():
+        elif nxt and nxt in b"01234567":
             j = i + 1
-            while j < min(i + 4, n) and raw[j:j + 1].isdigit():
+            while j < min(i + 4, n) and raw[j:j + 1] in b"01234567":
                 j += 1
             out.append(int(raw[i + 1:j], 8) & 0xFF)
             i = j
@@ -213,10 +213,7 @@ def extract_pdf_pages(df: DataFrame, url_col: str = "url",
     def text(url, payload):
         if payload is None:
             return [(url, "", 0)]
-        try:
-            return [(url, *extract_pdf_text(payload))]
-        except Exception:
-            return [(url, "", 0)]
+        return [(url, *extract_pdf_text(payload))]
 
     return map_rows(df, [df[url_col].alias("url"), df[pdf_col].alias("pdf")],
                     PDF_TEXT_SCHEMA, text)

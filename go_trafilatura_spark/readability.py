@@ -31,7 +31,6 @@ because the candidate pipeline does not carry the page title.
 from __future__ import annotations
 
 import re
-from bisect import bisect_right
 
 from . import etree
 from .etree import Element
@@ -121,49 +120,26 @@ def _is_probably_visible(el: Element) -> bool:
     return True
 
 
+def _text_len(el: Element) -> int:
+    return len(inner_text(el))
+
+
+def _density(text_len: int, anchors, alen) -> float:
+    """Link density: the ``alen`` of ``anchors``, a hash link weighted by
+    PRESERVE_LINK_DENSITY_COEFF, summed in document order, over
+    ``text_len``. Walked or indexed lengths are the same integers, so
+    the float is bit-identical either way."""
+    if text_len == 0:
+        return 0.0
+    link_len = 0.0
+    for a in anchors:
+        coeff = PRESERVE_LINK_DENSITY_COEFF if RX_HASH_URL.match(a.get("href")) else 1.0
+        link_len += alen(a) * coeff
+    return link_len / text_len
+
+
 def _link_density(el: Element) -> float:
-    text_len = len(inner_text(el))
-    if text_len == 0:
-        return 0.0
-    link_len = 0.0
-    for a in etree.get_elements_by_tag(el, "a"):
-        href = a.get("href")
-        coeff = PRESERVE_LINK_DENSITY_COEFF if RX_HASH_URL.match(href) else 1.0
-        link_len += len(inner_text(a)) * coeff
-    return link_len / text_len
-
-
-def _trimmed_lens(root: Element) -> tuple:
-    """etree.text_index plus per-anchor weighted trimmed lengths (the
-    hash-URL coefficient applied once per anchor). The candidate loop's
-    density sum then runs over the same values in the same doc order as
-    the naive per-candidate walk, keeping float results bit-identical,
-    while each candidate's anchors are one bisect range (candidates are
-    nested ancestors — per-candidate walks re-read the page once per
-    ancestry level)."""
-    tl, enter, lastd, anchors, apos = etree.text_index(root)
-    awlen = [
-        tl[id(a)] * (PRESERVE_LINK_DENSITY_COEFF
-                     if RX_HASH_URL.match(a.get("href")) else 1.0)
-        for a in anchors
-    ]
-    return tl, enter, lastd, apos, awlen
-
-
-def _link_density_cached(el: Element, cache: tuple) -> float:
-    """_link_density reading every length from the _trimmed_lens index
-    — same summation order and operand values as the naive walk, so the
-    float result is bit-identical."""
-    tl, enter, lastd, apos, awlen = cache
-    text_len = tl[id(el)]
-    if text_len == 0:
-        return 0.0
-    lo = bisect_right(apos, enter[id(el)])
-    hi = bisect_right(apos, lastd[id(el)])
-    link_len = 0.0
-    for i in range(lo, hi):
-        link_len += awlen[i]
-    return link_len / text_len
+    return _density(_text_len(el), etree.get_elements_by_tag(el, "a"), _text_len)
 
 
 def _is_phrasing(el: Element) -> bool:
@@ -394,13 +370,14 @@ class _Grab:
         # does the same, and the sibling threshold reads the new value)
         top_candidates: list[Element] = []
         # No mutation happens between here and the top-candidate pick,
-        # so one _trimmed_lens pass serves every candidate's density
-        # (candidates are nested ancestors — per-candidate re-reads
-        # would touch the page text once per ancestry level).
-        cache = _trimmed_lens(page) if self.scores else None
+        # so one TreeIndex serves every candidate's density (candidates
+        # are nested ancestors — per-candidate walks would read the page
+        # text once per ancestry level).
+        index = etree.TreeIndex(page) if self.scores else None
         for key in list(self.scores):
             cand = self.by_id[key]
-            adjusted = self.scores[key] * (1.0 - _link_density_cached(cand, cache))
+            density = _density(index.text_len(cand), index.anchors(cand), index.text_len)
+            adjusted = self.scores[key] * (1.0 - density)
             self.scores[key] = adjusted
             for i, tc in enumerate(top_candidates):
                 if adjusted > self.scores[id(tc)]:
@@ -706,17 +683,9 @@ def _clean_conditionally(grab: _Grab, article: Element, tag: str,
                 break
         if keep_for_video:
             continue
-        # _link_density(node) inlined over the collected anchors (the
-        # denominator is the clen already computed from the same tree)
-        if clen == 0:
-            density = 0.0
-        else:
-            link_len = 0.0
-            for a in by["a"]:
-                coeff = (PRESERVE_LINK_DENSITY_COEFF
-                         if RX_HASH_URL.match(a.get("href")) else 1.0)
-                link_len += len(inner_text(a)) * coeff
-            density = link_len / clen
+        # _link_density(node) over the collected anchors and the clen
+        # already computed from the same tree
+        density = _density(clen, by["a"], _text_len)
         is_list = tag in ("ul", "ol")
         if not is_list:
             list_len = sum(

@@ -2,58 +2,32 @@
 
 Each rule is a predicate Element -> bool; query/query_all/query_iter
 run a rule, or a CSS group parsed by ``css.parse_group``, over the
-descendants of a tree or a TagIndex in document order. Transcribed
-semantics from the reference's internal/selector/*.go (content.go:29-234,
-content-discard-overall.go:29-227, comments.go, teaser/image/precision
-discards, comments-discard.go, comments-removed.go, meta-*.go).
+descendants of a tree or its ``etree.TreeIndex`` in document order.
+Transcribed semantics from the reference's internal/selector/*.go
+(content.go:29-234, content-discard-overall.go:29-227, comments.go,
+teaser/image/precision discards, comments-discard.go,
+comments-removed.go, meta-*.go).
 """
 
 from __future__ import annotations
 
-from itertools import chain
-
-from .etree import (Element, _collect_tags, attr_source, attrs_may_contain,
-                    get_elements_by_tag, has_attrs)
-
-
-class TagIndex:
-    """One doc-order traversal shared by every query against an
-    UNCHANGED tree: pass it as the ``scope`` of query/query_all/
-    query_iter instead of the tree's root."""
-
-    __slots__ = ("elements", "_by_tag")
-
-    def __init__(self, root: Element):
-        self.elements: list[Element] = get_elements_by_tag(root, "*")
-        by: dict[str, list[int]] = {}
-        for i, el in enumerate(self.elements):
-            by.setdefault(el.tag, []).append(i)
-        self._by_tag = by
-
-    def of_tag(self, tag: str) -> list[Element]:
-        els = self.elements
-        return [els[i] for i in self._by_tag.get(tag, ())]
+from .etree import (Element, TreeIndex, _collect_tags, attr_source,
+                    attrs_may_contain, get_elements_by_tag, has_attrs)
 
 
 def _candidates(scope, rule) -> list[Element]:
     """The descendants ``rule`` can match, in document order. ``scope``
-    is an Element, which is walked, or a TagIndex of an unchanged tree,
-    which is looked up. Rules declare the tags they can match
-    (``rule.tags``), so only those surface — the predicate's own tag
-    guard made ~95% of calls trivially false; this removes the calls.
-    Rules that can only match an element carrying at least one
+    is an Element, which is walked, or an ``etree.TreeIndex`` of an
+    unchanged tree, which is looked up. Rules declare the tags they can
+    match (``rule.tags``), so only those surface — the predicate's own
+    tag guard made ~95% of calls trivially false; this removes the
+    calls. Rules that can only match an element carrying at least one
     attribute declare ``needs_attrs`` and skip bare elements too."""
     tags = getattr(rule, "tags", None)
-    if isinstance(scope, TagIndex):
-        if tags is None:
-            out = scope.elements
-        else:
-            by, els = scope._by_tag, scope.elements
-            lists = [by[t] for t in tags if t in by]
-            pos = lists[0] if len(lists) == 1 else sorted(chain.from_iterable(lists))
-            out = [els[i] for i in pos]
+    if isinstance(scope, TreeIndex):
+        out = scope.candidates(tags)
     elif tags is None:
-        out = get_elements_by_tag(scope, "*")
+        out = get_elements_by_tag(scope)
     else:
         out = []
         _collect_tags(scope, tags, out)
@@ -113,7 +87,7 @@ def _screened(elements: list, rule) -> list:
 
 
 def query_iter(scope, rule):
-    """The descendants of ``scope`` (an Element or a TagIndex, see
+    """The descendants of ``scope`` (an Element or a TreeIndex, see
     _candidates) that ``rule`` matches, lazily in document order, so
     callers that stop at the first usable hit skip rule evaluation on
     the rest."""
@@ -863,12 +837,12 @@ meta_tags_rule_3.containers_screen = (
 meta_tags_rule_4.containers_screen = ("entry-meta", "topics", "tags-links")
 
 
-def anchors_by_ancestor(index: "TagIndex", rule) -> list[Element]:
+def anchors_by_ancestor(index: TreeIndex, rule) -> list[Element]:
     """Evaluate an a[href]-under-container rule (every META_CATEGORIES
     and META_TAGS rule) through its inverted ``containers`` spec."""
     tags, pred = rule.containers
     ids = set()
-    pool = index.elements if tags is None else [
+    pool = index.candidates() if tags is None else [
         el for t in tags for el in index.of_tag(t)
     ]
     cscreen = getattr(rule, "containers_screen", None)

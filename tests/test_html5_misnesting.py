@@ -68,7 +68,7 @@ def test_noahs_ark_bounds_afe():
     html = "<p>" + "<b>" * 50 + "x</p><p>y</p>"
     root = etree.parse_html(html)
     body = etree.body_of(root)
-    last_p = [e for e in etree.iter_descendants(body, "p")][-1]
+    last_p = [e for e in etree.get_elements_by_tag(body, "p")][-1]
     depth = 0
     node = last_p
     while node.children and node.children[0].tag == "b":

@@ -374,3 +374,57 @@ def test_options_from_dict_rejects_unknown_keys():
         Options.from_dict({"config": {"min_extract_size": 0}})
     with pytest.raises(ValueError, match="exclude_coments"):
         KernelOptions({"exclude_coments": True})
+
+
+@pytest.mark.parametrize("key,value", [
+    ("focus", "precision"), ("focus", 3), ("focus", True), ("focus", 1.0),
+    ("date_mode", "slow"), ("date_mode", None),
+    ("enable_fallback", 1), ("exclude_comments", "yes"), ("deduplicate", None),
+    ("has_essential_metadata", 0),
+    ("max_tree_size", -1), ("max_tree_size", 2.5), ("max_tree_size", False),
+    ("config.min_extracted_size", -5), ("config.cache_size", "big"),
+    ("config.min_output_size", True), ("config", 5),
+    ("prune_selector", 5), ("target_language", None),
+])
+def test_options_from_dict_rejects_bad_values(key, value):
+    from go_trafilatura_spark.kernel import KernelOptions
+
+    name = key.partition(".")[2]
+    d = {"config": {name: value}} if name else {key: value}
+    with pytest.raises(ValueError, match=f"option {key}:"):
+        Options.from_dict(d)
+    # a bad job option fails on the driver, before any task runs
+    with pytest.raises(ValueError, match=f"option {key}:"):
+        KernelOptions(d)
+
+
+def test_options_from_dict_accepts_real_values():
+    """The option dicts the jobs, the comparison, the benchmarks and the
+    CLI's flags produce all pass the value checks."""
+    import argparse
+    from dataclasses import fields
+
+    from go_trafilatura_spark.cli import build_options
+
+    dicts = [
+        {}, {"enable_fallback": True}, {"focus": FAVOR_PRECISION}, {"focus": FAVOR_RECALL},
+        {"config": {"min_extracted_size": 0}}, {"config": {"min_extracted_size": 250}},
+        {"config": {"min_extracted_size": 0, "min_output_size": 0}},
+        {"exclude_comments": True, "exclude_tables": False, "enable_fallback": True,
+         "focus": BALANCED},
+        {"exclude_comments": True, "date_mode": "extensive"},
+        {"date_mode": "default"}, {"date_mode": "disabled"}, {"date_mode": "fast"},
+    ]
+    flags = ["no_fallback", "no_comments", "no_tables", "images", "links",
+             "deduplicate", "precision", "recall"]
+    for on in [(), ("precision",), ("recall",), tuple(flags[:-2]) + ("recall",)]:
+        args = argparse.Namespace(url="https://a.example/", language="de",
+                                  prune_selector="div.ad", **{f: f in on for f in flags})
+        opts = build_options(args)
+        dicts.append({f.name: getattr(opts, f.name) for f in fields(Options)
+                      if f.name != "config"})
+    for d in dicts:
+        opts = Options.from_dict(d)
+        for k, v in d.items():
+            if k != "config":
+                assert getattr(opts, k) == v

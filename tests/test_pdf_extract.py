@@ -87,6 +87,12 @@ def test_corrupt_flate_skipped():
     assert extract_pdf_text(pdf) == ("", 0)
 
 
+def test_non_octal_escape_drops_the_backslash():
+    pdf = (b"%PDF-1.4\n1 0 obj\n<< /Length 1 >>\nstream\nBT (a\\8 b\\101\\9) Tj ET"
+           b"\nendstream\nendobj\n")
+    assert extract_pdf_text(pdf) == ("a8 bA9", 1)
+
+
 def test_truncated_pdf_no_endstream():
     good = build_pdf(["Complete text here."])
     cut = good[: good.find(b"endstream")]
@@ -120,3 +126,55 @@ def test_spark_stage(tmp_path):
     assert len(out) == 6
     for i, row in enumerate(out):
         assert row.pdf_text == f"Document number {i} body text."
+
+
+# -- extract_pdf_text never raises ------------------------------------------
+#
+# The Spark stage catches nothing, so a payload the decoder cannot handle
+# must come back as ("", 0) or partial text, never as an exception.
+
+from hypothesis import given, settings, strategies as st
+
+_FUZZ = settings(derandomize=True, max_examples=300, deadline=None)
+_SEEDS = [build_pdf(["Plain text here. With (nested) parens and \\ slashes."]),
+          build_pdf(["Compressed body. Two sentences."], compress=True),
+          build_pdf(["Kerned words in an array."], use_tj_array=True)]
+
+
+def _never_raises(pdf: bytes) -> None:
+    text, n = extract_pdf_text(pdf)
+    assert isinstance(text, str) and isinstance(n, int) and n >= 0
+
+
+@_FUZZ
+@given(st.binary(max_size=600), st.booleans())
+def test_random_bytes_never_raise(payload, with_header):
+    _never_raises(b"%PDF-1.4\n" + payload if with_header else payload)
+
+
+@_FUZZ
+@given(st.sampled_from(_SEEDS), st.floats(0.0, 1.0))
+def test_truncated_pdfs_never_raise(pdf, keep):
+    _never_raises(pdf[:int(len(pdf) * keep)])
+
+
+@_FUZZ
+@given(st.sampled_from(_SEEDS),
+       st.lists(st.tuples(st.floats(0.0, 1.0, exclude_max=True),
+                          st.binary(min_size=0, max_size=4)), min_size=1, max_size=8))
+def test_mutated_pdfs_never_raise(pdf, edits):
+    out = bytearray(pdf)
+    for where, patch in edits:
+        i = int(len(out) * where)
+        out[i:i + 1] = patch
+    _never_raises(bytes(out))
+
+
+@_FUZZ
+@given(st.lists(st.sampled_from([b"(", b")", b"\\", b"<", b">", b"0", b"7", b"8", b"9",
+                                 b"a", b"Tj", b"TJ", b"BT", b"ET", b"'", b" ", b"\n"]),
+                max_size=40))
+def test_text_operator_soup_never_raises(tokens):
+    content = b"BT " + b"".join(tokens) + b" Tj ET"
+    _never_raises(b"%PDF-1.4\n1 0 obj\n<< /Length 1 >>\nstream\n" + content
+                  + b"\nendstream\nendobj\n")

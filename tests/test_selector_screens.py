@@ -47,7 +47,7 @@ def _real_docs():
 
 
 def _assert_parity(doc):
-    index = selectors.TagIndex(doc)
+    index = etree.TreeIndex(doc)
     for rule in ALL_RULES:
         unscreened = [el for el in selectors._candidates(index, rule) if rule(el)]
         assert selectors.query_all(index, rule) == unscreened, rule.__name__
@@ -120,7 +120,7 @@ def test_screen_spans_match_expected():
         '<div id="s" class="hare-buttons">x</div>'   # shar span
         '<p id="hidde" style="n">x</p>'              # hidden span
         '</body></html>')
-    index = selectors.TagIndex(doc)
+    index = etree.TreeIndex(doc)
     assert len(selectors.query_all(index, selectors.comments_rule_1)) == 1
     assert len(selectors.query_all(index, selectors.overall_discarded_rule_1)) >= 1
     assert len(selectors.query_all(index, selectors.overall_discarded_rule_2)) >= 1
@@ -164,7 +164,7 @@ def test_anchors_by_ancestor_equals_naive_rule():
     """The inverted container scan the metadata stage runs returns the
     match list of the rule's own ancestor predicate, in document order."""
     doc = etree.parse_html(_meta_anchor_page())
-    index = selectors.TagIndex(doc)
+    index = etree.TreeIndex(doc)
     for rule in selectors.META_CATEGORIES + selectors.META_TAGS:
         got = selectors.anchors_by_ancestor(index, rule)
         assert got == selectors.query_all(doc, rule), rule.__name__

@@ -121,7 +121,7 @@ def test_tree_mutation_check_sees_every_form():
 #
 # Elements are found by ``selectors.query``/``query_all``/``query_iter``:
 # their one candidate scan (``selectors._candidates``) turns a rule's
-# declared tags into a tag-filtered walk or a TagIndex lookup. css.py
+# declared tags into a tag-filtered walk or a TreeIndex lookup. css.py
 # only parses selector groups into rules, and the doc-order descendant
 # walks live in etree.py.
 
