@@ -174,7 +174,7 @@ def _extract_content(doc: Element, fresh, options: Options) -> tuple:
     len_comments = 0
     comments_body: Element | None = None
     if not options.exclude_comments:
-        comments_body, tmp_comments = extract_comments(doc, cache, options, index)
+        comments_body, tmp_comments = extract_comments(cache, options, index)
         len_comments = len(tmp_comments)
 
     # Content
@@ -184,9 +184,7 @@ def _extract_content(doc: Element, fresh, options: Options) -> tuple:
     if options.enable_fallback:
         from .external import compare_external_extraction
 
-        post_body, tmp_body_text = compare_external_extraction(
-            doc_backup1, post_body, tmp_body_text, options
-        )
+        post_body, tmp_body_text = compare_external_extraction(doc_backup1, post_body, options)
 
     # Baseline rescue, on a fresh tree pruned like the working one
     len_text = len(tmp_body_text)

@@ -29,7 +29,7 @@ TAGS_TO_SANITIZE = frozenset(
 
 
 def compare_external_extraction(
-    original_doc: Element, extracted_doc: Element, extracted_text: str, options
+    original_doc: Element, extracted_doc: Element, options
 ) -> tuple[Element, str]:
     """external.go:50-101."""
     extracted_text = trim(etree.iter_text(extracted_doc, " "))

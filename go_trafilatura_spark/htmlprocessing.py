@@ -210,7 +210,7 @@ def link_density_test(element: Element, options, index=None) -> bool:
     return False
 
 
-def link_density_test_tables(table: Element, options) -> bool:
+def link_density_test_tables(table: Element) -> bool:
     """html-processing.go:312-340."""
     links = etree.get_elements_by_tag(table, "a")
     if not links:
@@ -392,7 +392,7 @@ def prune_unwanted_sections(subtree: Element, potential_tags: set, options) -> E
     if "table" in potential_tags or options.focus == FAVOR_PRECISION:
         tables = etree.iter_all(subtree, "table")
         for table in reversed(tables):
-            if link_density_test_tables(table, options):
+            if link_density_test_tables(table):
                 etree.remove(table)
 
     if options.focus == FAVOR_PRECISION:

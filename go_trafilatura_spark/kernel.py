@@ -248,14 +248,12 @@ class KernelOptions:
     cannot sink (bench.py emits it next to wall-clock)."""
 
     def __init__(self, opts_dict: dict | None = None, with_timing: bool = False):
-        self.opts_dict = opts_dict or {}
         self.with_timing = with_timing
-        Options.from_dict(self.opts_dict)  # an unknown key fails before any task runs
+        # validated here, so an unknown key fails before any task runs
+        self.options = Options.from_dict(opts_dict)
 
     def make_options(self, url: str):
-        opts = Options.from_dict(self.opts_dict)
-        opts.original_url = url
-        return opts
+        return replace(self.options, original_url=url)
 
 
 TIMED_OUTPUT_SCHEMA = StructType(

@@ -564,11 +564,10 @@ def process_comments_node(elem: Element, potential_tags: set, cache, options) ->
     return None
 
 
-def extract_comments(doc: Element, cache, options,
-                     index: etree.TreeIndex) -> tuple[Element | None, str]:
-    """main-extractor.go:808-852. ``index`` is the caller's TreeIndex of
-    ``doc``, shared with extract_content (this function never mutates
-    ``doc``: prune works on a clone)."""
+def extract_comments(cache, options, index: etree.TreeIndex) -> tuple[Element | None, str]:
+    """main-extractor.go:808-852, over the document ``index`` indexes (the
+    caller's TreeIndex, shared with extract_content). The document is
+    never mutated: prune works on a clone."""
     comments_body = etree.new_element("body")
     potential_tags = set(TAG_CATALOG)
 

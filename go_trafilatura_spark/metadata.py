@@ -1004,6 +1004,66 @@ def _valid_date(y: int, m: int, d: int) -> str:
     return ""
 
 
+@dataclass(frozen=True, slots=True)
+class _DateForm:
+    """One date form: its pattern and the reader that turns a match of it
+    into YYYY-MM-DD, or "" when a part is out of range."""
+
+    rx: stdlib_re.Pattern
+    read: object
+
+    def first(self, s: str, bound: int | None = None) -> str:
+        """The first valid date among the first ``bound`` matches in ``s``
+        (all of them when ``bound`` is None): an invalid match falls
+        through to the next."""
+        for m in itertools.islice(self.rx.finditer(s), bound):
+            date = self.read(m)
+            if date:
+                return date
+        return ""
+
+    def all(self, s: str) -> list[str]:
+        """Every valid date in ``s``, in match order."""
+        return [d for d in map(self.read, self.rx.finditer(s)) if d]
+
+
+def _read_ymd(m) -> str:
+    return _valid_date(int(m[1]), int(m[2]), int(m[3]))
+
+
+def _read_dmy(m) -> str:
+    return _valid_date(int(m[3]), int(m[2]), int(m[1]))
+
+
+def _read_mdy(m) -> str:
+    mo, d = int(m[1]), int(m[2])
+    if mo > 12 and d <= 12:
+        mo, d = d, mo  # 14/01/2020 can only be day-first
+    return _valid_date(int(m[3]), mo, d)
+
+
+_ISO_DATE = _DateForm(_RX_ISO_DATE, _read_ymd)
+_DMY_DATE = _DateForm(_RX_DMY_DATE, _read_dmy)
+_MDY_DATE = _DateForm(_RX_MDY_DATE, _read_mdy)
+_MDY_NAME = _DateForm(
+    _RX_MDY_NAME, lambda m: _valid_date(int(m[3]), _MONTHS[m[1].lower()], int(m[2])))
+_DMY_NAME = _DateForm(
+    _RX_DMY_NAME, lambda m: _valid_date(int(m[3]), _MONTHS[m[2].lower()], int(m[1])))
+_CJK_DATE = _DateForm(_RX_CJK_DATE, _read_ymd)
+_DMY2_DATE = _DateForm(
+    _RX_DMY2_DATE, lambda m: _valid_date(2000 + int(m[3]), int(m[2]), int(m[1])))
+_COMPACT_DATE = _DateForm(_RX_COMPACT_DATE, _read_ymd)
+_URL_DATE = _DateForm(_RX_URL_DATE, _read_ymd)
+_URL_DASH_YMD = _DateForm(stdlib_re.compile(r"/(\d{4})-(\d{2})-(\d{2})(?:[/.]|$)"), _read_ymd)
+_URL_DASH_DMY = _DateForm(stdlib_re.compile(r"/(\d{2})-(\d{2})-(\d{4})(?:[/.]|$)"), _read_dmy)
+
+
+def _has_month_name(text: str) -> bool:
+    """The C-level screen of the two month-name forms."""
+    low = text.lower()
+    return any(t in low for t in _MONTH_TRIGGERS)
+
+
 _RX_YEAR_QUICK = stdlib_re.compile(r"(?:19|20)\d{2}")
 
 # camelCase class names ("liveArticleAuthorDateBlock") hide the word
@@ -1133,60 +1193,20 @@ def _parse_date_string(s: str) -> str:
     # substring "19" or "20" — two C-level scans gate five finditer
     # passes on year-less text (the common case on date-free pages).
     if "20" not in s and "19" not in s:
-        if "." not in s:
-            return ""
-        for m in _RX_DMY2_DATE.finditer(s):
-            d = _valid_date(2000 + int(m.group(3)), int(m.group(2)), int(m.group(1)))
-            if d:
-                return d
-        return ""
+        return _DMY2_DATE.first(s) if "." in s else ""
     # Per-pattern C-substring gates: each regex needs a literal its
     # match must contain, so a failed `in` proves no match without the
     # full regex scan (the expensive case is a 100 KB+ dateless blob).
-    if "-" in s:
-        for m in _RX_ISO_DATE.finditer(s):
-            d = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
-            if d:
-                return d
+    # The M/D/Y walk is bounded for digit-dense blobs.
     has_dot = "." in s
-    if has_dot:
-        for m in _RX_DMY_DATE.finditer(s):
-            d = _valid_date(int(m.group(3)), int(m.group(2)), int(m.group(1)))
-            if d:
-                return d
-    if "/" in s:
-        for i, m in enumerate(_RX_MDY_DATE.finditer(s)):
-            if i >= 25:
-                break  # digit-dense blobs: bound the invalid-candidate walk
-            a, b = int(m.group(1)), int(m.group(2))
-            if a > 12 and b <= 12:
-                # 14/01/2020 can only be day-first
-                a, b = b, a
-            d = _valid_date(int(m.group(3)), a, b)
-            if d:
-                return d
-    if _RX_YEAR_QUICK.search(s):
-        low = s.lower()
-        if any(t in low for t in _MONTH_TRIGGERS):
-            for m in _RX_MDY_NAME.finditer(s):
-                d = _valid_date(int(m.group(3)), _MONTHS[m.group(1).lower()], int(m.group(2)))
-                if d:
-                    return d
-            for m in _RX_DMY_NAME.finditer(s):
-                d = _valid_date(int(m.group(3)), _MONTHS[m.group(2).lower()], int(m.group(1)))
-                if d:
-                    return d
-    if "年" in s:
-        for m in _RX_CJK_DATE.finditer(s):
-            d = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
-            if d:
-                return d
-    if has_dot:
-        for m in _RX_DMY2_DATE.finditer(s):
-            d = _valid_date(2000 + int(m.group(3)), int(m.group(2)), int(m.group(1)))
-            if d:
-                return d
-    return ""
+    return (("-" in s and _ISO_DATE.first(s))
+            or (has_dot and _DMY_DATE.first(s))
+            or ("/" in s and _MDY_DATE.first(s, 25))
+            or (_RX_YEAR_QUICK.search(s) is not None and _has_month_name(s)
+                and (_MDY_NAME.first(s) or _DMY_NAME.first(s)))
+            or ("年" in s and _CJK_DATE.first(s))
+            or (has_dot and _DMY2_DATE.first(s))
+            or "")
 
 
 # Containers whose id/class signals a visible publication date
@@ -1204,47 +1224,32 @@ _DATE_CLASS_LITERALS = ("date", "time", "post", "entry", "byline", "publish",
 
 
 def _scan_all_dates(text: str) -> list[str]:
-    """All plausible dates in a text blob (document order)."""
-    out = []
+    """All plausible dates in a text blob, form by form in priority order."""
     # C-substring gates (same exactness argument as _parse_date_string:
     # a pattern match must contain the literal) — the extensive
     # frequency scan runs seven regexes over up-to-400 KB blobs.
-    has_dash = "-" in text
-    has_dot = "." in text
-    low = text.lower()
-    has_month = any(t in low for t in _MONTH_TRIGGERS)
-    for rx, order in (
-        (_RX_ISO_DATE, (1, 2, 3)),
-        (_RX_DMY_DATE, (3, 2, 1)),
-        (_RX_MDY_NAME, None),
-        (_RX_DMY_NAME, None),
-        (_RX_MDY_DATE, (3, 1, 2)),
-        (_RX_CJK_DATE, (1, 2, 3)),
-        (_RX_COMPACT_DATE, (1, 2, 3)),
-    ):
-        if rx is _RX_ISO_DATE and not has_dash:
-            continue
-        if rx is _RX_DMY_DATE and not has_dot:
-            continue
-        if (rx is _RX_MDY_NAME or rx is _RX_DMY_NAME) and not has_month:
-            continue
-        if rx is _RX_MDY_DATE and "/" not in text:
-            continue
-        if rx is _RX_CJK_DATE and "年" not in text:
-            continue
-        for m in rx.finditer(text):
-            if rx is _RX_MDY_NAME:
-                d = _valid_date(int(m.group(3)), _MONTHS[m.group(1).lower()], int(m.group(2)))
-            elif rx is _RX_DMY_NAME:
-                d = _valid_date(int(m.group(3)), _MONTHS[m.group(2).lower()], int(m.group(1)))
-            else:
-                y, mo, dd = (int(m.group(i)) for i in order)
-                if rx is _RX_MDY_DATE and mo > 12 and dd <= 12:
-                    mo, dd = dd, mo
-                d = _valid_date(y, mo, dd)
-            if d:
-                out.append(d)
+    out = _ISO_DATE.all(text) if "-" in text else []
+    if "." in text:
+        out += _DMY_DATE.all(text)
+    if _has_month_name(text):
+        out += _MDY_NAME.all(text)
+        out += _DMY_NAME.all(text)
+    if "/" in text:
+        out += _MDY_DATE.all(text)
+    if "年" in text:
+        out += _CJK_DATE.all(text)
+    out += _COMPACT_DATE.all(text)
     return out
+
+
+def _first_parsed(tier: str, texts):
+    """Yield (``tier``, date) for the first of ``texts`` that holds a valid
+    date; ``texts`` is drawn lazily, so candidates after it cost nothing."""
+    for text in texts:
+        date = _parse_date_string(text)
+        if date:
+            yield tier, date
+            return
 
 
 def _date_tier_candidates(doc: Element, extensive: bool, index):
@@ -1269,29 +1274,19 @@ def _date_tier_candidates(doc: Element, extensive: bool, index):
 
     # <time> and <abbr> elements (published markers first)
     time_nodes = index.of_tag("time")
-    for node in time_nodes:
-        itemprop = node.get("itemprop").lower()
-        if itemprop in ("datepublished", "datecreated") or node.get("pubdate"):
-            date = _parse_date_string(node.get("datetime") or etree.text_content(node))
-            if date:
-                yield "time_pub", date
-                break
-    for node in time_nodes:
-        # A bare <time> inside the comment section is a comment
-        # timestamp, not the article date (htmldate's selectors skip
-        # comment containers for the same reason).
-        if _in_comment_area(node):
-            continue
-        date = _parse_date_string(node.get("datetime") or etree.text_content(node))
-        if date:
-            yield "time_bare", date
-            break
-    for node in index.of_tag("abbr"):
-        if _RX_DATE_CLASS.search(node.get("class")):
-            date = _parse_date_string(node.get("title") or etree.text_content(node))
-            if date:
-                yield "abbr", date
-                break
+    yield from _first_parsed("time_pub", (
+        node.get("datetime") or etree.text_content(node) for node in time_nodes
+        if node.get("itemprop").lower() in ("datepublished", "datecreated")
+        or node.get("pubdate")))
+    # A bare <time> inside the comment section is a comment timestamp,
+    # not the article date (htmldate's selectors skip comment containers
+    # for the same reason).
+    yield from _first_parsed("time_bare", (
+        node.get("datetime") or etree.text_content(node) for node in time_nodes
+        if not _in_comment_area(node)))
+    yield from _first_parsed("abbr", (
+        node.get("title") or etree.text_content(node) for node in index.of_tag("abbr")
+        if _RX_DATE_CLASS.search(node.get("class"))))
 
     # Microdata on arbitrary elements (htmldate's itemprop scan is not
     # limited to <time>); modified stamps feed the reserve. The
@@ -1368,11 +1363,9 @@ def _date_tier_candidates(doc: Element, extensive: bool, index):
         marker_text = etree.iter_text(body, "\n")[:300000]
         marker_low = marker_text.lower()
         if any(k in marker_low for k in _PUB_MARKER_KEYS):
-            for m in _RX_PUB_MARKER.finditer(marker_text):
-                date = _parse_date_string(marker_text[m.end():m.end() + 48])
-                if date:
-                    yield "marker_pub", date
-                    break
+            yield from _first_parsed("marker_pub", (
+                marker_text[m.end():m.end() + 48]
+                for m in _RX_PUB_MARKER.finditer(marker_text)))
 
     # Date-classed visible containers (htmldate DATE_EXPRESSIONS),
     # found by the fused element pass above.
@@ -1388,24 +1381,19 @@ def _date_tier_candidates(doc: Element, extensive: bool, index):
     # than the first bare date in reading order.
     if marker_text:
         if any(k in marker_low for k in _MOD_MARKER_KEYS):
-            for m in _RX_MOD_MARKER.finditer(marker_text):
-                date = _parse_date_string(marker_text[m.end():m.end() + 48])
-                if date:
-                    yield "marker_mod", date
-                    break
+            yield from _first_parsed("marker_mod", (
+                marker_text[m.end():m.end() + 48]
+                for m in _RX_MOD_MARKER.finditer(marker_text)))
         date = _parse_date_string(marker_text)
         if date:
             yield "text_scan", date
 
     if extensive:
         # Description/title meta content
-        for node in index.of_tag("meta"):
-            key = (node.get("property") or node.get("name")).lower()
-            if key in ("description", "og:description", "og:title", "twitter:description"):
-                date = _parse_date_string(node.get("content"))
-                if date:
-                    yield "desc_meta", date
-                    break
+        yield from _first_parsed("desc_meta", (
+            node.get("content") for node in index.of_tag("meta")
+            if (node.get("property") or node.get("name")).lower()
+            in ("description", "og:description", "og:title", "twitter:description")))
         # Embedded-JSON keys anywhere in the document
         whole = etree.iter_text(doc, "\n")[:400000]
         m = stdlib_re.search(
@@ -1440,21 +1428,11 @@ def _url_dates(url: str, extensive: bool) -> tuple[str, str]:
     dash-separated path date just before the frequency scan (yyyy-mm-dd
     first, dd-mm-yyyy as fallback — the fallback also applies when the
     first form matched but failed date validation)."""
-    full = dash = ""
     if not url:
-        return full, dash
-    m = _RX_URL_DATE.search(url)
-    if m:
-        full = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
-    if extensive:
-        m = stdlib_re.search(r"/(\d{4})-(\d{2})-(\d{2})(?:[/.]|$)", url)
-        if m:
-            dash = _valid_date(int(m.group(1)), int(m.group(2)), int(m.group(3)))
-        if not dash:
-            m = stdlib_re.search(r"/(\d{2})-(\d{2})-(\d{4})(?:[/.]|$)", url)
-            if m:
-                dash = _valid_date(int(m.group(3)), int(m.group(2)), int(m.group(1)))
-    return full, dash
+        return "", ""
+    # bound 1: each url form reads its first match only
+    dash = (_URL_DASH_YMD.first(url, 1) or _URL_DASH_DMY.first(url, 1)) if extensive else ""
+    return _URL_DATE.first(url, 1), dash
 
 
 def page_dates(doc: Element, extensive: bool, index: etree.TreeIndex) -> tuple:

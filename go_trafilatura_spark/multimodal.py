@@ -158,7 +158,8 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytearray]:
     """Minimal-but-real PNG decoder (pure stdlib): critical chunks,
     zlib inflate, scanline unfiltering, palette expansion. Supports
     8-bit depth, non-interlaced, color types 0/2/3/4/6.
-    → (width, height, channels, row-major interleaved samples)."""
+    → (width, height, channels, row-major interleaved samples).
+    A malformed payload raises ValueError; the inflate is size-bounded."""
     if payload[:8] != _PNG_SIG:
         raise ValueError("png: bad signature")
     pos = 8
@@ -172,6 +173,8 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytearray]:
         data = payload[pos + 8:pos + 8 + length]
         pos += 12 + length  # skip CRC
         if ctype == b"IHDR":
+            if len(data) != 13:
+                raise ValueError("png: bad IHDR length")
             w, h, bit_depth, color_type, _comp, _filt, interlace = struct.unpack(
                 ">IIBBBBB", data
             )
@@ -189,10 +192,19 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytearray]:
             f"interlace={interlace}); use PillowDecodeBackend"
         )
     bpp = _PNG_CHANNELS[color_type]
-    samples = _png_unfilter(zlib.decompress(bytes(idat)), w, h, bpp)
+    size = h * (1 + w * bpp)
+    inflate = zlib.decompressobj()
+    try:
+        raw = inflate.decompress(bytes(idat), size + 1)
+    except zlib.error as e:
+        raise ValueError(f"png: {e}") from None
+    if not w or not h or len(raw) != size or not inflate.eof:
+        raise ValueError(f"png: image data inflates to {len(raw)} bytes, "
+                         f"the {w}x{h} header declares {size}")
+    samples = _png_unfilter(raw, w, h, bpp)
     if color_type == 3:  # palette → RGB
-        if plte is None:
-            raise ValueError("png: palette image without PLTE")
+        if plte is None or max(samples) * 3 + 3 > len(plte):
+            raise ValueError("png: palette index without a PLTE entry")
         rgb = bytearray(len(samples) * 3)
         for i, idx in enumerate(samples):
             rgb[i * 3:i * 3 + 3] = plte[idx * 3:idx * 3 + 3]
@@ -284,24 +296,31 @@ class PillowDecodeBackend(DecodeBackend):
         from PIL import Image  # noqa: F401 — availability probe
 
         self._Image = Image
+        # Pillow's decode errors, raised as ValueError by the decoders
+        self._errors = (OSError, SyntaxError, EOFError, Image.DecompressionBombError)
 
     def decode_image(self, payload: bytes) -> tuple[int, int, list[float]]:
         import io
 
-        img = self._Image.open(io.BytesIO(payload)).convert("L")
+        try:
+            img = self._Image.open(io.BytesIO(payload)).convert("L")
+        except self._errors as e:
+            raise ValueError(f"image: {e}") from None
         w, h = img.size
         return w, h, [p / 255.0 for p in img.getdata()]
 
     def sample_frames(self, payload: bytes, n: int) -> list[list[float]]:
         import io
 
-        img = self._Image.open(io.BytesIO(payload))
-        total = getattr(img, "n_frames", 1)
         frames = []
-        for i in range(n):
-            img.seek(min(i * total // max(n, 1), total - 1))
-            gray = img.convert("L")
-            frames.append([p / 255.0 for p in gray.getdata()])
+        try:
+            img = self._Image.open(io.BytesIO(payload))
+            total = getattr(img, "n_frames", 1)
+            for i in range(n):
+                img.seek(min(i * total // max(n, 1), total - 1))
+                frames.append([p / 255.0 for p in img.convert("L").getdata()])
+        except self._errors as e:
+            raise ValueError(f"image: {e}") from None
         return frames
 
 
@@ -353,7 +372,7 @@ def image_features(df: DataFrame, backend: DecodeBackend | None = None) -> DataF
     def features(media_id, payload):
         try:
             w, h, plane = backend.decode_image(payload)
-        except Exception:
+        except ValueError:
             return  # corrupt payload must never kill the batch
         pooled = _avg_pool(plane, w, h, 8, 8)
         mean = sum(pooled) / len(pooled)
@@ -371,7 +390,7 @@ def resize_images(df: DataFrame, out_w: int, out_h: int,
     def resized(media_id, payload):
         try:
             w, h, plane = backend.decode_image(payload)
-        except Exception:
+        except ValueError:
             return  # corrupt payload must never kill the batch
         yield media_id, [float(x) for x in _avg_pool(plane, w, h, out_w, out_h)]
 
@@ -395,7 +414,7 @@ def audio_features(df: DataFrame, backend: DecodeBackend | None = None) -> DataF
     def features(media_id, payload):
         try:
             rate, samples = backend.decode_audio(payload)
-        except Exception:
+        except ValueError:
             return  # corrupt payload must never kill the batch
         rms = math.sqrt(sum(s * s for s in samples) / len(samples)) if samples else 0.0
         peak = max((abs(s) for s in samples), default=0.0)
@@ -468,7 +487,7 @@ def sample_video_frames(df: DataFrame, n_frames: int = 3,
     def frames(media_id, payload):
         try:
             sampled = backend.sample_frames(payload, n_frames)
-        except Exception:
+        except ValueError:
             return  # corrupt payload must never kill the batch
         for idx, frame in enumerate(sampled):
             yield media_id, idx, float(sum(frame) / len(frame))

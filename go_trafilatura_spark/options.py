@@ -82,7 +82,8 @@ _CHOICES = {
 def _check_value(key: str, kind: str, value) -> None:
     """Raise ValueError naming ``key`` unless ``value`` is one of its
     choices, a bool for a bool field, a non-negative int for an int
-    field or a string for a string field; other fields take any value."""
+    field, a string for a string field or a list of strings for a
+    list-of-strings field; other fields take any value."""
     choices = _CHOICES.get(key)
     if choices is not None:
         ok = type(value) is type(choices[0]) and value in choices
@@ -92,6 +93,8 @@ def _check_value(key: str, kind: str, value) -> None:
         ok = type(value) is int and value >= 0
     elif kind == "str":
         ok = type(value) is str
+    elif kind == "list[str]":
+        ok = type(value) is list and all(type(item) is str for item in value)
     else:
         return
     if not ok:

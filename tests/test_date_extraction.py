@@ -257,9 +257,10 @@ def test_date_url_first_flag():
 
 def test_digit_neighborhood_pattern_set_pinned():
     """The margin analysis below covers exactly the patterns
-    _parse_date_string scans. Adding a finditer pattern to the cascade
-    MUST fail here until the margin invariant is re-verified (and the
-    adversarial corpus below extended)."""
+    _parse_date_string scans, directly or through a date form's
+    ``first``. Adding a pattern or a form to the cascade MUST fail here
+    until the margin invariant is re-verified (and the adversarial
+    corpus below extended)."""
     import inspect
     import re
 
@@ -267,6 +268,10 @@ def test_digit_neighborhood_pattern_set_pinned():
 
     src = inspect.getsource(metadata._parse_date_string)
     used = set(re.findall(r"(_RX_\w+)\.finditer", src))
+    forms = [getattr(metadata, name) for name in re.findall(r"(_\w+)\.first\(", src)]
+    assert forms and all(isinstance(f, metadata._DateForm) for f in forms)
+    used |= {name for name, value in vars(metadata).items()
+             if name.startswith("_RX_") and any(f.rx is value for f in forms)}
     assert used == {
         "_RX_ISO_DATE", "_RX_DMY_DATE", "_RX_MDY_DATE", "_RX_MDY_NAME",
         "_RX_DMY_NAME", "_RX_CJK_DATE", "_RX_DMY2_DATE",

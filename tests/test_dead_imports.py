@@ -201,3 +201,160 @@ def test_module_switch_check_sees_every_form():
     )
     assert sorted(name for _, name in _module_switches(ast.parse(src))) == [
         "BATCH", "FAST", "LIMIT", "OTHER", "SLOW"]
+
+
+# Parameters a package function may leave unread, each with its reason.
+UNREAD_PARAMETER_EXEMPTIONS = {
+    "etree.py: _TreeBuilder.updatepos(i)":
+        "HTMLParser override: keeps the base signature, skips line counting",
+    "etree.py: _TreeBuilder.handle_decl(decl)": "HTMLParser override: doctype ignored",
+    "etree.py: _TreeBuilder.handle_pi(data)": "HTMLParser override: PI ignored",
+    "etree.py: _TreeBuilder.unknown_decl(data)": "HTMLParser override: ignored",
+    "multimodal.py: DecodeBackend.decode_image(payload)": "interface stub",
+    "multimodal.py: DecodeBackend.sample_frames(payload)": "interface stub",
+    "multimodal.py: DecodeBackend.sample_frames(n)": "interface stub",
+    "multimodal.py: DecodeBackend.decode_audio(payload)": "interface stub",
+    "pipeline.py: TableSink.append(df)": "interface stub",
+    "pipeline.py: TableSink.overwrite_partitions(df)": "interface stub",
+    "pipeline.py: TableSink.read(spark)": "interface stub",
+}
+
+_COMPOUND = (ast.If, ast.For, ast.AsyncFor, ast.While, ast.Try, ast.With, ast.AsyncWith,
+             ast.Match) + ((ast.TryStar,) if hasattr(ast, "TryStar") else ())
+
+
+def _parameters(fn) -> list[str]:
+    a = fn.args
+    return [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]
+            if p is not None]
+
+
+class _FirstUse(ast.NodeVisitor):
+    """Visits a function body in evaluation order and records whether each
+    watched name is first read or first rebound. A rebinding inside a
+    branch or a loop may not run, so only those at the body's top level
+    count; names a nested function or lambda rebinds as its own
+    parameters are not the watched ones inside it."""
+
+    def __init__(self, names):
+        self.first = dict.fromkeys(names)
+        self.shadowed: list[set] = []
+        self.depth = 0
+
+    def _note(self, name, read):
+        if (self.first.get(name, "") is None and (read or self.depth == 0)
+                and not any(name in s for s in self.shadowed)):
+            self.first[name] = "read" if read else "rebound"
+
+    def visit_Name(self, node):
+        self._note(node.id, isinstance(node.ctx, ast.Load))
+
+    def visit_Assign(self, node):
+        self.visit(node.value)
+        for target in node.targets:
+            self.visit(target)
+
+    def visit_AugAssign(self, node):
+        if isinstance(node.target, ast.Name):
+            self._note(node.target.id, True)
+        self.visit(node.value)
+
+    def visit_AnnAssign(self, node):
+        if node.value is not None:
+            self.visit(node.value)
+        self.visit(node.target)
+
+    def visit_NamedExpr(self, node):
+        self.visit(node.value)
+        self.visit(node.target)
+
+    def visit_comprehension(self, node):
+        self.visit(node.iter)
+        self.visit(node.target)
+        for cond in node.ifs:
+            self.visit(cond)
+
+    def visit_FunctionDef(self, node):
+        for expr in (getattr(node, "decorator_list", []) + node.args.defaults
+                     + node.args.kw_defaults):
+            if expr is not None:
+                self.visit(expr)
+        self.shadowed.append(set(_parameters(node)))
+        self.depth += 1
+        for stmt in node.body if isinstance(node.body, list) else [node.body]:
+            self.visit(stmt)
+        self.depth -= 1
+        self.shadowed.pop()
+
+    visit_AsyncFunctionDef = visit_Lambda = visit_FunctionDef
+
+    def generic_visit(self, node):
+        if isinstance(node, (ast.For, ast.AsyncFor)):
+            self.visit(node.iter)
+        compound = isinstance(node, _COMPOUND)
+        self.depth += compound
+        super().generic_visit(node)
+        self.depth -= compound
+
+
+def unread_parameters(source: str, filename: str) -> list[str]:
+    """``file: Class.function(parameter)`` for each parameter (bar self and
+    cls) that its function rebinds before reading it, or never reads."""
+    found = []
+
+    def visit(node, prefix):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, f"{prefix}{child.name}.")
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                names = [p for p in _parameters(child) if p not in ("self", "cls")]
+                use = _FirstUse(names)
+                for stmt in child.body:
+                    use.visit(stmt)
+                found.extend(f"{filename}: {prefix}{child.name}({p})"
+                             for p in names if use.first[p] != "read")
+                visit(child, f"{prefix}{child.name}.")
+            else:
+                visit(child, prefix)
+
+    visit(ast.parse(source), "")
+    return found
+
+
+def test_every_parameter_is_read():
+    found = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "go_trafilatura_spark", "*.py"))):
+        with open(path, encoding="utf-8") as f:
+            found += unread_parameters(f.read(), os.path.basename(path))
+    unexempted = [f for f in found if f not in UNREAD_PARAMETER_EXEMPTIONS]
+    assert unexempted == [], "parameters never read before rebinding:\n" + "\n".join(unexempted)
+    stale = sorted(set(UNREAD_PARAMETER_EXEMPTIONS) - set(found))
+    assert stale == [], "exemptions that no longer apply:\n" + "\n".join(stale)
+
+
+def test_unread_parameter_check_sees_every_form():
+    src = (
+        "def overwritten(a, b, *args, c, **kw):\n"
+        "    a = 1\n"
+        "    return a\n"
+        "def read(x, y, z, w, v):\n"
+        "    x = x + 1\n"
+        "    y += 1\n"
+        "    if x:\n"
+        "        z = 2\n"
+        "    g = lambda: w\n"
+        "    return [u for u in v if z], g\n"
+        "def shadowed(p, q):\n"
+        "    def inner(p):\n"
+        "        return p, q\n"
+        "    for q in range(3):\n"
+        "        pass\n"
+        "    return inner\n"
+        "class K:\n"
+        "    def m(self, unused):\n"
+        "        return self\n"
+    )
+    assert unread_parameters(src, "f.py") == [
+        "f.py: overwritten(a)", "f.py: overwritten(b)", "f.py: overwritten(c)",
+        "f.py: overwritten(args)", "f.py: overwritten(kw)", "f.py: shadowed(p)",
+        "f.py: K.m(unused)"]

@@ -385,6 +385,8 @@ def test_options_from_dict_rejects_unknown_keys():
     ("config.min_extracted_size", -5), ("config.cache_size", "big"),
     ("config.min_output_size", True), ("config", 5),
     ("prune_selector", 5), ("target_language", None),
+    ("blacklisted_authors", "Jane Doe"), ("blacklisted_authors", ["Jane Doe", 5]),
+    ("blacklisted_authors", ("Jane Doe",)),
 ])
 def test_options_from_dict_rejects_bad_values(key, value):
     from go_trafilatura_spark.kernel import KernelOptions
@@ -428,3 +430,22 @@ def test_options_from_dict_accepts_real_values():
         for k, v in d.items():
             if k != "config":
                 assert getattr(opts, k) == v
+
+
+def test_blacklisted_authors_from_a_job_dict():
+    """A job's ``blacklisted_authors`` must be a list of strings: a bare
+    string fails before any task runs (iterated, it would blacklist
+    single characters), and a list drops the named author from the
+    kernel row."""
+    from go_trafilatura_spark.kernel import KernelOptions, _extract_row
+
+    with pytest.raises(ValueError, match="option blacklisted_authors:"):
+        KernelOptions({"blacklisted_authors": "Jane Doe"})
+    html = ("<html><head><meta name=\"author\" content=\"Jane Doe\"></head><body><article>"
+            + "<p>The harbour committee met again about the ferry timetable.</p>" * 8
+            + "</article></body></html>").encode()
+    author = 5  # the author column of a kernel row
+    assert _extract_row("https://a.example/p", html, KernelOptions())[author] == "Jane Doe"
+    row = _extract_row("https://a.example/p", html,
+                       KernelOptions({"blacklisted_authors": ["Jane Doe"]}))
+    assert row[author] == ""

@@ -112,3 +112,62 @@ def test_corrupt_payload_skipped_not_fatal():
 
     with _pytest.raises(ValueError):
         PngDecodeBackend().decode_image(b"\x89PNG\r\n\x1a\nGARBAGE")
+
+
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+# One 8x8 RGB image per scanline filter type, the fuzz seeds.
+_FUZZ_SEEDS = [encode_png(8, 8, 3, _gradient(8, 8, 3), filter_type=f) for f in range(5)]
+
+
+def _decode_or_value_error(payload):
+    try:
+        decode_png(payload)
+    except ValueError:
+        pass
+
+
+@settings(derandomize=True, max_examples=400, deadline=None)
+@given(st.sampled_from(_FUZZ_SEEDS), st.data())
+def test_png_fuzz_only_value_error_escapes(png, data):
+    """Byte mutations and truncations of valid PNGs, for all five filter
+    types: decode_png returns or raises ValueError, never struct.error,
+    zlib.error, IndexError or MemoryError."""
+    payload = bytearray(png)
+    for _ in range(data.draw(st.integers(1, 3))):
+        pos = data.draw(st.integers(0, len(payload) - 1))
+        payload[pos] = data.draw(st.integers(0, 255))
+    _decode_or_value_error(bytes(payload))
+    _decode_or_value_error(png[:data.draw(st.integers(0, len(png) - 1))])
+
+
+def test_png_header_larger_than_its_data_is_rejected():
+    """A header claiming 100,000 x 100,000 RGB pixels over a tiny IDAT
+    raises ValueError before anything of that size is allocated."""
+    def chunk(ctype, data):
+        return (struct.pack(">I", len(data)) + ctype + data
+                + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
+
+    png = (b"\x89PNG\r\n\x1a\n"
+           + chunk(b"IHDR", struct.pack(">IIBBBBB", 100_000, 100_000, 8, 2, 0, 0, 0))
+           + chunk(b"IDAT", zlib.compress(bytes(64)))
+           + chunk(b"IEND", b""))
+    with pytest.raises(ValueError, match="declares 30000100000"):
+        decode_png(png)
+    # a stream that inflates past the declared size is rejected too
+    big = encode_png(8, 8, 3, _gradient(8, 8, 3)).replace(
+        struct.pack(">II", 8, 8), struct.pack(">II", 8, 4), 1)
+    with pytest.raises(ValueError, match="inflates to 101 bytes"):
+        decode_png(big)
+
+
+def test_pillow_backend_raises_value_error_on_garbage():
+    pytest.importorskip("PIL")
+    from go_trafilatura_spark.multimodal import PillowDecodeBackend
+
+    png = encode_png(4, 3, 1, _gradient(4, 3, 1))
+    for payload in (b"not an image", png[:40]):
+        with pytest.raises(ValueError):
+            PillowDecodeBackend().decode_image(payload)
+        with pytest.raises(ValueError):
+            PillowDecodeBackend().sample_frames(payload, 2)

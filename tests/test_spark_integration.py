@@ -1995,6 +1995,17 @@ def test_payload_stage_contract(spark, tmp_path, stage, expected):
     assert sorted(_payload_stage_rows(spark, stage, tmp_path)) == sorted(expected)
 
 
+def test_payload_stage_fails_on_a_missing_codec(spark):
+    """Only a ValueError (a corrupt payload) drops a row: a backend with
+    no codec for the kind fails the stage instead of dropping every row."""
+    from go_trafilatura_spark import multimodal as mm
+
+    media = spark.createDataFrame(
+        [("audio", "audio", "audio/wav", b"RIFF", None, None, None)], mm.MEDIA_SCHEMA)
+    with pytest.raises(Exception, match="no audio codec"):
+        mm.audio_features(media, backend=mm.PngDecodeBackend()).collect()
+
+
 def test_fanout_small_scan_multi_file_input_adds_no_exchange(spark, tmp_path):
     """An input under the size threshold that already scans as at least
     defaultParallelism partitions is returned unchanged on the
