@@ -515,7 +515,7 @@ def _dedup_pipeline() -> dict:
         def run_once():
             t0 = time.time()
             out = extract_pages(pages, _OPTS, repartition=False)
-            # ext feeds line_dedup AND the final strata join — persist
+            # ext feeds line_dedup AND the tail's one join — persist
             # so the Python extraction kernel runs ONCE, not once per
             # branch (corpus_dedup_pipeline persists its own internal
             # frames; the input persist is the caller's call).

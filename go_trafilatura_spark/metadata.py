@@ -987,15 +987,29 @@ _MONTH_ALT = "|".join(sorted(_MONTHS, key=len, reverse=True))
 # its first three letters appear (case-folded) — ~30 memmem scans gate
 # the two big IGNORECASE alternations on month-less text.
 _MONTH_TRIGGERS = tuple(sorted({m[:3] for m in _MONTHS}))
+# A month name's first letter, as a class: the lookahead fails fast at
+# a word start that no name can begin, before the alternation is tried.
+_MONTH_INITIALS = "".join(sorted({m[0] for m in _MONTHS}))
 # "January 20, 2020" / "Jan 20 2020"
 _RX_MDY_NAME = stdlib_re.compile(
-    rf"(?i)\b({_MONTH_ALT})\.?\s+(\d{{1,2}})(?:st|nd|rd|th)?,?\s+(\d{{4}})\b"
+    rf"(?i)\b(?=[{_MONTH_INITIALS}])({_MONTH_ALT})\.?\s+(\d{{1,2}})"
+    rf"(?:st|nd|rd|th)?,?\s+(\d{{4}})\b"
 )
 # "20. Januar 2020" / "20 janvier 2020" / "14 de enero de 2020"
 _RX_DMY_NAME = stdlib_re.compile(
     rf"(?i)\b(\d{{1,2}})(?:st|nd|rd|th)?\.?\s+(?:de\s+|del\s+|di\s+)?({_MONTH_ALT})\.?"
     rf"(?:\s+de)?\s+(\d{{4}})\b"
 )
+
+
+# (?i) also matches I through İ and ı and S through ſ, which str.lower()
+# does not fold to i and s ("APRİL".lower() is "apri̇l"): fold them
+# first, so every month-name match reads a month.
+_MONTH_FOLD = str.maketrans({"\u0130": "i", "\u0131": "i", "\u017f": "s"})
+
+
+def _month(name: str) -> int:
+    return _MONTHS[name.translate(_MONTH_FOLD).lower()]
 
 
 def _valid_date(y: int, m: int, d: int) -> str:
@@ -1046,9 +1060,9 @@ _ISO_DATE = _DateForm(_RX_ISO_DATE, _read_ymd)
 _DMY_DATE = _DateForm(_RX_DMY_DATE, _read_dmy)
 _MDY_DATE = _DateForm(_RX_MDY_DATE, _read_mdy)
 _MDY_NAME = _DateForm(
-    _RX_MDY_NAME, lambda m: _valid_date(int(m[3]), _MONTHS[m[1].lower()], int(m[2])))
+    _RX_MDY_NAME, lambda m: _valid_date(int(m[3]), _month(m[1]), int(m[2])))
 _DMY_NAME = _DateForm(
-    _RX_DMY_NAME, lambda m: _valid_date(int(m[3]), _MONTHS[m[2].lower()], int(m[1])))
+    _RX_DMY_NAME, lambda m: _valid_date(int(m[3]), _month(m[2]), int(m[1])))
 _CJK_DATE = _DateForm(_RX_CJK_DATE, _read_ymd)
 _DMY2_DATE = _DateForm(
     _RX_DMY2_DATE, lambda m: _valid_date(2000 + int(m[3]), int(m[2]), int(m[1])))

@@ -60,7 +60,20 @@ def build_session(
 ) -> SparkSession:
     """Session tuned for the extraction workload (AQE on, Arrow on,
     small Arrow batches for fat HTML rows, a generated-class cache that
-    holds a whole curation pass)."""
+    holds a whole curation pass).
+
+    PySpark's DataFrame origin capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off. When on,
+    every Column function call records its Python call site in the JVM,
+    about five py4j round trips per call (active session, reflection
+    lookup, conf read, origin set and clear). That is about 1,300 extra
+    round trips, roughly 0.2 s of driver time, each time a curation
+    pass builds its plan. Spark documents the feature's cost as
+    non-trivial; it only adds the Python line to analysis error
+    messages. Restore it with ``extra_conf={"spark.python.sql.
+    dataFrameDebugging.enabled": "true"}``; PySpark reads the setting
+    once per process, from the first session active when a Column
+    function runs."""
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -74,6 +87,7 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
@@ -525,16 +539,23 @@ def corpus_dedup_pipeline(
     a frame feeding two consumers inside one action executes its
     lineage twice, 47 s → 15 s at sf0.1 for the final stage):
 
-    - ``deduped`` (line-level dedup output) feeds the substring filter,
-      the gopher filter, and the kept-join — persisted.
+    - ``deduped`` (line-level dedup output, the only handle with
+      text) feeds the substring filter and the gopher filter —
+      persisted.
     - ``gq`` (the gopher decision frame, two short columns per doc) is
       persisted BEFORE its keep-filter as an optimizer barrier — see
       the inline comment (filter pushdown otherwise re-inlines the
       repetition metric trees into the predicate, measured 10×).
-    - ``kept`` (both quality semi-joins applied) feeds the host_cap
-      input and the final join, and its lineage contains the
-      substring-dedup shingle join — persisted.
-    - ``ext`` itself feeds line_dedup and the final strata join; the
+    - ``kept`` is the ids both quality gates keep, joined once with
+      ``ext``'s ``doc_id``, strata and url columns — persisted. The ids
+      are ``ss_keep ⋉ gq_keep``, the same set as ``deduped ⋉ ss_keep ⋉
+      gq_keep``: both decision frames derive from ``deduped`` and hold
+      at most one row per doc. The host cap, the null-url bypass, the
+      capped semi-join and the sample all read it, and its lineage
+      holds the substring-dedup shingle join. No text goes past the
+      quality gates: at 100 TB this handle caches (doc_id, strata,
+      url), not the kept documents' text.
+    - ``ext`` itself feeds line_dedup and the one tail join; the
       CALLER decides whether to persist it (bench does — its lineage
       holds the Python extraction kernel; a parquet-scan caller like
       dedup_job leaves it unpersisted so 100 TB is never cached).
@@ -575,8 +596,10 @@ def corpus_dedup_pipeline(
     gq = (textops.gopher_quality_filter(deduped)
           .select("doc_id", "keep").persist())
     gq_keep = gq.where(F.col("keep")).select("doc_id")
-    kept = (deduped.join(ss_keep, "doc_id", "left_semi")
-            .join(gq_keep, "doc_id", "left_semi")).persist()
+    # The tail reads ids, strata and urls only: one join with ext.
+    tail_cols = dict.fromkeys(["doc_id", strata_col] + ([url_col] if url_col else []))
+    kept = (ss_keep.join(gq_keep, "doc_id", "left_semi")
+            .join(ext.select(*tail_cols), "doc_id")).persist()
 
     if url_col is None:
         capped_kept = kept
@@ -587,8 +610,7 @@ def corpus_dedup_pipeline(
         # Docs with a NULL url cannot be attributed to a host — they
         # bypass the cap explicitly instead of being silently dropped
         # by the equi-join.
-        urls = kept.join(
-            ext.select("doc_id", F.col(url_col).alias("url")), "doc_id")
+        urls = kept.select("doc_id", F.col(url_col).alias("url"))
         capped_ids = host_cap(
             urls.where(F.col("url").isNotNull()),
             max_per_host=max_per_host, id_col="doc_id",
@@ -598,6 +620,5 @@ def corpus_dedup_pipeline(
             capped_ids.unionByName(null_ids), "doc_id", "left_semi")
 
     final = textops.stratified_sample(
-        capped_kept.join(ext.select("doc_id", strata_col), "doc_id"),
-        strata_col=strata_col, fraction=sample_fraction)
+        capped_kept, strata_col=strata_col, fraction=sample_fraction)
     return final, [deduped, gq, kept]

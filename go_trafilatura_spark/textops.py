@@ -478,10 +478,16 @@ def ngram_jaccard_pairs(df: DataFrame, k_shingle: int = 3, threshold: float = 0.
     jaccard is a lower bound for pairs whose overlap includes capped
     shingles (the standard inverted-index-pruning tradeoff; exact for
     every pair at the test scales, where max df ≈ 7)."""
+    from pyspark.sql import Window
+
+    # Each shingle row carries its document's set size, so the pair
+    # aggregation reads both sizes off its join rows and no sizes table
+    # is joined back. (Taking F.size of the set instead measured 2x
+    # slower at sf0.01: the rare join then built on the shingle side and
+    # the pairs lost their doc_id partitioning; NOTES.md.)
     sh = with_tokens(df).select(
         "doc_id", F.explode(F.array_distinct(shingles_expr(k_shingle))).alias("shingle")
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
+    ).withColumn("n", F.count("*").over(Window.partitionBy("doc_id")))
 
     rare = (
         sh.groupBy("shingle")
@@ -491,18 +497,13 @@ def ngram_jaccard_pairs(df: DataFrame, k_shingle: int = 3, threshold: float = 0.
     )
     sh_kept = sh.join(rare, "shingle")
 
-    a = sh_kept.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh_kept.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
+    a = sh_kept.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), "shingle")
+    b = sh_kept.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "shingle")
+    return (
         a.join(b, "shingle")
         .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("nb"))
-    jac = (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -512,7 +513,6 @@ def ngram_jaccard_pairs(df: DataFrame, k_shingle: int = 3, threshold: float = 0.
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
-    return jac
 
 
 # -- quality scoring ----------------------------------------------------------

@@ -348,3 +348,52 @@ def test_digit_neighborhood_padded_parity_all_months():
         assert bare != "", s
         blob = filler + "\n" + s + "\n" + filler
         assert metadata._parse_date_string(blob) == bare, s
+
+
+def _month_spellings():
+    """Every month name with each of its letters replaced by every code
+    point that ``(?i)`` lets stand for some month-name letter. A code
+    point outside that set cannot lie inside a name match, so this
+    covers every code point in every position."""
+    import re
+    import sys
+
+    from go_trafilatura_spark import metadata
+
+    letters = re.compile("(?i)[" + "".join(sorted(set("".join(metadata._MONTHS)))) + "]")
+    folds = [c for c in map(chr, range(sys.maxunicode + 1)) if letters.fullmatch(c)]
+    for name in metadata._MONTHS:
+        for i in range(len(name)):
+            for c in folds:
+                yield name[:i] + c + name[i + 1:]
+
+
+def test_every_month_name_match_reads_a_month():
+    """(?i) matches İ and ı as i and ſ as s; the readers fold those too,
+    so no month-name match raises (``_MONTHS[name.lower()]`` raised
+    KeyError on ``APRİL``) and every one reads its month."""
+    from go_trafilatura_spark import metadata
+
+    matched = set()
+    for spelled in _month_spellings():
+        for form, text in ((metadata._MDY_NAME, f"{spelled} 3, 2020"),
+                           (metadata._DMY_NAME, f"3 {spelled} 2020")):
+            for m in form.rx.finditer(text):
+                assert form.read(m).startswith("2020-"), (text, m.group())
+                matched.add(spelled)
+    assert {"aprİl", "aprıl", "auguſt", "ſeptember", "April"} <= matched
+
+
+def test_dotted_capital_i_month_page_extracts_its_date():
+    """The page was rejected whole as parse_error while the month reader
+    raised; now its meta date reads."""
+    from go_trafilatura_spark.kernel import OUTPUT_COLUMNS, KernelOptions, _extract_row
+
+    body = "".join(f"<p>Paragraph {i} of the report, long enough to keep as "
+                   f"main content for the extractor to find.</p>" for i in range(8))
+    html = ('<html><head><meta name="date" content="APRİL 3, 2020">'
+            f"<title>Report</title></head><body><article>{body}</article></body></html>")
+    row = dict(zip([c for c in OUTPUT_COLUMNS if c not in ("url", "warc_ts", "lang")],
+                   _extract_row("https://example.org/report", html.encode(), KernelOptions({}))))
+    assert row["reject_reason"] is None
+    assert row["date"] == "2020-04-03"

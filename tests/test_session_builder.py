@@ -76,3 +76,17 @@ def test_builder_check_sees_every_form():
         "        return s\n"
     )
     assert builder_uses(ast.parse(src)) == [(3, "start"), (4, None), (7, "run")]
+
+
+def test_origin_capture_off_unless_extra_conf(monkeypatch):
+    """``build_session`` turns PySpark's per-call origin capture off;
+    ``extra_conf`` can turn it back on. The builder's options are read
+    in place of starting a session."""
+    from pyspark.sql import SparkSession
+
+    from go_trafilatura_spark.pipeline import build_session
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert build_session()[key] == "false"
+    assert build_session(extra_conf={key: "true"})[key] == "true"

@@ -1721,12 +1721,129 @@ def test_corpus_dedup_pipeline_function(spark):
     # the persist structure is part of the contract (the measured r5
     # composition lesson, plus the round-7 gopher decision barrier —
     # filter pushdown otherwise re-inlines the metric trees): deduped,
-    # the gopher decision frame, and kept come back persisted for the
-    # caller to release
+    # the gopher decision frame, and the kept ids with their strata and
+    # urls come back persisted for the caller to release
     assert len(handles) == 3
     for h in handles:
         assert h.is_cached
         h.unpersist()
+
+
+def _curation_before(ext, url_col, strata_col="lang", k_substring=50,
+                     max_per_host=2, sample_fraction=1.0):
+    """corpus_dedup_pipeline as it was composed before its tail carried
+    ids: kept = deduped ⋉ ss_keep ⋉ gq_keep with its text, the urls
+    joined from ext for the host cap, the capped ids semi-joined back
+    onto kept and the strata joined from ext again. No persists: the
+    frames are tiny."""
+    from go_trafilatura_spark import textops
+    from go_trafilatura_spark.pipeline import host_cap
+
+    deduped = (textops.line_dedup(ext, text_col="text", id_col="doc_id")
+               .where(F.col("n_lines_kept") > 0)
+               .select("doc_id", F.col("text_deduped").alias("text")))
+    ss_keep = (textops.substring_dedup_filter(deduped, k=k_substring, hash_shingles=True)
+               .where(F.col("keep") == 1).select("doc_id"))
+    gq_keep = textops.gopher_quality_filter(deduped).where(F.col("keep")).select("doc_id")
+    kept = (deduped.join(ss_keep, "doc_id", "left_semi")
+            .join(gq_keep, "doc_id", "left_semi"))
+    if url_col is not None:
+        urls = kept.join(ext.select("doc_id", F.col(url_col).alias("url")), "doc_id")
+        capped_ids = host_cap(urls.where(F.col("url").isNotNull()),
+                              max_per_host=max_per_host, id_col="doc_id").select("doc_id")
+        null_ids = urls.where(F.col("url").isNull()).select("doc_id")
+        kept = kept.join(capped_ids.unionByName(null_ids), "doc_id", "left_semi")
+    return textops.stratified_sample(kept.join(ext.select("doc_id", strata_col), "doc_id"),
+                                     strata_col=strata_col, fraction=sample_fraction)
+
+
+def _differential_docs():
+    """Docs that exercise every gate and every tail path: hosts over the
+    cap, null urls, a shared url, a doc whose lines all dedup away, a
+    doc gopher drops, two docs substring dedup drops, and a doc_id
+    that ext holds twice (other url, other stratum)."""
+    def prose(i, extra=""):
+        words = " ".join(f"word{i}n{j}" for j in range(55))
+        return (f"the story of number {i} continues and that chapter "
+                f"will have more with it than before {words}{extra}")
+
+    boiler = ["subscribe to our newsletter for more stories like this one",
+              "all rights reserved by the publisher of this site"]
+    rows = [(f"doc{i:02d}", prose(i) + ("\n" + boiler[0] if i % 3 == 0 else ""),
+             ("en", "de")[i % 2], f"https://h{i % 3}.example/d{i:02d}") for i in range(10)]
+    rows += [
+        ("doc10", prose(10), "en", None),
+        ("doc11", prose(11), "de", None),
+        ("doc12", prose(12), "en", "https://h0.example/shared"),
+        ("doc13", prose(13), "fr", "https://h0.example/shared"),
+        ("doc14", "\n".join(boiler), "en", "https://h1.example/boiler"),
+        ("doc15", boiler[1] + "\n" + prose(15), "fr", "https://h2.example/d15"),
+        ("doc16", "too short for the gopher gate", "en", "https://h2.example/short"),
+        ("doc17", prose(17), "en", "https://h4.example/a"),
+        ("doc18", prose(17, " and a different ending"), "de", "https://h4.example/b"),
+        ("doc04", "a second version of this piece is here and it has its own words "
+         + " ".join(f"other{j}" for j in range(55)), "fr", "https://h4.example/again"),
+    ]
+    return rows
+
+
+@pytest.mark.parametrize("url_col", ["url", "doc_id", None])
+def test_corpus_dedup_pipeline_matches_text_carrying_tail(spark, url_col):
+    """Differential: the ids-only tail returns exactly the rows of the
+    composition that carried text to the end and joined ext twice."""
+    from go_trafilatura_spark.pipeline import corpus_dedup_pipeline
+
+    rows = _differential_docs()
+    if url_col is None:
+        rows = [r[:3] for r in rows]
+    schema = "doc_id string, text string, lang string" + (", url string" if url_col else "")
+    ext = spark.createDataFrame(rows, schema)
+    final, handles = corpus_dedup_pipeline(
+        ext, url_col=url_col, k_substring=50, max_per_host=2, sample_fraction=0.8)
+    got = sorted(map(tuple, final.collect()))
+    for h in handles:
+        h.unpersist()
+    want = sorted(map(tuple, _curation_before(ext, url_col, sample_fraction=0.8).collect()))
+    assert got == want
+    ids = [r[0] for r in got]
+    assert "doc14" not in ids and "doc16" not in ids  # line dedup, gopher
+    assert "doc17" not in ids and "doc18" not in ids  # substring dedup
+    if url_col == "url":
+        assert "doc10" in ids  # a null url bypasses the cap
+    if url_col != "doc_id":
+        assert ids.count("doc04") == 2  # one row per ext row of a kept doc
+
+
+def _input_scans(jplan) -> int:
+    """Leaves of a logical plan that read the input rather than a
+    persisted frame."""
+    leaves = jplan.collectLeaves()
+    return sum(leaves.apply(i).nodeName() != "InMemoryRelation"
+               for i in range(leaves.size()))
+
+
+def test_corpus_dedup_pipeline_tail_reads_ids_once(spark):
+    """Past the quality gates no persisted frame carries text, and the
+    tail (everything after deduped and the gopher decision frame) reads
+    ext through one join."""
+    from go_trafilatura_spark.pipeline import corpus_dedup_pipeline
+
+    ext = spark.createDataFrame(
+        _curation_docs(), "doc_id string, text string, lang string, url string")
+    final, handles = corpus_dedup_pipeline(
+        ext, url_col="url", k_substring=50, max_per_host=2, sample_fraction=1.0)
+    deduped, gq, tail = handles
+    try:
+        assert "text" in deduped.columns
+        assert [h.columns for h in (gq, tail) if "text" in h.columns] == []
+        assert sorted(tail.columns) == ["doc_id", "lang", "url"]
+        after_tail = _input_scans(final._jdf.queryExecution().withCachedData())
+        tail.unpersist()
+        in_tail = _input_scans(tail.select("*")._jdf.queryExecution().withCachedData())
+        assert (after_tail, in_tail) == (0, 1)
+    finally:
+        for h in handles:
+            h.unpersist()
 
 
 def test_corpus_dedup_pipeline_null_and_shared_urls(spark):
