@@ -1,6 +1,6 @@
 """Minimal CSS selector parser over the etree model: ``parse_group``
-turns a selector group into a rule that ``selectors.query``,
-``query_all`` and ``query_iter`` run.
+turns a selector group into a ``selectors.Rule`` that
+``selectors.query``, ``query_all`` and ``query_iter`` run.
 
 Supports the selector subset the extraction cascade needs (the reference
 uses cascadia for the same subset, e.g. /root/reference/baseline.go:13-20,
@@ -23,6 +23,7 @@ import functools
 import re
 
 from .etree import Element
+from .selectors import Rule
 
 _TOKEN = re.compile(
     r"""
@@ -151,13 +152,12 @@ def _split_outside_brackets(s: str, sep_ws: bool) -> list[str]:
 
 
 @functools.lru_cache(maxsize=256)
-def parse_group(selector: str):
-    """A selector group as a ``selectors`` rule: a predicate matching an
-    element that any of the group's compound selectors matches (cascadia
-    group match). Its ``tags`` is the set of final tags when every
-    compound names one and None otherwise, so the candidate scan of
-    ``selectors.query*`` surfaces only those tags. An unparsable
-    selector raises ValueError."""
+def parse_group(selector: str) -> Rule:
+    """A selector group as a ``selectors.Rule`` named by the group: it
+    matches an element that any of the group's compound selectors
+    matches (cascadia group match). Its ``tags`` is the set of final
+    tags when every compound names one and None otherwise. An
+    unparsable selector raises ValueError."""
     sels = []
     for part in _split_outside_brackets(selector, sep_ws=False):
         part = part.strip()
@@ -166,12 +166,11 @@ def parse_group(selector: str):
                 [_parse_simple(tok) for tok in _split_outside_brackets(part, sep_ws=True)]))
     matchers = tuple(s.matches for s in sels)
 
-    def rule(el: Element) -> bool:
+    def match(el: Element) -> bool:
         for matches in matchers:
             if matches(el):
                 return True
         return False
 
     final = {s._last.tag for s in sels}
-    rule.tags = None if None in final or "*" in final else frozenset(final)
-    return rule
+    return Rule(selector, match, None if None in final or "*" in final else frozenset(final))

@@ -878,39 +878,20 @@ def parse_license_element(node: Element, strict: bool) -> str:
 
 
 def extract_license(index) -> str:
-    """metadata.go:643-660. The 'footer a[href]' descendant query is
-    inverted: footer containers are few, so collect them first and walk
-    each <a href>'s ancestor chain against that id-set — identical
-    match set and document order to the CSS query at ~10x less work on
-    link-heavy pages."""
-    a_nodes = index.of_tag("a")
-    for a in a_nodes:
+    """metadata.go:643-660: the first rel=license anchor's license, else
+    the first strict one among the anchors under a footer
+    (``selectors.license_footer_rule``)."""
+    for a in index.of_tag("a"):
         if not etree.attrs_may_contain(a, ("license",)):
             continue
         if a.get("rel") == "license" and "href" in a.attrib:
             result = parse_license_element(a, False)
             if result:
                 return result
-
-    footers = set()
-    for el in index.of_tag("footer") + index.of_tag("div"):
-        if el.tag != "footer" and not etree.attrs_may_contain(el, ("footer",)):
-            continue
-        if el.tag == "footer" or "footer" in el.get("class") or "footer" in el.get("id"):
-            footers.add(id(el))
-    if not footers:
-        return ""
-    for a in a_nodes:
-        if not etree.attrs_may_contain(a, ("href",)) or "href" not in a.attrib:
-            continue
-        anc = a.parent
-        while anc is not None:
-            if id(anc) in footers:
-                result = parse_license_element(a, True)
-                if result:
-                    return result
-                break
-            anc = anc.parent
+    for a in selectors.anchors_by_ancestor(index, selectors.license_footer_rule):
+        result = parse_license_element(a, True)
+        if result:
+            return result
     return ""
 
 

@@ -1,29 +1,74 @@
 """Priority-ordered selector rule lists (first match wins).
 
-Each rule is a predicate Element -> bool; query/query_all/query_iter
-run a rule, or a CSS group parsed by ``css.parse_group``, over the
-descendants of a tree or its ``etree.TreeIndex`` in document order.
+Every element query is one ``Rule``: a predicate ``match`` with its
+declaration, stated once where the rule is defined — the tags it can
+match, whether it needs an attribute, and its raw-attribute screen. The
+rule lists here, the container rules of ``anchors_by_ancestor`` and the
+selector groups of ``css.parse_group`` all take this form.
+
+``query``, ``query_all`` and ``query_iter`` are the only evaluation
+path, over the descendants of a tree or its ``etree.TreeIndex`` in
+document order: one candidate scan surfaces the elements of the
+declared tags (only those with an attribute when the rule needs one),
+the screen drops the elements whose unparsed attributes contain none of
+its literals, and ``match`` decides the rest. So a body never restates
+the tag test of its declaration, and every screen is a necessary
+condition of the match: an element it drops could never match.
+
 Transcribed semantics from the reference's internal/selector/*.go
 (content.go:29-234, content-discard-overall.go:29-227, comments.go,
 teaser/image/precision discards, comments-discard.go,
-comments-removed.go, meta-*.go).
+comments-removed.go, meta-*.go) and the footer query of metadata.go:643-660.
 """
 
 from __future__ import annotations
 
+import re
+from typing import Callable, NamedTuple
+
 from .etree import (Element, TreeIndex, _collect_tags, attr_source,
-                    attrs_may_contain, get_elements_by_tag, has_attrs)
+                    get_elements_by_tag, has_attrs)
 
 
-def _candidates(scope, rule) -> list[Element]:
-    """The descendants ``rule`` can match, in document order. ``scope``
-    is an Element, which is walked, or an ``etree.TreeIndex`` of an
-    unchanged tree, which is looked up. Rules declare the tags they can
-    match (``rule.tags``), so only those surface — the predicate's own
-    tag guard made ~95% of calls trivially false; this removes the
-    calls. Rules that can only match an element carrying at least one
-    attribute declare ``needs_attrs`` and skip bare elements too."""
-    tags = getattr(rule, "tags", None)
+class Rule(NamedTuple):
+    """One element query. ``match`` decides the elements that the
+    declaration lets through:
+
+    - ``tags``: the tags it can match; None for any.
+    - ``needs_attrs``: it can only match an element carrying at least
+      one attribute.
+    - ``raw_screen``: LOWERCASE literals, at least one of which the
+      element's unparsed attributes must contain; None for no screen.
+      ``screen_exempt`` (tags matched without one), ``raw_screen_rx``
+      and ``screen_concat`` widen it: see _screened."""
+
+    name: str
+    match: Callable[[Element], bool]
+    tags: frozenset | None = None
+    needs_attrs: bool = False
+    raw_screen: tuple | None = None
+    screen_exempt: frozenset | None = None
+    raw_screen_rx: re.Pattern | None = None
+    screen_concat: bool = False
+
+
+def declare(tags=None, screen_exempt=None, **declaration):
+    """The decorated predicate as a Rule of its name, declared by these
+    fields."""
+    def build(match) -> Rule:
+        return Rule(match.__name__, match,
+                    None if tags is None else frozenset(tags),
+                    screen_exempt=None if screen_exempt is None else frozenset(screen_exempt),
+                    **declaration)
+    return build
+
+
+def _candidates(scope, rule: Rule) -> list[Element]:
+    """The descendants ``rule`` can match, in document order: those of
+    its declared tags, with an attribute when it needs one. ``scope`` is
+    an Element, which is walked, or an ``etree.TreeIndex`` of an
+    unchanged tree, which is looked up."""
+    tags = rule.tags
     if isinstance(scope, TreeIndex):
         out = scope.candidates(tags)
     elif tags is None:
@@ -31,39 +76,33 @@ def _candidates(scope, rule) -> list[Element]:
     else:
         out = []
         _collect_tags(scope, tags, out)
-    if getattr(rule, "needs_attrs", False):
+    if rule.needs_attrs:
         return [el for el in out if has_attrs(el)]
     return out
 
 
-import re as _re_screen
-
-_RX_SCREEN_ID = _re_screen.compile(r"id\s*=")
-_RX_SCREEN_CS = _re_screen.compile(r"class\s*=|style\s*=")
+_RX_SCREEN_ID = re.compile(r"id\s*=")
+_RX_SCREEN_CS = re.compile(r"class\s*=|style\s*=")
 
 
-def _screened(elements: list, rule) -> list:
-    """Raw-attribute prescreen: a rule whose every attribute condition
-    requires some literal substring in an attribute VALUE declares
-    ``raw_screen`` — a tuple of LOWERCASE literals, at least one of
-    which must appear in the element's unparsed attribute substring for
-    the rule to possibly match. Elements failing all of them skip the
-    attribute parse AND the rule body. Checks are plain ``in`` over the
-    lowercased raw (C memmem) — NOT a regex alternation, whose
-    backtracking costs more than the parse it avoids.
+def _screened(elements: list, rule: Rule) -> list:
+    """Raw-attribute prescreen: the ``elements`` whose lowercased
+    unparsed attributes contain a literal of ``rule.raw_screen``; the
+    others skip the attribute parse AND the rule body. Checks are plain
+    ``in`` (C memmem) — NOT a regex alternation, whose backtracking
+    costs more than the parse it avoids.
 
     Exactness: ``etree.attr_source`` (the screen over-passes, never
     under). Further bypasses that force a full evaluation: the
-    element's tag is in ``screen_exempt`` (tag-only disjunct), or — for
-    rules with id+class / id+style CONCATENATION semantics
-    (``screen_concat``) — both attrs present, where a match could span
-    the value boundary."""
-    screen = getattr(rule, "raw_screen", None)
+    element's tag is in ``screen_exempt`` (tag-only disjunct),
+    ``raw_screen_rx`` finds a form no literal can name, or — for rules
+    with id+class / id+style CONCATENATION semantics
+    (``screen_concat``) — both attrs are present, where a match could
+    span the value boundary."""
+    screen = rule.raw_screen
     if screen is None:
         return elements
-    exempt = getattr(rule, "screen_exempt", None)
-    concat = getattr(rule, "screen_concat", False)
-    rx = getattr(rule, "raw_screen_rx", None)
+    exempt, rx, concat = rule.screen_exempt, rule.raw_screen_rx, rule.screen_concat
     out = []
     append = out.append
     for el in elements:
@@ -86,22 +125,24 @@ def _screened(elements: list, rule) -> list:
     return out
 
 
-def query_iter(scope, rule):
+def query_iter(scope, rule: Rule):
     """The descendants of ``scope`` (an Element or a TreeIndex, see
     _candidates) that ``rule`` matches, lazily in document order, so
     callers that stop at the first usable hit skip rule evaluation on
     the rest."""
+    match = rule.match
     for el in _screened(_candidates(scope, rule), rule):
-        if rule(el):
+        if match(el):
             yield el
 
 
-def query_all(scope, rule) -> list[Element]:
+def query_all(scope, rule: Rule) -> list[Element]:
     """Every match of query_iter, as a list."""
-    return [el for el in _screened(_candidates(scope, rule), rule) if rule(el)]
+    match = rule.match
+    return [el for el in _screened(_candidates(scope, rule), rule) if match(el)]
 
 
-def query(scope, rule) -> Element | None:
+def query(scope, rule: Rule) -> Element | None:
     """The first match of query_iter, or None
     (internal/selector/selector.go:31-38)."""
     return next(query_iter(scope, rule), None)
@@ -121,9 +162,10 @@ def _idc(el: Element):
 _CONTENT_TAGS = ("article", "div", "main", "section")
 
 
+@declare(_CONTENT_TAGS, needs_attrs=True, raw_screen=(
+    "post", "entry", "articl", "page-content", "text-content", "body-text",
+    "art-content"))
 def content_rule_1(n: Element) -> bool:
-    if n.tag not in _CONTENT_TAGS:
-        return False
     id_, class_, _ = _idc(n)
     lc, li = class_.lower(), id_.lower()
     return (
@@ -152,13 +194,15 @@ def content_rule_1(n: Element) -> bool:
     )
 
 
-def content_rule_2(n: Element) -> bool:
-    return n.tag == "article"
+# A rule whose declared tags are its whole test matches every candidate.
+content_rule_2 = Rule("content_rule_2", lambda n: True, frozenset(("article",)))
 
 
+@declare(_CONTENT_TAGS, needs_attrs=True, raw_screen=(
+    "post", "story", "theme-content", "blog-content", "section-content",
+    "single-", "main-", "wpb", "field-body", "text", "cell", "primary",
+    "articl"))
 def content_rule_3(n: Element) -> bool:
-    if n.tag not in _CONTENT_TAGS:
-        return False
     id_, class_, _ = _idc(n)
     return (
         any(
@@ -179,9 +223,8 @@ def content_rule_3(n: Element) -> bool:
     )
 
 
+@declare(_CONTENT_TAGS, needs_attrs=True, raw_screen=("content",))
 def content_rule_4(n: Element) -> bool:
-    if n.tag not in _CONTENT_TAGS:
-        return False
     id_, class_, _ = _idc(n)
     return (
         any(m in id_ for m in ("content-main", "content-body", "contentBody"))
@@ -194,11 +237,11 @@ def content_rule_4(n: Element) -> bool:
     )
 
 
+# a bare <main> matches on its tag alone
+@declare(_CONTENT_TAGS, raw_screen=("main",), screen_exempt=("main",))
 def content_rule_5(n: Element) -> bool:
     if n.tag == "main":
         return True
-    if n.tag not in ("article", "div", "section"):
-        return False
     id_, class_, _ = _idc(n)
     return (
         class_.startswith("main")
@@ -236,15 +279,14 @@ _DISCARD1_IDCLASS_CONTAINS = (
 # The substring kill-lists compiled to literal-alternation regexes: one
 # C-level scan replaces a Python `any(m in s)` loop over ~30 literals.
 # Semantics identical (any literal substring match).
-import re as _re
-
-_RX_DISCARD1_CLASS = _re.compile("|".join(map(_re.escape, _DISCARD1_CLASS_CONTAINS)))
-_RX_DISCARD1_IDCLASS = _re.compile("|".join(map(_re.escape, _DISCARD1_IDCLASS_CONTAINS)))
+_RX_DISCARD1_CLASS = re.compile("|".join(map(re.escape, _DISCARD1_CLASS_CONTAINS)))
+_RX_DISCARD1_IDCLASS = re.compile("|".join(map(re.escape, _DISCARD1_IDCLASS_CONTAINS)))
 
 
+# No screen: its ~55-literal union costs more to check than the
+# attribute parse it would avoid.
+@declare(_DISCARD_TAGS, needs_attrs=True)
 def overall_discarded_rule_1(n: Element) -> bool:
-    if n.tag not in _DISCARD_TAGS:
-        return False
     id_, class_, idclass = _idc(n)
     lid, lclass = id_.lower(), class_.lower()
     if "footer" in lid or "footer" in lclass:
@@ -270,6 +312,9 @@ def overall_discarded_rule_1(n: Element) -> bool:
     return False
 
 
+@declare(needs_attrs=True, screen_concat=True, raw_screen=(
+    "comments-title", "nocomment", "reply-", "message", "reader-comments",
+    "akismet", "suggest-links", "hid", "display", "noprint", "notloaded"))
 def overall_discarded_rule_2(n: Element) -> bool:
     id_, class_, idclass = _idc(n)
     style = n.get("style")
@@ -300,13 +345,12 @@ def overall_discarded_rule_2(n: Element) -> bool:
 OVERALL_DISCARDED_CONTENT = [overall_discarded_rule_1, overall_discarded_rule_2]
 
 
-def precision_discarded_rule_1(n: Element) -> bool:
-    return n.tag == "header"
+precision_discarded_rule_1 = Rule("precision_discarded_rule_1", lambda n: True,
+                                  frozenset(("header",)))
 
 
+@declare(_DISCARD_TAGS, needs_attrs=True)
 def precision_discarded_rule_2(n: Element) -> bool:
-    if n.tag not in _DISCARD_TAGS:
-        return False
     id_, class_, idclass = _idc(n)
     return "bottom" in idclass or "link" in idclass or "border" in n.get("style")
 
@@ -314,9 +358,8 @@ def precision_discarded_rule_2(n: Element) -> bool:
 PRECISION_DISCARDED_CONTENT = [precision_discarded_rule_1, precision_discarded_rule_2]
 
 
+@declare(_DISCARD_TAGS, needs_attrs=True, raw_screen=("teaser",))
 def discarded_teaser_rule(n: Element) -> bool:
-    if n.tag not in _DISCARD_TAGS:
-        return False
     id_, class_, _ = _idc(n)
     return "teaser" in id_.lower() or "teaser" in class_.lower()
 
@@ -324,9 +367,8 @@ def discarded_teaser_rule(n: Element) -> bool:
 DISCARDED_TEASER = [discarded_teaser_rule]
 
 
+@declare(_DISCARD_TAGS, needs_attrs=True, raw_screen=("caption",))
 def discarded_image_rule(n: Element) -> bool:
-    if n.tag not in _DISCARD_TAGS:
-        return False
     id_, class_, _ = _idc(n)
     return "caption" in id_ or "caption" in class_
 
@@ -341,9 +383,11 @@ DISCARDED_IMAGE = [discarded_image_rule]
 _COMMENTS_TAGS = frozenset("div ol ul dl section".split())
 
 
+# "comm"/"ment" cover every id+class boundary split of commentlist /
+# comments* / comment-* (prefix ⊇ "comm" for splits ≥4, suffix ⊇ "ment"
+# for splits ≤3) — no both-attrs bypass needed.
+@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=("comm", "ment"))
 def comments_rule_1(n: Element) -> bool:
-    if n.tag not in _COMMENTS_TAGS:
-        return False
     id_, class_, idclass = _idc(n)
     return (
         "commentlist" in idclass
@@ -354,9 +398,8 @@ def comments_rule_1(n: Element) -> bool:
     )
 
 
+@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=("comm", "ment"))
 def comments_rule_2(n: Element) -> bool:
-    if n.tag not in _COMMENTS_TAGS:
-        return False
     id_, class_, idclass = _idc(n)
     return (
         idclass.startswith("comments")
@@ -366,16 +409,13 @@ def comments_rule_2(n: Element) -> bool:
     )
 
 
+@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=("comol", "disqus_thread", "dsq_comments"))
 def comments_rule_3(n: Element) -> bool:
-    if n.tag not in _COMMENTS_TAGS:
-        return False
-    id_ = n.get("id")
-    return id_.startswith(("comol", "disqus_thread", "dsq_comments"))
+    return n.get("id").startswith(("comol", "disqus_thread", "dsq_comments"))
 
 
+@declare(("div", "section"), needs_attrs=True, raw_screen=("social", "comment"))
 def comments_rule_4(n: Element) -> bool:
-    if n.tag not in ("div", "section"):
-        return False
     id_, class_, _ = _idc(n)
     return id_.startswith("social") or "comment" in class_
 
@@ -383,14 +423,18 @@ def comments_rule_4(n: Element) -> bool:
 COMMENTS = [comments_rule_1, comments_rule_2, comments_rule_3, comments_rule_4]
 
 
+@declare(("div", "section"), needs_attrs=True, raw_screen=("respond",))
 def discarded_comments_rule_1(n: Element) -> bool:
-    return n.tag in ("div", "section") and n.get("id").startswith("respond")
+    return n.get("id").startswith("respond")
 
 
-def discarded_comments_rule_2(n: Element) -> bool:
-    return n.tag in ("cite", "quote")
+discarded_comments_rule_2 = Rule("discarded_comments_rule_2", lambda n: True,
+                                 frozenset(("cite", "quote")))
 
 
+@declare(needs_attrs=True, screen_concat=True, raw_screen=(
+    "comments-title", "nocomment", "reply-", "message", "signin",
+    "akismet", "display"))
 def discarded_comments_rule_3(n: Element) -> bool:
     id_, class_, idclass = _idc(n)
     style = n.get("style")
@@ -413,24 +457,29 @@ DISCARDED_COMMENTS = [
 ]
 
 
+@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=(
+    "comment", "comol", "disqus_thread", "dsq-comments"))
+def removed_comments_rule(n: Element) -> bool:
+    id_, class_, _ = _idc(n)
+    return (
+        id_.lower().startswith("comment")
+        or class_.lower().startswith("comment")
+        or "article-comments" in class_
+        or "post-comments" in class_
+        or id_.startswith(("comol", "disqus_thread", "dsq-comments"))
+    )
+
+
+REMOVED_COMMENTS = [removed_comments_rule]
+
+
 # ---------------------------------------------------------------------------
-# Metadata selectors (meta-title.go, meta-author.go, meta-author-discard.go,
-# meta-categories.go, meta-tags.go)
+# Metadata selectors (meta-title.go, meta-author.go, meta-author-discard.go)
 # ---------------------------------------------------------------------------
 
-def _ancestors(n: Element, tag: str) -> list[Element]:
-    out = []
-    p = n.parent
-    while p is not None:
-        if p.tag == tag:
-            out.append(p)
-        p = p.parent
-    return out
-
-
+@declare(("h1", "h2"), needs_attrs=True, raw_screen=(
+    "post-title", "entry-title", "headline", "post__title", "article-title"))
 def meta_title_rule_1(n: Element) -> bool:
-    if n.tag not in ("h1", "h2"):
-        return False
     id_, class_, _ = _idc(n)
     return (
         any(m in class_ for m in ("post-title", "entry-title", "headline", "post__title", "article-title"))
@@ -439,13 +488,13 @@ def meta_title_rule_1(n: Element) -> bool:
     )
 
 
+@declare(needs_attrs=True, raw_screen=("entry-title", "post-title"))
 def meta_title_rule_2(n: Element) -> bool:
     return n.get("class") in ("entry-title", "post-title")
 
 
+@declare(("h1", "h2", "h3"), needs_attrs=True, raw_screen=("title",))
 def meta_title_rule_3(n: Element) -> bool:
-    if n.tag not in ("h1", "h2", "h3"):
-        return False
     id_, class_, _ = _idc(n)
     return "title" in class_ or "title" in id_
 
@@ -453,11 +502,16 @@ def meta_title_rule_3(n: Element) -> bool:
 META_TITLE = [meta_title_rule_1, meta_title_rule_2, meta_title_rule_3]
 
 
+# A bare <author> matches on its tag alone. rel in ("author","me"):
+# rel=author carries the "author" literal; rel=me alone needs the regex
+# tier (a bare "me"/"rel" literal would re-admit every rel-carrying link
+# and most attribute soup).
+@declare(("author", "a", "address", "div", "link", "p", "span", "strong"),
+         raw_screen=("author",), raw_screen_rx=re.compile(r"rel\s*=\s*[\"']?me\b"),
+         screen_exempt=("author",))
 def meta_author_rule_1(n: Element) -> bool:
     if n.tag == "author":
         return True
-    if n.tag not in ("a", "address", "div", "link", "p", "span", "strong"):
-        return False
     id_, class_, _ = _idc(n)
     rel = n.get("rel")
     data_testid = n.get("data-testid")
@@ -471,9 +525,10 @@ def meta_author_rule_1(n: Element) -> bool:
     )
 
 
+@declare(("a", "div", "h3", "h4", "p", "span"), needs_attrs=True, raw_screen=(
+    "author", "byl", "username", "bbl", "channel-name", "zuozhe", "bianji",
+    "xiaobian", "submitted-by", "posted-by", "journalist-name"))
 def meta_author_rule_2(n: Element) -> bool:
-    if n.tag not in ("a", "div", "h3", "h4", "p", "span"):
-        return False
     id_, class_, _ = _idc(n)
     return (
         "author" in class_
@@ -486,6 +541,7 @@ def meta_author_rule_2(n: Element) -> bool:
     )
 
 
+@declare(needs_attrs=True, raw_screen=("author", "screenname", "byl", "writer"))
 def meta_author_rule_3(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -502,9 +558,13 @@ def meta_author_rule_3(n: Element) -> bool:
 META_AUTHOR = [meta_author_rule_1, meta_author_rule_2, meta_author_rule_3]
 
 
+# "commen"/"ntlist" cover every id+class split of "commentlist"
+# (suffix ⊇ "ntlist" for splits ≤5, prefix ⊇ "commen" for ≥6).
+@declare(("a", "div", "section", "span"), needs_attrs=True, raw_screen=(
+    "commen", "ntlist", "title", "date", "sidebar", "is-hidden", "quote",
+    "embedly", "article-sh", "article-su", "print", "category", "meta-date",
+    "meta-reviewer", "productreviews", "figure"))
 def meta_author_discard_rule_1(n: Element) -> bool:
-    if n.tag not in ("a", "div", "section", "span"):
-        return False
     id_, class_, _ = _idc(n)
     return (
         id_ == "comments"
@@ -526,72 +586,54 @@ def meta_author_discard_rule_1(n: Element) -> bool:
     )
 
 
-def meta_author_discard_rule_2(n: Element) -> bool:
-    return n.tag in ("time", "figure")
+meta_author_discard_rule_2 = Rule("meta_author_discard_rule_2", lambda n: True,
+                                  frozenset(("time", "figure")))
 
 
 META_AUTHOR_DISCARD = [meta_author_discard_rule_1, meta_author_discard_rule_2]
 
 
-def _href_a(n: Element) -> bool:
-    return n.tag == "a" and "href" in n.attrib
+# ---------------------------------------------------------------------------
+# Container rules (meta-categories.go, meta-tags.go, metadata.go:643-660):
+# a link rule is "a[href] with an ancestor that this container rule
+# matches", evaluated by anchors_by_ancestor. The container predicates
+# read single attributes, so no concatenation bypass is needed.
+# ---------------------------------------------------------------------------
 
-
+@declare(("div",), needs_attrs=True, raw_screen=("post", "meta", "entry"))
 def meta_categories_rule_1(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    for anc in _ancestors(n, "div"):
-        id_ = anc.get("id")
-        class_ = anc.get("class")
-        if class_.startswith(
-            ("post-info", "postinfo", "post-meta", "postmeta", "meta",
-             "entry-meta", "entry-info", "entry-utility")
-        ) or id_.startswith("postpath"):
-            return True
-    return False
+    return n.get("class").startswith(
+        ("post-info", "postinfo", "post-meta", "postmeta", "meta",
+         "entry-meta", "entry-info", "entry-utility")
+    ) or n.get("id").startswith("postpath")
 
 
+@declare(("p",), needs_attrs=True, raw_screen=("post", "entry-categories", "filedunder"))
 def meta_categories_rule_2(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    for anc in _ancestors(n, "p"):
-        id_ = anc.get("id")
-        class_ = anc.get("class")
-        if class_.startswith(("postmeta", "entry-categories")) or class_ == "postinfo" or id_ == "filedunder":
-            return True
-    return False
+    class_ = n.get("class")
+    return (class_.startswith(("postmeta", "entry-categories")) or class_ == "postinfo"
+            or n.get("id") == "filedunder")
 
 
+@declare(("footer",), needs_attrs=True, raw_screen=("entry-",))
 def meta_categories_rule_3(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    return any(
-        anc.get("class").startswith(("entry-meta", "entry-footer"))
-        for anc in _ancestors(n, "footer")
-    )
+    return n.get("class").startswith(("entry-meta", "entry-footer"))
 
 
+@declare(("li", "span"), needs_attrs=True, raw_screen=("categor", "cat-links"))
 def meta_categories_rule_4(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    ancestors = _ancestors(n, "li") + _ancestors(n, "span")
-    for anc in ancestors:
-        class_ = anc.get("class")
-        if class_ in ("post-category", "postcategory", "entry-category") or "cat-links" in class_:
-            return True
-    return False
+    class_ = n.get("class")
+    return class_ in ("post-category", "postcategory", "entry-category") or "cat-links" in class_
 
 
+@declare(("header",), needs_attrs=True, raw_screen=("entry-header",))
 def meta_categories_rule_5(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    return any(anc.get("class") == "entry-header" for anc in _ancestors(n, "header"))
+    return n.get("class") == "entry-header"
 
 
+@declare(("div",), needs_attrs=True, raw_screen=("row", "tags"))
 def meta_categories_rule_6(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    return any(anc.get("class") in ("row", "tags") for anc in _ancestors(n, "div"))
+    return n.get("class") in ("row", "tags")
 
 
 META_CATEGORIES = [
@@ -600,264 +642,58 @@ META_CATEGORIES = [
 ]
 
 
+@declare(("div",), needs_attrs=True, raw_screen=("tags",))
 def meta_tags_rule_1(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    return any(anc.get("class") == "tags" for anc in _ancestors(n, "div"))
+    return n.get("class") == "tags"
 
 
+@declare(("p",), needs_attrs=True, raw_screen=("entry-tags",))
 def meta_tags_rule_2(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    return any(anc.get("class").startswith("entry-tags") for anc in _ancestors(n, "p"))
+    return n.get("class").startswith("entry-tags")
 
 
+@declare(("div",), needs_attrs=True, raw_screen=(
+    "row", "jp-relatedposts", "entry-utility", "tag", "meta"))
 def meta_tags_rule_3(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    for anc in _ancestors(n, "div"):
-        class_ = anc.get("class")
-        if class_ in ("row", "jp-relatedposts", "entry-utility") or class_.startswith(
-            ("tag", "postmeta", "meta")
-        ):
-            return True
-    return False
+    class_ = n.get("class")
+    return class_ in ("row", "jp-relatedposts", "entry-utility") or class_.startswith(
+        ("tag", "postmeta", "meta"))
 
 
+@declare(needs_attrs=True, raw_screen=("entry-meta", "topics", "tags-links"))
 def meta_tags_rule_4(n: Element) -> bool:
-    if not _href_a(n):
-        return False
-    p = n.parent
-    while p is not None:
-        class_ = p.get("class")
-        if class_ == "entry-meta" or "topics" in class_ or "tags-links" in class_:
-            return True
-        p = p.parent
-    return False
+    class_ = n.get("class")
+    return class_ == "entry-meta" or "topics" in class_ or "tags-links" in class_
 
 
 META_TAGS = [meta_tags_rule_1, meta_tags_rule_2, meta_tags_rule_3, meta_tags_rule_4]
 
 
-def removed_comments_rule(n: Element) -> bool:
-    if n.tag not in _COMMENTS_TAGS:
-        return False
-    id_, class_, _ = _idc(n)
-    return (
-        id_.lower().startswith("comment")
-        or class_.lower().startswith("comment")
-        or "article-comments" in class_
-        or "post-comments" in class_
-        or id_.startswith(("comol", "disqus_thread", "dsq-comments"))
-    )
+# License footers: any <footer>, bare or not, or a div with "footer" in
+# its class or id
+@declare(("footer", "div"), raw_screen=("footer",), screen_exempt=("footer",))
+def license_footer_rule(n: Element) -> bool:
+    return n.tag == "footer" or "footer" in n.get("class") or "footer" in n.get("id")
 
 
-REMOVED_COMMENTS = [removed_comments_rule]
+# No screen: nearly every anchor carries an href, so a screen would
+# only add a lowercase copy of each anchor's attributes.
+@declare(("a",), needs_attrs=True)
+def _a_href(n: Element) -> bool:
+    return "href" in n.attrib
 
 
-# ---------------------------------------------------------------------------
-# Tag declarations: each rule's opening tag guard, hoisted so the
-# traversal can pre-filter (see _candidates). A rule with
-# no tag guard carries no declaration and scans every element.
-# ---------------------------------------------------------------------------
-
-_CONTENT_TAGSET = frozenset(_CONTENT_TAGS)
-content_rule_1.tags = _CONTENT_TAGSET
-content_rule_2.tags = frozenset(("article",))
-content_rule_3.tags = _CONTENT_TAGSET
-content_rule_4.tags = _CONTENT_TAGSET
-content_rule_5.tags = frozenset(("main", "article", "div", "section"))
-
-overall_discarded_rule_1.tags = _DISCARD_TAGS
-precision_discarded_rule_1.tags = frozenset(("header",))
-precision_discarded_rule_2.tags = _DISCARD_TAGS
-discarded_teaser_rule.tags = _DISCARD_TAGS
-discarded_image_rule.tags = _DISCARD_TAGS
-
-comments_rule_1.tags = _COMMENTS_TAGS
-comments_rule_2.tags = _COMMENTS_TAGS
-comments_rule_3.tags = _COMMENTS_TAGS
-comments_rule_4.tags = frozenset(("div", "section"))
-discarded_comments_rule_1.tags = frozenset(("div", "section"))
-discarded_comments_rule_2.tags = frozenset(("cite", "quote"))
-removed_comments_rule.tags = _COMMENTS_TAGS
-
-meta_title_rule_1.tags = frozenset(("h1", "h2"))
-meta_title_rule_3.tags = frozenset(("h1", "h2", "h3"))
-meta_author_rule_1.tags = frozenset(
-    ("author", "a", "address", "div", "link", "p", "span", "strong")
-)
-meta_author_rule_2.tags = frozenset(("a", "div", "h3", "h4", "p", "span"))
-meta_author_discard_rule_1.tags = frozenset(("a", "div", "section", "span"))
-meta_author_discard_rule_2.tags = frozenset(("time", "figure"))
-for _r in META_CATEGORIES + META_TAGS:
-    _r.tags = frozenset(("a",))
-del _r
-
-# needs_attrs: the rule can only match an element carrying >=1 attribute
-# (every condition reads id/class/style/rel/itemprop/...). Rules that
-# match on tag alone (article, main, header, cite/quote, time/figure,
-# the author tag in meta_author_rule_1) are deliberately absent.
-for _r in (
-    content_rule_1, content_rule_3, content_rule_4,
-    overall_discarded_rule_1, overall_discarded_rule_2,
-    precision_discarded_rule_2, discarded_teaser_rule, discarded_image_rule,
-    comments_rule_1, comments_rule_2, comments_rule_3, comments_rule_4,
-    discarded_comments_rule_1, discarded_comments_rule_3,
-    removed_comments_rule,
-    meta_title_rule_1, meta_title_rule_2, meta_title_rule_3,
-    meta_author_rule_2, meta_author_rule_3, meta_author_discard_rule_1,
-):
-    _r.needs_attrs = True
-for _r in META_CATEGORIES + META_TAGS:
-    _r.needs_attrs = True
-del _r
-
-
-# raw_screen: see _screened. Each tuple is the set of lowercase
-# literals, at least one of which an attribute VALUE must contain for
-# the rule to match. Rules using id+class or id+style concatenation set
-# screen_concat so both-attr elements bypass the screen (a match could
-# span the value boundary); rules with a tag-only disjunct list those
-# tags in screen_exempt. overall_discarded_rule_1 deliberately carries
-# NO screen: its ~55-literal union costs more to check than the
-# attribute parse it would avoid.
-
-content_rule_1.raw_screen = (
-    "post", "entry", "articl", "page-content", "text-content", "body-text",
-    "art-content")
-content_rule_3.raw_screen = (
-    "post", "story", "theme-content", "blog-content", "section-content",
-    "single-", "main-", "wpb", "field-body", "text", "cell", "primary",
-    "articl")
-content_rule_4.raw_screen = ("content",)
-content_rule_5.raw_screen = ("main",)
-content_rule_5.screen_exempt = frozenset(("main",))
-
-overall_discarded_rule_2.raw_screen = (
-    "comments-title", "nocomment", "reply-", "message", "reader-comments",
-    "akismet", "suggest-links", "hid", "display", "noprint", "notloaded")
-overall_discarded_rule_2.screen_concat = True
-discarded_teaser_rule.raw_screen = ("teaser",)
-discarded_image_rule.raw_screen = ("caption",)
-
-# "comm"/"ment" cover every id+class boundary split of commentlist /
-# comments* / comment-* (prefix ⊇ "comm" for splits ≥4, suffix ⊇ "ment"
-# for splits ≤3) — no both-attrs bypass needed.
-comments_rule_1.raw_screen = ("comm", "ment")
-comments_rule_2.raw_screen = ("comm", "ment")
-comments_rule_3.raw_screen = ("comol", "disqus_thread", "dsq_comments")
-comments_rule_4.raw_screen = ("social", "comment")
-discarded_comments_rule_1.raw_screen = ("respond",)
-discarded_comments_rule_3.raw_screen = (
-    "comments-title", "nocomment", "reply-", "message", "signin",
-    "akismet", "display")
-discarded_comments_rule_3.screen_concat = True
-removed_comments_rule.raw_screen = (
-    "comment", "comol", "disqus_thread", "dsq-comments")
-
-meta_title_rule_1.raw_screen = (
-    "post-title", "entry-title", "headline", "post__title", "article-title")
-meta_title_rule_2.raw_screen = ("entry-title", "post-title")
-meta_title_rule_3.raw_screen = ("title",)
-
-# rel in ("author","me"): rel=author carries the "author" literal;
-# rel=me alone needs the regex tier (a bare "me"/"rel" literal would
-# re-admit every rel-carrying link and most attribute soup).
-meta_author_rule_1.raw_screen = ("author",)
-meta_author_rule_1.raw_screen_rx = _re.compile(r"rel\s*=\s*[\"']?me\b")
-meta_author_rule_1.screen_exempt = frozenset(("author",))
-meta_author_rule_2.raw_screen = (
-    "author", "byl", "username", "bbl", "channel-name", "zuozhe", "bianji",
-    "xiaobian", "submitted-by", "posted-by", "journalist-name")
-meta_author_rule_3.raw_screen = ("author", "screenname", "byl", "writer")
-# "commen"/"ntlist" cover every id+class split of "commentlist"
-# (suffix ⊇ "ntlist" for splits ≤5, prefix ⊇ "commen" for ≥6).
-meta_author_discard_rule_1.raw_screen = (
-    "commen", "ntlist", "title", "date", "sidebar", "is-hidden", "quote",
-    "embedly", "article-sh", "article-su", "print", "category", "meta-date",
-    "meta-reviewer", "productreviews", "figure")
-
-
-# ---------------------------------------------------------------------------
-# Inverted evaluation for the "a[href] under container X" meta rules:
-# each rule's ancestor test, restated as (container_tags, container_pred).
-# Containers are rare, anchors are plentiful — finding containers first
-# and walking each anchor's parent chain against that id-set yields the
-# identical match set in identical document order at a fraction of the
-# work (and zero work on the common no-container page).
-# ---------------------------------------------------------------------------
-
-meta_categories_rule_1.containers = (("div",), lambda el: (
-    el.get("class").startswith(
-        ("post-info", "postinfo", "post-meta", "postmeta", "meta",
-         "entry-meta", "entry-info", "entry-utility")
-    ) or el.get("id").startswith("postpath")
-))
-meta_categories_rule_2.containers = (("p",), lambda el: (
-    el.get("class").startswith(("postmeta", "entry-categories"))
-    or el.get("class") == "postinfo" or el.get("id") == "filedunder"
-))
-meta_categories_rule_3.containers = (("footer",), lambda el:
-    el.get("class").startswith(("entry-meta", "entry-footer")))
-meta_categories_rule_4.containers = (("li", "span"), lambda el: (
-    el.get("class") in ("post-category", "postcategory", "entry-category")
-    or "cat-links" in el.get("class")
-))
-meta_categories_rule_5.containers = (("header",), lambda el:
-    el.get("class") == "entry-header")
-meta_categories_rule_6.containers = (("div",), lambda el:
-    el.get("class") in ("row", "tags"))
-meta_tags_rule_1.containers = (("div",), lambda el: el.get("class") == "tags")
-meta_tags_rule_2.containers = (("p",), lambda el:
-    el.get("class").startswith("entry-tags"))
-meta_tags_rule_3.containers = (("div",), lambda el: (
-    el.get("class") in ("row", "jp-relatedposts", "entry-utility")
-    or el.get("class").startswith(("tag", "postmeta", "meta"))
-))
-meta_tags_rule_4.containers = (None, lambda el: (
-    el.get("class") == "entry-meta" or "topics" in el.get("class")
-    or "tags-links" in el.get("class")
-))
-
-# containers_screen: raw-attr prescreen tuples for the container
-# predicates (same exactness argument as raw_screen; container preds
-# read single attributes only, so no concatenation bypass is needed).
-meta_categories_rule_1.containers_screen = ("post", "meta", "entry")
-meta_categories_rule_2.containers_screen = (
-    "post", "entry-categories", "filedunder")
-meta_categories_rule_3.containers_screen = ("entry-",)
-meta_categories_rule_4.containers_screen = ("categor", "cat-links")
-meta_categories_rule_5.containers_screen = ("entry-header",)
-meta_categories_rule_6.containers_screen = ("row", "tags")
-meta_tags_rule_1.containers_screen = ("tags",)
-meta_tags_rule_2.containers_screen = ("entry-tags",)
-meta_tags_rule_3.containers_screen = (
-    "row", "jp-relatedposts", "entry-utility", "tag", "meta")
-meta_tags_rule_4.containers_screen = ("entry-meta", "topics", "tags-links")
-
-
-def anchors_by_ancestor(index: TreeIndex, rule) -> list[Element]:
-    """Evaluate an a[href]-under-container rule (every META_CATEGORIES
-    and META_TAGS rule) through its inverted ``containers`` spec."""
-    tags, pred = rule.containers
-    ids = set()
-    pool = index.candidates() if tags is None else [
-        el for t in tags for el in index.of_tag(t)
-    ]
-    cscreen = getattr(rule, "containers_screen", None)
-    for el in pool:
-        if not has_attrs(el) or (
-                cscreen is not None and not attrs_may_contain(el, cscreen)):
-            continue
-        if pred(el):
-            ids.add(id(el))
+def anchors_by_ancestor(index: TreeIndex, container: Rule) -> list[Element]:
+    """The ``a[href]`` descendants with an ancestor that ``container``
+    matches, in document order. Containers are rare and anchors
+    plentiful, so the containers are queried first and each anchor's
+    parent chain is checked against them: zero anchor work on the common
+    no-container page."""
+    ids = {id(el) for el in query_all(index, container)}
     if not ids:
         return []
     out = []
-    for a in index.of_tag("a"):
-        if "href" not in a.attrib:
-            continue
+    for a in query_all(index, _a_href):
         anc = a.parent
         while anc is not None:
             if id(anc) in ids:

@@ -863,11 +863,8 @@ def decontaminate(df: DataFrame, benchmark_df: DataFrame,
     Portable md5 gram hashing → the DuckDB oracle reproduces counts
     bit-for-bit."""
     def grams(frame, k):
-        toks = with_tokens(frame).select("doc_id", "tokens")
-        expr = (f"transform(sequence(1, size(tokens) - {k - 1}), "
-                f"i -> array_join(slice(tokens, i, {k}), ' '))")
-        return (toks.where(F.size("tokens") >= k)
-                .select("doc_id", F.explode(F.expr(expr)).alias("gram"))
+        return (with_tokens(frame)
+                .select("doc_id", F.explode(shingles_expr(k)).alias("gram"))
                 .select("doc_id", _md5_bigint(F.col("gram")).alias("h"))
                 .distinct())
 

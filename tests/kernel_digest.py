@@ -20,12 +20,17 @@ Page sets:
   ``metadata._date_tier_candidates`` is the only dated one, for every
   tier and every date form, plus edge pages for the date scans' bounds,
   the url's date tiers and the extensive mode's one-day arbitration.
+- ``selectors``: generated pages (``selector_rows``) on which one rule
+  of ``selectors``' rule lists decides part of the output, for every
+  rule, plus the license footer scan and the ``prune_junk`` selector.
+  Deleting any one rule moves at least one of its cases.
 
 ``kernel_digests.json``, next to this file, pins every case's digest.
 Run ``python tests/kernel_digest.py`` to print one line per case: page
-set, option set, digest, and ``ok`` or ``MOVED`` against its pin. A
-change that moves kernel output on purpose re-pins the moved cases and
-names them. ``test_kernel_digest.py`` checks a fast subset in the suite.
+set, option set, digest, and ``ok``, ``MOVED`` or ``UNPINNED`` against
+its pin, then a summary line; it exits 1 unless every case is ``ok``.
+A change that moves kernel output on purpose re-pins the moved cases
+and names them. ``test_kernel_digest.py`` checks a fast subset in the suite.
 """
 
 from __future__ import annotations
@@ -53,6 +58,7 @@ OPTION_SETS = {
     "prune_untagged": {"prune_selector": ".cookie-banner, section h2, *[class=teaser]"},
     "date_extensive": {"date_mode": "extensive"},
     "date_disabled": {"date_mode": "disabled"},
+    "comments_excluded_precision": {"exclude_comments": True, "focus": 2},
 }
 
 PINS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "kernel_digests.json")
@@ -249,12 +255,147 @@ def date_rows(seed: int = 17) -> list[tuple]:
     return rows
 
 
+# -- the selectors page set --------------------------------------------------
+
+# A first-match rule of CONTENT and COMMENTS: the page's only container
+# that any rule of the list matches, keyed by the rule it belongs to.
+# {text} is the container's paragraphs.
+CONTENT_CONTAINERS = {
+    "content_rule_1": '<div class="post-content">{text}</div>',
+    "content_rule_2": "<article>{text}</article>",
+    "content_rule_3": '<div class="story-content">{text}</div>',
+    "content_rule_4": '<div id="content">{text}</div>',
+    "content_rule_5": "<main>{text}</main>",
+    "content_rule_5_class": '<div class="main-area">{text}</div>',
+}
+
+COMMENTS_CONTAINERS = {
+    "comments_rule_1": '<ol class="commentlist"><li>{text}</li></ol>',
+    "comments_rule_2": '<ul id="comments"><li>{text}</li></ul>',
+    "comments_rule_3": '<div id="disqus_thread">{text}</div>',
+    "comments_rule_4": '<section class="user-comment-area">{text}</section>',
+}
+
+# An element inside the content (an <article>) that only the named rule
+# removes; {text} is one sentence. DISCARDED_COMMENTS elements sit in a
+# comments container instead. The rule that pruning needs an option set
+# for names it: PRECISION_DISCARDED_CONTENT runs under focus_precision,
+# REMOVED_COMMENTS under comments_excluded_precision and the prune
+# selector under prune_junk.
+DISCARDS = {
+    "overall_discarded_rule_1": '<div class="share-tools"><p>{text}</p></div>',
+    "overall_discarded_rule_2": '<div class="hide-print"><p>{text}</p></div>',
+    "precision_discarded_rule_1": "<header><p>{text}</p></header>",
+    "precision_discarded_rule_2": '<div class="bottom-box"><p>{text}</p></div>',
+    "discarded_teaser_rule": '<div class="teaser"><p>{text}</p></div>',
+    "discarded_image_rule": '<div class="caption"><p>{text}</p></div>',
+    "removed_comments_rule": '<div class="comments-area"><p>{text}</p></div>',
+    "prune_junk": '<div class="junk"><p>{text}</p></div><blockquote class="sidebar"><p>'
+                  'Quoted from <a href="/elsewhere">{text}</a> today.</p></blockquote>',
+}
+
+COMMENT_DISCARDS = {
+    "discarded_comments_rule_1": '<div id="respond"><p>{text}</p></div>',
+    "discarded_comments_rule_2": "<quote><p>{text}</p></quote>",
+    "discarded_comments_rule_3": '<p class="signin">{text}</p>',
+}
+
+# DOM metadata: markup ahead of the <article> whose value only the named
+# rule finds. The pages carry no og, meta or JSON-LD value and no <h1>
+# (or two), so the DOM paths run.
+META_MARKUP = {
+    "meta_title_rule_1": '<h2 class="headline">Harbour board backs the ferry plan</h2>',
+    "meta_title_rule_1_two_h1": "<h1>Harbour</h1><h1>Ferries</h1>"
+                                '<h2 class="headline">Harbour board backs the ferry plan</h2>',
+    "meta_title_rule_2": '<span class="post-title">Pier lights return this winter</span>',
+    "meta_title_rule_3": '<h3 class="title">Ticket office opens at six</h3>',
+    "meta_author_rule_1": '<p><a rel="author" href="/people/jane-roe">Jane Roe</a></p>',
+    "meta_author_rule_1_tag": "<author>Jane Roe</author>",
+    "meta_author_rule_2": '<p><span class="username">Jane Roe</span></p>',
+    "meta_author_rule_3": '<p><em class="writer">Jane Roe</em></p>',
+    # a candidate inside a discard is skipped; a discard inside a
+    # candidate is pruned from its text
+    "meta_author_discard_rule_1_around":
+        '<div class="sidebar"><span class="username">Sam Side</span></div>'
+        '<p><span class="username">Jane Roe</span></p>',
+    "meta_author_discard_rule_1_inside":
+        '<p><span class="username">Jane Roe <span class="date">Harbour desk</span></span></p>',
+    "meta_author_discard_rule_2_around":
+        '<figure><span class="username">Fig Person</span></figure>'
+        '<p><span class="username">Jane Roe</span></p>',
+    "meta_author_discard_rule_2_inside":
+        '<p><span class="username">Jane Roe <time>Harbour desk</time></span></p>',
+    "meta_categories_rule_1": '<div class="post-meta"><a href="/category/harbour/">Harbour</a></div>',
+    "meta_categories_rule_2": '<p class="postinfo"><a href="/category/ferries/">Ferries</a></p>',
+    "meta_categories_rule_3":
+        '<footer class="entry-footer"><a href="/category/council/">Council</a></footer>',
+    "meta_categories_rule_4": '<span class="cat-links"><a href="/categories/town/">Town</a></span>',
+    "meta_categories_rule_5":
+        '<header class="entry-header"><a href="/category/local/">Local</a></header>',
+    "meta_categories_rule_6": '<div class="row"><a href="/category/news/">News</a></div>',
+    # a div.tags is also a later rule's container: the later rule adds the pier tag
+    "meta_tags_rule_1": '<div class="tags"><a href="/tag/ferry/">ferry</a></div>'
+                        '<div class="meta-box"><a href="/tag/pier/">pier</a></div>',
+    "meta_tags_rule_2": '<p class="entry-tags"><a href="/tag/harbour/">harbour</a></p>',
+    "meta_tags_rule_3": '<div class="jp-relatedposts"><a href="/tag/lighthouse/">lighthouse</a></div>',
+    "meta_tags_rule_4": '<ul class="hot-topics"><li><a href="/tags/council/">council</a></li></ul>',
+    "license_rel": '<p><a rel="license" href="https://creativecommons.org/licenses/by-sa/4.0/">'
+                   "Some rights reserved</a></p>",
+    "license_footer": '<footer><p><a href="https://creativecommons.org/licenses/by/4.0/">'
+                      "Licensed</a></p></footer>",
+    "license_footer_class": '<div class="site-footer"><a href='
+                            '"https://creativecommons.org/licenses/by-nc/3.0/">Licensed</a></div>',
+    "license_footer_id": '<div id="footer"><a href='
+                         '"https://creativecommons.org/licenses/by-nd/2.5/">Licensed</a></div>',
+}
+
+
+def selector_rows(seed: int = 23) -> list[tuple]:
+    """The ``selectors`` page set: for every rule of ``selectors``' rule
+    lists, and for the license footer scan and the prune selector of
+    ``prune_junk``, a page on which that rule decides part of the
+    output (``CONTENT_CONTAINERS``, ``COMMENTS_CONTAINERS``,
+    ``DISCARDS``, ``COMMENT_DISCARDS``, ``META_MARKUP``). Deterministic
+    for a seed."""
+    import random
+
+    rng = random.Random(seed)
+
+    def text(n=3):
+        return "".join(f"<p>{rng.choice(_FILLER)}{rng.choice(_FILLER)}</p>" for _ in range(n))
+
+    def sentence():
+        return rng.choice(_FILLER).split(". ")[0] + "."
+
+    def page(name, body):
+        html = (f"<html><head><title>Harbour page {name}</title></head>"
+                f"<body>{body}</body></html>")
+        return (f"https://news.example/selectors/{name}", html.encode("utf-8"))
+
+    # the text outside the container is what a missed container lets in
+    promo = f'<div class="promo-box"><p>{sentence()} {sentence()}</p></div>'
+    rows = [page(name, promo + markup.format(text=text()) + promo)
+            for name, markup in CONTENT_CONTAINERS.items()]
+    rows += [page(name, f"<article>{text()}</article>"
+                  + markup.format(text=text(2)))
+             for name, markup in COMMENTS_CONTAINERS.items()]
+    rows += [page(name, f"<article>{text(2)}{markup.format(text=sentence())}{text(1)}</article>")
+             for name, markup in DISCARDS.items()]
+    rows += [page(name, f"<article>{text()}</article><div id=\"comments\">{text(2)}"
+                  f"{markup.format(text=sentence())}</div>")
+             for name, markup in COMMENT_DISCARDS.items()]
+    rows += [page(name, f"{markup}<article>{text()}</article>")
+             for name, markup in META_MARKUP.items()]
+    return rows
+
+
 PAGE_SETS = {
     "fixtures": fixture_rows,
     "crawl": crawl_rows,
     "fallback": fallback_rows,
     "br_chain": br_chain_rows,
     "dates": date_rows,
+    "selectors": selector_rows,
 }
 
 
@@ -276,15 +417,22 @@ def pinned() -> dict:
         return json.load(f)
 
 
-def main() -> None:
+def main() -> int:
+    """Print every case, then a summary; 1 when a case moved or has no pin."""
     pins = pinned()
+    states = []
     for set_name, load in PAGE_SETS.items():
         rows = load()
         for opt_name, opts in OPTION_SETS.items():
             got = digest(rows, opts)
-            state = "ok" if got == pins[set_name][opt_name] else "MOVED"
+            pin = pins.get(set_name, {}).get(opt_name)
+            state = "UNPINNED" if pin is None else "ok" if got == pin else "MOVED"
+            states.append(state)
             print(set_name, opt_name, got, state, flush=True)
+    print(f"{len(states)} cases: {states.count('ok')} ok, {states.count('MOVED')} MOVED, "
+          f"{states.count('UNPINNED')} UNPINNED")
+    return 0 if states.count("ok") == len(states) else 1
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

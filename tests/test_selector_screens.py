@@ -23,54 +23,54 @@ from go_trafilatura_spark import etree, selectors
 
 ALL_RULES = [
     r for r in vars(selectors).values()
-    if callable(r) and getattr(r, "raw_screen", None) is not None
+    if isinstance(r, selectors.Rule) and r.raw_screen is not None
 ]
 
-CONTAINER_RULES = [
-    r for r in vars(selectors).values()
-    if callable(r) and getattr(r, "containers_screen", None) is not None
-]
+CONTAINER_RULES = selectors.META_CATEGORIES + selectors.META_TAGS + [
+    selectors.license_footer_rule]
 
 
-def _real_docs():
+def _real_pages():
     from go_trafilatura_spark.comparison import (
         load_comparison_entries, resolve_file,
     )
 
-    docs = []
-    for e in load_comparison_entries()[::6]:  # every 6th page: ~160 docs
+    pages = []
+    for e in load_comparison_entries()[::6]:  # every 6th page: ~160 pages
         p = resolve_file(e["file"])
         if p:
             with open(p, "rb") as f:
-                docs.append(etree.parse_html(f.read()))
-    return docs
+                pages.append(f.read())
+    return pages
 
 
-def _assert_parity(doc):
-    index = etree.TreeIndex(doc)
+def _assert_parity(html):
+    """Matching parses an element's attributes, after which no screen
+    can drop it: so every rule is screened on a fresh tree before any
+    rule is matched, and each container rule runs on a tree of its own."""
+    index = etree.TreeIndex(etree.parse_html(html))
+    kept = {rule: set(map(id, selectors._screened(selectors._candidates(index, rule), rule)))
+            for rule in ALL_RULES}
     for rule in ALL_RULES:
-        unscreened = [el for el in selectors._candidates(index, rule) if rule(el)]
-        assert selectors.query_all(index, rule) == unscreened, rule.__name__
-        assert selectors.query_all(doc, rule) == unscreened, rule.__name__
+        unscreened = [el for el in selectors._candidates(index, rule) if rule.match(el)]
+        assert [el for el in unscreened if id(el) not in kept[rule]] == [], rule.name
+        assert selectors.query_all(index, rule) == unscreened, rule.name
+        assert selectors.query_all(index.root, rule) == unscreened, rule.name
     for rule in CONTAINER_RULES:
-        got = selectors.anchors_by_ancestor(index, rule)
-        saved = rule.containers_screen
-        try:
-            rule.containers_screen = None
-            want = selectors.anchors_by_ancestor(index, rule)
-        finally:
-            rule.containers_screen = saved
-        assert got == want, rule.__name__
+        index = etree.TreeIndex(etree.parse_html(html))
+        screened = selectors.anchors_by_ancestor(index, rule)
+        assert screened == selectors.anchors_by_ancestor(
+            index, rule._replace(raw_screen=None)), rule.name
 
 
 @pytest.mark.skipif(
     not os.path.isdir("/root/reference/test-files"),
     reason="reference corpus not present")
 def test_screen_parity_real_pages():
-    docs = _real_docs()
-    assert len(docs) > 100
-    for doc in docs:
-        _assert_parity(doc)
+    pages = _real_pages()
+    assert len(pages) > 100
+    for html in pages:
+        _assert_parity(html)
 
 
 ADVERSARIAL = [
@@ -84,6 +84,7 @@ ADVERSARIAL = [
     '<div id="commentl" class="ist">x</div>',
     '<div id="comm" class="ents">x</div>',
     '<div id="c" class="omment-page">x</div>',
+    '<div id="co" class="mmentlist">x</div>',
     '<div id="reply" class="-to">x</div>',
     '<div id="re" class="ply-form">x</div>',
     # id+style span ("hidden" in id_+style)
@@ -107,8 +108,8 @@ ADVERSARIAL = [
 
 
 def test_screen_parity_adversarial():
-    html = "<html><body>%s</body></html>" % "".join(ADVERSARIAL)
-    _assert_parity(etree.parse_html(html))
+    _assert_parity("<html><body>%s</body></html>" % "".join(ADVERSARIAL))
+    _assert_parity(_meta_anchor_page())
 
 
 def test_screen_spans_match_expected():
@@ -126,8 +127,8 @@ def test_screen_spans_match_expected():
     assert len(selectors.query_all(index, selectors.overall_discarded_rule_2)) >= 1
 
 
-# (tag, attribute, value) of a container each META_CATEGORIES /
-# META_TAGS rule accepts; every rule matches at least one of them.
+# (tag, attribute, value) of a container each container rule accepts;
+# every rule matches at least one of them.
 META_CONTAINERS = [
     ("div", "class", "post-meta"), ("div", "id", "postpath-1"),
     ("p", "class", "postinfo"), ("p", "id", "filedunder"),
@@ -136,6 +137,7 @@ META_CONTAINERS = [
     ("div", "class", "row"), ("div", "class", "tags"),
     ("p", "class", "entry-tags-list"), ("div", "class", "jp-relatedposts"),
     ("section", "class", "hot-topics"), ("ul", "class", "tags-links"),
+    ("div", "class", "page-footer"), ("div", "id", "footer-2"), ("footer", "id", "end"),
 ]
 
 
@@ -157,19 +159,38 @@ def _meta_anchor_page() -> str:
             f'<{tag.upper()} {attr.upper()}="{value}"><A HREF="/{i}/e">e</A></{tag.upper()}>',
             f'<{tag} {attr}="{value.upper()}"><a href="/{i}/f">f</a></{tag}>',
         ]
+    # a bare <footer> is a license container
+    parts.append('<footer><a href="/bare/a">a</a></footer>')
     return "<html><body>%s<a href='/top'>top</a></body></html>" % "".join(parts)
+
+
+def naive_anchors(doc, container) -> list:
+    """``a[href]`` with an ancestor of a declared tag that
+    ``container.match`` accepts, by walking every anchor's ancestors:
+    no candidate scan, attribute test or screen."""
+    out = []
+    for a in etree.iter_all(doc, "a"):
+        if "href" not in a.attrib:
+            continue
+        anc = a.parent
+        while anc is not None and anc is not doc:
+            if (container.tags is None or anc.tag in container.tags) and container.match(anc):
+                out.append(a)
+                break
+            anc = anc.parent
+    return out
 
 
 def test_anchors_by_ancestor_equals_naive_rule():
     """The inverted container scan the metadata stage runs returns the
-    match list of the rule's own ancestor predicate, in document order."""
-    doc = etree.parse_html(_meta_anchor_page())
-    index = etree.TreeIndex(doc)
-    for rule in selectors.META_CATEGORIES + selectors.META_TAGS:
-        got = selectors.anchors_by_ancestor(index, rule)
-        assert got == selectors.query_all(doc, rule), rule.__name__
-        assert got, rule.__name__
-        assert all("href" in a.attrib for a in got), rule.__name__
+    naive ancestor walk's matches, in document order. Each rule runs on
+    a fresh tree, so its screen sees unparsed attributes."""
+    for rule in CONTAINER_RULES:
+        doc = etree.parse_html(_meta_anchor_page())
+        got = selectors.anchors_by_ancestor(etree.TreeIndex(doc), rule)
+        assert got == naive_anchors(doc, rule), rule.name
+        assert got, rule.name
+        assert all("href" in a.attrib for a in got), rule.name
 
 
 # -- one owner for the lazy-attribute format -------------------------------
