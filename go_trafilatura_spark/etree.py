@@ -117,11 +117,12 @@ class Element:
 
     Attributes parse LAZILY: the fast tokenizer stores the raw
     attribute substring (``_rawattrs``) and the dict materializes on
-    first access — attribute parsing is ~45% of tokenizer cost and most
-    elements' attributes are never read by the cascade."""
+    the first ``attrib``/``get``/``set`` — attribute parsing is ~45% of
+    tokenizer cost and most elements' attributes are never read by the
+    cascade. ``has_attrs`` tells whether there are any without a
+    parse."""
 
-    __slots__ = ("tag", "_attrib", "_rawattrs", "_lraw", "text", "tail",
-                 "children", "parent")
+    __slots__ = ("tag", "_attrib", "_rawattrs", "text", "tail", "children", "parent")
 
     def __init__(self, tag: str, attrib: dict | None = None):
         self.tag = tag
@@ -130,7 +131,6 @@ class Element:
         # allocation per node — most nodes have no attributes).
         self._attrib = attrib if attrib is not None else _EMPTY_ATTRIB
         self._rawattrs: str | None = None
-        self._lraw: str | None = None  # lowercased raw, cached by screens
         self.text = ""
         self.tail = ""
         self.children: list[Element] = []
@@ -171,41 +171,6 @@ class Element:
 
     def __repr__(self) -> str:  # pragma: no cover - debug aid
         return f"<Element {self.tag} attrib={self.attrib} text={self.text!r}>"
-
-
-# -- raw-attribute prescreens ---------------------------------------------
-# A screen skips the attribute parse (and the predicate it guards) when a
-# literal the predicate needs is absent from the element's unparsed
-# attribute text. It is sound only as a necessary condition of the
-# predicate on the PARSED attributes: parsing lowercases names and keeps
-# values, so a lowercase literal in a parsed name or value is a literal
-# substring of the lowercased raw text — unless an entity could decode
-# into it ('&' in raw), where the screen must pass.
-
-def attr_source(el: Element) -> str | None:
-    """The element's lowercased unparsed attribute text (cached), or
-    None when a screen can prove nothing: the attributes are already
-    parsed, or the text contains '&'."""
-    raw = el._rawattrs
-    if raw is None or "&" in raw:
-        return None
-    lraw = el._lraw
-    if lraw is None:
-        lraw = el._lraw = raw.lower()
-    return lraw
-
-
-def attrs_may_contain(el: Element, literals) -> bool:
-    """False only when none of the LOWERCASE ``literals`` can occur in
-    any parsed attribute name or value of ``el``."""
-    lraw = attr_source(el)
-    if lraw is None:
-        return True
-    # explicit loop: a genexpr per element costs more than the checks
-    for p in literals:
-        if p in lraw:
-            return True
-    return False
 
 
 def has_attrs(el: Element) -> bool:
@@ -398,9 +363,8 @@ def text_content(el: Element) -> str:
 
 def text_len(el: Element) -> int:
     """len(text_content(el)) without materializing the string (the
-    prune backup's 6/7-loss checks only need the length). Same
-    accounting as _collect_text: comment text skipped, every child's
-    tail counted."""
+    prune backup's 6/7-loss checks only need the length): comment text
+    skipped, every child's tail counted."""
     n = len(el.text) if el.tag != COMMENT else 0
     stack = el.children[:]
     while stack:
@@ -525,17 +489,6 @@ class TreeIndex:
         self._pos, self._last, self._tl = pos, lastd, tl
 
 
-def _collect_text(el: Element, parts: list[str]) -> None:
-    if el.tag == COMMENT:
-        return
-    if el.text:
-        parts.append(el.text)
-    for child in el.children:
-        _collect_text(child, parts)
-        if child.tail:
-            parts.append(child.tail)
-
-
 def prev_element_sibling(el: Element) -> Element | None:
     if el.parent is None:
         return None
@@ -631,7 +584,6 @@ def _clone_with_tail(el: Element) -> Element:
     dup.tag = el.tag
     raw = el._rawattrs
     dup._rawattrs = raw
-    dup._lraw = el._lraw
     if raw is not None:
         dup._attrib = _EMPTY_ATTRIB
     else:
@@ -934,23 +886,6 @@ def _serialize(el: Element, out: list[str]) -> None:
 # HTML parsing (HTML5-lite tree construction)
 # ---------------------------------------------------------------------------
 
-class _FmtEntry:
-    """Active-formatting-elements entry: the tag plus the currently-open
-    element for it. ``attrib`` (used only on reconstruction/adoption,
-    both rare) defers to the element's lazy attributes — pushing a
-    formatting tag must not force an attribute parse."""
-
-    __slots__ = ("tag", "el")
-
-    def __init__(self, tag: str, el):
-        self.tag = tag
-        self.el = el
-
-    @property
-    def attrib(self) -> dict:
-        return self.el.attrib
-
-
 def _attrs_equal(x: "Element", y: "Element") -> bool:
     """Attribute equality without forcing a parse when both sides carry
     the identical raw substring (identical raw ⇒ identical dict; raws
@@ -969,7 +904,7 @@ _F_HEADISH = 2         # head-only tags + raw-text head machinery
 _F_RAWHEAD = 4         # script/style/noscript/template (always stacked)
 _F_A = 8
 _F_TABLE = 16
-_F_AUTOCLOSE = 32      # tag participates in _autoclose
+_F_AUTOCLOSE = 32      # start tag may close open p / list / table elements
 _F_VOID = 64
 _F_FORMATTING = 128
 _F_AFE_MARKER = 256
@@ -1053,7 +988,7 @@ class _TreeBuilder(HTMLParser):
         self.stack: list[Element] = []  # open elements below body
         self.n_open_p = 0   # open <p> count: skips the p-closer stack walk
         self.in_body = False
-        # List of active formatting elements (_FmtEntry | _AFE_MARKER).
+        # List of active formatting elements (Element | _AFE_MARKER).
         self.afe: list = []
         # Open svg/math elements (foreign content; breakout + honored
         # self-closing per HTML5 "in foreign content")
@@ -1116,12 +1051,12 @@ class _TreeBuilder(HTMLParser):
             e = afe[k]
             if e is _AFE_MARKER:
                 break
-            if e.tag == el.tag and _attrs_equal(e.el, el):
+            if e.tag == el.tag and _attrs_equal(e, el):
                 count += 1
                 if count == 3:
                     del afe[k]
                     break
-        afe.append(_FmtEntry(el.tag, el))
+        afe.append(el)
 
     def _reconstruct(self) -> None:
         """Reconstruct active formatting elements: formatting tags left
@@ -1132,23 +1067,23 @@ class _TreeBuilder(HTMLParser):
         if not afe or len(self.stack) >= 400:
             return
         last = afe[-1]
-        if last is _AFE_MARKER or self._in_stack(last.el):
+        if last is _AFE_MARKER or self._in_stack(last):
             return
         i = len(afe) - 1
         while i > 0:
             prev = afe[i - 1]
-            if prev is _AFE_MARKER or self._in_stack(prev.el):
+            if prev is _AFE_MARKER or self._in_stack(prev):
                 break
             i -= 1
         for j in range(i, len(afe)):
-            entry = afe[j]
+            fe = afe[j]
             parent = self._current()
-            el = Element(entry.tag, dict(entry.attrib) if entry.attrib else None)
+            el = Element(fe.tag, dict(fe.attrib) if fe.attrib else None)
             el.parent = parent
             parent.children.append(el)
             if len(self.stack) < 400:
                 self.stack.append(el)
-            entry.el = el
+            afe[j] = el
 
     def _any_other_end(self, tag: str) -> None:
         """HTML5 'any other end tag': walk up, close at a match, ignore
@@ -1169,24 +1104,23 @@ class _TreeBuilder(HTMLParser):
         a furthest block the formatting entry is considered closed (the
         end tag was explicit) instead of re-entering the list."""
         afe, stack = self.afe, self.stack
-        entry = None
+        fe = None
         for e in reversed(afe):
             if e is _AFE_MARKER:
                 break
             if e.tag == tag:
-                entry = e
+                fe = e
                 break
-        if entry is None:
+        if fe is None:
             self._any_other_end(tag)
             return
-        fe = entry.el
         fe_idx = -1
         for i in range(len(stack) - 1, -1, -1):
             if stack[i] is fe:
                 fe_idx = i
                 break
         if fe_idx < 0:
-            afe.remove(entry)
+            afe.remove(fe)
             return
         fb_idx = -1
         for i in range(fe_idx + 1, len(stack)):
@@ -1197,7 +1131,7 @@ class _TreeBuilder(HTMLParser):
             # No furthest block: plain pop through the formatting element;
             # formatting opened above it stays in afe for reconstruction.
             self._pop_to(fe_idx)
-            afe.remove(entry)
+            afe.remove(fe)
             return
         fb = stack[fb_idx]
         common = stack[fe_idx - 1] if fe_idx > 0 else self.body
@@ -1221,7 +1155,7 @@ class _TreeBuilder(HTMLParser):
                 fb.parent.children.remove(fb)
             fb.parent = common
             common.children.append(fb)
-        afe.remove(entry)
+        afe.remove(fe)
         # Drop the formatting element and intermediates; the furthest
         # block (and anything inside it) stays open.
         for dropped in stack[fe_idx:fb_idx]:
@@ -1278,15 +1212,6 @@ class _TreeBuilder(HTMLParser):
     }
     _P_STOPS = tuple(_SCOPE_BARRIERS)
 
-    def _autoclose(self, tag: str) -> None:
-        # n_open_p == 0 means the p-closer walk cannot pop anything —
-        # skip the whole-stack scan (the common nested-div case).
-        if self.n_open_p and tag in _P_CLOSERS:
-            self._close_upto(("p",), self._P_STOPS)
-        spec = self._AUTOCLOSE_MAP.get(tag)
-        if spec is not None:
-            self._close_upto(spec[0], spec[1])
-
     # -- HTMLParser callbacks ----------------------------------------------
     # Per-tag behaviour flags: one dict lookup replaces ~10 frozenset
     # membership tests per start tag (the hottest parse callback).
@@ -1329,7 +1254,6 @@ class _TreeBuilder(HTMLParser):
                 el.tag = tag
                 el._attrib = attrib if attrib is not None else _EMPTY_ATTRIB
                 el._rawattrs = raw
-                el._lraw = None
                 el.text = ""
                 el.tail = ""
                 el.children = []
@@ -1371,7 +1295,7 @@ class _TreeBuilder(HTMLParser):
                         if e in self.afe:
                             self.afe.remove(e)
                         for i in range(len(self.stack) - 1, -1, -1):
-                            if self.stack[i] is e.el:
+                            if self.stack[i] is e:
                                 del self.stack[i]
                                 break
                         break
@@ -1380,7 +1304,6 @@ class _TreeBuilder(HTMLParser):
                 # cell) implies </table> first.
                 self._close_upto(("table",), ("td", "th", "caption"))
             if flags & _F_AUTOCLOSE:
-                # _autoclose inlined (hot: every block-level start tag)
                 if self.n_open_p and tag in _P_CLOSERS:
                     self._close_upto(("p",), self._P_STOPS)
                 spec = self._AUTOCLOSE_MAP.get(tag)
@@ -1396,7 +1319,6 @@ class _TreeBuilder(HTMLParser):
         el.tag = tag
         el._attrib = attrib if attrib is not None else _EMPTY_ATTRIB
         el._rawattrs = raw
-        el._lraw = None
         el.text = ""
         el.tail = ""
         el.children = []

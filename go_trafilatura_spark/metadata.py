@@ -882,8 +882,6 @@ def extract_license(index) -> str:
     the first strict one among the anchors under a footer
     (``selectors.license_footer_rule``)."""
     for a in index.of_tag("a"):
-        if not etree.attrs_may_contain(a, ("license",)):
-            continue
         if a.get("rel") == "license" and "href" in a.attrib:
             result = parse_license_element(a, False)
             if result:
@@ -1213,9 +1211,6 @@ _RX_DATE_CLASS = stdlib_re.compile(
     r"(?i)(?<![a-z0-9])(date|datum|time|timestamp|post-?meta|byline|published|"
     r"posted-?on|entry-?meta|dateline|submitted|created)(?![a-z0-9])"
 )
-# Literals one of which every _RX_DATE_CLASS match contains (raw screen).
-_DATE_CLASS_LITERALS = ("date", "time", "post", "entry", "byline", "publish",
-                        "datum", "submitted", "created")
 
 
 def _scan_all_dates(text: str) -> list[str]:
@@ -1296,23 +1291,20 @@ def _date_tier_candidates(doc: Element, extensive: bool, index):
     scanned = 0
     micro = ""
     for node in index.of_tag("*"):
-        if etree.attrs_may_contain(node, ("itemprop",)):
-            itemprop = node.attrib.get("itemprop") if node.attrib else None
-            if itemprop:
-                key = itemprop.lower()
-                if key in ("datepublished", "datecreated") and not micro:
-                    micro = _parse_date_string(
-                        node.get("content") or node.get("datetime"))
-                    if micro:
-                        yield "micro", micro
-                elif not reserve and key in ("datemodified", "dateupdate"):
-                    reserve = _parse_date_string(
-                        node.get("content") or node.get("datetime"))
+        itemprop = node.get("itemprop")
+        if itemprop:
+            key = itemprop.lower()
+            if key in ("datepublished", "datecreated") and not micro:
+                micro = _parse_date_string(
+                    node.get("content") or node.get("datetime"))
+                if micro:
+                    yield "micro", micro
+            elif not reserve and key in ("datemodified", "dateupdate"):
+                reserve = _parse_date_string(
+                    node.get("content") or node.get("datetime"))
         if container_done:
             continue
         # -- fused date-classed container branch (tier yields below) --
-        if not etree.attrs_may_contain(node, _DATE_CLASS_LITERALS):
-            continue
         attrib = node.attrib
         if not attrib or node.tag in ("script", "style"):
             continue

@@ -94,17 +94,10 @@ def inner_text(node: Element) -> str:
 
 
 def _match_string(el: Element) -> str:
-    # Raw prescreen: no class or id attribute, no attr-dict parse (most
-    # elements' attrs are never read otherwise).
-    if not etree.attrs_may_contain(el, ("class", "id")):
-        return " "
     return el.get("class") + " " + el.get("id")
 
 
 def _is_probably_visible(el: Element) -> bool:
-    if not etree.attrs_may_contain(el, ("style", "hidden")):
-        # no style/hidden/aria-hidden attribute — visible, no parse
-        return True
     attrib = el.attrib
     if not attrib:
         return True
@@ -277,15 +270,8 @@ class _Grab:
     def _check_byline(self, el: Element, match_string: str) -> bool:
         if self.byline_found:
             return False
-        if not etree.attrs_may_contain(el, ("rel", "itemprop")):
-            # no rel/itemprop attribute — only the class/id byline
-            # regex can hit, no attr-dict parse
-            hit = RX_BYLINE.search(match_string)
-        else:
-            hit = (el.get("rel") == "author"
-                   or "author" in el.get("itemprop")
-                   or RX_BYLINE.search(match_string))
-        if hit:
+        if (el.get("rel") == "author" or "author" in el.get("itemprop")
+                or RX_BYLINE.search(match_string)):
             text = etree.text_content(el).strip()
             if 0 < len(text) < 100:
                 self.byline_found = True

@@ -2,18 +2,18 @@
 
 Every element query is one ``Rule``: a predicate ``match`` with its
 declaration, stated once where the rule is defined — the tags it can
-match, whether it needs an attribute, and its raw-attribute screen. The
-rule lists here, the container rules of ``anchors_by_ancestor`` and the
-selector groups of ``css.parse_group`` all take this form.
+match and whether it needs an attribute. The rule lists here, the
+container rules of ``anchors_by_ancestor`` and the selector groups of
+``css.parse_group`` all take this form.
 
 ``query``, ``query_all`` and ``query_iter`` are the only evaluation
 path, over the descendants of a tree or its ``etree.TreeIndex`` in
 document order: one candidate scan surfaces the elements of the
-declared tags (only those with an attribute when the rule needs one),
-the screen drops the elements whose unparsed attributes contain none of
-its literals, and ``match`` decides the rest. So a body never restates
-the tag test of its declaration, and every screen is a necessary
-condition of the match: an element it drops could never match.
+declared tags (only those with an attribute when the rule needs one)
+and ``match`` decides them. So a body never restates the tag test of
+its declaration. An element's attributes are parsed on the first read
+(``etree.Element``), so only the candidates a rule body reads pay for
+the parse.
 
 Transcribed semantics from the reference's internal/selector/*.go
 (content.go:29-234, content-discard-overall.go:29-227, comments.go,
@@ -26,8 +26,7 @@ from __future__ import annotations
 import re
 from typing import Callable, NamedTuple
 
-from .etree import (Element, TreeIndex, _collect_tags, attr_source,
-                    get_elements_by_tag, has_attrs)
+from .etree import Element, TreeIndex, _collect_tags, get_elements_by_tag, has_attrs
 
 
 class Rule(NamedTuple):
@@ -36,30 +35,20 @@ class Rule(NamedTuple):
 
     - ``tags``: the tags it can match; None for any.
     - ``needs_attrs``: it can only match an element carrying at least
-      one attribute.
-    - ``raw_screen``: LOWERCASE literals, at least one of which the
-      element's unparsed attributes must contain; None for no screen.
-      ``screen_exempt`` (tags matched without one), ``raw_screen_rx``
-      and ``screen_concat`` widen it: see _screened."""
+      one attribute."""
 
     name: str
     match: Callable[[Element], bool]
     tags: frozenset | None = None
     needs_attrs: bool = False
-    raw_screen: tuple | None = None
-    screen_exempt: frozenset | None = None
-    raw_screen_rx: re.Pattern | None = None
-    screen_concat: bool = False
 
 
-def declare(tags=None, screen_exempt=None, **declaration):
+def declare(tags=None, needs_attrs=False):
     """The decorated predicate as a Rule of its name, declared by these
     fields."""
     def build(match) -> Rule:
-        return Rule(match.__name__, match,
-                    None if tags is None else frozenset(tags),
-                    screen_exempt=None if screen_exempt is None else frozenset(screen_exempt),
-                    **declaration)
+        return Rule(match.__name__, match, None if tags is None else frozenset(tags),
+                    needs_attrs)
     return build
 
 
@@ -81,57 +70,13 @@ def _candidates(scope, rule: Rule) -> list[Element]:
     return out
 
 
-_RX_SCREEN_ID = re.compile(r"id\s*=")
-_RX_SCREEN_CS = re.compile(r"class\s*=|style\s*=")
-
-
-def _screened(elements: list, rule: Rule) -> list:
-    """Raw-attribute prescreen: the ``elements`` whose lowercased
-    unparsed attributes contain a literal of ``rule.raw_screen``; the
-    others skip the attribute parse AND the rule body. Checks are plain
-    ``in`` (C memmem) — NOT a regex alternation, whose backtracking
-    costs more than the parse it avoids.
-
-    Exactness: ``etree.attr_source`` (the screen over-passes, never
-    under). Further bypasses that force a full evaluation: the
-    element's tag is in ``screen_exempt`` (tag-only disjunct),
-    ``raw_screen_rx`` finds a form no literal can name, or — for rules
-    with id+class / id+style CONCATENATION semantics
-    (``screen_concat``) — both attrs are present, where a match could
-    span the value boundary."""
-    screen = rule.raw_screen
-    if screen is None:
-        return elements
-    exempt, rx, concat = rule.screen_exempt, rule.raw_screen_rx, rule.screen_concat
-    out = []
-    append = out.append
-    for el in elements:
-        lraw = attr_source(el)
-        if lraw is None:
-            append(el)
-            continue
-        for p in screen:
-            if p in lraw:
-                append(el)
-                break
-        else:
-            if exempt is not None and el.tag in exempt:
-                append(el)
-            elif rx is not None and rx.search(lraw) is not None:
-                append(el)
-            elif concat and _RX_SCREEN_ID.search(lraw) \
-                    and _RX_SCREEN_CS.search(lraw):
-                append(el)
-    return out
-
-
 def query_iter(scope, rule: Rule):
     """The descendants of ``scope`` (an Element or a TreeIndex, see
     _candidates) that ``rule`` matches, lazily in document order, so
     callers that stop at the first usable hit skip rule evaluation on
     the rest."""
     match = rule.match
-    for el in _screened(_candidates(scope, rule), rule):
+    for el in _candidates(scope, rule):
         if match(el):
             yield el
 
@@ -139,7 +84,7 @@ def query_iter(scope, rule: Rule):
 def query_all(scope, rule: Rule) -> list[Element]:
     """Every match of query_iter, as a list."""
     match = rule.match
-    return [el for el in _screened(_candidates(scope, rule), rule) if match(el)]
+    return [el for el in _candidates(scope, rule) if match(el)]
 
 
 def query(scope, rule: Rule) -> Element | None:
@@ -162,9 +107,7 @@ def _idc(el: Element):
 _CONTENT_TAGS = ("article", "div", "main", "section")
 
 
-@declare(_CONTENT_TAGS, needs_attrs=True, raw_screen=(
-    "post", "entry", "articl", "page-content", "text-content", "body-text",
-    "art-content"))
+@declare(_CONTENT_TAGS, needs_attrs=True)
 def content_rule_1(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     lc, li = class_.lower(), id_.lower()
@@ -198,10 +141,7 @@ def content_rule_1(n: Element) -> bool:
 content_rule_2 = Rule("content_rule_2", lambda n: True, frozenset(("article",)))
 
 
-@declare(_CONTENT_TAGS, needs_attrs=True, raw_screen=(
-    "post", "story", "theme-content", "blog-content", "section-content",
-    "single-", "main-", "wpb", "field-body", "text", "cell", "primary",
-    "articl"))
+@declare(_CONTENT_TAGS, needs_attrs=True)
 def content_rule_3(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -223,7 +163,7 @@ def content_rule_3(n: Element) -> bool:
     )
 
 
-@declare(_CONTENT_TAGS, needs_attrs=True, raw_screen=("content",))
+@declare(_CONTENT_TAGS, needs_attrs=True)
 def content_rule_4(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -238,7 +178,7 @@ def content_rule_4(n: Element) -> bool:
 
 
 # a bare <main> matches on its tag alone
-@declare(_CONTENT_TAGS, raw_screen=("main",), screen_exempt=("main",))
+@declare(_CONTENT_TAGS)
 def content_rule_5(n: Element) -> bool:
     if n.tag == "main":
         return True
@@ -283,8 +223,6 @@ _RX_DISCARD1_CLASS = re.compile("|".join(map(re.escape, _DISCARD1_CLASS_CONTAINS
 _RX_DISCARD1_IDCLASS = re.compile("|".join(map(re.escape, _DISCARD1_IDCLASS_CONTAINS)))
 
 
-# No screen: its ~55-literal union costs more to check than the
-# attribute parse it would avoid.
 @declare(_DISCARD_TAGS, needs_attrs=True)
 def overall_discarded_rule_1(n: Element) -> bool:
     id_, class_, idclass = _idc(n)
@@ -312,9 +250,7 @@ def overall_discarded_rule_1(n: Element) -> bool:
     return False
 
 
-@declare(needs_attrs=True, screen_concat=True, raw_screen=(
-    "comments-title", "nocomment", "reply-", "message", "reader-comments",
-    "akismet", "suggest-links", "hid", "display", "noprint", "notloaded"))
+@declare(needs_attrs=True)
 def overall_discarded_rule_2(n: Element) -> bool:
     id_, class_, idclass = _idc(n)
     style = n.get("style")
@@ -358,7 +294,7 @@ def precision_discarded_rule_2(n: Element) -> bool:
 PRECISION_DISCARDED_CONTENT = [precision_discarded_rule_1, precision_discarded_rule_2]
 
 
-@declare(_DISCARD_TAGS, needs_attrs=True, raw_screen=("teaser",))
+@declare(_DISCARD_TAGS, needs_attrs=True)
 def discarded_teaser_rule(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return "teaser" in id_.lower() or "teaser" in class_.lower()
@@ -367,7 +303,7 @@ def discarded_teaser_rule(n: Element) -> bool:
 DISCARDED_TEASER = [discarded_teaser_rule]
 
 
-@declare(_DISCARD_TAGS, needs_attrs=True, raw_screen=("caption",))
+@declare(_DISCARD_TAGS, needs_attrs=True)
 def discarded_image_rule(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return "caption" in id_ or "caption" in class_
@@ -383,10 +319,7 @@ DISCARDED_IMAGE = [discarded_image_rule]
 _COMMENTS_TAGS = frozenset("div ol ul dl section".split())
 
 
-# "comm"/"ment" cover every id+class boundary split of commentlist /
-# comments* / comment-* (prefix ⊇ "comm" for splits ≥4, suffix ⊇ "ment"
-# for splits ≤3) — no both-attrs bypass needed.
-@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=("comm", "ment"))
+@declare(_COMMENTS_TAGS, needs_attrs=True)
 def comments_rule_1(n: Element) -> bool:
     id_, class_, idclass = _idc(n)
     return (
@@ -398,7 +331,7 @@ def comments_rule_1(n: Element) -> bool:
     )
 
 
-@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=("comm", "ment"))
+@declare(_COMMENTS_TAGS, needs_attrs=True)
 def comments_rule_2(n: Element) -> bool:
     id_, class_, idclass = _idc(n)
     return (
@@ -409,12 +342,12 @@ def comments_rule_2(n: Element) -> bool:
     )
 
 
-@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=("comol", "disqus_thread", "dsq_comments"))
+@declare(_COMMENTS_TAGS, needs_attrs=True)
 def comments_rule_3(n: Element) -> bool:
     return n.get("id").startswith(("comol", "disqus_thread", "dsq_comments"))
 
 
-@declare(("div", "section"), needs_attrs=True, raw_screen=("social", "comment"))
+@declare(("div", "section"), needs_attrs=True)
 def comments_rule_4(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return id_.startswith("social") or "comment" in class_
@@ -423,18 +356,17 @@ def comments_rule_4(n: Element) -> bool:
 COMMENTS = [comments_rule_1, comments_rule_2, comments_rule_3, comments_rule_4]
 
 
-@declare(("div", "section"), needs_attrs=True, raw_screen=("respond",))
+@declare(("div", "section"), needs_attrs=True)
 def discarded_comments_rule_1(n: Element) -> bool:
     return n.get("id").startswith("respond")
 
 
+# not cite: doc_cleaning strips every cite (settings.TAGS_TO_STRIP) before this prunes
 discarded_comments_rule_2 = Rule("discarded_comments_rule_2", lambda n: True,
-                                 frozenset(("cite", "quote")))
+                                 frozenset(("quote",)))
 
 
-@declare(needs_attrs=True, screen_concat=True, raw_screen=(
-    "comments-title", "nocomment", "reply-", "message", "signin",
-    "akismet", "display"))
+@declare(needs_attrs=True)
 def discarded_comments_rule_3(n: Element) -> bool:
     id_, class_, idclass = _idc(n)
     style = n.get("style")
@@ -457,8 +389,7 @@ DISCARDED_COMMENTS = [
 ]
 
 
-@declare(_COMMENTS_TAGS, needs_attrs=True, raw_screen=(
-    "comment", "comol", "disqus_thread", "dsq-comments"))
+@declare(_COMMENTS_TAGS, needs_attrs=True)
 def removed_comments_rule(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -477,8 +408,7 @@ REMOVED_COMMENTS = [removed_comments_rule]
 # Metadata selectors (meta-title.go, meta-author.go, meta-author-discard.go)
 # ---------------------------------------------------------------------------
 
-@declare(("h1", "h2"), needs_attrs=True, raw_screen=(
-    "post-title", "entry-title", "headline", "post__title", "article-title"))
+@declare(("h1", "h2"), needs_attrs=True)
 def meta_title_rule_1(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -488,12 +418,12 @@ def meta_title_rule_1(n: Element) -> bool:
     )
 
 
-@declare(needs_attrs=True, raw_screen=("entry-title", "post-title"))
+@declare(needs_attrs=True)
 def meta_title_rule_2(n: Element) -> bool:
     return n.get("class") in ("entry-title", "post-title")
 
 
-@declare(("h1", "h2", "h3"), needs_attrs=True, raw_screen=("title",))
+@declare(("h1", "h2", "h3"), needs_attrs=True)
 def meta_title_rule_3(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return "title" in class_ or "title" in id_
@@ -502,13 +432,8 @@ def meta_title_rule_3(n: Element) -> bool:
 META_TITLE = [meta_title_rule_1, meta_title_rule_2, meta_title_rule_3]
 
 
-# A bare <author> matches on its tag alone. rel in ("author","me"):
-# rel=author carries the "author" literal; rel=me alone needs the regex
-# tier (a bare "me"/"rel" literal would re-admit every rel-carrying link
-# and most attribute soup).
-@declare(("author", "a", "address", "div", "link", "p", "span", "strong"),
-         raw_screen=("author",), raw_screen_rx=re.compile(r"rel\s*=\s*[\"']?me\b"),
-         screen_exempt=("author",))
+# a bare <author> matches on its tag alone
+@declare(("author", "a", "address", "div", "link", "p", "span", "strong"))
 def meta_author_rule_1(n: Element) -> bool:
     if n.tag == "author":
         return True
@@ -525,9 +450,7 @@ def meta_author_rule_1(n: Element) -> bool:
     )
 
 
-@declare(("a", "div", "h3", "h4", "p", "span"), needs_attrs=True, raw_screen=(
-    "author", "byl", "username", "bbl", "channel-name", "zuozhe", "bianji",
-    "xiaobian", "submitted-by", "posted-by", "journalist-name"))
+@declare(("a", "div", "h3", "h4", "p", "span"), needs_attrs=True)
 def meta_author_rule_2(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -541,7 +464,7 @@ def meta_author_rule_2(n: Element) -> bool:
     )
 
 
-@declare(needs_attrs=True, raw_screen=("author", "screenname", "byl", "writer"))
+@declare(needs_attrs=True)
 def meta_author_rule_3(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -558,12 +481,7 @@ def meta_author_rule_3(n: Element) -> bool:
 META_AUTHOR = [meta_author_rule_1, meta_author_rule_2, meta_author_rule_3]
 
 
-# "commen"/"ntlist" cover every id+class split of "commentlist"
-# (suffix ⊇ "ntlist" for splits ≤5, prefix ⊇ "commen" for ≥6).
-@declare(("a", "div", "section", "span"), needs_attrs=True, raw_screen=(
-    "commen", "ntlist", "title", "date", "sidebar", "is-hidden", "quote",
-    "embedly", "article-sh", "article-su", "print", "category", "meta-date",
-    "meta-reviewer", "productreviews", "figure"))
+@declare(("a", "div", "section", "span"), needs_attrs=True)
 def meta_author_discard_rule_1(n: Element) -> bool:
     id_, class_, _ = _idc(n)
     return (
@@ -596,11 +514,10 @@ META_AUTHOR_DISCARD = [meta_author_discard_rule_1, meta_author_discard_rule_2]
 # ---------------------------------------------------------------------------
 # Container rules (meta-categories.go, meta-tags.go, metadata.go:643-660):
 # a link rule is "a[href] with an ancestor that this container rule
-# matches", evaluated by anchors_by_ancestor. The container predicates
-# read single attributes, so no concatenation bypass is needed.
+# matches", evaluated by anchors_by_ancestor.
 # ---------------------------------------------------------------------------
 
-@declare(("div",), needs_attrs=True, raw_screen=("post", "meta", "entry"))
+@declare(("div",), needs_attrs=True)
 def meta_categories_rule_1(n: Element) -> bool:
     return n.get("class").startswith(
         ("post-info", "postinfo", "post-meta", "postmeta", "meta",
@@ -608,30 +525,30 @@ def meta_categories_rule_1(n: Element) -> bool:
     ) or n.get("id").startswith("postpath")
 
 
-@declare(("p",), needs_attrs=True, raw_screen=("post", "entry-categories", "filedunder"))
+@declare(("p",), needs_attrs=True)
 def meta_categories_rule_2(n: Element) -> bool:
     class_ = n.get("class")
     return (class_.startswith(("postmeta", "entry-categories")) or class_ == "postinfo"
             or n.get("id") == "filedunder")
 
 
-@declare(("footer",), needs_attrs=True, raw_screen=("entry-",))
+@declare(("footer",), needs_attrs=True)
 def meta_categories_rule_3(n: Element) -> bool:
     return n.get("class").startswith(("entry-meta", "entry-footer"))
 
 
-@declare(("li", "span"), needs_attrs=True, raw_screen=("categor", "cat-links"))
+@declare(("li", "span"), needs_attrs=True)
 def meta_categories_rule_4(n: Element) -> bool:
     class_ = n.get("class")
     return class_ in ("post-category", "postcategory", "entry-category") or "cat-links" in class_
 
 
-@declare(("header",), needs_attrs=True, raw_screen=("entry-header",))
+@declare(("header",), needs_attrs=True)
 def meta_categories_rule_5(n: Element) -> bool:
     return n.get("class") == "entry-header"
 
 
-@declare(("div",), needs_attrs=True, raw_screen=("row", "tags"))
+@declare(("div",), needs_attrs=True)
 def meta_categories_rule_6(n: Element) -> bool:
     return n.get("class") in ("row", "tags")
 
@@ -642,25 +559,24 @@ META_CATEGORIES = [
 ]
 
 
-@declare(("div",), needs_attrs=True, raw_screen=("tags",))
+@declare(("div",), needs_attrs=True)
 def meta_tags_rule_1(n: Element) -> bool:
     return n.get("class") == "tags"
 
 
-@declare(("p",), needs_attrs=True, raw_screen=("entry-tags",))
+@declare(("p",), needs_attrs=True)
 def meta_tags_rule_2(n: Element) -> bool:
     return n.get("class").startswith("entry-tags")
 
 
-@declare(("div",), needs_attrs=True, raw_screen=(
-    "row", "jp-relatedposts", "entry-utility", "tag", "meta"))
+@declare(("div",), needs_attrs=True)
 def meta_tags_rule_3(n: Element) -> bool:
     class_ = n.get("class")
     return class_ in ("row", "jp-relatedposts", "entry-utility") or class_.startswith(
         ("tag", "postmeta", "meta"))
 
 
-@declare(needs_attrs=True, raw_screen=("entry-meta", "topics", "tags-links"))
+@declare(needs_attrs=True)
 def meta_tags_rule_4(n: Element) -> bool:
     class_ = n.get("class")
     return class_ == "entry-meta" or "topics" in class_ or "tags-links" in class_
@@ -671,13 +587,11 @@ META_TAGS = [meta_tags_rule_1, meta_tags_rule_2, meta_tags_rule_3, meta_tags_rul
 
 # License footers: any <footer>, bare or not, or a div with "footer" in
 # its class or id
-@declare(("footer", "div"), raw_screen=("footer",), screen_exempt=("footer",))
+@declare(("footer", "div"))
 def license_footer_rule(n: Element) -> bool:
     return n.tag == "footer" or "footer" in n.get("class") or "footer" in n.get("id")
 
 
-# No screen: nearly every anchor carries an href, so a screen would
-# only add a lowercase copy of each anchor's attributes.
 @declare(("a",), needs_attrs=True)
 def _a_href(n: Element) -> bool:
     return "href" in n.attrib

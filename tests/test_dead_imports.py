@@ -2,7 +2,8 @@
 entry, the bench and the jobs is used (or re-exported via ``__all__``).
 No dead definitions: every module-level function and class of the
 package is referenced somewhere in the repository's Python files
-outside its own definition (or exported via ``__all__``)."""
+outside its own definition (or exported via ``__all__``), and every
+private one, method included, is referenced by the package's own code."""
 
 import ast
 import glob
@@ -102,6 +103,62 @@ def dead_definitions() -> list[str]:
 def test_no_dead_module_level_definitions():
     dead = dead_definitions()
     assert dead == [], "module-level definitions nothing references:\n" + "\n".join(dead)
+
+
+def unreferenced_private_definitions(sources: dict[str, str]) -> list[str]:
+    """``file:line: name`` of each private (leading ``_``, not dunder)
+    function, method or class in ``sources`` (path -> code) whose name
+    no code in ``sources`` reads as a name or an attribute outside the
+    lines of its own definition. Comments and strings do not count."""
+    trees = {path: ast.parse(code, path) for path, code in sources.items()}
+    refs = [(node.id if isinstance(node, ast.Name) else node.attr, path, node.lineno)
+            for path, tree in trees.items() for node in ast.walk(tree)
+            if isinstance(node, (ast.Name, ast.Attribute))]
+    found = []
+    for path, tree in trees.items():
+        for node in ast.walk(tree):
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                    and node.name.startswith("_") and not node.name.endswith("__")
+                    and not any(name == node.name and not (
+                        p == path and node.lineno <= line <= node.end_lineno)
+                        for name, p, line in refs)):
+                found.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}: {node.name}")
+    return found
+
+
+def test_no_dead_private_definitions():
+    sources = {}
+    for path in sorted(glob.glob(os.path.join(ROOT, "go_trafilatura_spark", "*.py"))):
+        with open(path, encoding="utf-8") as f:
+            sources[path] = f.read()
+    dead = unreferenced_private_definitions(sources)
+    assert dead == [], "private definitions the package never references:\n" + "\n".join(dead)
+
+
+def test_private_definition_check_sees_every_form():
+    src = (
+        "def _dead(x):\n"
+        "    return _dead(x - 1)  # recursion is its own body\n"
+        "def _called():\n"
+        "    pass\n"
+        "class _Kept:\n"
+        "    def _method(self):\n"
+        "        return self._used()\n"
+        "    def _used(self):\n"
+        "        pass\n"
+        "    def __init__(self):\n"
+        "        pass\n"
+        "def public():\n"
+        "    '_named_in_a_string'\n"
+        "    return _called, _Kept  # _commented\n"
+        "def _named_in_a_string():\n"
+        "    pass\n"
+        "def _commented():\n"
+        "    pass\n"
+    )
+    assert sorted(unreferenced_private_definitions({os.path.join(ROOT, "f.py"): src})) == [
+        "f.py:15: _named_in_a_string", "f.py:17: _commented", "f.py:1: _dead",
+        "f.py:6: _method"]
 
 
 PACKAGE = "go_trafilatura_spark"

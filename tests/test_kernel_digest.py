@@ -1,10 +1,12 @@
 """Kernel output on the 800 fixture pages is pinned: the identity digest
 of ``kernel_digest.py`` under the default options and under
 ``enable_fallback`` equals its pin in ``kernel_digests.json``, and so does
-that of the generated ``dates`` pages under the default options and under
-extensive dates, and that of the generated ``selectors`` pages under
-every option set that runs one of their rules. The full set of pinned
-cases runs as ``python tests/kernel_digest.py``."""
+that of the ``fallback`` benchmark pages under ``enable_fallback`` (the
+heavy-page path through readability), that of the generated ``dates``
+pages under the default options and under extensive dates, and that of
+the generated ``selectors`` pages under every option set that runs one
+of their rules. The full set of pinned cases runs as
+``python tests/kernel_digest.py``."""
 
 import os
 import sys
@@ -25,6 +27,12 @@ def rows():
 def test_fixture_digest_is_pinned(rows, option_set):
     got = kernel_digest.digest(rows, kernel_digest.OPTION_SETS[option_set])
     assert got == kernel_digest.pinned()["fixtures"][option_set]
+
+
+def test_fallback_digest_is_pinned():
+    got = kernel_digest.digest(kernel_digest.fallback_rows(),
+                               kernel_digest.OPTION_SETS["enable_fallback"])
+    assert got == kernel_digest.pinned()["fallback"]["enable_fallback"]
 
 
 @pytest.mark.parametrize("option_set", ["default", "date_extensive"])

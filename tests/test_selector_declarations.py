@@ -9,12 +9,12 @@
   matches an element without attributes (the candidate scan of
   ``selectors.query*`` never shows it one, so a wrong declaration would
   silently drop matches), and one that does not declare it matches some
-  bare element. A rule's screen drops no match. The corpus is the 800
-  ``fixtures/correctness`` pages, the seed-1 ``extract_fallback``
-  benchmark pages, the upper-cased attribute-name pages of the cascade
-  parity test, the container page of ``test_selector_screens`` and a
-  page of hand-written matches for the rules those pages never trigger;
-  and a bare element of each declared tag.
+  bare element. The corpus is the 800 ``fixtures/correctness`` pages,
+  the seed-1 ``extract_fallback`` benchmark pages, the upper-cased
+  attribute-name pages of the cascade parity test, the container page
+  of ``test_selector_screens`` and a page of hand-written matches for
+  the rules those pages never trigger; and a bare element of each
+  declared tag.
 
 A rule's ``tags`` is its tag test itself, stated nowhere else, so there
 is no second statement for a check to compare it with."""
@@ -39,9 +39,7 @@ RULE_LISTS = {name: value for name, value in vars(selectors).items()
 LISTED = [rule for rules in RULE_LISTS.values() for rule in rules]
 CONTAINERS = selectors.META_CATEGORIES + selectors.META_TAGS + [selectors.license_footer_rule]
 
-DECLARATION_FIELDS = frozenset((
-    "tags", "needs_attrs", "raw_screen", "screen_exempt", "screen_concat",
-    "raw_screen_rx", "containers", "containers_screen"))
+DECLARATION_FIELDS = frozenset(("tags", "needs_attrs"))
 # ``tags`` is also a field of ``metadata.Metadata``: the names metadata.py
 # gives its Metadata records are exempt from the write check for it
 METADATA_RECORDS = frozenset(("metadata", "original"))
@@ -88,28 +86,6 @@ def docs(pages):
     return [etree.TreeIndex(parse(html)) for parse, html in pages]
 
 
-def _screen_drops(rules, pages) -> dict:
-    """Per rule, the matches its screen drops on ``pages``. Matching
-    parses an element's attributes, after which no screen can drop it,
-    so each fresh tree is screened for every rule before any rule is
-    matched."""
-    drops = {r: [] for r in rules}
-    for parse, html in pages:
-        index = etree.TreeIndex(parse(html))
-        kept = {r: set(map(id, selectors._screened(selectors._candidates(index, r), r)))
-                for r in rules}
-        for r in rules:
-            drops[r] += [etree.tostring(el)[:80] for el in selectors._candidates(index, r)
-                         if id(el) not in kept[r] and r.match(el)]
-    return drops
-
-
-@pytest.fixture(scope="module")
-def screen_drops(pages):
-    return _screen_drops([r for r in LISTED + [selectors.license_footer_rule]
-                          if r.raw_screen is not None], pages)
-
-
 def _bare_matches(rule, docs) -> list[str]:
     """Elements without attributes that ``rule`` matches: in the corpus,
     and a new element of each tag it can match."""
@@ -126,29 +102,31 @@ def _breaches(rule, docs) -> list[str]:
     return bare if rule.needs_attrs else [] if bare else ["no bare match: needs_attrs"]
 
 
+def _unmatched(rules, docs) -> list[str]:
+    """The ``rules`` that match nothing in the corpus."""
+    return [r.name for r in rules if not any(selectors.query_all(index, r) for index in docs)]
+
+
 def test_rule_lists_carry_declarations(docs):
     assert set(RULE_LISTS) >= {"CONTENT", "COMMENTS", "META_AUTHOR", "META_TAGS"}
     assert len([r for r in LISTED if r.needs_attrs]) >= 30
-    # the corpus holds a match of every listed rule
-    assert [r.name for r in LISTED
-            if not any(selectors.query_all(index, r) for index in docs)] == []
+    assert _unmatched(LISTED, docs) == []
 
 
 @pytest.mark.parametrize("rule", LISTED + [selectors.license_footer_rule], ids=lambda r: r.name)
-def test_rule_declaration_is_exact(rule, docs, screen_drops):
+def test_rule_declaration_is_exact(rule, docs):
     assert _breaches(rule, docs) == [], rule.name
-    assert screen_drops.get(rule, []) == [], rule.name
 
 
-def test_narrowed_declaration_is_caught(pages, docs):
+def test_narrowed_declaration_is_caught(docs):
     """The corpus exercises the checks: claiming attributes for a rule
     that matches on its tag alone, leaving out a rule's need for them,
-    or a screen its matches lack is reported."""
+    or declaring tags none of its matches carry is reported."""
     assert not _breaches(selectors.content_rule_2, docs)
     assert _breaches(selectors.content_rule_2._replace(needs_attrs=True), docs)
     assert _breaches(selectors.content_rule_4._replace(needs_attrs=False), docs)
-    narrowed = selectors.content_rule_4._replace(raw_screen=("zzz",))
-    assert _screen_drops([narrowed], pages[:800])[narrowed]
+    narrowed = selectors.discarded_image_rule._replace(tags=frozenset(("h6",)))
+    assert _unmatched([narrowed], docs) == [narrowed.name]
 
 
 # -- one rule form -----------------------------------------------------------
@@ -229,9 +207,9 @@ def test_rule_form_checks_see_every_form():
     src = (
         "rule.tags = frozenset()\n"
         "rule.needs_attrs |= True\n"
-        "rule.raw_screen: tuple = ()\n"
-        "a.containers, b = (None, pred), 1\n"
-        "setattr(rule, 'screen_exempt', None)\n"
+        "rule.tags: frozenset = frozenset()\n"
+        "a.needs_attrs, b = False, 1\n"
+        "setattr(rule, 'needs_attrs', None)\n"
         "tags = frozenset()\n"
         "metadata.tags = []\n"
         "x = css.parse_group('div a')\n"

@@ -1,13 +1,15 @@
-"""Raw-attribute prescreen parity (selectors._screened): for every rule
-carrying a raw_screen, the screened evaluation must produce EXACTLY the
-match set of the unscreened evaluation — over the reference's real
-pages and over adversarial synthetic cases (entity-encoded values,
-id+class boundary spans, uppercase names, whitespace around '=').
+"""Lazy attributes: an element's attributes are parsed on their first
+read, so every attribute test sees the same names and values as on a
+tree whose attributes were parsed up front.
 
-Every prescreen reads the lazy-attribute format through etree's
-attr_source / attrs_may_contain / has_attrs, so upper-case attribute
-names extract the same on the fast tree (lazy attributes) as on the
-stdlib tree (parsed attributes)."""
+- The container scan (``selectors.anchors_by_ancestor``) returns the
+  anchors of a naive ancestor walk.
+- id+class and id+style concatenations match across the value boundary.
+- Only etree touches the lazy-attribute slots.
+- Upper-case attribute names extract the same on the fast tree (lazy
+  attributes) as on the stdlib tree (parsed attributes): the microdata
+  date, readability's class weights and visibility tests, and the whole
+  cascade."""
 
 import ast
 import glob
@@ -21,100 +23,13 @@ import pytest
 
 from go_trafilatura_spark import etree, selectors
 
-ALL_RULES = [
-    r for r in vars(selectors).values()
-    if isinstance(r, selectors.Rule) and r.raw_screen is not None
-]
-
 CONTAINER_RULES = selectors.META_CATEGORIES + selectors.META_TAGS + [
     selectors.license_footer_rule]
 
 
-def _real_pages():
-    from go_trafilatura_spark.comparison import (
-        load_comparison_entries, resolve_file,
-    )
-
-    pages = []
-    for e in load_comparison_entries()[::6]:  # every 6th page: ~160 pages
-        p = resolve_file(e["file"])
-        if p:
-            with open(p, "rb") as f:
-                pages.append(f.read())
-    return pages
-
-
-def _assert_parity(html):
-    """Matching parses an element's attributes, after which no screen
-    can drop it: so every rule is screened on a fresh tree before any
-    rule is matched, and each container rule runs on a tree of its own."""
-    index = etree.TreeIndex(etree.parse_html(html))
-    kept = {rule: set(map(id, selectors._screened(selectors._candidates(index, rule), rule)))
-            for rule in ALL_RULES}
-    for rule in ALL_RULES:
-        unscreened = [el for el in selectors._candidates(index, rule) if rule.match(el)]
-        assert [el for el in unscreened if id(el) not in kept[rule]] == [], rule.name
-        assert selectors.query_all(index, rule) == unscreened, rule.name
-        assert selectors.query_all(index.root, rule) == unscreened, rule.name
-    for rule in CONTAINER_RULES:
-        index = etree.TreeIndex(etree.parse_html(html))
-        screened = selectors.anchors_by_ancestor(index, rule)
-        assert screened == selectors.anchors_by_ancestor(
-            index, rule._replace(raw_screen=None)), rule.name
-
-
-@pytest.mark.skipif(
-    not os.path.isdir("/root/reference/test-files"),
-    reason="reference corpus not present")
-def test_screen_parity_real_pages():
-    pages = _real_pages()
-    assert len(pages) > 100
-    for html in pages:
-        _assert_parity(html)
-
-
-ADVERSARIAL = [
-    # entity-encoded value that decodes into a screened literal: the
-    # '&' bypass must force a full evaluation
-    '<div class="aut&#104;or">x</div>',
-    '<div class="com&#109;ents">x</div>',
-    # id+class boundary spans for concat rules (idclass semantics)
-    '<div id="s" class="hare-buttons">x</div>',
-    '<div id="comment" class="list">x</div>',
-    '<div id="commentl" class="ist">x</div>',
-    '<div id="comm" class="ents">x</div>',
-    '<div id="c" class="omment-page">x</div>',
-    '<div id="co" class="mmentlist">x</div>',
-    '<div id="reply" class="-to">x</div>',
-    '<div id="re" class="ply-form">x</div>',
-    # id+style span ("hidden" in id_+style)
-    '<div id="hid" style="den">x</div>',
-    '<p id="hidde" style="n;color:red">x</p>',
-    # uppercase names / whitespace around '='
-    '<span CLASS="Author">x</span>',
-    '<a REL = "me">x</a>',
-    '<a rel =me>x</a>',
-    '<h1 Class = "entry-title">x</h1>',
-    # tag-only disjuncts (screen_exempt)
-    '<author class="zzz">x</author>',
-    '<main class="zzz">x</main>',
-    # near-misses that must stay screened out AND unmatched
-    '<div class="totally-unrelated">x</div>',
-    '<span data-x="nothing-here">x</span>',
-    # matching the screen but failing the rule (over-pass is fine)
-    '<div class="titleish">x</div>',
-    '<div class="commentary">x</div>',
-]
-
-
-def test_screen_parity_adversarial():
-    _assert_parity("<html><body>%s</body></html>" % "".join(ADVERSARIAL))
-    _assert_parity(_meta_anchor_page())
-
-
 def test_screen_spans_match_expected():
-    """Spot-check that the span cases actually MATCH their rules (the
-    adversarial parity test would vacuously pass if both sides missed)."""
+    """Rules that test an id+class or id+style concatenation match a
+    literal split across the two values."""
     doc = etree.parse_html(
         '<html><body>'
         '<div id="comment" class="list">x</div>'     # commentlist span
@@ -153,7 +68,7 @@ def _meta_anchor_page() -> str:
             # nested matching containers: the anchor is listed once
             f'<{tag} {attr}="{value}"><div class="tags">'
             f'<{tag} {attr}="{value}"><a href="/{i}/c">c</a></{tag}></div></{tag}>',
-            # entity-encoded value decodes to a match (bypasses the screen)
+            # entity-encoded value decodes to a match
             f'<{tag} {attr}="{ent}"><a href="/{i}/d">d</a></{tag}>',
             # upper-case names match, an upper-case value does not
             f'<{tag.upper()} {attr.upper()}="{value}"><A HREF="/{i}/e">e</A></{tag.upper()}>',
@@ -167,7 +82,7 @@ def _meta_anchor_page() -> str:
 def naive_anchors(doc, container) -> list:
     """``a[href]`` with an ancestor of a declared tag that
     ``container.match`` accepts, by walking every anchor's ancestors:
-    no candidate scan, attribute test or screen."""
+    no candidate scan or ``has_attrs`` test."""
     out = []
     for a in etree.iter_all(doc, "a"):
         if "href" not in a.attrib:
@@ -184,7 +99,7 @@ def naive_anchors(doc, container) -> list:
 def test_anchors_by_ancestor_equals_naive_rule():
     """The inverted container scan the metadata stage runs returns the
     naive ancestor walk's matches, in document order. Each rule runs on
-    a fresh tree, so its screen sees unparsed attributes."""
+    a fresh tree, so its scan sees unparsed attributes."""
     for rule in CONTAINER_RULES:
         doc = etree.parse_html(_meta_anchor_page())
         got = selectors.anchors_by_ancestor(etree.TreeIndex(doc), rule)
@@ -196,13 +111,13 @@ def test_anchors_by_ancestor_equals_naive_rule():
 # -- one owner for the lazy-attribute format -------------------------------
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_LAZY_SLOTS = frozenset(("_rawattrs", "_lraw", "_attrib"))
+_LAZY_SLOTS = frozenset(("_rawattrs", "_attrib"))
 
 
 def test_lazy_attribute_slots_only_in_etree():
     """No package module other than etree touches the lazy-attribute
-    slots, as an attribute or by name: every screen goes through the
-    etree primitives."""
+    slots, as an attribute or by name: every attribute read goes
+    through ``Element.attrib``/``get`` or ``etree.has_attrs``."""
     found = []
     for path in sorted(glob.glob(os.path.join(ROOT, "go_trafilatura_spark", "*.py"))):
         if os.path.basename(path) == "etree.py":
@@ -215,24 +130,6 @@ def test_lazy_attribute_slots_only_in_etree():
             if name in _LAZY_SLOTS:
                 found.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}: {name}")
     assert found == [], "lazy-attribute slots read outside etree:\n" + "\n".join(found)
-
-
-def test_attr_source_primitives():
-    doc = etree.parse_html('<html><body><div CLASS="Foo Bar">a</div>'
-                           '<p class="a&amp;b">b</p><span>c</span></body></html>')
-    (div,), (p,), (span,) = (etree.iter_all(doc, t) for t in ("div", "p", "span"))
-    assert "class=\"foo bar\"" in etree.attr_source(div)
-    assert etree.attr_source(div) is etree.attr_source(div)  # cached
-    assert etree.attrs_may_contain(div, ("zzz", "foo"))
-    assert not etree.attrs_may_contain(div, ("zzz", "id"))
-    # an entity could decode into any literal: the screen proves nothing
-    assert etree.attr_source(p) is None
-    assert etree.attrs_may_contain(p, ("zzz",))
-    assert etree.has_attrs(div) and etree.has_attrs(p) and not etree.has_attrs(span)
-    assert div.get("class") == "Foo Bar"
-    # parsed attributes: the screen proves nothing, presence still known
-    assert etree.attr_source(div) is None
-    assert etree.attrs_may_contain(div, ("zzz",)) and etree.has_attrs(div)
 
 
 @pytest.mark.parametrize("parse", [etree.parse_html, etree.parse_html_stdlib])
@@ -312,7 +209,7 @@ def _extracted(doc, opts):
 
 def test_upper_case_attribute_names_cascade_parity():
     """The whole cascade extracts the same from the fast tree (lazy
-    attributes, screened) as from the stdlib tree (parsed attributes)
+    attributes) as from the stdlib tree (parsed attributes)
     when every attribute name is upper-case."""
     from go_trafilatura_spark.options import Options
 
